@@ -29,7 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from db_converter_spark.benchutil import (
     build_compact_line,
-    drop_leaked_views,
     gc_drain,
     read_steal_ticks,
     reset_cross_query_memos,
@@ -63,7 +62,6 @@ def main() -> int:
     for _warm in sorted(queries):
         if _warm.split("_", 1)[0][:2] in ("dc", "dd"):
             queries[_warm].builder(spark, sf_dir).collect()
-            drop_leaked_views(spark)
     gc_drain(spark)
 
     # best-of-3: two same-code runs this round recorded 83 s vs 140 s totals
@@ -95,9 +93,7 @@ def main() -> int:
     steal_by: dict[str, list[int]] = {}
     degraded: list[str] = []
 
-    # Temp-view dropping + GC-drain hygiene lives in benchutil (shared with
-    # the scale probes — r6 ADVICE: it was copy-pasted in three places).
-    # Rationale for both is documented there.
+    # GC-drain hygiene lives in benchutil; its rationale is documented there.
     # The heaviest queries leave the most shuffle/checkpoint state behind;
     # GC immediately after them (not on the fixed cadence) so their state
     # doesn't inflate the next five queries' numbers (r3 verdict).
@@ -160,14 +156,14 @@ def main() -> int:
             t0 = time.perf_counter()
             queries[name].builder(spark, sf_dir).collect()
             samples.append(time.perf_counter() - t0)
-            stl.append(read_steal_ticks() - s0)
+            s1 = read_steal_ticks()
+            stl.append(s1 - s0 if s0 >= 0 and s1 >= 0 else -1)
         steal_by[name] = stl  # parallel to UNSORTED samples order
         samples.sort()
         samples_by[name] = samples
         timings[name] = round(samples[0], 3)
         medians[name] = round(samples[len(samples) // 2], 3)
         print(f"{name}: best {timings[name]:.3f}s median {medians[name]:.3f}s", file=sys.stderr)
-        drop_leaked_views(spark)
         since_gc += 1
         if name in heavy:
             gc_drain(spark)
@@ -220,7 +216,6 @@ def main() -> int:
         if time.perf_counter() - bench_t0 > budget * 1.5:
             print(f"resample budget exhausted before {name}", file=sys.stderr)
             break
-        drop_leaked_views(spark)
         gc_drain(spark, pause=1.5, cycles=2)
         fresh = []
         for _ in range(2):
@@ -228,7 +223,6 @@ def main() -> int:
             t0 = time.perf_counter()
             queries[name].builder(spark, sf_dir).collect()
             fresh.append(time.perf_counter() - t0)
-        drop_leaked_views(spark)
         if min(fresh) * 1.5 < samples_by[name][0]:
             s = sorted(fresh)  # originals measured residue, not the operator
         else:
@@ -255,7 +249,8 @@ def main() -> int:
     # (medians included) FIRST — it may be clipped — and finish with ONE
     # compact line carrying the best-of dict + totals, sized to survive
     # the capture window intact.
-    steal_total = read_steal_ticks() - steal_t0 if steal_t0 >= 0 else -1
+    steal_t1 = read_steal_ticks()
+    steal_total = steal_t1 - steal_t0 if steal_t0 >= 0 and steal_t1 >= 0 else -1
     try:
         load1_end = round(os.getloadavg()[0], 1)
     except OSError:

@@ -1,41 +1,26 @@
 """Shared measurement-harness hygiene for bench.py and the scale probes.
 
-Three facts of life about timing a long suite of operators in ONE Spark
+Two facts of life about timing a long suite of operators in ONE Spark
 session drive everything here (r3–r6 bench archaeology):
 
-1. Operators that materialize intermediates leave TEMP VIEWS behind
-   (``dd10_sig``, ``dd14_assign``, ``pipe13_feat``, ...); each view pins
-   its localCheckpoint RDD blocks for the REST of the session, so the
-   block manager accumulates every heavy query's state and a later GC has
-   nothing it can actually free. Views must be dropped after every query.
-2. Spark's ContextCleaner only unregisters old shuffles / broadcasts /
+1. Spark's ContextCleaner only unregisters old shuffles / broadcasts /
    checkpoint RDDs when the DRIVER garbage-collects, and a large heap
    never does on its own — measured (r3): by query ~60 of the suite,
    per-query time inflates 5–25× purely from accumulated shuffle state.
-3. ``System.gc()`` queues that unregistration ASYNCHRONOUSLY; without an
+2. ``System.gc()`` queues that unregistration ASYNCHRONOUSLY; without an
    off-clock pause the cleanup storm lands inside the NEXT queries' timed
    runs (measured r5: 12–15 s spikes on q02/q03 right after the heavy
    tail). The drain sleep is part of the hygiene, not slack.
 
-This module is the single home for those rules (r6 ADVICE: they were
-copy-pasted across bench.py and two probe scripts — a new base table or
-a changed drain had to be fixed in three places).
+Operators hand their intermediates to ``spark.sql`` as DataFrame
+arguments and leave no temp views behind, so a query's checkpoint blocks
+become collectable as soon as its result is dropped.
 """
 
 from __future__ import annotations
 
 import json
 import time
-
-# The driver-generated base tables registered by catalog.register_views —
-# everything ELSE in the temp-view catalog after a query is operator
-# residue and must be dropped before the next measurement.
-BASE_VIEWS = frozenset(
-    {
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    }
-)
 
 
 def reset_cross_query_memos(spark) -> None:
@@ -52,20 +37,6 @@ def reset_cross_query_memos(spark) -> None:
             delattr(spark, attr)
         except AttributeError:
             pass
-
-
-def drop_leaked_views(spark) -> int:
-    """Drop every temporary view that is not a base table; returns the
-    number dropped. Releases the localCheckpoint blocks the views pin so
-    the next :func:`gc_drain` can actually free them (r5 artifact: q03
-    read 5.2 s best-of-3 purely from pinned-block churn landing
-    on-clock)."""
-    dropped = 0
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name not in BASE_VIEWS:
-            spark.catalog.dropTempView(t.name)
-            dropped += 1
-    return dropped
 
 
 def gc_drain(spark, pause: float = 2.0, cycles: int = 1) -> None:

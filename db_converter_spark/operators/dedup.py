@@ -20,7 +20,7 @@ Scale notes (100 TB design stance):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+from pyspark import Broadcast, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -283,10 +283,10 @@ FROM (SELECT doc_id, explode({_SHINGLES_SPARK}) AS sh
 
 _DD05_TAIL_SPARK = """
 WITH sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM dd05_doc_sh GROUP BY doc_id
+  SELECT doc_id, COUNT(*) AS sz FROM {doc_sh} GROUP BY doc_id
 ), pairs AS (
   SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS common
-  FROM dd05_doc_sh a JOIN dd05_doc_sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+  FROM {doc_sh} a JOIN {doc_sh} b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
 ), jac AS (
   SELECT /*+ BROADCAST(sa, sb) */ da, db, common,
@@ -320,8 +320,7 @@ def dd05_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both self-join sides + the size table)."""
     register_views(spark, sf_dir)
     doc_sh = spark.sql(_DD05_DOCSH_SPARK).localCheckpoint(eager=True)
-    doc_sh.createOrReplaceTempView("dd05_doc_sh")
-    return spark.sql(_DD05_TAIL_SPARK)
+    return spark.sql(_DD05_TAIL_SPARK, doc_sh=doc_sh)
 
 
 # ---------------------------------------------------------------------------
@@ -1082,17 +1081,17 @@ _DC05_SK_SPARK = f"""
       ROW_NUMBER() OVER (
         PARTITION BY source, substring(h, 32, 1) ORDER BY h
       ) AS rn
-    FROM dc05_grams
+    FROM {{grams}}
   ) t
   WHERE rn <= {_DC05_K}
   GROUP BY source
 """
 
-_DC05_SZS_SPARK = "SELECT source, COUNT(*) AS n FROM dc05_grams GROUP BY source"
+_DC05_SZS_SPARK = "SELECT source, COUNT(*) AS n FROM {grams} GROUP BY source"
 
 _DC05_TAIL_SPARK = _dc05_tail(
-    "dc05_sk",
-    "dc05_szs",
+    "{{sk}}",
+    "{{szs}}",
     f"slice(array_sort(array_distinct(concat(a.ks, b.ks))), 1, {_DC05_K})",
     "size(array_intersect(array_intersect(uks, aks), bks))",
     "size({x})",
@@ -1141,14 +1140,9 @@ def dc05_sketched_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = spark.sql(_DC05_GRAMS_SPARK).localCheckpoint(
         eager=True, storageLevel=_BIG_CKPT_LEVEL
     )
-    grams.createOrReplaceTempView("dc05_grams")
-    spark.sql(_DC05_SK_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dc05_sk"
-    )
-    spark.sql(_DC05_SZS_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dc05_szs"
-    )
-    return spark.sql(_DC05_TAIL_SPARK)
+    sk = spark.sql(_DC05_SK_SPARK, grams=grams).localCheckpoint(eager=True)
+    szs = spark.sql(_DC05_SZS_SPARK, grams=grams).localCheckpoint(eager=True)
+    return spark.sql(_DC05_TAIL_SPARK, sk=sk, szs=szs)
 
 
 # ---------------------------------------------------------------------------
@@ -1291,11 +1285,11 @@ _DD10_BAND_KEYS_SPARK = ",\n    ".join(
 
 _DD10_CAND_SPARK = f"""
 WITH bands AS (
-  SELECT doc_id, band, bkey FROM dd10_sig
+  SELECT doc_id, band, bkey FROM {{sig}}
   LATERAL VIEW posexplode(array(
     {_DD10_BAND_KEYS_SPARK}
   )) t AS band, bkey
-),{_dd10_band_ctes("dd10_sig", guard_window=True, emit_agree=True)}
+),{_dd10_band_ctes("{sig}", guard_window=True, emit_agree=True)}
 SELECT da, db, n_agree FROM cand
 """
 
@@ -1304,8 +1298,8 @@ SELECT DISTINCT doc_id, sh
 FROM (
   SELECT d.doc_id, explode({_DD10_WORDSH_W_SPARK}) AS sh
   FROM (SELECT doc_id, split(text, ' ') AS w FROM documents) d
-  JOIN (SELECT da AS doc_id FROM dd10_cand
-        UNION SELECT db FROM dd10_cand) c
+  JOIN (SELECT da AS doc_id FROM {{cand}}
+        UNION SELECT db FROM {{cand}}) c
     ON c.doc_id = d.doc_id
 ) t
 """
@@ -1357,7 +1351,7 @@ FROM jac
     )
 
 
-_DD10_TAIL_SPARK = "WITH " + _dd10_verify_tail("dd10_cand", "dd10_doc_sh", hints=True)
+_DD10_TAIL_SPARK = "WITH " + _dd10_verify_tail("{cand}", "{doc_sh}", hints=True)
 
 
 def _dd10_duck() -> str:
@@ -1410,25 +1404,26 @@ def dd10_lsh_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized ONCE via localCheckpoint and the tail joins the
     materialized results — signatures are computed exactly once per run
     (r3 verdict: the un-materialized form recomputed them ~4x)."""
-    _dd10_prepare(spark, sf_dir)
-    return spark.sql(_DD10_TAIL_SPARK)
+    return spark.sql(_DD10_TAIL_SPARK, **_dd10_prepare(spark, sf_dir))
 
 
-def _dd10_prepare(spark: SparkSession, sf_dir: str, with_doc_sh: bool = True) -> None:
+def _dd10_prepare(
+    spark: SparkSession, sf_dir: str, with_doc_sh: bool = True
+) -> dict[str, DataFrame]:
     """Materialize dd10's three expensive intermediates (signatures,
-    gated candidates, candidate-doc shingles) as temp views — shared by
-    dd10's verify aggregate and dd13's verified-edge components. dd15
-    passes ``with_doc_sh=False``: it scores against its own corpus-wide
-    inverted index, so the candidate-restricted shingle table would be
-    wasted work."""
+    gated candidates, candidate-doc shingles), keyed by their SQL slot
+    names ``sig``/``cand``/``doc_sh`` — shared by dd10's verify aggregate
+    and dd13's verified-edge components. dd15 passes
+    ``with_doc_sh=False``: it scores against its own corpus-wide inverted
+    index, so the candidate-restricted shingle table would be wasted
+    work."""
     register_views(spark, sf_dir)
     sig = spark.sql(_DD10_SIG_SPARK).localCheckpoint(eager=True)
-    sig.createOrReplaceTempView("dd10_sig")
-    cand = spark.sql(_DD10_CAND_SPARK).localCheckpoint(eager=True)
-    cand.createOrReplaceTempView("dd10_cand")
+    cand = spark.sql(_DD10_CAND_SPARK, sig=sig).localCheckpoint(eager=True)
+    out = {"sig": sig, "cand": cand}
     if with_doc_sh:
-        doc_sh = spark.sql(_DD10_DOCSH_SPARK).localCheckpoint(eager=True)
-        doc_sh.createOrReplaceTempView("dd10_doc_sh")
+        out["doc_sh"] = spark.sql(_DD10_DOCSH_SPARK, cand=cand).localCheckpoint(eager=True)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1549,11 +1544,11 @@ def dd13_neardup_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     a verified-edge graph that is tiny by construction, log-round
     propagation, one join back to the corpus on doc_id, low-cardinality
     rollup."""
-    _dd10_prepare(spark, sf_dir)
     edges = spark.sql(
         "WITH "
-        + _dd10_jac_ctes("dd10_cand", "dd10_doc_sh", hints=True)
-        + f"\nSELECT da AS src, db AS dst FROM jac WHERE j >= {_DD13_J}"
+        + _dd10_jac_ctes("{cand}", "{doc_sh}", hints=True)
+        + f"\nSELECT da AS src, db AS dst FROM jac WHERE j >= {_DD13_J}",
+        **_dd10_prepare(spark, sf_dir),
     ).localCheckpoint(eager=True)
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1683,7 +1678,7 @@ GROUP BY v.doc_id, d.n_grams
 
 
 _DC03_SPARK_MAIN = _dc03_main(
-    "dc03_grams",
+    "{grams}",
     "CAST(conv(substring({expr}, {lo}, 15), 16, 10) AS BIGINT)",
     "DIV",
     "shiftleft(CAST(1 AS BIGINT), CAST({n} AS INT))",
@@ -1707,8 +1702,7 @@ def dc03_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the exact join's probe side at any corpus size."""
     register_views(spark, sf_dir)
     grams = spark.sql(_DC03_GRAMS_SPARK).localCheckpoint(eager=True)
-    grams.createOrReplaceTempView("dc03_grams")
-    return spark.sql(_DC03_SPARK_MAIN)
+    return spark.sql(_DC03_SPARK_MAIN, grams=grams)
 
 
 # ---------------------------------------------------------------------------
@@ -2040,7 +2034,7 @@ def _dd14_pairs_py(assign_df: DataFrame) -> DataFrame:
 _DD14_PAIRS_FROM_RAW = f"""
 SELECT * FROM (
   SELECT va, vb, cid, cs_a, cs_b, ROUND(sim_raw, 6) AS sim
-  FROM dd14_pairs_raw
+  FROM {{raw}}
 ) p WHERE sim >= {_DD14_TAU}
 """
 
@@ -2141,11 +2135,15 @@ def _dd14_fold_dots(E, M):
     return acc
 
 
-def _dd14_assign_py(spark: SparkSession, vecs_df: DataFrame) -> DataFrame:
+def _dd14_assign_py(
+    spark: SparkSession, vecs_df: DataFrame
+) -> tuple[DataFrame, Broadcast]:
     """The vectorized two-level assignment: k-scale supers/fine collected
     from the engine (same CTE text as the SQL assign), n-scale coarse+fine
     argmax in numpy via mapInPandas — zero exchanges, no interpreted
-    lambdas on the n-scale path."""
+    lambdas on the n-scale path. Returns the lazy assignment and the
+    broadcast of the k-scale tables it reads; the caller destroys the
+    broadcast once the assignment is materialized."""
     import numpy as np
 
     fine_rows = spark.sql(_DD14_FINE_SELECT).collect()
@@ -2214,16 +2212,16 @@ def _dd14_assign_py(spark: SparkSession, vecs_df: DataFrame) -> DataFrame:
                 }
             )
 
-    return vecs_df.mapInPandas(assign_batches, schema=_DD14_ASSIGN_PY_SCHEMA)
+    return vecs_df.mapInPandas(assign_batches, schema=_DD14_ASSIGN_PY_SCHEMA), bc
 
 # r11: cell sizes are computed INSIDE the report job (referenced exactly
 # once — no re-execution hazard) instead of a third sequential checkpoint:
 # the k-row aggregate streams the serialized assignment checkpoint exactly
 # as the dedicated cells job did, one job barrier cheaper (guide §2.4).
 # The DuckDB oracle always had this inline shape.
-_DD14_CELLS_INLINE = "(SELECT cid, COUNT(*) AS cell_size FROM dd14_assign GROUP BY cid)"
+_DD14_CELLS_INLINE = "(SELECT cid, COUNT(*) AS cell_size FROM {assign} GROUP BY cid)"
 
-_DD14_SPARK_MAIN = _dd14_main("dd14_pairs", _DD14_CELLS_INLINE)
+_DD14_SPARK_MAIN = _dd14_main("{pairs}", _DD14_CELLS_INLINE)
 
 _DD14_DUCK_ASSIGN = _dd14_assign_sql(
     nrm="sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))",
@@ -2305,20 +2303,18 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shuffled the n-row relation twice); the k-scale supers/fine
         # derivation stays engine-side (see _dd14_assign_py).
         vecs_df = spark.sql("SELECT vec_id, embedding FROM embeddings")
-        assign = _dd14_assign_py(spark, vecs_df).localCheckpoint(
-            eager=True, storageLevel=_BIG_CKPT_LEVEL
-        )
-        assign.createOrReplaceTempView("dd14_assign")
+        assign, bc = _dd14_assign_py(spark, vecs_df)
+        assign = assign.localCheckpoint(eager=True, storageLevel=_BIG_CKPT_LEVEL)
+        bc.destroy()
         # materialize dup_pairs ONCE (tiny post-filter): the report's two
         # stat branches would otherwise each re-run the pair pass
         # (Catalyst inlines CTEs). r12: the pair cosine runs vectorized
         # in numpy per cid group (see _dd14_cell_pairs) — one cid-keyed
         # exchange, no interpreted lambdas; the exact ROUND + tau gate
         # stays in SQL (_DD14_PAIRS_FROM_RAW).
-        _dd14_pairs_py(assign).createOrReplaceTempView("dd14_pairs_raw")
-        spark.sql(_DD14_PAIRS_FROM_RAW).localCheckpoint(
-            eager=True, storageLevel=_BIG_CKPT_LEVEL
-        ).createOrReplaceTempView("dd14_pairs")
+        pairs = spark.sql(
+            _DD14_PAIRS_FROM_RAW, raw=_dd14_pairs_py(assign)
+        ).localCheckpoint(eager=True, storageLevel=_BIG_CKPT_LEVEL)
     finally:
         if prev_floor is None:
             spark.conf.unset(floor_key)
@@ -2328,7 +2324,7 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (_DD14_CELLS_INLINE) — the report references the n-row assignment
     # exactly once, streaming the serialized checkpoint the same way the
     # former dedicated cells job did, minus one job barrier.
-    return spark.sql(_DD14_SPARK_MAIN)
+    return spark.sql(_DD14_SPARK_MAIN, pairs=pairs, assign=assign)
 
 
 # ---------------------------------------------------------------------------
@@ -2507,7 +2503,7 @@ SELECT DISTINCT da, db FROM (
 
 _DD15_CCAND_SPARK = (
     "WITH "
-    + _dd15_cand_ctes("dd15_sh", hints=True, df_window=True)
+    + _dd15_cand_ctes("{full_sh}", hints=True, df_window=True)
     + "\nSELECT da, db FROM ccand"
 )
 # r12: the containee channel is FUSED into the union statement (one
@@ -2521,10 +2517,10 @@ _DD15_CCAND_SPARK = (
 # rewrite — verified against the r11 repro in tests.
 _DD15_CAND_SPARK = (
     "WITH "
-    + _dd15_cand_ctes("dd15_sh", hints=True, df_window=True)
-    + _dd15_cand_union("dd10_cand")
+    + _dd15_cand_ctes("{full_sh}", hints=True, df_window=True)
+    + _dd15_cand_union("{sym_cand}")
 )
-_DD15_TAIL_SPARK = "WITH " + _dd15_tail("dd15_cand", "dd15_sh", hints=True)
+_DD15_TAIL_SPARK = "WITH " + _dd15_tail("{cand}", "{full_sh}", hints=True)
 
 
 def _dd15_duck() -> str:
@@ -2563,9 +2559,8 @@ def dd15_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment, which banding's collision probability (∝ J^4) never
     fires on. The tail is the same O(candidates) intersection join
     normalized by the smaller set."""
-    _dd10_prepare(spark, sf_dir, with_doc_sh=False)
+    sym_cand = _dd10_prepare(spark, sf_dir, with_doc_sh=False)["cand"]
     full_sh = spark.sql(_DD15_FULLSH_SPARK).localCheckpoint(eager=True)
-    full_sh.createOrReplaceTempView("dd15_sh")
     # Spark 4.1 bug dodge: the deduplicating union trips an internal
     # AttributeMap error (UnionBase.rewriteConstraints: key not found)
     # when a branch's lineage carries LEAST/GREATEST- or da<db-derived
@@ -2578,11 +2573,12 @@ def dd15_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get(conf_key)
     spark.conf.set(conf_key, "false")
     try:
-        cand = spark.sql(_DD15_CAND_SPARK).localCheckpoint(eager=True)
+        cand = spark.sql(
+            _DD15_CAND_SPARK, full_sh=full_sh, sym_cand=sym_cand
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set(conf_key, prev)
-    cand.createOrReplaceTempView("dd15_cand")
-    return spark.sql(_DD15_TAIL_SPARK)
+    return spark.sql(_DD15_TAIL_SPARK, cand=cand, full_sh=full_sh)
 
 
 # ---------------------------------------------------------------------------
@@ -2731,7 +2727,7 @@ GROUP BY a.n_agree
 
 
 _DD16_TAIL_SPARK = "WITH " + _dd16_tail(
-    "dd10_cand", "dd10_doc_sh", "dd10_sig", hints=True, agree_from_cand=True
+    "{cand}", "{doc_sh}", "{sig}", hints=True, agree_from_cand=True
 )
 
 
@@ -2775,8 +2771,7 @@ def dd16_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole dedup stack rests on. Reuses dd10's three materialized
     intermediates; the agreement recount is a broadcast join over
     already-computed hashes; output <= 4 rows."""
-    _dd10_prepare(spark, sf_dir)
-    return spark.sql(_DD16_TAIL_SPARK)
+    return spark.sql(_DD16_TAIL_SPARK, **_dd10_prepare(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2887,7 +2882,7 @@ _DD17_SIG_SPARK = _minhash_sig_sql(
 _DD17_BANDS_BRANCH_SPARK = f"""
   SELECT doc_id, CASE WHEN {_DD17_DELTA_PRED} THEN 1 ELSE 0 END AS is_d,
          band, bkey
-  FROM dd17_sig
+  FROM {{sig}}
   LATERAL VIEW posexplode(array(
     {_DD10_BAND_KEYS_SPARK}
   )) t AS band, bkey
@@ -2895,13 +2890,11 @@ _DD17_BANDS_BRANCH_SPARK = f"""
 
 _DD17_CAND_SPARK = (
     "WITH "
-    + _dd17_cand_ctes(_DD17_BANDS_BRANCH_SPARK, "dd17_sig", guard_window=True)
+    + _dd17_cand_ctes(_DD17_BANDS_BRANCH_SPARK, "{sig}", guard_window=True)
     + "\nSELECT da, db FROM cand"
 )
 
-_DD17_DOCSH_SPARK = _DD10_DOCSH_SPARK.replace("dd10_cand", "dd17_cand")
-
-_DD17_TAIL_SPARK = "WITH " + _dd17_tail("dd17_cand", "dd17_doc_sh", hints=True)
+_DD17_TAIL_SPARK = "WITH " + _dd17_tail("{cand}", "{doc_sh}", hints=True)
 
 
 def _dd17_duck() -> str:
@@ -2958,9 +2951,6 @@ def dd17_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     would recompute signatures per tail reference)."""
     register_views(spark, sf_dir)
     sig = spark.sql(_DD17_SIG_SPARK).localCheckpoint(eager=True)
-    sig.createOrReplaceTempView("dd17_sig")
-    cand = spark.sql(_DD17_CAND_SPARK).localCheckpoint(eager=True)
-    cand.createOrReplaceTempView("dd17_cand")
-    doc_sh = spark.sql(_DD17_DOCSH_SPARK).localCheckpoint(eager=True)
-    doc_sh.createOrReplaceTempView("dd17_doc_sh")
-    return spark.sql(_DD17_TAIL_SPARK)
+    cand = spark.sql(_DD17_CAND_SPARK, sig=sig).localCheckpoint(eager=True)
+    doc_sh = spark.sql(_DD10_DOCSH_SPARK, cand=cand).localCheckpoint(eager=True)
+    return spark.sql(_DD17_TAIL_SPARK, cand=cand, doc_sh=doc_sh)

@@ -10,6 +10,8 @@ same code path).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -244,7 +246,7 @@ def ev03_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     and appends to a table sink). Watermark bounds state at scale; sums are
     integer cents so the oracle compares exactly. The ``ts`` stream schema is
     footer-driven (ns vs us), matching the batch reader."""
-    sink = "ev03_sink"
+    sink = f"ev03_sink_{uuid.uuid4().hex}"
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src
@@ -270,7 +272,9 @@ def ev03_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.table(sink)
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -526,7 +530,7 @@ def ev07_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds one key per event in the horizon, not per event ever seen.
     Output (append sink, then a batch rollup) must equal the plain batch
     counts — duplicates are invisible downstream."""
-    sink = "ev07_sink"
+    sink = f"ev07_sink_{uuid.uuid4().hex}"
     one = _events_stream_source(spark, sf_dir)
     two = _events_stream_source(spark, sf_dir)
     deduped = (
@@ -543,11 +547,9 @@ def ev07_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return (
-        spark.table(sink)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
+    out = spark.table(sink).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -583,7 +585,7 @@ def ev08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join, which is exactly what the DuckDB oracle computes —
     row-level output, so the value-hash pins every attributed pair.
     Delay and cents are integer-scaled for the exact compare."""
-    sink = "ev08_sink"
+    sink = f"ev08_sink_{uuid.uuid4().hex}"
     clicks = (
         _events_stream_source(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -632,7 +634,9 @@ def ev08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.table(sink)
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -661,7 +665,7 @@ def ev09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``availableNow`` backlog equal the batch join — the DuckDB oracle."""
     from ..catalog import load_table
 
-    sink = "ev09_sink"
+    sink = f"ev09_sink_{uuid.uuid4().hex}"
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("mktsegment")
     )
@@ -691,7 +695,9 @@ def ev09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.table(sink)
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -751,7 +757,7 @@ def ev10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming semantics (open sessions are not final) expressed in
     batch SQL. State is bounded by open sessions per user — the point of
     the native operator at 100 TB/day."""
-    sink = "ev10_sink"
+    sink = f"ev10_sink_{uuid.uuid4().hex}"
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src.withWatermark("ts", "0 seconds")
@@ -777,7 +783,9 @@ def ev10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.table(sink)
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1505,7 +1513,7 @@ FROM est
 _EV17_EXACT = "SELECT user_id, COUNT(*) AS exact_n FROM events GROUP BY user_id"
 
 _EV17_TAIL_SPARK = _ev17_tail(
-    "ev17_exact",
+    "{exact}",
     "explode(sequence(0, {d}))".format(d=_EV17_D - 1),
     "CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)",
 )
@@ -1523,10 +1531,8 @@ _EV17_DUCK = (
 def _ev17_run(spark: SparkSession) -> DataFrame:
     """Materialize the per-user exact relation once (cells + topk both read
     it; CTE inlining would scan events twice), then run the audit tail."""
-    spark.sql(_EV17_EXACT).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ev17_exact"
-    )
-    return spark.sql(_EV17_TAIL_SPARK)
+    exact = spark.sql(_EV17_EXACT).localCheckpoint(eager=True)
+    return spark.sql(_EV17_TAIL_SPARK, exact=exact)
 
 
 @query("ev17_countmin_audit", oracle=_EV17_DUCK, tags=("events", "sketch", "heavyhitters"))
@@ -1614,7 +1620,7 @@ def ev18_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts p50/p90/p99 as smallest-bin-reaching-ceil(q·n) (the dq07
     estimator; right-edge estimates, error <= one 400-cent bin). The
     batch oracle computes the identical sketch, so the compare is exact."""
-    sink = "ev18_sink"
+    sink = f"ev18_sink_{uuid.uuid4().hex}"
     src = _events_stream_source(spark, sf_dir)
     hist = (
         src.withWatermark("ts", "2 hours")
@@ -1635,7 +1641,9 @@ def ev18_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.sql(_ev18_tail(sink, "DIV"))
+    out = spark.sql(_ev18_tail("{hist}", "DIV"), hist=spark.table(sink))
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -606,7 +606,7 @@ def _mm05_pairs_sql(intdiv: str, xor_expr: str, lead: str = "WITH", hashed_rel: 
     # 4 × 8-bit bands over the 32-bit hash: hamming-close hashes agree on
     # at least one band (guaranteed for distance <= 3), so the bucket join
     # finds every pair the verify step would keep. ``lead`` lets the block
-    # open a fresh WITH (Spark, over the temp view) or continue the
+    # open a fresh WITH (Spark, over the hashed DataFrame) or continue the
     # oracle's existing WITH chain (",").
     return f"""
 {lead} bands AS (
@@ -664,7 +664,6 @@ def mm05_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
     hashed = docs.mapInPandas(_phash_batch, schema=_MM05_SCHEMA)
-    hashed.createOrReplaceTempView("mm05_hashed")
     return spark.sql(
-        _mm05_pairs_sql("div", "ha ^ hb", hashed_rel="mm05_hashed")
+        _mm05_pairs_sql("div", "ha ^ hb", hashed_rel="{hashed}"), hashed=hashed
     )

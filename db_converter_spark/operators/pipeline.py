@@ -28,7 +28,7 @@ from db_converter_spark.operators.textops import (
     _TA14_DUCK_VOCAB_CTE,
     _sql,
     _ta14_duck_ctes,
-    ta14_vocab_view,
+    ta14_vocab,
 )
 from db_converter_spark.registry import query
 
@@ -456,13 +456,13 @@ GROUP BY d.doc_id, d.source
 """
 
 
-_PIPE06_ROLLUP = f"""
+_PIPE06_ROLLUP = """
 SELECT source,
   CAST(COUNT(*) AS BIGINT)      AS n_selected,
   CAST(SUM(n_tok) AS BIGINT)    AS tokens_selected,
   CAST(MIN(q) AS BIGINT)        AS min_quality_x1000,
   CAST(SUM(doc_id) AS BIGINT)   AS selected_id_checksum
-FROM sel GROUP BY source
+FROM {sel} GROUP BY source
 """
 
 _PIPE06_DUCK = f"""
@@ -474,11 +474,11 @@ c AS (
                              ROWS UNBOUNDED PRECEDING) AS cum
   FROM m
 ), sel AS (SELECT * FROM c WHERE cum <= {_PIPE06_BUDGET})
-{_PIPE06_ROLLUP}
+{_PIPE06_ROLLUP.format(sel="sel")}
 """
 
 _PIPE06_METRICS_SPARK = _pipe06_metrics(
-    "explode(split(text, ' '))", "ta14_vocab", hint="/*+ BROADCAST(v) */ "
+    "explode(split(text, ' '))", "{vocab}", hint="/*+ BROADCAST(v) */ "
 )
 
 
@@ -505,7 +505,7 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    ta14_vocab_view(spark, sf_dir)
+    vocab = ta14_vocab(spark, sf_dir)["vocab"]
     # r11: materialize metrics BEFORE the range repartition. A bare
     # repartitionByRange over the live metrics plan runs the corpus-scale
     # explode + encode-map join TWICE — once inside RangePartitioner's
@@ -513,7 +513,7 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accidental recompute behind an exchange). Checkpointing the narrow
     # (doc_id, source, n_tok, q) relation first makes both the sample and
     # the shuffle read ~40-byte rows; the corpus pass runs exactly once.
-    m = spark.sql(_PIPE06_METRICS_SPARK).localCheckpoint(eager=True)
+    m = spark.sql(_PIPE06_METRICS_SPARK, vocab=vocab).localCheckpoint(eager=True)
     nparts = max(2, spark.sparkContext.defaultParallelism // 2)
     parts = m.repartitionByRange(
         nparts, F.col("q").desc(), F.col("doc_id")
@@ -540,8 +540,7 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cum", F.sum("n_tok").over(w) + F.col("offset"))
         .where(F.col("cum") <= _PIPE06_BUDGET)
     )
-    sel.createOrReplaceTempView("sel")
-    return spark.sql(_PIPE06_ROLLUP)
+    return spark.sql(_PIPE06_ROLLUP, sel=sel)
 
 
 # ---------------------------------------------------------------------------
@@ -799,10 +798,8 @@ def pipe10_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    spark.sql(_PIPE10_PD_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pipe10_per_doc"
-    )
-    return spark.sql(_PIPE10.format(per_doc="pipe10_per_doc"))
+    per_doc = spark.sql(_PIPE10_PD_SPARK).localCheckpoint(eager=True)
+    return spark.sql(_PIPE10, per_doc=per_doc)
 
 
 # ---------------------------------------------------------------------------
@@ -857,7 +854,7 @@ GROUP BY L
 _PIPE11_SPARK = _PIPE11.format(
     lead="WITH",
     unnest="explode(split(text, ' '))",
-    vocab="ta14_vocab",
+    vocab="{vocab}",
     hint="/*+ BROADCAST(v) */ ",
     idiv="DIV",
 )
@@ -885,8 +882,7 @@ def pipe11_context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    ta14_vocab_view(spark, sf_dir)
-    return spark.sql(_PIPE11_SPARK)
+    return spark.sql(_PIPE11_SPARK, vocab=ta14_vocab(spark, sf_dir)["vocab"])
 
 
 # ---------------------------------------------------------------------------
@@ -939,8 +935,8 @@ FROM t
 
 _PIPE12_SPARK = _PIPE12.format(
     lead="WITH",
-    swc="ta14_swc",
-    vocab="ta14_vocab",
+    swc="{swc}",
+    vocab="{vocab}",
     hint="/*+ BROADCAST(v) */ ",
     values_table=f"(VALUES {_weight_values()}) AS w(wsource, keep_x1000)",
     idiv="DIV",
@@ -974,8 +970,8 @@ def pipe12_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    ta14_vocab_view(spark, sf_dir)
-    return spark.sql(_PIPE12_SPARK)
+    rels = ta14_vocab(spark, sf_dir)
+    return spark.sql(_PIPE12_SPARK, swc=rels["swc"], vocab=rels["vocab"])
 
 
 # ---------------------------------------------------------------------------
@@ -1079,10 +1075,7 @@ def pipe13_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (float log-ratio sums are partition-order dependent)."""
     register_views(spark, sf_dir)
     feat = spark.sql(_PIPE13_FEAT_SPARK).localCheckpoint(eager=True)
-    feat.createOrReplaceTempView("pipe13_feat")
-    return spark.sql(
-        _pipe13_main("pipe13_feat", "DIV", "/*+ BROADCAST(w) */")
-    )
+    return spark.sql(_pipe13_main("{feat}", "DIV", "/*+ BROADCAST(w) */"), feat=feat)
 
 
 # ---------------------------------------------------------------------------
@@ -1164,7 +1157,7 @@ _PIPE14_LIM_SPARK = _pipe14_lim(
     "split", "filter", "size",
     "CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)",
 )
-_PIPE14_TAIL_SPARK = _pipe14_tail("pipe14_lim")
+_PIPE14_TAIL_SPARK = _pipe14_tail("{lim}")
 _PIPE14_DUCK = (
     "WITH lim AS ("
     + _pipe14_lim(
@@ -1188,10 +1181,8 @@ def pipe14_unimax_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlining re-scanned parquet 4x in the single-statement form); the
     waterfill is a rank+cumsum window over the bounded source relation."""
     register_views(spark, sf_dir)
-    spark.sql(_PIPE14_LIM_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pipe14_lim"
-    )
-    return spark.sql(_PIPE14_TAIL_SPARK)
+    lim = spark.sql(_PIPE14_LIM_SPARK).localCheckpoint(eager=True)
+    return spark.sql(_PIPE14_TAIL_SPARK, lim=lim)
 
 
 # ---------------------------------------------------------------------------

@@ -153,7 +153,7 @@ SELECT table_name, column_name, constraint_type,
   CAST(n_violations AS BIGINT) AS n_violations,
   (n_violations = 0)           AS passed
 FROM metrics
-""".replace("FROM s", "FROM dq01_stats")
+""".replace("FROM s", "FROM {stats}")
 
 
 @query("dq01_constraint_audit", oracle=_DQ01_DUCK, tags=("quality", "audit"))
@@ -167,10 +167,8 @@ def dq01_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes the reference's alert packets (SQL health checks emitting
     violation rows) to analytic tables."""
     register_views(spark, sf_dir)
-    spark.sql(_DQ01_COMBINED).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq01_stats"
-    )
-    return spark.sql(_DQ01_LONG_COMBINED)
+    stats = spark.sql(_DQ01_COMBINED).localCheckpoint(eager=True)
+    return spark.sql(_DQ01_LONG_COMBINED, stats=stats)
 
 
 # ---------------------------------------------------------------------------
@@ -377,7 +375,7 @@ SELECT table_name, column_name,
   min_canon, max_canon,
   CAST(ROUND(1000.0 * n_distinct / n_rows) AS BIGINT) AS distinct_x1000
 FROM profile
-""".replace("FROM s", "FROM dq03_stats")
+""".replace("FROM s", "FROM {stats}")
 
 
 @query("dq03_column_profile", oracle=_DQ03_DUCK, tags=("quality", "profile"))
@@ -392,10 +390,8 @@ def dq03_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlaps the two table aggregates and the emission reads one
     checkpoint; 3 jobs -> 2)."""
     register_views(spark, sf_dir)
-    spark.sql(_DQ03_COMBINED).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq03_stats"
-    )
-    return spark.sql(_DQ03_LONG_COMBINED)
+    stats = spark.sql(_DQ03_COMBINED).localCheckpoint(eager=True)
+    return spark.sql(_DQ03_LONG_COMBINED, stats=stats)
 
 
 # ---------------------------------------------------------------------------
@@ -682,10 +678,10 @@ _DQ06_US_DUCK = "epoch_us(e.ts)"
 
 _DQ06_SPAN_SPARK = _DQ06_SPAN.format(us="unix_micros(CAST(ts AS TIMESTAMP))")
 _DQ06_REF_SPARK = _DQ06_REF.format(
-    vq=_DQ06_VQ, span="dq06_span", us="unix_micros(CAST(ts AS TIMESTAMP))"
+    vq=_DQ06_VQ, span="{span}", us="unix_micros(CAST(ts AS TIMESTAMP))"
 )
 _DQ06_SPARK = _dq06(
-    _DQ06_US_SPARK, "div", "dq06_span", "dq06_ref", "/*+ BROADCAST(r, s) */ "
+    _DQ06_US_SPARK, "div", "{span}", "{ref}", "/*+ BROADCAST(r, s) */ "
 )
 _DQ06_DUCK = (
     "WITH dspan AS ("
@@ -714,10 +710,8 @@ def dq06_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the |types|×10 matrix."""
     register_views(spark, sf_dir)
     span = spark.sql(_DQ06_SPAN_SPARK).localCheckpoint(eager=True)
-    span.createOrReplaceTempView("dq06_span")
-    ref = spark.sql(_DQ06_REF_SPARK).localCheckpoint(eager=True)
-    ref.createOrReplaceTempView("dq06_ref")
-    return spark.sql(_DQ06_SPARK)
+    ref = spark.sql(_DQ06_REF_SPARK, span=span).localCheckpoint(eager=True)
+    return spark.sql(_DQ06_SPARK, span=span, ref=ref)
 
 
 # ---------------------------------------------------------------------------
@@ -813,10 +807,10 @@ FROM exact e JOIN within w ON w.qpct = e.qpct CROSS JOIN {mm_src} m
 
 _DQ07_VALUES = ", ".join(f"({q})" for q in _DQ07_QS)
 
-_DQ07_BINNED_SPARK = _dq07_binned("dq07_mm", "DIV")
-_DQ07_CUM_SPARK = _DQ07_CUM.format(binned_src="dq07_binned")
+_DQ07_BINNED_SPARK = _dq07_binned("{mm}", "DIV")
+_DQ07_CUM_SPARK = _DQ07_CUM.format(binned_src="{binned}")
 _DQ07_TAIL_SPARK = _dq07_tail(
-    "dq07_mm", "dq07_binned", "dq07_cum",
+    "{mm}", "{binned}", "{cum}",
     f"VALUES {_DQ07_VALUES} AS t(qpct)", "DIV", hints=True
 )
 
@@ -840,17 +834,13 @@ def dq07_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned relation are materialized once (CTE inlining would re-scan
     orders ~5x)."""
     register_views(spark, sf_dir)
-    spark.sql(_DQ07_MM).localCheckpoint(eager=True).createOrReplaceTempView("dq07_mm")
-    spark.sql(_DQ07_BINNED_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq07_binned"
-    )
+    mm = spark.sql(_DQ07_MM).localCheckpoint(eager=True)
+    binned = spark.sql(_DQ07_BINNED_SPARK, mm=mm).localCheckpoint(eager=True)
     # the <= 4,096-row cum relation is read by targets/pick/within/final:
     # inlined it re-aggregated the binned checkpoint ~4x and re-ran the
     # single-partition cumulative window each time
-    spark.sql(_DQ07_CUM_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq07_cum"
-    )
-    return spark.sql(_DQ07_TAIL_SPARK)
+    cum = spark.sql(_DQ07_CUM_SPARK, binned=binned).localCheckpoint(eager=True)
+    return spark.sql(_DQ07_TAIL_SPARK, mm=mm, binned=binned, cum=cum)
 
 
 # ---------------------------------------------------------------------------
@@ -986,7 +976,7 @@ _DQ08_MM_SPARK = (
     + "\n)) x AS t"
 )
 _DQ08_BINNED_SPARK = _dq08_binned(
-    "SELECT * FROM dq08_vals", "SELECT * FROM dq08_mm", "DIV", hints=True
+    "SELECT * FROM {vals}", "SELECT * FROM {mm}", "DIV", hints=True
 )
 
 # --- r11 Spark-side shape (VERDICT Next #6) --------------------------------
@@ -1017,15 +1007,15 @@ WITH qs AS (
   SELECT * FROM VALUES {_DQ08_VALUES} AS t(qpct)
 ), targets AS (
   SELECT m.col, q.qpct, (q.qpct * m.n + 99) DIV 100 AS tgt
-  FROM qs q CROSS JOIN dq08_mm m
+  FROM qs q CROSS JOIN {{mm}} m
 ), pick AS (
   SELECT t.col, t.qpct, t.tgt, MIN(c.b) AS b
-  FROM targets t JOIN dq08_cum c ON c.col = t.col AND c.cum >= t.tgt
+  FROM targets t JOIN {{cum}} c ON c.col = t.col AND c.cum >= t.tgt
   GROUP BY t.col, t.qpct, t.tgt
 )
 SELECT /*+ BROADCAST(p) */ p.col, p.qpct, p.tgt - cu.cum_prev AS r, p.b,
        cu.vmin, cu.vmax
-FROM pick p JOIN dq08_cum cu ON cu.col = p.col AND cu.b = p.b
+FROM pick p JOIN {{cum}} cu ON cu.col = p.col AND cu.b = p.b
 """
 
 def _dq08_extract_sql(mixed: "list[tuple]") -> str:
@@ -1063,7 +1053,7 @@ def _dq08_extract_sql(mixed: "list[tuple]") -> str:
     union = "\nUNION ALL\n".join(branches)
     return f"""
 SELECT /*+ BROADCAST(w) */ w.col, w.qpct, x.v AS exact_cents
-FROM dq08_within w
+FROM {{within}} w
 JOIN (
   SELECT v.col, v.b, v.v,
          ROW_NUMBER() OVER (PARTITION BY v.col, v.b ORDER BY v.v) AS rn
@@ -1073,7 +1063,7 @@ WHERE w.vmin < w.vmax
 """
 
 _DQ08_RESOLVED_SPARK = """
-SELECT col, qpct, vmin AS exact_cents FROM dq08_within WHERE vmin = vmax
+SELECT col, qpct, vmin AS exact_cents FROM {within} WHERE vmin = vmax
 """
 
 _DQ08_FINAL_SPARK = f"""
@@ -1084,9 +1074,9 @@ SELECT /*+ BROADCAST(w, m) */ e.col, CAST(e.qpct AS BIGINT) AS qpct,
        AS BIGINT) AS est_cents,
   CAST(m.lo + ((w.b + 1) * (m.hi - m.lo + 1) + {_DQ08_BINS} - 1) DIV {_DQ08_BINS} - 1
        - e.exact_cents AS BIGINT) AS err_cents
-FROM ({{exact_src}}) e
-JOIN dq08_within w ON w.col = e.col AND w.qpct = e.qpct
-JOIN dq08_mm m ON m.col = e.col
+FROM {{exact}} e
+JOIN {{within}} w ON w.col = e.col AND w.qpct = e.qpct
+JOIN {{mm}} m ON m.col = e.col
 """
 
 _DQ08_DUCK = (
@@ -1138,7 +1128,7 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned columnar source is the cheap side of that trade at any scale;
     pinning a multiple of the corpus never is (the dd12 lesson)."""
     register_views(spark, sf_dir)
-    spark.sql(_DQ08_VALS_SPARK).createOrReplaceTempView("dq08_vals")
+    vals = spark.sql(_DQ08_VALS_SPARK)
     # r11 (guide §2.4): within checkpoints LAZILY (the dd08/dd13 move) —
     # it is materialized by the `mixed` collect below that ran anyway, one
     # job barrier cheaper, and a driver collect carries no timeout
@@ -1149,19 +1139,18 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # worth milliseconds at scale; measured neutral at bench scale); a
     # lazy cum could double-execute the corpus-histogram subtree, which
     # the within statement references twice (pick + the picked-bin probe).
-    spark.sql(_DQ08_MM_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq08_mm"
-    )
-    spark.sql(
-        _DQ08_CUM_SPARK.format(binned_src=f"({_DQ08_BINNED_SPARK})")
-    ).localCheckpoint(eager=True).createOrReplaceTempView("dq08_cum")
-    within = spark.sql(_DQ08_WITHIN_SPARK).localCheckpoint(eager=False)
-    within.createOrReplaceTempView("dq08_within")
+    mm = spark.sql(_DQ08_MM_SPARK).localCheckpoint(eager=True)
+    cum = spark.sql(
+        _DQ08_CUM_SPARK.format(binned_src=f"({_DQ08_BINNED_SPARK})"), vals=vals, mm=mm
+    ).localCheckpoint(eager=True)
+    within = spark.sql(_DQ08_WITHIN_SPARK, mm=mm, cum=cum).localCheckpoint(eager=False)
     # metadata-scale collect over the <= cols x quantiles checkpoint: the
     # mixed bins' literal value ranges parameterize the extraction scans
     # (and, r11, this collect IS the job that materializes `within`)
     mixed = [tuple(r) for r in within.filter("vmin < vmax").collect()]
-    exact_src = _DQ08_RESOLVED_SPARK + (
-        f" UNION ALL {_dq08_extract_sql(mixed)}" if mixed else ""
+    exact = spark.sql(
+        _DQ08_RESOLVED_SPARK
+        + (f" UNION ALL {_dq08_extract_sql(mixed)}" if mixed else ""),
+        within=within,
     )
-    return spark.sql(_DQ08_FINAL_SPARK.format(exact_src=exact_src))
+    return spark.sql(_DQ08_FINAL_SPARK, exact=exact, within=within, mm=mm)

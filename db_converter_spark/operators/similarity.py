@@ -662,10 +662,10 @@ _SS08_DUCK = _ss08_main(
 
 def _km_sqls(extra: str = "") -> dict[str, str]:
     """Per-stage Spark SQL for the materialized Lloyd's loop, with
-    {vflat}/{cent}/{asg}/{k16} view-name slots. `extra` (e.g. "m") is an
-    additional partition key carried from the exploded table — empty for
-    ss07/ss08's single coarse codebook, "m" for ss11's per-subspace
-    codebooks."""
+    {vflat}/{cent}/{asg}/{k16} slots for ``spark.sql`` arguments. `extra`
+    (e.g. "m") is an additional partition key carried from the exploded
+    table — empty for ss07/ss08's single coarse codebook, "m" for ss11's
+    per-subspace codebooks."""
     ek = f"{extra}, " if extra else ""
     ekv = f"v.{extra}, " if extra else ""
     ekc = f"c.{extra}, " if extra else ""
@@ -710,15 +710,14 @@ FROM {{cent}} c LEFT JOIN (
 
 def _km_train(
     spark: SparkSession,
-    vflat_view: str,
-    prefix: str,
+    vflat: DataFrame,
     n_iter: int,
     k16: int,
     extra: str = "",
     keep_last_asg: bool = False,
-) -> tuple[str, str]:
-    """Run the materialized Lloyd's loop over an exploded-vector view.
-    Returns (final_centroid_view, last_assignment_ref). Only the ≤512-row
+) -> tuple[DataFrame, DataFrame]:
+    """Run the materialized Lloyd's loop over an exploded-vector relation.
+    Returns (final_centroids, last_assignment). Only the ≤512-row
     centroid table is checkpointed per iteration.
 
     r11 shape: the assignment is INLINED into each update (``cent_next``
@@ -737,32 +736,19 @@ def _km_train(
     barrier it saves at every scale. Callers that never read the
     assignment (ss08's probe tail, ss12 — its encode pass runs against the
     FINAL centroids anyway) leave it off and fuse every iteration. The
-    returned ref is the checkpoint view name or the inline subquery
-    respectively; both splice into a ``FROM {asg}`` slot."""
+    returned assignment is the checkpoint or the lazy inline relation
+    respectively."""
     sqls = _km_sqls(extra)
-    cent = spark.sql(
-        sqls["cent0"].format(vflat=vflat_view, k16=k16)
-    ).localCheckpoint(eager=True)
-    asg_ref = ""
+    cent = spark.sql(sqls["cent0"], vflat=vflat, k16=k16).localCheckpoint(eager=True)
+    asg = None
     for t in range(n_iter):
-        cent_view = f"{prefix}_cent{t}"
-        cent.createOrReplaceTempView(cent_view)
-        asg_sql = sqls["asg"].format(vflat=vflat_view, cent=cent_view)
+        asg = spark.sql(sqls["asg"], vflat=vflat, cent=cent)
         if keep_last_asg and t == n_iter - 1:
-            asg_ref = f"{prefix}_asg{t}"
-            spark.sql(asg_sql).localCheckpoint(eager=True).createOrReplaceTempView(
-                asg_ref
-            )
-        else:
-            asg_ref = "(" + asg_sql + ")"
+            asg = asg.localCheckpoint(eager=True)
         cent = spark.sql(
-            sqls["cent_next"].format(
-                vflat=vflat_view, cent=cent_view, asg=asg_ref
-            )
+            sqls["cent_next"], vflat=vflat, cent=cent, asg=asg
         ).localCheckpoint(eager=True)
-    final_view = f"{prefix}_cent{n_iter}"
-    cent.createOrReplaceTempView(final_view)
-    return final_view, asg_ref
+    return cent, asg
 
 
 _KM_FINAL_SS07 = """
@@ -835,9 +821,8 @@ def ss08_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vflat = spark.sql(_SS07_VFLAT_SPARK).localCheckpoint(
         eager=True, storageLevel=_BIG_CKPT_LEVEL
     )
-    vflat.createOrReplaceTempView("ss08_vflat")
-    cent_view, _ = _km_train(spark, "ss08_vflat", "ss08", _KM_T, _KM_K * 16)
-    return spark.sql(_SS08_TAIL.format(vflat="ss08_vflat", cent=cent_view))
+    cent, _ = _km_train(spark, vflat, _KM_T, _KM_K * 16)
+    return spark.sql(_SS08_TAIL, vflat=vflat, cent=cent)
 
 
 @query("ss07_kmeans_train", oracle=_SS07_DUCK, tags=("similarity", "ann", "train"))
@@ -871,11 +856,8 @@ def ss07_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     vflat = spark.sql(_SS07_VFLAT_SPARK).localCheckpoint(
         eager=True, storageLevel=_BIG_CKPT_LEVEL
     )
-    vflat.createOrReplaceTempView("ss07_vflat")
-    cent_view, asg_view = _km_train(
-        spark, "ss07_vflat", "ss07", _KM_T, _KM_K * 16, keep_last_asg=True
-    )
-    return spark.sql(_KM_FINAL_SS07.format(cent=cent_view, asg=asg_view))
+    cent, asg = _km_train(spark, vflat, _KM_T, _KM_K * 16, keep_last_asg=True)
+    return spark.sql(_KM_FINAL_SS07, cent=cent, asg=asg)
 
 
 @query("ss06_pq_adc_topk", oracle=_SS06_DUCK, tags=("similarity", "pq", "ann", "knn"))
@@ -1006,7 +988,7 @@ _SS09_SIMS_SPARK = _ss09_sims(
 # checkpointed RDD carries no stats — broadcast hints keep the 10-row
 # report joins off the SortMergeJoin path (the dd10 lesson)
 _SS09_TAIL_SPARK = "WITH " + _ss09_tail(
-    "ss09_sims", "/*+ BROADCAST(qd, tc, cc, hc) */ ", "/*+ BROADCAST(a) */ "
+    "{sims}", "/*+ BROADCAST(qd, tc, cc, hc) */ ", "/*+ BROADCAST(a) */ "
 )
 _SS09_DUCK = (
     "WITH sims AS ("
@@ -1028,10 +1010,8 @@ def ss09_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket filter is a predicate on the checkpoint, not a second scan);
     windows key on the 10-value qid; the report is 10 rows."""
     register_views(spark, sf_dir)
-    spark.sql(_SS09_SIMS_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ss09_sims"
-    )
-    return spark.sql(_SS09_TAIL_SPARK)
+    sims = spark.sql(_SS09_SIMS_SPARK).localCheckpoint(eager=True)
+    return spark.sql(_SS09_TAIL_SPARK, sims=sims)
 
 
 # ---------------------------------------------------------------------------
@@ -1269,12 +1249,10 @@ def _ss11_body(spark: SparkSession) -> DataFrame:
     pqflat = spark.sql(_SS11_PQFLAT_SPARK).localCheckpoint(
         eager=True, storageLevel=_BIG_CKPT_LEVEL
     )
-    pqflat.createOrReplaceTempView("ss11_pqflat")
-    cent_view, asg_view = _km_train(
-        spark, "ss11_pqflat", "ss11", _PQT_T, _PQT_K * 16, extra="m",
-        keep_last_asg=True,
+    cent, asg = _km_train(
+        spark, pqflat, _PQT_T, _PQT_K * 16, extra="m", keep_last_asg=True
     )
-    return spark.sql(_KM_FINAL_SS11.format(cent=cent_view, asg=asg_view))
+    return spark.sql(_KM_FINAL_SS11, cent=cent, asg=asg)
 
 
 @query("ss11_pq_train", oracle=_SS11_DUCK, tags=("similarity", "pq", "ann", "train"))
@@ -1389,17 +1367,11 @@ def ss12_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pqflat = spark.sql(_SS11_PQFLAT_SPARK).localCheckpoint(
         eager=True, storageLevel=_BIG_CKPT_LEVEL
     )
-    pqflat.createOrReplaceTempView("ss12_pqflat")
-    cent_view, _ = _km_train(
-        spark, "ss12_pqflat", "ss12", _PQT_T, _PQT_K * 16, extra="m"
-    )
+    cent, _ = _km_train(spark, pqflat, _PQT_T, _PQT_K * 16, extra="m")
     codes = spark.sql(
-        _km_sqls(extra="m")["asg"].format(vflat="ss12_pqflat", cent=cent_view)
+        _km_sqls(extra="m")["asg"], vflat=pqflat, cent=cent
     ).localCheckpoint(eager=True)
-    codes.createOrReplaceTempView("ss12_codes")
-    return spark.sql(
-        _SS12_TAIL.format(cent=cent_view, pqflat="ss12_pqflat", codes="ss12_codes")
-    )
+    return spark.sql(_SS12_TAIL, cent=cent, pqflat=pqflat, codes=codes)
 
 
 # ---------------------------------------------------------------------------
@@ -1492,7 +1464,7 @@ _SS13_SIMS_SPARK = _ss13_sims(
     ) % {"p": _SS13_PREFIX_DIMS},
 )
 
-_SS13_TAIL_SPARK = _ss13_tail("ss13_sims")
+_SS13_TAIL_SPARK = _ss13_tail("{sims}")
 
 _SS13_DUCK_SIMS = _ss13_sims(
     prefix_slice="{v}[1:%d]" % _SS13_PREFIX_DIMS,
@@ -1516,10 +1488,8 @@ _SS13_DUCK = "WITH sims AS (" + _SS13_DUCK_SIMS + ")" + _ss13_tail("sims", lead=
 def _ss13_run(spark: SparkSession) -> DataFrame:
     """Materialize the similarity relation once, then run the ranking/audit
     tail (shared by the builder and the planted-fixture tests)."""
-    spark.sql(_SS13_SIMS_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ss13_sims"
-    )
-    return spark.sql(_SS13_TAIL_SPARK)
+    sims = spark.sql(_SS13_SIMS_SPARK).localCheckpoint(eager=True)
+    return spark.sql(_SS13_TAIL_SPARK, sims=sims)
 
 
 @query("ss13_truncated_rerank", oracle=_SS13_DUCK, tags=("similarity", "ann", "matryoshka"))
@@ -1655,19 +1625,19 @@ _SS14_DIMS_SPARK = _ss14_dims(
 _SS14_SROW_SPARK = (
     "SELECT transform(array_sort(collect_list(struct(i, lo))), u -> u.lo) AS los,"
     " transform(array_sort(collect_list(struct(i, hi))), u -> u.hi) AS his"
-    " FROM ss14_dims"
+    " FROM {dims}"
 )
 _SS14_CODES_SPARK = _ss14_codes(
     "transform", "sequence(1, size(embedding))",
     "element_at(embedding, i)", "element_at(los, i)", "element_at(his, i)",
-    "ss14_srow",
+    "{srow}",
 )
 _SS14_EXACT_SPARK = _ss14_exact(_SS14_DOT_SPARK, _SS14_NRM_SPARK)
 _SS14_TAIL_SPARK = _ss14_tail(
     "transform", "sequence(1, size(code))",
     "element_at(code, i)", "element_at(s.los, i)", "element_at(s.his, i)",
-    _SS14_DOT_SPARK, _SS14_NRM_SPARK, "ss14_codes", "ss14_srow",
-    "ss14_exact", hints=True
+    _SS14_DOT_SPARK, _SS14_NRM_SPARK, "{codes}", "{srow}",
+    "{exact}", hints=True
 )
 
 _SS14_DIMS_DUCK = _ss14_dims(
@@ -1703,18 +1673,12 @@ def ss14_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stats/srow/codes relations are each materialized once (CTE
     inlining would re-scan embeddings per tail reference)."""
     register_views(spark, sf_dir)
-    spark.sql(_SS14_DIMS_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ss14_dims"
-    )
-    spark.sql(_SS14_SROW_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ss14_srow"
-    )
-    spark.sql(_SS14_CODES_SPARK).localCheckpoint(
+    dims = spark.sql(_SS14_DIMS_SPARK).localCheckpoint(eager=True)
+    srow = spark.sql(_SS14_SROW_SPARK, dims=dims).localCheckpoint(eager=True)
+    codes = spark.sql(_SS14_CODES_SPARK, srow=srow).localCheckpoint(
         eager=True, storageLevel=_BIG_CKPT_LEVEL
-    ).createOrReplaceTempView("ss14_codes")
+    )
     # the audit's exact-sim relation: one embeddings scan, referenced
     # twice by the tail
-    spark.sql(_SS14_EXACT_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ss14_exact"
-    )
-    return spark.sql(_SS14_TAIL_SPARK)
+    exact = spark.sql(_SS14_EXACT_SPARK).localCheckpoint(eager=True)
+    return spark.sql(_SS14_TAIL_SPARK, codes=codes, srow=srow, exact=exact)

@@ -45,206 +45,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):  # 
     return deco
 
 
-# The correctness harness checks at most the FIRST 50 entries of queries()
-# (observed round 1: exactly the first 50 in registration order got rows).
-# The tail rotates between rounds so EVERY registry query keeps a fresh
-# official green row.
-_CHECK_TAIL = (
-    # =====================================================================
-    # r12 rotation (optimization round 2, final): the head = the 7 queries
-    # whose SOURCE changed in r12 (dq05 multi-FK single pass; dd15
-    # df-window + fused ccand; dd10/dd16/dd17 window bucket-guard +
-    # carried n_agree; dd13 via the shared dd10 candidate schema; dd14
-    # vectorized pair+assign) + dq08/ta13 (their r11 stamps predate the
-    # late-r11 commits 750e09d/b3e2ea0-family — re-verified fresh) + the
-    # 20 parked r8 rows (q04-q29 block, ss06/ss13/ss14, ta01/ta02/ta03/
-    # ta08) + the 5 r7-lineage scalar rows (q20-q23, q26, per the r10
-    # verdict) + 16 r9-row refreshes (the heaviest parked r9 paths:
-    # dc02-dc04, dd05, dd12, dq02/dq04/dq06, ev10/ev14, mg05, pipe13,
-    # ss09/ss10, ta07, q38) = exactly 50. The tail parks, oldest first:
-    # the remaining 14 r9 rows, the 39 r10 rows, and the 40 r11 rows the
-    # r11 head verified (all fingerprint-pinned at their stamped rounds —
-    # the freshness guard fails if any parked source drifts).
-    # =====================================================================
-    "ev11_interarrival_hist",
-    "ev12_funnel",
-    "ev13_retention_cohorts",
-    "ev15_load_profile",
-    "ev16_watermark_audit",
-    "mg03_scd2_history",
-    "mg04_compaction_plan",
-    "mg06_cdc_apply",
-    "pipe01_corpus_filter",
-    "pipe05_corpus_build",
-    "pipe07_stratified_sample",
-    "pipe08_curriculum_phases",
-    "pipe09_leakage_safe_split",
-    "pipe10_dataset_card",
-    "dc01_decontaminate",
-    "dd01_dedup_exact",
-    "dd03_minhash_signatures",
-    "dd04_minhash_lsh_bands",
-    "dd06_simhash",
-    "dd07_embedding_neardup",
-    "dd11_dedup_keep_best",
-    "ev01_windowed_event_stats",
-    "ev02_sessionization",
-    "ev04_asof_join",
-    "ev05_range_join",
-    "ev06_multi_rollup",
-    "ev18_streaming_quantiles",
-    "ev19_cohort_activity_retention",
-    "mg01_chunk_grid",
-    "mg02_incremental_diff",
-    "pii01_pii_scrub",
-    "pipe15_neardup_safe_split",
-    "q01_pricing_summary",
-    "q02_top_revenue_orders",
-    "q03_nation_revenue",
-    "q13_scalar_subquery",
-    "q14_in_subquery",
-    "q15_generate_series",
-    "q16_unnest_words",
-    "q17_values_inline",
-    "q25_rollup",
-    "q30_json_extract",
-    "q31_array_funcs",
-    "q32_intersect_except",
-    "q33_offset_fetch",
-    "q37_pivot",
-    "ta04_winnow_fingerprints",
-    "ta05_hll_distinct",
-    "ta06_repetition_score",
-    "ta10_vocab_growth",
-    "ta11_tfidf_topterms",
-    "ta12_ppl_buckets",
-    "dc05_sketched_overlap",
-    "dd02_norm_fingerprint",
-    "dd08_neardup_components",
-    "dd09_span_dedup",
-    "dq01_constraint_audit",
-    "dq03_column_profile",
-    "dq07_quantile_profile",
-    "ev03_streaming_window",
-    "ev07_stream_dedup",
-    "ev08_stream_stream_join",
-    "ev09_stream_static_join",
-    "ev17_countmin_audit",
-    "mm01_binary_decode",
-    "mm02_image_metadata",
-    "mm03_frame_sample",
-    "mm04_image_resize",
-    "mm05_phash_neardup",
-    "pipe02_sequence_pack",
-    "pipe03_weighted_sample",
-    "pipe04_shard_assign",
-    "pipe06_token_budget",
-    "pipe11_context_fit",
-    "pipe12_epoch_plan",
-    "pipe14_unimax_waterfill",
-    "q09_window_top2_orders",
-    "q12_cte_chain",
-    "q28_lateral_top1",
-    "q34_cube_grouping_sets",
-    "q35_construct_probes",
-    "q36_recursive_cte",
-    "ss01_cosine_topk",
-    "ss02_lsh_buckets",
-    "ss03_ivf_assign",
-    "ss04_ivf_topk",
-    "ss05_knn_join",
-    "ss07_kmeans_train",
-    "ss08_ivf_trained_topk",
-    "ss11_pq_train",
-    "ss12_pq_trained_topk",
-    "ta09_bpe_train",
-    "ta14_bpe_encode",
-)
-# NOTE (r8 final state): tail parks queries whose newest official row is
-# r4-r7 with fingerprints pinned by the freshness guard; the r8 head = the
-# 38 r4-row refreshes + dd14/dc05/dq07/ta13 (source changed in r8) + the
-# two r8-new ops (ta14_bpe_encode, dq08_column_quantiles) + ev17/pipe14/
-# ss12/ss13/ss14 (mid-r7 stamps predate later same-module edits) + dd02
-# (oldest r5 row) = exactly 50.
-
-
-def query_fingerprint(name: str) -> str:
-    """Content fingerprint of a registered query's SOURCE: the oracle SQL,
-    the AST-normalized builder (docstrings and comments ignored — they
-    don't change semantics), and, transitively within each function's own
-    module, every module-level constant/helper the code references (the
-    SQL template strings live there). Used by the official-row freshness
-    guard (tests/test_registry.py + tests/official_rows.json): a query
-    parked in the rotation tail whose fingerprint drifted from its
-    recorded official round MUST be re-headed — this replaces the manual
-    git-diff bookkeeping the r4 verdict flagged as will-eventually-slip.
-
-    Scope note: helpers imported INSIDE a builder body (catalog loaders
-    etc.) are not chased — engine-layer drift is caught by the full local
-    parity sweep (tests/test_oracle_parity.py) every session; this guard
-    is specifically for query-level source changes vs the rotation."""
-    import ast
-    import hashlib
-    import inspect
-    import sys
-    import textwrap
-
-    spec = QUERIES[name]
-
-    def _norm_tree(obj) -> tuple[ast.AST, list[str]]:
-        src = textwrap.dedent(inspect.getsource(obj))
-        tree = ast.parse(src)
-        for node in ast.walk(tree):
-            body = getattr(node, "body", None)
-            if (
-                isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef))
-                and body
-                and isinstance(body[0], ast.Expr)
-                and isinstance(body[0].value, ast.Constant)
-                and isinstance(body[0].value.value, str)
-            ):
-                node.body = body[1:]
-        names = sorted(
-            {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
-        )
-        return tree, names
-
-    parts: list[str] = [f"oracle:{spec.oracle or ''}"]
-    seen: set[tuple[str, str]] = set()
-
-    def _visit(obj) -> None:
-        mod = sys.modules.get(obj.__module__)
-        key = (obj.__module__, obj.__qualname__)
-        if mod is None or key in seen:
-            return
-        seen.add(key)
-        tree, names = _norm_tree(obj)
-        parts.append(f"fn {key}:{ast.dump(tree)}")
-        for n in names:
-            if (obj.__module__, n) in seen or not hasattr(mod, n):
-                continue
-            val = getattr(mod, n)
-            if (
-                inspect.isfunction(val)
-                and (val.__module__ or "").startswith("db_converter_spark")
-                and val.__module__ != __name__  # the @query decorator itself
-            ):
-                _visit(val)
-            elif isinstance(val, (str, int, float, bool, tuple, dict)):
-                r = repr(val)
-                if " at 0x" in r:  # object addresses are not content
-                    continue
-                seen.add((obj.__module__, n))
-                parts.append(f"const {obj.__module__}.{n}={r}")
-
-    _visit(spec.builder)
-    return hashlib.sha256("\n".join(sorted(parts)).encode()).hexdigest()
-
-
 def all_queries() -> dict[str, QuerySpec]:
     """Import all operator modules (side effect: registration) and return the
-    full registry, reordered so the harness's 50-query budget covers every
-    operator family (see _CHECK_TAIL)."""
+    full registry in registration order."""
     from db_converter_spark.operators import (  # noqa: F401
         relational,
         dedup,
@@ -256,6 +59,4 @@ def all_queries() -> dict[str, QuerySpec]:
         quality,
     )
 
-    head = {n: s for n, s in QUERIES.items() if n not in _CHECK_TAIL}
-    tail = {n: QUERIES[n] for n in _CHECK_TAIL if n in QUERIES}
-    return {**head, **tail}
+    return dict(QUERIES)

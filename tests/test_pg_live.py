@@ -27,6 +27,7 @@ from pathlib import Path
 import pytest
 
 from db_converter_spark.sources.pg_live import PgServer, find_pg_binaries
+from tests.test_reference_sql_parity import needs_reference
 from tests.test_reference_sql_parity import pg_env  # noqa: F401 — fixture
 
 pytestmark = pytest.mark.skipif(
@@ -264,6 +265,7 @@ def test_pg_dialect_packet_matches_live_pg(spark, pg, tmp_path):
     ]
 
 
+@needs_reference
 def test_reference_selects_column_shape_matches_live_pg(pg_env, pg):
     """Corpus-wide shape parity vs the REAL server: every reference packet
     SELECT that a bare PostgreSQL 15 can execute (pg_catalog /
@@ -393,6 +395,7 @@ def test_live_pg_stats_are_nonzero_after_load(pg_loaded):
     assert int(act[1][0]) >= 1
 
 
+@needs_reference
 def test_all_reference_alert_dba_packets_run_native(pg_loaded):
     """Layer 5 itself: every reference alert_*/dba_* packet executes
     natively on the live loaded cluster — run_packet_native raises on the
@@ -432,6 +435,7 @@ def test_all_reference_alert_dba_packets_run_native(pg_loaded):
     assert ["obs", "tags"] in diag["03_step.sql"][1][1:], diag["03_step.sql"]
 
 
+@needs_reference
 def test_dba_locks_and_long_queries_see_live_contention(pg_loaded):
     """pg_locks / pg_stat_activity are only non-trivial with real
     contention — so make some: one session holds ACCESS EXCLUSIVE on
@@ -500,6 +504,7 @@ def test_dba_locks_and_long_queries_see_live_contention(pg_loaded):
             blocked.wait(timeout=10)
 
 
+@needs_reference
 def test_alert_stat_fires_on_stale_stats(pg_loaded):
     """alert_stat's contract: report big tables whose vacuum/analyze
     recency is unknown or stale. pg_stat_reset() nulls the collector
@@ -516,6 +521,7 @@ def test_alert_stat_fires_on_stale_stats(pg_loaded):
     assert "docs" in names and "tags" in names, cap
 
 
+@needs_reference
 def test_alert_check_autovacuum_raises_when_disabled(pg_loaded):
     """The autovacuum alert both ways: silent on a healthy cluster, and the
     RAISE fires (the reference's alert channel) once a table disables
@@ -623,6 +629,7 @@ def test_catalog_emulation_matches_live_catalog_for_same_objects(spark, pg_loade
         spark.sql("DROP DATABASE IF EXISTS obs")
 
 
+@needs_reference
 def test_reference_select_values_match_emulation_on_mirrored_objects(spark, pg):
     """Value-level parity for the emulatable reference SELECT subset (r9
     VERDICT Next #7): mirror the SAME pk-less tables into a PG schema and

@@ -156,27 +156,27 @@ def test_ss07_joins_stay_broadcast(spark):
     materialized loop (_km_train) the final rollup is metadata-scale;
     the per-iteration stage plans are what carry the corpus work, so
     each stage is pinned on a FRESH DataFrame over the builder's own
-    views."""
-    from db_converter_spark.operators.similarity import _km_sqls
+    checkpointed inputs."""
+    from db_converter_spark.operators.similarity import _KM_K, _SS07_VFLAT_SPARK, _km_sqls
 
     plan = _plan(spark, "ss07_kmeans_train")  # also registers the views
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Scan parquet" not in plan, plan  # corpus flows via checkpoints
     sqls = _km_sqls()
-    asg_sub = "(" + sqls["asg"].format(vflat="ss07_vflat", cent="ss07_cent0") + ")"
-    asg_plan = _fresh_plan(
-        spark, sqls["asg"].format(vflat="ss07_vflat", cent="ss07_cent0")
-    )
+    vflat = spark.sql(_SS07_VFLAT_SPARK).localCheckpoint(eager=True)
+    cent = spark.sql(sqls["cent0"], vflat=vflat, k16=_KM_K * 16).localCheckpoint(eager=True)
+    asg_plan = _fresh_plan(spark, sqls["asg"], vflat=vflat, cent=cent)
     assert "SortMergeJoin" not in asg_plan, asg_plan
     assert asg_plan.count("BroadcastHashJoin") == 1, asg_plan
     # r11: the assignment is inlined into the update (one fused job per
     # iteration) — pin the fused stage the way _km_train now builds it
     upd_plan = _fresh_plan(
         spark,
-        sqls["cent_next"].format(
-            vflat="ss07_vflat", cent="ss07_cent0", asg=asg_sub
-        ),
+        sqls["cent_next"],
+        vflat=vflat,
+        cent=cent,
+        asg=spark.sql(sqls["asg"], vflat=vflat, cent=cent),
     )
     # the corpus-side asg⋈vflat join keys vec_id (shuffle — correct at
     # scale); the bounded update relation re-enters broadcast
@@ -184,8 +184,8 @@ def test_ss07_joins_stay_broadcast(spark):
     assert "BroadcastNestedLoopJoin" not in upd_plan, upd_plan
 
 
-def _fresh_plan(spark, sql):
-    return spark.sql(sql)._jdf.queryExecution().executedPlan().toString()
+def _fresh_plan(spark, sql, **dfs):
+    return spark.sql(sql, **dfs)._jdf.queryExecution().executedPlan().toString()
 
 
 def test_dd12_no_nested_loop_and_partitioned_window(spark):
@@ -312,12 +312,7 @@ def test_dd14_pair_stage_single_cid_exchange_vectorized(spark):
 
     register_views(spark, SF)
     raw = spark.sql(_DD14_ASSIGN_SPARK).localCheckpoint(eager=True)
-    raw.createOrReplaceTempView("dd14_assign")
-    try:
-        _dd14_pairs_py(raw).createOrReplaceTempView("dd14_pairs_raw")
-        plan = _fresh_plan(spark, _DD14_PAIRS_FROM_RAW)
-    finally:
-        spark.catalog.dropTempView("dd14_assign")
+    plan = _fresh_plan(spark, _DD14_PAIRS_FROM_RAW, raw=_dd14_pairs_py(raw))
     assert "FlatMapGroupsInPandas" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "hashpartitioning(cid" in plan, plan
@@ -355,10 +350,8 @@ def test_ta09_iteration_plans_are_vocab_bounded(spark):
     )
 
     register_views(spark, SF)
-    spark.sql(_TA09_SPELL0_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ta09_s0"
-    )
-    best = spark.sql(_ta09_best(_ta09_pairs_spark("ta09_s0")))
+    s0 = spark.sql(_TA09_SPELL0_SPARK).localCheckpoint(eager=True)
+    best = spark.sql(_ta09_best(_ta09_pairs_spark("{s}")), s=s0)
     plan = best._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
     assert "Scan parquet" not in plan, plan
@@ -438,10 +431,8 @@ def test_ta10_single_corpus_pass(spark):
     from db_converter_spark.operators.textops import _TA10_DW_SPARK, _TA10_TAIL
 
     register_views(spark, SF)
-    spark.sql(_TA10_DW_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ta10_dw_test"
-    )
-    tail = spark.sql(_TA10_TAIL.format(dw="ta10_dw_test"))
+    dw = spark.sql(_TA10_DW_SPARK).localCheckpoint(eager=True)
+    tail = spark.sql(_TA10_TAIL, dw=dw)
     plan = tail._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" not in plan, plan
     dw_plan = spark.sql(_TA10_DW_SPARK)._jdf.queryExecution().executedPlan().toString()
@@ -609,10 +600,8 @@ def test_dd15_containee_channel_stage_shape(spark):
     )
 
     _dd10_prepare(spark, SF, with_doc_sh=False)
-    spark.sql(_DD15_FULLSH_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dd15_sh"
-    )
-    plan = _fresh_plan(spark, _DD15_CCAND_SPARK)
+    full_sh = spark.sql(_DD15_FULLSH_SPARK).localCheckpoint(eager=True)
+    plan = _fresh_plan(spark, _DD15_CCAND_SPARK, full_sh=full_sh)
     assert "Scan parquet" not in plan, plan
     assert "rangepartitioning" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -697,16 +686,21 @@ def test_ss11_broadcast_codebooks_no_smj(spark):
     """PQ training: the corpus flows only through the checkpointed
     pqflat (no re-scan of the parquet), the per-iteration codeword join
     is a broadcast keyed (vec_id, m), and nothing range-partitions."""
-    from db_converter_spark.operators.similarity import _km_sqls
+    from db_converter_spark.operators.similarity import (
+        _PQT_K,
+        _SS11_PQFLAT_SPARK,
+        _km_sqls,
+    )
 
     plan = _plan(spark, "ss11_pq_train")  # also registers the views
     assert plan.count("Scan parquet") == 0, plan
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
     assert "rangepartitioning" not in plan, plan
-    asg_plan = _fresh_plan(
-        spark, _km_sqls("m")["asg"].format(vflat="ss11_pqflat", cent="ss11_cent0")
-    )
+    sqls = _km_sqls("m")
+    pqflat = spark.sql(_SS11_PQFLAT_SPARK).localCheckpoint(eager=True)
+    cent = spark.sql(sqls["cent0"], vflat=pqflat, k16=_PQT_K * 16).localCheckpoint(eager=True)
+    asg_plan = _fresh_plan(spark, sqls["asg"], vflat=pqflat, cent=cent)
     assert "SortMergeJoin" not in asg_plan, asg_plan
     assert asg_plan.count("BroadcastHashJoin") == 1, asg_plan
     assert "hashpartitioning(vec_id" in asg_plan, asg_plan
@@ -854,11 +848,10 @@ def test_ta13_tail_is_scan_free_and_rank_is_grouplimit(spark):
     WindowGroupLimit (partial top-k before the exchange) there."""
     plan = _plan(spark, "ta13_gopher_ngram_cov")
     assert "Scan parquet" not in plan, plan
-    from db_converter_spark.operators.textops import _TA13_TOPN_SPARK
+    from db_converter_spark.operators.textops import _TA13_DOCS_SPARK, _TA13_TOPN_SPARK
 
-    stage = spark.sql(
-        _TA13_TOPN_SPARK.format(n=2, shard="")
-    )._jdf.queryExecution().executedPlan().toString()
+    docs = spark.sql(_TA13_DOCS_SPARK).localCheckpoint(eager=True)
+    stage = _fresh_plan(spark, _TA13_TOPN_SPARK.format(n=2, shard=""), docs=docs)
     assert "WindowGroupLimit" in stage, stage
 
 
@@ -999,31 +992,27 @@ def test_ta13_two_phase_staged_templates(spark):
         [(1, "s", "a b c d e f g h i j k l"), (2, "s", "a b a b a b a b a b")],
         "doc_id LONG, source STRING, text STRING",
     ).createOrReplaceTempView("documents")
-    spark.sql(_TA13_DOCS_SPARK).createOrReplaceTempView("ta13_docs")
+    docs = spark.sql(_TA13_DOCS_SPARK)
     try:
         for tpl, n in ((_TA13_TOPKEYS_SPARK, 2), (_TA13_DUPKEYS_SPARK, 5)):
-            df = spark.sql(tpl.format(n=n, shard=""))
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = _fresh_plan(spark, tpl.format(n=n, shard=""), docs=docs)
             for join in ("SortMergeJoin", "BroadcastHashJoin",
                          "ShuffledHashJoin", "CartesianProduct"):
                 assert join not in plan, (n, plan)
             assert plan.count("Exchange hashpartitioning") == 1, (n, plan)
 
-        spark.sql("SELECT doc_id, CAST(xxhash64('x') AS BIGINT) AS gh,"
-                  " 2 AS cnt FROM ta13_docs"
-                  ).createOrReplaceTempView("ta13_k_pin")
+        kv = docs.selectExpr(
+            "doc_id", "CAST(xxhash64('x') AS BIGINT) AS gh", "2 AS cnt"
+        )
         for tpl, n in (
             (_TA13_TOPN_FROM_KEYS_SPARK, 2),
             (_TA13_COVN_FROM_KEYS_SPARK, 5),
         ):
-            df = spark.sql(tpl.format(n=n, shard="", kv="ta13_k_pin"))
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = _fresh_plan(spark, tpl.format(n=n, shard=""), docs=docs, kv=kv)
             assert "BroadcastHashJoin" in plan, (n, plan)
             assert "SortMergeJoin" not in plan, (n, plan)
             assert "ShuffledHashJoin" not in plan, (n, plan)
     finally:
-        spark.catalog.dropTempView("ta13_k_pin")
-        spark.catalog.dropTempView("ta13_docs")
         # r11: restore-discipline for the planted corpus (every other
         # planting test resets the register_views memo; this r10 test
         # forgot, so the 2-row `documents` leaked into whichever

@@ -1,6 +1,6 @@
 """Round-10 engine properties.
 
-ta14_vocab_view memoization (r9 VERDICT Next #5): a multi-query session
+ta14_vocab memoization (r9 VERDICT Next #5): a multi-query session
 (pipe06 -> pipe11 -> pipe12 -> ta14) must pay the ~30-job BPE training
 ONCE per sf_dir, with the repeat calls pure metadata no-ops — while a
 changed sf_dir or a hand-built ``documents`` view (sf_dir=None) still
@@ -10,7 +10,7 @@ retrains.
 from __future__ import annotations
 
 from db_converter_spark.catalog import register_views
-from db_converter_spark.operators.textops import ta14_vocab_view
+from db_converter_spark.operators.textops import ta14_vocab
 from tests.conftest import SF_DIR
 
 
@@ -36,32 +36,32 @@ def test_ta14_vocab_view_memoized_per_session_and_sf_dir(spark):
     reset_cross_query_memos(spark)
 
     first = _jobs_in_group(
-        spark, "ta14-memo-first", lambda: ta14_vocab_view(spark, SF_DIR)
+        spark, "ta14-memo-first", lambda: ta14_vocab(spark, SF_DIR)
     )
     assert first, "first call must actually train (launch jobs)"
 
     # the memo hit: same session, same sf_dir -> ZERO new jobs
     second = _jobs_in_group(
-        spark, "ta14-memo-second", lambda: ta14_vocab_view(spark, SF_DIR)
+        spark, "ta14-memo-second", lambda: ta14_vocab(spark, SF_DIR)
     )
     assert second == [], f"memoized call launched jobs: {second}"
 
-    # the serving views survive the no-op call
-    assert spark.catalog.tableExists("ta14_vocab")
-    assert spark.catalog.tableExists("ta14_swc")
-    assert spark.table("ta14_vocab").columns == ["word", "n_sub"]
+    # the no-op call serves the relations the first call trained
+    rels = ta14_vocab(spark, SF_DIR)
+    assert rels["vocab"].columns == ["word", "n_sub"]
+    assert rels["swc"].columns == ["source", "word", "cnt"]
 
     # sf_dir=None (hand-built documents view, the engine-test path) always
     # retrains — the corpus identity is unknowable
     third = _jobs_in_group(
-        spark, "ta14-memo-none", lambda: ta14_vocab_view(spark, None)
+        spark, "ta14-memo-none", lambda: ta14_vocab(spark, None)
     )
     assert third, "sf_dir=None must retrain"
 
     # ... and the None call invalidates the memo: the next keyed call
-    # cannot trust views trained on an unknown corpus
+    # cannot trust relations trained on an unknown corpus
     fourth = _jobs_in_group(
-        spark, "ta14-memo-rekey", lambda: ta14_vocab_view(spark, SF_DIR)
+        spark, "ta14-memo-rekey", lambda: ta14_vocab(spark, SF_DIR)
     )
     assert fourth, "keyed call after an unkeyed retrain must retrain again"
 
@@ -73,7 +73,7 @@ def test_ta14_vocab_view_retrains_on_sf_dir_change(spark, tmp_path):
     import shutil
 
     register_views(spark, SF_DIR)
-    ta14_vocab_view(spark, SF_DIR)
+    ta14_vocab(spark, SF_DIR)
 
     other = tmp_path / "sfcopy"
     other.mkdir()
@@ -82,12 +82,12 @@ def test_ta14_vocab_view_retrains_on_sf_dir_change(spark, tmp_path):
         "documents"
     )
     jobs = _jobs_in_group(
-        spark, "ta14-memo-switch", lambda: ta14_vocab_view(spark, str(other))
+        spark, "ta14-memo-switch", lambda: ta14_vocab(spark, str(other))
     )
     assert jobs, "sf_dir change must retrain"
     # and the memo now keys on the NEW dir
     again = _jobs_in_group(
-        spark, "ta14-memo-switch2", lambda: ta14_vocab_view(spark, str(other))
+        spark, "ta14-memo-switch2", lambda: ta14_vocab(spark, str(other))
     )
     assert again == []
 

@@ -97,10 +97,13 @@ def test_dc05_surfaces_planted_containment(spark):
         [(d, t, s, "en", len(t)) for d, t, s in rows],
         "doc_id LONG, text STRING, source STRING, lang STRING, n_chars LONG",
     ).createOrReplaceTempView("documents")
-    spark.sql(_DC05_GRAMS_SPARK).createOrReplaceTempView("dc05_grams")
-    spark.sql(_DC05_SK_SPARK).createOrReplaceTempView("dc05_sk")
-    spark.sql(_DC05_SZS_SPARK).createOrReplaceTempView("dc05_szs")
-    out = {(r["sa"], r["sb"]): r for r in spark.sql(_DC05_TAIL_SPARK).collect()}
+    grams = spark.sql(_DC05_GRAMS_SPARK)
+    sk = spark.sql(_DC05_SK_SPARK, grams=grams)
+    szs = spark.sql(_DC05_SZS_SPARK, grams=grams)
+    out = {
+        (r["sa"], r["sb"]): r
+        for r in spark.sql(_DC05_TAIL_SPARK, sk=sk, szs=szs).collect()
+    }
     ab = out[("srcA", "srcB")]
     ac = out[("srcA", "srcC")]
     # every A gram is inside B: true containment = 1.0; KMV at k=512 over

@@ -215,12 +215,14 @@ def test_dd17_rejects_batch_dup_admits_unique_ignores_corpus_dups(spark):
         (2, "s3", c), (9, "s3", c),
     ])
     from db_converter_spark.operators.dedup import (
-        _DD17_CAND_SPARK, _DD17_DOCSH_SPARK, _DD17_SIG_SPARK, _DD17_TAIL_SPARK,
+        _DD10_DOCSH_SPARK, _DD17_CAND_SPARK, _DD17_SIG_SPARK, _DD17_TAIL_SPARK,
     )
-    spark.sql(_DD17_SIG_SPARK).createOrReplaceTempView("dd17_sig")
-    spark.sql(_DD17_CAND_SPARK).createOrReplaceTempView("dd17_cand")
-    spark.sql(_DD17_DOCSH_SPARK).createOrReplaceTempView("dd17_doc_sh")
-    rows = {r["source"]: r for r in spark.sql(_DD17_TAIL_SPARK).collect()}
+    cand = spark.sql(_DD17_CAND_SPARK, sig=spark.sql(_DD17_SIG_SPARK))
+    doc_sh = spark.sql(_DD10_DOCSH_SPARK, cand=cand)
+    rows = {
+        r["source"]: r
+        for r in spark.sql(_DD17_TAIL_SPARK, cand=cand, doc_sh=doc_sh).collect()
+    }
     assert rows["s1"]["n_rejected_dup"] == 1
     assert rows["s1"]["rejected_checksum"] == 3
     assert rows["s1"]["max_jaccard"] == 1.0
@@ -294,11 +296,13 @@ def test_ss14_lossless_on_grid_aligned_corpus(spark):
     rng = random.Random(11)
     rows = [(i, [float(rng.randint(0, 1)) for _ in range(16)]) for i in range(40)]
     _emb_view(spark, rows)
-    spark.sql(_SS14_DIMS_SPARK).createOrReplaceTempView("ss14_dims")
-    spark.sql(_SS14_SROW_SPARK).createOrReplaceTempView("ss14_srow")
-    spark.sql(_SS14_CODES_SPARK).createOrReplaceTempView("ss14_codes")
-    spark.sql(_SS14_EXACT_SPARK).createOrReplaceTempView("ss14_exact")
-    out = spark.sql(_SS14_TAIL_SPARK).collect()
+    srow = spark.sql(_SS14_SROW_SPARK, dims=spark.sql(_SS14_DIMS_SPARK))
+    out = spark.sql(
+        _SS14_TAIL_SPARK,
+        codes=spark.sql(_SS14_CODES_SPARK, srow=srow),
+        srow=srow,
+        exact=spark.sql(_SS14_EXACT_SPARK),
+    ).collect()
     assert len(out) == 10
     for r in out:
         assert r["sim_err"] == 0.0, r

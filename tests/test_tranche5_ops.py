@@ -112,10 +112,8 @@ def test_ta11_idf_semantics(spark):
         FROM (SELECT explode(sequence(1, 4)) AS i)
         """
     ).createOrReplaceTempView("documents")
-    spark.sql(_TA11_TF_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ta11_tf_test"
-    )
-    rows = spark.sql(_TA11_TAIL.format(tf="ta11_tf_test")).collect()
+    tf = spark.sql(_TA11_TF_SPARK).localCheckpoint(eager=True)
+    rows = spark.sql(_TA11_TAIL, tf=tf).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -180,13 +178,8 @@ def test_pipe10_dup_and_lang_accounting(spark):
         AS t(doc_id, text, lang, source, n_chars)
         """
     ).createOrReplaceTempView("documents")
-    spark.sql(_PIPE10_PD_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pipe10_pd_test"
-    )
-    rows = {
-        r["source"]: r
-        for r in spark.sql(_PIPE10.format(per_doc="pipe10_pd_test")).collect()
-    }
+    per_doc = spark.sql(_PIPE10_PD_SPARK).localCheckpoint(eager=True)
+    rows = {r["source"]: r for r in spark.sql(_PIPE10, per_doc=per_doc).collect()}
     assert set(rows) == {"src_a", "src_b"}
     a, b = rows["src_a"], rows["src_b"]
     assert a["n_docs"] == 6 and b["n_docs"] == 3

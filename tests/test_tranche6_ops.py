@@ -7,6 +7,7 @@ UNPIVOT's NULL-cell drop, and recall-report internal consistency."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
@@ -22,6 +23,14 @@ def _restore_views(spark):
 
     spark._dbc_registered_sf = None
     register_views(spark, SF_DIR)
+
+
+def _dd10_sym_pairs(spark):
+    """dd10's symmetric-banding candidate pairs on the planted corpus."""
+    from db_converter_spark.operators.dedup import _dd10_prepare
+
+    cand = _dd10_prepare(spark, SF_DIR, with_doc_sh=False)["cand"]
+    return {(r["da"], r["db"]) for r in cand.collect()}
 
 
 def _run_dd15_on_docs(spark, rows):
@@ -68,7 +77,7 @@ def test_dd15_extreme_ratio_containment_beyond_banding(spark):
     5,000-word doc (J ≈ 0.009 — symmetric band collision probability
     ∝ J⁴ ≈ 7e-9, so dd10's channel structurally misses it). The
     containee-side bottom-k channel must surface it with containment
-    exactly 1.0 — and the materialized dd10_cand view must show the
+    exactly 1.0 — and dd10's materialized candidates must show the
     symmetric channel alone really did miss the pair."""
     import random
 
@@ -84,7 +93,7 @@ def test_dd15_extreme_ratio_containment_beyond_banding(spark):
     rows = [(1, " ".join(a_words)), (2, " ".join(b_words))] + filler
     out = _run_dd15_on_docs(spark, rows)
     # symmetric banding alone misses the extreme-ratio pair ...
-    sym = {(r["da"], r["db"]) for r in spark.table("dd10_cand").collect()}
+    sym = _dd10_sym_pairs(spark)
     assert (1, 2) not in sym, sym
     # ... the bottom-k containee channel finds it, at containment 1.0
     assert (1, 2) in out, out
@@ -127,18 +136,19 @@ def test_dd15_boilerplate_framed_containee_df_aware_bottomk(spark):
     )
     naive_bot4 = grams[:4]
     assert all("needle" not in g for g in naive_bot4), naive_bot4
+    from db_converter_spark.operators.dedup import _DD15_FULLSH_SPARK
+
     df = {
-        r["sh"]: r["df"]
-        for r in spark.sql(
-            "SELECT sh, COUNT(*) AS df FROM dd15_sh WHERE sh IN ({}) GROUP BY sh".format(
-                ", ".join("'" + g + "'" for g in naive_bot4)
-            )
-        ).collect()
+        r["sh"]: r["count"]
+        for r in spark.sql(_DD15_FULLSH_SPARK)
+        .where(F.col("sh").isin(naive_bot4))
+        .groupBy("sh")
+        .count()
+        .collect()
     }
     assert all(df[g] > 100 for g in naive_bot4), df
     # symmetric banding misses the extreme-ratio pair ...
-    sym = {(r["da"], r["db"]) for r in spark.table("dd10_cand").collect()}
-    assert (1, 2) not in sym
+    assert (1, 2) not in _dd10_sym_pairs(spark)
     # ... and the df-aware containee channel finds it at containment 1.0
     assert (1, 2) in out, sorted(out)[:10]
     r = out[(1, 2)]
@@ -153,7 +163,7 @@ def test_pipe11_known_token_arithmetic(spark):
     report cell recomputed from them (ceil-division seq counts, truncation
     loss, split padding)."""
     from db_converter_spark.operators.pipeline import _PIPE11_SPARK
-    from db_converter_spark.operators.textops import ta14_vocab_view
+    from db_converter_spark.operators.textops import ta14_vocab
     from tests.bpe_twin import bpe_encode_vocab
 
     texts = {
@@ -164,7 +174,7 @@ def test_pipe11_known_token_arithmetic(spark):
         [(i, t, "en", "s", len(t)) for i, t in texts.items()],
         "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
     ).createOrReplaceTempView("documents")
-    ta14_vocab_view(spark)
+    vocab = ta14_vocab(spark)["vocab"]
 
     wc: dict = {}
     for t in texts.values():
@@ -173,7 +183,7 @@ def test_pipe11_known_token_arithmetic(spark):
     enc = bpe_encode_vocab(wc)
     n = {d: sum(enc[w] for w in t.split(" ")) for d, t in texts.items()}
 
-    rows = {r["context_len"]: r for r in spark.sql(_PIPE11_SPARK).collect()}
+    rows = {r["context_len"]: r for r in spark.sql(_PIPE11_SPARK, vocab=vocab).collect()}
     assert set(rows) == {64, 128, 256, 512}
     total = n[1] + n[2]
     for L in (64, 512):
@@ -384,7 +394,7 @@ def test_pipe12_known_budget_arithmetic(spark):
     targets, ceil-division epochs, the 4-epoch ceiling and the shortfall
     are recomputed exactly in integers."""
     from db_converter_spark.operators.pipeline import _MIX_WEIGHTS, _PIPE12_SPARK
-    from db_converter_spark.operators.textops import ta14_vocab_view
+    from db_converter_spark.operators.textops import ta14_vocab
     from tests.bpe_twin import bpe_encode_vocab
 
     # src0 weight 100, src1 weight 197 (the generator's i*97 pattern)
@@ -397,7 +407,7 @@ def test_pipe12_known_budget_arithmetic(spark):
         [(i, t, "en", s, len(t)) for i, t, s in docs],
         "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
     ).createOrReplaceTempView("documents")
-    ta14_vocab_view(spark)
+    rels = ta14_vocab(spark)
 
     wc: dict = {}
     for _, t, _ in docs:
@@ -408,7 +418,10 @@ def test_pipe12_known_budget_arithmetic(spark):
         s: sum(enc[w] for w in t.split(" ")) for _, t, s in docs
     }
     total, sum_w = sum(toks.values()), 297
-    got = {r["source"]: tuple(r)[1:] for r in spark.sql(_PIPE12_SPARK).collect()}
+    got = {
+        r["source"]: tuple(r)[1:]
+        for r in spark.sql(_PIPE12_SPARK, swc=rels["swc"], vocab=rels["vocab"]).collect()
+    }
     for s, w in (("src0", 100), ("src1", 197)):
         tgt = (4 * total * w) // sum_w
         eff = min(tgt, 4 * toks[s])
@@ -509,13 +522,12 @@ def test_dq06_known_drift_and_stability(spark):
         "CAST(u AS BIGINT) AS user_id, y AS event_type, v AS value, '' AS props "
         f"FROM VALUES {', '.join(rows)} AS t(e, t, u, y, v)"
     ).createOrReplaceTempView("events")
-    spark.sql(_DQ06_SPAN_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq06_span"
-    )
-    spark.sql(_DQ06_REF_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq06_ref"
-    )
-    got = {r["event_type"]: tuple(r)[1:] for r in spark.sql(_DQ06_SPARK).collect()}
+    span = spark.sql(_DQ06_SPAN_SPARK).localCheckpoint(eager=True)
+    ref = spark.sql(_DQ06_REF_SPARK, span=span).localCheckpoint(eager=True)
+    got = {
+        r["event_type"]: tuple(r)[1:]
+        for r in spark.sql(_DQ06_SPARK, span=span, ref=ref).collect()
+    }
     # a: ref {bin0: 2, bin9: 2}, cur {bin9: 4} -> TV = (|0-8|+|16-8|)/(2*16)
     assert got["a"] == (4, 4, 500000, True)
     assert got["b"] == (4, 4, 0, False)
@@ -557,13 +569,9 @@ def test_dq06_both_engines_on_synthetic_corpus(spark):
         "CAST(u AS BIGINT) AS user_id, y AS event_type, v AS value, '' AS props "
         f"FROM VALUES {values} AS t(e, t, u, y, v)"
     ).createOrReplaceTempView("events")
-    spark.sql(_DQ06_SPAN_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq06_span"
-    )
-    spark.sql(_DQ06_REF_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "dq06_ref"
-    )
-    got = sorted(tuple(r) for r in spark.sql(_DQ06_SPARK).collect())
+    span = spark.sql(_DQ06_SPAN_SPARK).localCheckpoint(eager=True)
+    ref = spark.sql(_DQ06_REF_SPARK, span=span).localCheckpoint(eager=True)
+    got = sorted(tuple(r) for r in spark.sql(_DQ06_SPARK, span=span, ref=ref).collect())
 
     con = duckdb.connect()
     dvalues = ", ".join(

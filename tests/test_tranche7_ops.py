@@ -68,8 +68,7 @@ def _spark_pipe13(spark):
     )
 
     feat = spark.sql(_PIPE13_FEAT_SPARK).localCheckpoint(eager=True)
-    feat.createOrReplaceTempView("pipe13_feat_t")
-    return spark.sql(_pipe13_main("pipe13_feat_t", "DIV", ""))
+    return spark.sql(_pipe13_main("{feat}", "DIV", ""), feat=feat)
 
 
 def test_pipe13_known_fixed_point_arithmetic(spark):
@@ -190,13 +189,13 @@ def test_dd14_tie_break_and_both_engines_on_duplicate_vectors(spark):
     assert acheck[0] == 0 and acheck[251] == 0 and acheck[10] == 0
     assert acheck[11] == 0 and acheck[502] == 502 and acheck[20] == 502
     ckpt = assign.localCheckpoint(eager=True)
-    ckpt.createOrReplaceTempView("dd14_assign")
     # r12: the pair cosine runs vectorized per cid group (8-dim vectors
     # here — the worker folds over whatever dimension the data carries)
-    _dd14_pairs_py(ckpt).createOrReplaceTempView("dd14_pairs_raw")
-    spark.sql(_DD14_PAIRS_FROM_RAW).createOrReplaceTempView("dd14_pairs")
-    # r11: cell sizes are inlined in _DD14_SPARK_MAIN (no dd14_cells view)
-    got = sorted(tuple(r) for r in spark.sql(_DD14_SPARK_MAIN).collect())
+    pairs = spark.sql(_DD14_PAIRS_FROM_RAW, raw=_dd14_pairs_py(ckpt))
+    # r11: cell sizes are inlined in _DD14_SPARK_MAIN (no dd14_cells relation)
+    got = sorted(
+        tuple(r) for r in spark.sql(_DD14_SPARK_MAIN, pairs=pairs, assign=ckpt).collect()
+    )
     cells = {r[0]: r for r in got}
     assert set(cells) == {0, 502}, cells
     # cell 0 holds {0, 251, 10, 11}: all sim-1.0 pairs are dups; the
@@ -246,12 +245,14 @@ def test_dd14_vectorized_assign_matches_sql_assign(spark):
             (r["vec_id"], r["cid"], r["cs"], tuple(r["embedding"]), r["nrm"])
             for r in spark.sql(_DD14_ASSIGN_SPARK).collect()
         )
+        assign, bc = _dd14_assign_py(
+            spark, spark.sql("SELECT vec_id, embedding FROM embeddings")
+        )
         py_rows = sorted(
             (r["vec_id"], r["cid"], r["cs"], tuple(r["embedding"]), r["nrm"])
-            for r in _dd14_assign_py(
-                spark, spark.sql("SELECT vec_id, embedding FROM embeddings")
-            ).collect()
+            for r in assign.collect()
         )
+        bc.destroy()
     finally:
         spark.catalog.dropTempView("embeddings")
     assert sql_rows == py_rows
