@@ -10,9 +10,12 @@ from __future__ import annotations
 
 from functools import lru_cache
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -90,6 +93,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order,
+    ``schema`` a DDL string). The rows travel as one Arrow table, which
+    Spark plans as a ``LocalRelation``: reading it launches no job and no
+    Python worker. A Python list would become an RDD scan instead
+    (``parallelize``, one Python worker per partition on every read)."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
+def list_relations(spark: SparkSession, db: str) -> dict[str, bool]:
+    """``{name: is_view}`` for the permanent tables and views of database
+    ``db``, in ``SHOW TABLES`` order. SHOW commands answer from the session
+    catalog on the driver, while PySpark's ``Catalog.listTables`` iterates a
+    Dataset: two to four Spark jobs per call."""
+    views = {
+        r.viewName for r in spark.sql(f"SHOW VIEWS IN `{db}`").collect() if not r.isTemporary
+    }
+    return {
+        r.tableName: r.tableName in views
+        for r in spark.sql(f"SHOW TABLES IN `{db}`").collect()
+        if not r.isTemporary
+    }
+
+
+def list_databases(spark: SparkSession) -> list[str]:
+    """Database names (``SHOW DATABASES``, no Spark job)."""
+    return [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+
+
+def column_types(spark: SparkSession, qualified: str) -> list[tuple[str, str]]:
+    """(name, simpleString type) of each column of ``qualified`` — what
+    ``Catalog.listColumns`` reports, read from the analyzed schema without
+    a Spark job."""
+    return [(f.name, f.dataType.simpleString()) for f in spark.table(qualified).schema.fields]
+
+
 def create_information_schema_views(spark: SparkSession, db: str | None = None) -> None:
     """Catalog-emulation views (SURVEY §4.3 item 2): the introspection
     surface conditional migrations need — the reference probes
@@ -101,16 +146,13 @@ def create_information_schema_views(spark: SparkSession, db: str | None = None) 
     the PG-dialect rewriter maps ``information_schema.columns`` onto it.
     Driver-side listing — catalogs are metadata, not data."""
     db = db or spark.catalog.currentDatabase()
-    rows = []
-    for t in spark.catalog.listTables(db):
-        if t.tableType == "TEMPORARY":
-            continue
-        for i, c in enumerate(spark.catalog.listColumns(t.name, db)):
-            rows.append((db, t.name, c.name, c.dataType, i + 1))
+    rows = [
+        (db, t, name, dtype, i + 1)
+        for t in list_relations(spark, db)
+        for i, (name, dtype) in enumerate(column_types(spark, f"`{db}`.`{t}`"))
+    ]
     schema = "table_schema string, table_name string, column_name string, data_type string, ordinal_position int"
-    spark.createDataFrame(rows, schema).createOrReplaceTempView(
-        "information_schema_columns"
-    )
+    local_relation(spark, rows, schema).createOrReplaceTempView("information_schema_columns")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -2,8 +2,15 @@
 
 Everything here is built from native ``pyspark.sql.functions`` expressions so
 it stays inside whole-stage codegen — no Python UDFs in the hot path. The
-driver-side (plain-Python) variants exist for the engine layer's string
-formatting (hooks, export filenames).
+pure and constant shims packet SQL calls by their PG names are registered as
+SQL functions (``CREATE TEMPORARY FUNCTION … RETURN <expr>``, the same
+expressions written in SQL), which Catalyst inlines: a query that calls them
+starts no Python worker. Only ``pg_sleep`` and the per-refresh catalog
+lookups (dict closures: ``pg_get_serial_sequence`` here, ``pg_relation_size``
+and friends in ``pg_catalog``) stay Python UDFs. The driver-side
+(plain-Python) variants exist for the engine layer's string formatting
+(hooks, export filenames) and are the reference the SQL shims are tested
+against.
 
 Reference behaviors emulated:
 - ``pg_size_pretty`` — reference: dba_top_tables/01_step.sql result columns.
@@ -37,10 +44,10 @@ def pg_size_pretty(nbytes: Column) -> Column:
     kb, mb, gb, tb = 1024.0, 1024.0**2, 1024.0**3, 1024.0**4
     return (
         F.when(F.abs(b) < 10 * kb, F.concat(nbytes.cast("long").cast("string"), F.lit(" bytes")))
-        .when(F.abs(b) < 10 * mb, F.concat(F.round(b / kb).cast("long").cast("string"), F.lit(" kB")))
-        .when(F.abs(b) < 10 * gb, F.concat(F.round(b / mb).cast("long").cast("string"), F.lit(" MB")))
-        .when(F.abs(b) < 10 * tb, F.concat(F.round(b / gb).cast("long").cast("string"), F.lit(" GB")))
-        .otherwise(F.concat(F.round(b / tb).cast("long").cast("string"), F.lit(" TB")))
+        .when(F.abs(b) < 10 * mb, F.concat(F.bround(b / kb).cast("long").cast("string"), F.lit(" kB")))
+        .when(F.abs(b) < 10 * gb, F.concat(F.bround(b / mb).cast("long").cast("string"), F.lit(" MB")))
+        .when(F.abs(b) < 10 * tb, F.concat(F.bround(b / gb).cast("long").cast("string"), F.lit(" GB")))
+        .otherwise(F.concat(F.bround(b / tb).cast("long").cast("string"), F.lit(" TB")))
     )
 
 
@@ -128,20 +135,67 @@ def _pg_sleep(seconds) -> bool:
     return True
 
 
-def register_pg_compat(spark: SparkSession) -> None:
-    """Register SQL-callable shims so packet SQL can use PG names directly.
-    These are catalog/DDL-surface helpers (alert and dba packets format a
-    handful of driver-scale rows with them), not data-path operators —
-    row-at-a-time UDF cost is irrelevant here."""
-    spark.udf.register("quote_ident", py_quote_ident, "string")
-    spark.udf.register("pg_size_pretty", py_pg_size_pretty, "string")
-    spark.udf.register("pg_sleep", _pg_sleep, "boolean")
+def _size_unit_sql(div: str, unit: str) -> str:
+    return f"concat(CAST(bround(n / {div}) AS BIGINT), ' {unit}')"
+
+
+# PG name -> (SQL parameter list, return type, body): the SQL spelling of
+# the Column-level shims above, plus the constant answers of the
+# introspection functions Spark has no counterpart for.
+_SQL_SHIMS = {
+    # python's round is half-even, like bround: parity with py_pg_size_pretty
+    "pg_size_pretty": (
+        "n DOUBLE",
+        "STRING",
+        "CASE WHEN abs(n) < 10240 THEN concat(CAST(n AS BIGINT), ' bytes')"
+        f" WHEN abs(n) < 10485760 THEN {_size_unit_sql('1024', 'kB')}"
+        f" WHEN abs(n) < 10737418240 THEN {_size_unit_sql('1048576', 'MB')}"
+        f" WHEN abs(n) < 10995116277760 THEN {_size_unit_sql('1073741824', 'GB')}"
+        f" ELSE {_size_unit_sql('1099511627776', 'TB')} END",
+    ),
+    "quote_ident": (
+        "s STRING",
+        "STRING",
+        f"CASE WHEN s RLIKE '{_IDENT_RE.pattern}' THEN s"
+        " ELSE concat('\"', replace(s, '\"', '\"\"'), '\"') END",
+    ),
     # WAL-position introspection (reference: packets/dba_lag/01_step.sql):
     # Spark has no WAL; pg_stat_replication is the typed-empty view, and the
     # LSN functions return the zero position / zero byte-lag consistently.
-    spark.udf.register("pg_current_wal_lsn", lambda: "0/0", "string")
-    spark.udf.register("pg_last_wal_replay_lsn", lambda: "0/0", "string")
-    spark.udf.register("pg_wal_lsn_diff", lambda a, b: 0, "bigint")
+    "pg_current_wal_lsn": ("", "STRING", "'0/0'"),
+    "pg_last_wal_replay_lsn": ("", "STRING", "'0/0'"),
+    "pg_wal_lsn_diff": ("a STRING, b STRING", "BIGINT", "0"),
+    # Spark has no backend processes; -1 never equals a pg_stat_activity pid
+    "pg_backend_pid": ("", "INT", "-1"),
+    # no constraints exist on parquet tables — NULL, like PG for unknown oid
+    "pg_get_constraintdef": ("oid BIGINT", "STRING", "CAST(NULL AS STRING)"),
+}
+
+
+def register_sql_shims(spark: SparkSession, *names: str) -> None:
+    """(Re)register the named :data:`_SQL_SHIMS` as session-scoped SQL
+    functions — each a driver-side catalog command, no Spark job."""
+    for name in names:
+        params, returns, body = _SQL_SHIMS[name]
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params})"
+            f" RETURNS {returns} RETURN {body}"
+        )
+
+
+def register_pg_compat(spark: SparkSession) -> None:
+    """Register SQL-callable shims so packet SQL can use PG names directly:
+    the pure and constant ones as SQL functions (inlined, no Python worker),
+    ``pg_sleep`` as a driver-side Python UDF."""
+    register_sql_shims(
+        spark,
+        "quote_ident",
+        "pg_size_pretty",
+        "pg_current_wal_lsn",
+        "pg_last_wal_replay_lsn",
+        "pg_wal_lsn_diff",
+    )
+    spark.udf.register("pg_sleep", _pg_sleep, "boolean")
     # default: no sequence ownership known → NULL for every column, which is
     # PG's answer for a non-serial column. The runner re-registers a
     # ledger-backed version per target (RunContext.refresh_catalog) so

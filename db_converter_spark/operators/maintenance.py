@@ -38,6 +38,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from db_converter_spark.catalog import list_relations
+
 _TARGET_FILE_BYTES = 128 * 1024 * 1024  # parquet compaction target
 
 _VACUUM_RE = re.compile(
@@ -223,10 +225,10 @@ def _analyze(
     if table is None:
         if not dry:
             db = spark.catalog.currentDatabase()
-            for t in spark.catalog.listTables(db):
-                if t.tableType not in ("TEMPORARY", "VIEW"):
+            for name, is_view in list_relations(spark, db).items():
+                if not is_view:
                     spark.sql(
-                        f"ANALYZE TABLE {db}.{t.name} COMPUTE STATISTICS"
+                        f"ANALYZE TABLE {db}.{name} COMPUTE STATISTICS"
                     ).collect()
         return ["ANALYZE"], []
     q = _qualify(spark, table)
@@ -239,17 +241,22 @@ def _analyze(
     return ["ANALYZE"], []
 
 
+def parse_indexes(props: dict[str, str]) -> dict[str, dict]:
+    """Recorded index definitions in a table's TBLPROPERTIES: {name: spec}."""
+    return {
+        k[len(INDEX_PROP_PREFIX):]: json.loads(v)
+        for k, v in props.items()
+        if k.startswith(INDEX_PROP_PREFIX)
+    }
+
+
 def list_indexes(spark: SparkSession, qualified_table: str) -> dict[str, dict]:
     """Recorded index definitions on one table: {name: spec}."""
     try:
         rows = spark.sql(f"SHOW TBLPROPERTIES {qualified_table}").collect()
     except Exception:  # noqa: BLE001 — views/temp tables hold no indexes
         return {}
-    out: dict[str, dict] = {}
-    for r in rows:
-        if r["key"].startswith(INDEX_PROP_PREFIX):
-            out[r["key"][len(INDEX_PROP_PREFIX):]] = json.loads(r["value"])
-    return out
+    return parse_indexes({r["key"]: r["value"] for r in rows})
 
 
 def _create_index(
@@ -299,10 +306,10 @@ def _drop_index(
     name = parts[-1]
     dbs = [parts[0]] if len(parts) > 1 else [spark.catalog.currentDatabase()]
     for db in dbs:
-        for t in spark.catalog.listTables(db):
-            if t.tableType in ("TEMPORARY", "VIEW"):
+        for tname, is_view in list_relations(spark, db).items():
+            if is_view:
                 continue
-            q = f"{db}.{t.name}"
+            q = f"{db}.{tname}"
             if name in list_indexes(spark, q):
                 if not dry_run:
                     spark.sql(

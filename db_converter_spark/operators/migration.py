@@ -23,12 +23,27 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from db_converter_spark.catalog import column_types
 
-def _columns(spark: SparkSession, table: str) -> list[tuple[str, str]]:
-    return [(f.name, f.dataType.simpleString()) for f in spark.table(table).schema.fields]
+# A rewrite plan and the reader of the PG affected-row count it observes
+# while it runs; the reader is valid once the plan has executed (swap write
+# or noop shadow execution), and the plan must execute exactly once.
+CountedPlan = tuple[DataFrame, Callable[[], int]]
+
+
+def _observed(df: DataFrame, matched: Column) -> CountedPlan:
+    """``df`` with an Observation counting its rows where ``matched`` is
+    TRUE. The count is filled by the job that writes the plan, so the
+    affected-row number costs no pass of its own. Nothing the optimizer may
+    prune to an empty relation (a filter that folds to FALSE, ``limit(0)``)
+    may sit above the observation: it would drop the observed subtree."""
+    obs = Observation()
+    return df.observe(obs, F.count_if(matched).alias("n")), lambda: obs.get["n"]
 
 
 def change_column_type(
@@ -42,7 +57,7 @@ def change_column_type(
     dance, executed as ONE parallel scan→write."""
     cols = [
         F.col(name).cast(new_type).alias(name) if name == column else F.col(name)
-        for name, _ in _columns(spark, table)
+        for name, _ in column_types(spark, table)
     ]
     tmp = f"{table}__mig_tmp"
     bak = f"{table}__mig_old"
@@ -62,12 +77,13 @@ def merge_update_plan(
     set_map: dict[str, str],
     broadcast_source: bool = True,
     condition: str | None = None,
-) -> DataFrame:
-    """Logical plan of :func:`merge_update` — built (and analyzed) without
-    writing, so no-commit dry-runs validate the exact plan a real run would
-    execute. Emulated ``MERGE INTO … WHEN MATCHED THEN UPDATE`` /
-    ``UPDATE … FROM`` (reference: packets/test_int4_to_int8/02_step.sql:3-5)
-    for plain parquet tables (no Delta in this environment).
+) -> CountedPlan:
+    """Logical plan of :func:`merge_update` and its matched-row count —
+    built (and analyzed) without writing, so no-commit dry-runs execute the
+    exact plan a real run would write. Emulated ``MERGE INTO … WHEN
+    MATCHED THEN UPDATE`` / ``UPDATE … FROM`` (reference:
+    packets/test_int4_to_int8/02_step.sql:3-5) for plain parquet tables
+    (no Delta in this environment).
 
     Semantics: rows of ``target_table`` matching ``source`` — on the ``on``
     equi-keys, or on an arbitrary SQL ``condition`` over aliases ``t``/``s``
@@ -81,6 +97,10 @@ def merge_update_plan(
     - condition path: each target row is tagged with a unique id and only
       the first matching source row (deterministic order over the source
       columns) contributes, via one row_number window on the id.
+
+    The count is ``count_if(matched)`` observed on the joined rows, after
+    the first-match filter on the condition path, so each target row counts
+    at most once — PG's ``('UPDATE', n)``.
 
     At scale: the equi path never shuffles the target (broadcast-hash
     join + partition-parallel write). The condition path adds one window
@@ -120,15 +140,16 @@ def merge_update_plan(
             .withColumn("__merge_rn", F.row_number().over(w))
             .where(F.col("__merge_rn") == 1)
         )
+    joined, matched_count = _observed(joined, matched)
     out_cols = []
-    for name, _ in _columns(spark, target_table):
+    for name, _ in column_types(spark, target_table):
         if name in set_map:
             out_cols.append(
                 F.when(matched, F.expr(set_map[name])).otherwise(F.col(f"t.{name}")).alias(name)
             )
         else:
             out_cols.append(F.col(f"t.{name}").alias(name))
-    return joined.select(*out_cols)
+    return joined.select(*out_cols), matched_count
 
 
 def merge_update(
@@ -145,19 +166,14 @@ def merge_update(
     matched-target-row count — the reference surfaces py-postgresql's
     ``('UPDATE', n)`` command tuple per statement
     (reference: dbccore/dbccore.py:866-870), so the runner needs the real
-    affected-row number, not just the command word. The count is a semi-join
-    over only the key/condition columns (pruned scan), cheap next to the
-    rewrite itself; PG counts each target row at most once, which is exactly
-    left_semi semantics."""
-    n = merge_matched_count(spark, target_table, source, on, condition, broadcast_source)
-    _swap_write(
-        spark,
-        target_table,
-        merge_update_plan(
-            spark, target_table, source, on, set_map, broadcast_source, condition
-        ),
+    affected-row number, not just the command word. The count is observed
+    on the rewrite's own join while the swap write runs — no semi-join pass
+    over the target; :func:`merge_matched_count` is its reference."""
+    plan, matched_count = merge_update_plan(
+        spark, target_table, source, on, set_map, broadcast_source, condition
     )
-    return n
+    _swap_write(spark, target_table, plan)
+    return matched_count()
 
 
 def merge_matched_count(
@@ -168,7 +184,9 @@ def merge_matched_count(
     condition: str | None = None,
     broadcast_source: bool = True,
 ) -> int:
-    """Number of ``target_table`` rows a :func:`merge_update` would touch."""
+    """Number of ``target_table`` rows a :func:`merge_update` would touch,
+    by a separate left-semi join — the reference the observed count is
+    tested against."""
     t = spark.table(target_table).alias("t")
     s = (F.broadcast(source) if broadcast_source else source).alias("s")
     if on is not None:
@@ -221,8 +239,8 @@ def upsert_plan(
     keys: list[str],
     set_map: dict[str, str] | None,
     update_where: str | None = None,
-) -> DataFrame:
-    """Logical plan of :func:`upsert` — PostgreSQL
+) -> CountedPlan:
+    """Logical plan of :func:`upsert` and its affected-row count — PostgreSQL
     ``INSERT … ON CONFLICT (keys) DO UPDATE SET … [WHERE …] | DO NOTHING``
     semantics for parquet tables (the one DML idiom every PG user writes
     that the reference corpus happens not to; reference executes it
@@ -240,15 +258,19 @@ def upsert_plan(
     source's own order) — the batch-friendly resolution, documented
     rather than erroring.
 
+    The count is observed on the union's two branches: every row of the
+    insert branch, plus (DO UPDATE only) the updated rows of the rewritten
+    target.
+
     At scale: the source is the small side by construction (a batch of
     proposed rows) — broadcast join against the target, partition-parallel
     rewrite, no shuffle of the table."""
-    tcols = [name for name, _ in _columns(spark, table)]
+    tcols = [name for name, _ in column_types(spark, table)]
     missing = [k for k in keys if k not in {c.lower() for c in tcols}]
     if missing:
         raise ValueError(f"upsert {table}: unknown conflict keys {missing}")
     src = source.dropDuplicates(keys)
-    for name, dtype in _columns(spark, table):
+    for name, dtype in column_types(spark, table):
         if name not in src.columns:
             src = src.withColumn(name, F.lit(None).cast(dtype))
     t = spark.table(table).alias("t")
@@ -258,6 +280,8 @@ def upsert_plan(
     matched = F.col("__ups_hit").isNotNull()
     if set_map is not None and update_where is not None:
         matched = matched & F.expr(update_where)
+    if set_map is not None:
+        joined, n_updated = _observed(joined, matched)
     out_cols = []
     for c in tcols:
         if set_map is not None and c in set_map:
@@ -269,12 +293,16 @@ def upsert_plan(
         else:
             out_cols.append(F.col(f"t.{c}").alias(c))
     kept = joined.select(*out_cols)
-    new_rows = (
+    new_rows, n_inserted = _observed(
         src.alias("excluded")
         .join(spark.table(table).alias("t"), cond, "left_anti")
-        .select(*[F.col(f"excluded.{c}").alias(c) for c in tcols])
+        .select(*[F.col(f"excluded.{c}").alias(c) for c in tcols]),
+        F.lit(True),
     )
-    return kept.unionByName(new_rows)
+    plan = kept.unionByName(new_rows)
+    if set_map is None:
+        return plan, n_inserted
+    return plan, lambda: n_inserted() + n_updated()
 
 
 def upsert(
@@ -288,10 +316,12 @@ def upsert(
     """Execute :func:`upsert_plan` via the two-phase swap write. Returns
     PG's affected-row count for ``INSERT … ON CONFLICT``: inserted rows
     plus (DO UPDATE only) updated rows — DO-NOTHING conflicts and rows a
-    ``DO UPDATE … WHERE`` excludes are not counted."""
-    n = upsert_affected_count(spark, table, source, keys, set_map, update_where)
-    _swap_write(spark, table, upsert_plan(spark, table, source, keys, set_map, update_where))
-    return n
+    ``DO UPDATE … WHERE`` excludes are not counted. The count is observed
+    during the swap write; :func:`upsert_affected_count` is its
+    reference."""
+    plan, affected = upsert_plan(spark, table, source, keys, set_map, update_where)
+    _swap_write(spark, table, plan)
+    return affected()
 
 
 def upsert_affected_plan(
@@ -305,9 +335,9 @@ def upsert_affected_plan(
     """Post-image of the rows an :func:`upsert` touches — inserted rows
     plus (DO UPDATE only) updated rows with their NEW values: exactly what
     PG's ``INSERT … ON CONFLICT … RETURNING`` surfaces."""
-    tcols = [name for name, _ in _columns(spark, table)]
+    tcols = [name for name, _ in column_types(spark, table)]
     src = source.dropDuplicates(keys)
-    for name, dtype in _columns(spark, table):
+    for name, dtype in column_types(spark, table):
         if name not in src.columns:
             src = src.withColumn(name, F.lit(None).cast(dtype))
     cond = [F.col(f"t.{k}") == F.col(f"excluded.{k}") for k in keys]
@@ -341,7 +371,9 @@ def upsert_affected_count(
     update_where: str | None = None,
 ) -> int:
     """Rows an :func:`upsert` reports as affected (PG command-tuple
-    semantics): inserted + (DO UPDATE only) updated."""
+    semantics): inserted + (DO UPDATE only) updated, by separate anti- and
+    inner-join counts — the reference the observed count is tested
+    against."""
     src = source.dropDuplicates(keys)
     t = spark.table(table)
     cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
@@ -365,15 +397,21 @@ def delete_using_plan(
     source: DataFrame,
     salias: str,
     condition: str,
-) -> DataFrame:
-    """Kept-rows plan of :func:`delete_using` — PG ``DELETE FROM t USING s
-    WHERE cond`` (the delete-join idiom; beyond the reference corpus):
-    target rows with ANY matching source row are removed, i.e. an
-    anti-join on the condition. The join side choice is left to the
-    planner/AQE (the source is often but not always small)."""
-    t = spark.table(table).alias(talias)
+) -> CountedPlan:
+    """Kept-rows plan of :func:`delete_using` and its deleted-row count —
+    PG ``DELETE FROM t USING s WHERE cond`` (the delete-join idiom; beyond
+    the reference corpus): target rows with ANY matching source row are
+    removed, i.e. an anti-join on the condition. The join side choice is
+    left to the planner/AQE (the source is often but not always small).
+    The anti-join keeps each target row at most once, so the deleted count
+    is the target's rows observed below the join minus the kept rows
+    observed above it."""
+    t, n_rows = _observed(spark.table(table), F.lit(True))
     s = source.alias(salias)
-    return t.join(s, F.expr(condition), "left_anti")
+    kept, n_kept = _observed(
+        t.alias(talias).join(s, F.expr(condition), "left_anti"), F.lit(True)
+    )
+    return kept, lambda: n_rows() - n_kept()
 
 
 def delete_using(
@@ -385,46 +423,45 @@ def delete_using(
     condition: str,
 ) -> int:
     """Execute :func:`delete_using_plan` via swap write; returns the PG
-    affected-row count (each target row counted at most once —
-    left_semi)."""
-    n = (
-        spark.table(table)
-        .alias(talias)
-        .join(source.alias(salias), F.expr(condition), "left_semi")
-        .count()
-    )
-    _swap_write(
-        spark, table, delete_using_plan(spark, table, talias, source, salias, condition)
-    )
-    return n
+    affected-row count (each target row counted at most once), observed
+    during the write."""
+    plan, deleted = delete_using_plan(spark, table, talias, source, salias, condition)
+    _swap_write(spark, table, plan)
+    return deleted()
 
 
-def delete_plan(spark: SparkSession, table: str, predicate: str | None) -> DataFrame:
-    """Kept-rows plan of :func:`delete_where` (anti-filter); analyzed eagerly
-    so dry-runs surface bad predicates without writing."""
-    df = spark.table(table)
-    return (
-        df.limit(0)
-        if predicate is None
-        else df.where(f"NOT ({predicate}) OR ({predicate}) IS NULL")
-    )
+def delete_plan(spark: SparkSession, table: str, predicate: str | None) -> CountedPlan:
+    """Kept-rows plan of :func:`delete_where` (anti-filter) and its
+    deleted-row count; analyzed eagerly so dry-runs surface bad predicates
+    without writing. The hit flag is computed below the observation and
+    the filter above it reads the flag as a column: a predicate that folds
+    to a constant (or none at all: delete every row) leaves nothing the
+    optimizer could prune together with the observed scan."""
+    hit = F.lit(True) if predicate is None else F.coalesce(F.expr(predicate), F.lit(False))
+    flag = F.col("__delete_hit")
+    flagged, deleted = _observed(spark.table(table).withColumn("__delete_hit", hit), flag)
+    return flagged.where(~flag).drop("__delete_hit"), deleted
 
 
-def shadow_execute(df: DataFrame) -> None:
-    """Execute ``df``'s plan end-to-end and discard the output (Spark's
+def shadow_execute(counted: CountedPlan) -> int:
+    """Execute a rewrite plan end-to-end and discard the output (Spark's
     ``noop`` sink): the no-commit analog of the reference's execute-then-
     rollback (dbccore/dbccore.py:886-888). Runtime failures a pure EXPLAIN
     cannot catch — ANSI cast overflow, division by zero, corrupt input —
-    surface here, while no table mutates and nothing lands on disk."""
-    df.write.format("noop").mode("overwrite").save()
+    surface here, while no table mutates and nothing lands on disk.
+    Returns the would-be affected-row count the plan observed."""
+    plan, affected = counted
+    plan.write.format("noop").mode("overwrite").save()
+    return affected()
 
 
 def predicate_match_count(
     spark: SparkSession, table: str, predicate: str | None
 ) -> int:
     """Rows where ``predicate`` is TRUE (the PG affected-row count for
-    UPDATE/DELETE). Prunes to the predicate's columns and pushes the filter
-    to the scan — cheap next to the table rewrite it accompanies."""
+    UPDATE/DELETE), by a separate filtered count — the reference the
+    counts observed by :func:`delete_plan` and :func:`update_plan` are
+    tested against."""
     df = spark.table(table)
     return df.count() if predicate is None else df.where(predicate).count()
 
@@ -433,10 +470,10 @@ def delete_where(spark: SparkSession, table: str, predicate: str | None) -> int:
     """``DELETE FROM t [WHERE p]`` for parquet tables: anti-filter rewrite
     (reference: packets/test_insert_info/01_step.sql:1). ``predicate=None``
     deletes every row. Returns the deleted-row count (reference command-tuple
-    semantics, dbccore/dbccore.py:866-870)."""
-    n = predicate_match_count(spark, table, predicate)
-    _swap_write(spark, table, delete_plan(spark, table, predicate))
-    return n
+    semantics, dbccore/dbccore.py:866-870), observed during the write."""
+    plan, deleted = delete_plan(spark, table, predicate)
+    _swap_write(spark, table, plan)
+    return deleted()
 
 
 def update_where(
@@ -449,10 +486,11 @@ def update_where(
     conditional-projection rewrite — one scan, no join, partition-parallel
     write. All SET expressions are evaluated in a single SELECT so each
     right-hand side sees the OLD row values (PostgreSQL semantics), even
-    when one SET column references another. Returns the matched-row count."""
-    n = predicate_match_count(spark, table, predicate)
-    _swap_write(spark, table, update_plan(spark, table, set_map, predicate))
-    return n
+    when one SET column references another. Returns the matched-row count,
+    observed during the write."""
+    plan, matched_count = update_plan(spark, table, set_map, predicate)
+    _swap_write(spark, table, plan)
+    return matched_count()
 
 
 def update_plan(
@@ -460,20 +498,22 @@ def update_plan(
     table: str,
     set_map: dict[str, str],
     predicate: str | None,
-) -> DataFrame:
-    """Conditional-projection plan of :func:`update_where`."""
+) -> CountedPlan:
+    """Conditional-projection plan of :func:`update_where` and its
+    matched-row count (``count_if`` of the predicate over the scan)."""
     df = spark.table(table)
     unknown = set(set_map) - set(df.columns)
     if unknown:
         raise ValueError(f"UPDATE {table}: unknown columns {sorted(unknown)}")
     cond = F.expr(predicate) if predicate is not None else F.lit(True)
+    counted, matched_count = _observed(df, cond)
     cols = [
         F.when(cond, F.expr(set_map[c])).otherwise(F.col(c)).alias(c)
         if c in set_map
         else F.col(c)
         for c in df.columns
     ]
-    return df.select(*cols)
+    return counted.select(*cols), matched_count
 
 
 def chunk_grid(

@@ -536,6 +536,12 @@ def _dq05_child_branch(edges: tuple) -> str:
     return "\n  UNION ALL\n  ".join(branches)
 
 
+# One census row per edge (cnt NULL, so every FILTERed sum skips it): an
+# edge whose child table is empty still gets its output row, with the NULL
+# sums of the oracle's per-edge aggregate over no rows. A UNION ALL into the
+# final aggregate, not a join: the census adds no exchange and no join.
+_DQ05_CENSUS = ", ".join(f"('{edge}')" for edge, *_ in _DQ05_EDGES)
+
 _DQ05_SPARK = f"""
 WITH ck AS (
   SELECT edge, fk, COUNT(*) AS cnt FROM (
@@ -550,16 +556,22 @@ WITH ck AS (
   )}
 )
 SELECT k.edge AS edge,
-  CAST(SUM(k.cnt) AS BIGINT)                                      AS n_child_rows,
-  CAST(SUM(CASE WHEN k.fk IS NULL THEN k.cnt ELSE 0 END) AS BIGINT) AS n_null_rows,
-  CAST(SUM(CASE WHEN k.fk IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                                                                  AS n_fk_keys,
-  CAST(SUM(CASE WHEN k.fk IS NOT NULL AND p.pk IS NULL THEN k.cnt ELSE 0 END)
-       AS BIGINT)                                                 AS n_orphan_rows,
-  CAST(SUM(CASE WHEN k.fk IS NOT NULL AND p.pk IS NULL THEN 1 ELSE 0 END)
-       AS BIGINT)                                                 AS n_orphan_keys
-FROM ck k
-LEFT JOIN pk p ON p.edge = k.edge AND p.pk = k.fk
+  CAST(SUM(k.cnt) FILTER (WHERE k.cnt IS NOT NULL) AS BIGINT)     AS n_child_rows,
+  CAST(SUM(CASE WHEN k.fk IS NULL THEN k.cnt ELSE 0 END)
+       FILTER (WHERE k.cnt IS NOT NULL) AS BIGINT)                AS n_null_rows,
+  CAST(SUM(CASE WHEN k.fk IS NOT NULL THEN 1 ELSE 0 END)
+       FILTER (WHERE k.cnt IS NOT NULL) AS BIGINT)                AS n_fk_keys,
+  CAST(SUM(CASE WHEN k.fk IS NOT NULL AND k.pk IS NULL THEN k.cnt ELSE 0 END)
+       FILTER (WHERE k.cnt IS NOT NULL) AS BIGINT)                AS n_orphan_rows,
+  CAST(SUM(CASE WHEN k.fk IS NOT NULL AND k.pk IS NULL THEN 1 ELSE 0 END)
+       FILTER (WHERE k.cnt IS NOT NULL) AS BIGINT)                AS n_orphan_keys
+FROM (
+  SELECT k.edge, k.fk, k.cnt, p.pk
+  FROM ck k
+  LEFT JOIN pk p ON p.edge = k.edge AND p.pk = k.fk
+  UNION ALL
+  SELECT edge, NULL, NULL, NULL FROM VALUES {_DQ05_CENSUS} AS e(edge)
+) k
 GROUP BY k.edge
 """
 
@@ -573,7 +585,8 @@ def dq05_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns unpivoted to (edge, fk) rows, one keyed aggregate collapses
     them, and one join against the tagged DISTINCT parent-key union
     marks orphans — lineitem is scanned once instead of once per FK
-    edge; output is |edges| rows — the release gate a lake without
+    edge; output is |edges| rows, one per edge even when its child table
+    is empty (a census VALUES list) — the release gate a lake without
     enforced constraints runs instead of the reference's server-side
     constraint checks."""
     return _sql(spark, sf_dir, _DQ05_SPARK)

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from db_converter_spark.catalog import list_databases, list_relations
+
 
 def _quote(db: str, name: str) -> str:
     return f"`{db}`.`{name}`"
@@ -37,7 +39,7 @@ def clone_schema(
     ``include_data=False`` clones table shells only (the reference's
     structure-only mode); views are re-created with source-db references
     rewritten, dependency order resolved by retry (views-on-views)."""
-    existing = {d.name for d in spark.catalog.listDatabases()}
+    existing = set(list_databases(spark))
     # Same guards as the reference (packets/dba_clone_schema/01_step.sql:70-77):
     # missing template and pre-existing destination are hard errors.
     if src_db not in existing:
@@ -45,13 +47,9 @@ def clone_schema(
     if dst_db in existing:
         raise ValueError(f"Namespace {dst_db} already exists!")
 
-    tables: list[str] = []
-    views: list[str] = []
-    for t in spark.catalog.listTables(src_db):
-        if t.tableType == "VIEW":
-            views.append(t.name)
-        elif t.tableType != "TEMPORARY":
-            tables.append(t.name)
+    relations = list_relations(spark, src_db)
+    tables = [name for name, is_view in relations.items() if not is_view]
+    views = [name for name, is_view in relations.items() if is_view]
 
     cmds = [f"CREATE DATABASE IF NOT EXISTS `{dst_db}`"]
     for name in sorted(tables):

@@ -22,9 +22,16 @@ mappings:
 - *pg_stat_all_tables*: n_live_tup from the same stats; the MVCC counters
   (n_dead_tup, n_tup_ins/upd/hot_upd) are 0 — parquet has no dead tuples.
 
-Everything here is driver-side catalog metadata (small N); no Spark jobs
-are launched except the optional per-table file listing, which is a
-filesystem stat, not a scan.
+Everything here is driver-side catalog metadata (small N), and building
+it launches no Spark job. Names come from ``SHOW DATABASES`` / ``SHOW
+TABLES`` / ``SHOW VIEWS`` and columns from the analyzed table schema, all
+answered by the session catalog on the driver; statistics from ``SHOW
+TBLPROPERTIES`` / ``DESCRIBE EXTENDED`` (also driver-side commands) and a
+filesystem stat of the table location when no statistics exist. Each view
+is a ``LocalRelation`` over an Arrow table
+(:func:`db_converter_spark.catalog.local_relation`), so the packets' joins
+over pg_class / pg_attribute / ... read driver memory: no RDD scan, no
+Python worker.
 """
 
 from __future__ import annotations
@@ -34,6 +41,14 @@ import zlib
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from db_converter_spark.catalog import (
+    column_types,
+    list_databases,
+    list_relations,
+    local_relation,
+)
+from db_converter_spark.functions.pg_compat import register_sql_shims
 
 # Spark simpleString -> PG typname (pg_type join key in the packets)
 _PG_TYPNAME = {
@@ -147,7 +162,7 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
     (``pg_get_indexdef``, ``pg_relation_size``, ``pg_table_size``) — each
     closes over a dict built here; catalogs are driver-side metadata, the
     lookups never touch executors with more than a broadcast-size map."""
-    from db_converter_spark.operators.maintenance import list_indexes
+    from db_converter_spark.operators.maintenance import parse_indexes
 
     dbs = dbs or [spark.catalog.currentDatabase()]
     ns_rows: list[tuple] = []
@@ -161,10 +176,10 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
     for db in dbs:
         ns_oid = _oid(db)
         ns_rows.append((ns_oid, db))
-        for t in spark.catalog.listTables(db):
-            if t.tableType == "TEMPORARY" or t.tableType == "VIEW":
+        for name, is_view in list_relations(spark, db).items():
+            if is_view:
                 continue
-            qualified = f"{db}.{t.name}"
+            qualified = f"{db}.{name}"
             oid = _oid(qualified)
             try:
                 props = {
@@ -182,17 +197,13 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
             relpages = (size or 0) // 8192
             reltuples = float(nrows) if nrows is not None else -1.0
             relsizes[oid] = size or 0
-            idx_props = {
-                k[len("dbc.index."):]: v
-                for k, v in props.items()
-                if k.startswith("dbc.index.")
-            }
+            indexes = parse_indexes(props)
             cls_rows.append(
-                (oid, t.name, ns_oid, "r", reltuples, relpages, reloptions,
-                 0, 0, bool(idx_props), 0, 0)
+                (oid, name, ns_oid, "r", reltuples, relpages, reloptions,
+                 0, 0, bool(indexes), 0, 0)
             )
             stat_rows.append(
-                (oid, db, t.name, nrows if nrows is not None else 0, 0, 0, 0, 0,
+                (oid, db, name, nrows if nrows is not None else 0, 0, 0, 0, 0,
                  # scan counters: Spark's scheduler keeps no per-table scan
                  # totals — identically 0 (documented structural gap)
                  0, 0, 0, 0,
@@ -200,12 +211,10 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
                  _prop_ts(props, "dbc.last_analyze"), None)
             )
             colnums: dict[str, int] = {}
-            for i, c in enumerate(spark.catalog.listColumns(qualified)):
-                colnums[c.name] = i + 1
-                att_rows.append(
-                    (oid, c.name, i + 1, _pg_typname(c.dataType), False)
-                )
-                nulls, avg_len, distinct = _column_stats(spark, qualified, c.name)
+            for i, (col, dtype) in enumerate(column_types(spark, qualified)):
+                colnums[col] = i + 1
+                att_rows.append((oid, col, i + 1, _pg_typname(dtype), False))
+                nulls, avg_len, distinct = _column_stats(spark, qualified, col)
                 if avg_len is not None or nulls is not None:
                     null_frac = (
                         float(nulls) / float(nrows)
@@ -213,7 +222,7 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
                         else 0.0
                     )
                     pgstats_rows.append(
-                        (db, t.name, c.name, False, null_frac,
+                        (db, name, col, False, null_frac,
                          avg_len if avg_len is not None else 0,
                          float(distinct) if distinct is not None else -1.0)
                     )
@@ -221,7 +230,7 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
             # Spark scans prune via stats/partitioning, the DEFINITIONS are
             # catalog metadata — exactly the surface pg_index readers need.
             ncols = max(1, len(colnums))
-            for iname, spec in list_indexes(spark, qualified).items():
+            for iname, spec in indexes.items():
                 ioid = _oid(f"{db}.{iname}")
                 icols = [c for c in spec["cols"] if c in colnums]
                 # size estimate: the indexed columns' share of the table
@@ -241,13 +250,14 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
                 cols_sql = ", ".join(icols)
                 indexdefs[ioid] = (
                     f"CREATE {'UNIQUE ' if spec.get('unique') else ''}INDEX {iname}"
-                    f" ON {db}.{t.name} USING {spec['method']} ({cols_sql})"
+                    f" ON {db}.{name} USING {spec['method']} ({cols_sql})"
                 )
 
-    spark.createDataFrame(ns_rows, "oid bigint, nspname string").createOrReplaceTempView(
+    local_relation(spark, ns_rows, "oid bigint, nspname string").createOrReplaceTempView(
         "pg_namespace"
     )
-    spark.createDataFrame(
+    local_relation(
+        spark,
         cls_rows,
         "oid bigint, relname string, relnamespace bigint, relkind string,"
         " reltuples double, relpages bigint, reloptions array<string>,"
@@ -256,17 +266,20 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
         # MVCC wraparound exists, so age-based alerts correctly never fire
         " relfrozenxid bigint, relminmxid bigint",
     ).createOrReplaceTempView("pg_class")
-    spark.createDataFrame(
+    local_relation(
+        spark,
         att_rows,
         "attrelid bigint, attname string, attnum int, atttypid string,"
         # parquet never carries dropped-column tombstones
         " attisdropped boolean",
     ).createOrReplaceTempView("pg_attribute")
     typ = sorted({r[3] for r in att_rows})
-    spark.createDataFrame(
+    local_relation(
+        spark,
         [(t, t) for t in typ] or [("text", "text")], "oid string, typname string"
     ).createOrReplaceTempView("pg_type")
-    spark.createDataFrame(
+    local_relation(
+        spark,
         stat_rows,
         "relid bigint, schemaname string, relname string, n_live_tup bigint,"
         " n_dead_tup bigint, n_tup_ins bigint, n_tup_upd bigint, n_tup_hot_upd bigint,"
@@ -274,7 +287,8 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
         " last_vacuum timestamp, last_autovacuum timestamp,"
         " last_analyze timestamp, last_autoanalyze timestamp",
     ).createOrReplaceTempView("pg_stat_all_tables")
-    idx_stat_df = spark.createDataFrame(
+    idx_stat_df = local_relation(
+        spark,
         [(r[0], r[1], 0) for r in idx_rows],
         "indexrelid bigint, relid bigint, idx_scan bigint",
     )
@@ -289,24 +303,27 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
         " indkey array<int>, indkey_str string, indisunique boolean,"
         " indisprimary boolean, indisvalid boolean, indisready boolean"
     )
-    spark.createDataFrame(idx_rows or [], _IDX_SCHEMA).createOrReplaceTempView(
+    local_relation(spark, idx_rows, _IDX_SCHEMA).createOrReplaceTempView(
         "pg_index"
     )
-    spark.createDataFrame(
+    local_relation(
+        spark,
         [(_oid(m), m) for m in ("btree", "hash", "gist", "gin", "brin")],
         "oid bigint, amname string",
     ).createOrReplaceTempView("pg_am")
     # No PK/FK/unique constraints exist on parquet tables — typed empty view
     # so constraint-reading packets (dba_idx_diag 03/06) run and report none.
-    spark.createDataFrame(
+    local_relation(
+        spark,
         [],
         "oid bigint, conname string, contype string, connamespace bigint,"
         " conindid bigint, conrelid bigint, confrelid bigint,"
         " conkey array<int>, confkey array<int>,"
         " confupdtype string, confdeltype string",
     ).createOrReplaceTempView("pg_constraint")
-    spark.createDataFrame(
-        pgstats_rows or [],
+    local_relation(
+        spark,
+        pgstats_rows,
         "schemaname string, tablename string, attname string, inherited boolean,"
         " null_frac double, avg_width int, n_distinct double",
     ).createOrReplaceTempView("pg_stats")
@@ -336,7 +353,7 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
     spark.udf.register("pg_indexes_size", _pg_indexes_size, "bigint")
     spark.udf.register("pg_total_relation_size", _pg_total_relation_size, "bigint")
     # no constraints exist on parquet tables — NULL, like PG for unknown oid
-    spark.udf.register("pg_get_constraintdef", lambda oid: None, "string")
+    register_sql_shims(spark, "pg_get_constraintdef")
 
 
 def create_pg_instance_views(spark: SparkSession) -> None:
@@ -356,8 +373,9 @@ def create_pg_instance_views(spark: SparkSession) -> None:
       row locks and has no WAL replicas; lock/lag packets run and correctly
       report nothing.
     """
-    dbs = [(_oid(d.name), d.name, 0, 0) for d in spark.catalog.listDatabases()]
-    spark.createDataFrame(
+    dbs = [(_oid(d), d, 0, 0) for d in list_databases(spark)]
+    local_relation(
+        spark,
         dbs, "oid bigint, datname string, datfrozenxid bigint, datminmxid bigint"
     ).createOrReplaceTempView("pg_database")
 
@@ -380,7 +398,8 @@ def create_pg_instance_views(spark: SparkSession) -> None:
             "synthetic: Spark task-slot count (defaultParallelism)",
         )
     )
-    spark.createDataFrame(
+    local_relation(
+        spark,
         set_rows,
         "name string, setting string, unit string, boot_val string, short_desc string",
     ).createOrReplaceTempView("pg_settings")
@@ -408,18 +427,20 @@ def create_pg_instance_views(spark: SparkSession) -> None:
         " xact_start timestamp, state_change timestamp, wait_event_type string,"
         " wait_event string, client_addr string"
     )
-    spark.createDataFrame(act_rows or [], _ACT_SCHEMA).createOrReplaceTempView(
+    local_relation(spark, act_rows, _ACT_SCHEMA).createOrReplaceTempView(
         "pg_stat_activity"
     )
-    spark.createDataFrame(
+    local_relation(
+        spark,
         [],
         "locktype string, database bigint, relation bigint, page int, tuple int,"
         " virtualxid string, transactionid bigint, classid bigint, objid bigint,"
         " objsubid int, pid int, granted boolean",
     ).createOrReplaceTempView("pg_locks")
-    spark.createDataFrame(
+    local_relation(
+        spark,
         [],
         "pid int, client_addr string, sent_lsn string, write_lsn string,"
         " flush_lsn string, replay_lsn string",
     ).createOrReplaceTempView("pg_stat_replication")
-    spark.udf.register("pg_backend_pid", lambda: -1, "int")
+    register_sql_shims(spark, "pg_backend_pid")

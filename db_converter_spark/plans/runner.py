@@ -29,6 +29,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from db_converter_spark.catalog import local_relation
 from db_converter_spark.plans.export import export_statements
 from db_converter_spark.plans.formatter import ANON_COLUMN, print_table
 from db_converter_spark.plans.ledger import ActionTracker
@@ -143,6 +144,11 @@ class RunContext:
     def execute(self, sql: str) -> list:
         """Run one statement, capture like the engine does; for py-steps."""
         return _run_statement(self, sql)
+
+
+def _job_label(packet: str, db: str, *parts: str) -> str:
+    """Spark job description: ``packet P on D[ / step[ / action n]]``."""
+    return " / ".join((f"packet {packet} on {db}", *parts))
 
 
 def _capture_select(ctx: RunContext, df) -> list:
@@ -636,8 +642,9 @@ def _route_v1_dml(ctx: RunContext, stmt: str, dry: bool = False) -> list | None:
     conditional-projection update; operators/migration.py) so reference
     packets like test_insert_info/01_step.sql:1 run unmodified. Returns the
     command-status tuple, or None for statements Spark handles natively.
-    ``dry=True`` builds and analyzes the rewrite plan (surfacing bad
-    tables/columns/expressions) without writing — the no-commit path."""
+    ``dry=True`` shadow-executes the same rewrite plan into the noop sink
+    (surfacing bad tables/columns/expressions and runtime errors) and
+    reports the count it observed, without writing — the no-commit path."""
     from db_converter_spark.operators import migration
 
     # reference packets wrap statements in '-- tx start/end' comment markers;
@@ -647,13 +654,10 @@ def _route_v1_dml(ctx: RunContext, stmt: str, dry: bool = False) -> list | None:
     if ups is not None:
         table, src_df, keys, set_map, upd_where = ups
         if dry:
-            migration.shadow_execute(
-                migration.upsert_plan(ctx.spark, table, src_df, keys, set_map, upd_where)
-            )
             return [
                 "INSERT",
-                migration.upsert_affected_count(
-                    ctx.spark, table, src_df, keys, set_map, upd_where
+                migration.shadow_execute(
+                    migration.upsert_plan(ctx.spark, table, src_df, keys, set_map, upd_where)
                 ),
             ]
         n = migration.upsert(ctx.spark, table, src_df, keys, set_map, upd_where)
@@ -662,31 +666,22 @@ def _route_v1_dml(ctx: RunContext, stmt: str, dry: bool = False) -> list | None:
     if du is not None:
         table, talias, src_df, salias, cond = du
         if dry:
-            migration.shadow_execute(
-                migration.delete_using_plan(ctx.spark, table, talias, src_df, salias, cond)
-            )
-        else:
             return [
                 "DELETE",
-                migration.delete_using(ctx.spark, table, talias, src_df, salias, cond),
+                migration.shadow_execute(
+                    migration.delete_using_plan(ctx.spark, table, talias, src_df, salias, cond)
+                ),
             ]
         return [
             "DELETE",
-            ctx.spark.table(table)
-            .alias(talias)
-            .join(src_df.alias(salias), _F_expr(cond), "left_semi")
-            .count(),
+            migration.delete_using(ctx.spark, table, talias, src_df, salias, cond),
         ]
     m = _DELETE_RE.match(stmt)
     if m:
         table, predicate = m.group(1).strip("`"), m.group(2)
         if dry:
-            # shadow execution: run the exact rewrite plan into the noop
-            # sink (execute-then-discard — the Spark analog of the
-            # reference's execute+rollback, dbccore/dbccore.py:886-888) and
-            # report the would-be rowcount without mutating the table
-            migration.shadow_execute(migration.delete_plan(ctx.spark, table, predicate))
-            return ["DELETE", migration.predicate_match_count(ctx.spark, table, predicate)]
+            plan = migration.delete_plan(ctx.spark, table, predicate)
+            return ["DELETE", migration.shadow_execute(plan)]
         n = migration.delete_where(ctx.spark, table, predicate)
         # reference surfaces py-postgresql's ('DELETE', n) command tuple
         # (dbccore/dbccore.py:866-870) — carry the affected-row count
@@ -699,10 +694,8 @@ def _route_v1_dml(ctx: RunContext, stmt: str, dry: bool = False) -> list | None:
         if fi == -1:
             set_map, predicate = _split_set_clause(rest)
             if dry:
-                migration.shadow_execute(
-                    migration.update_plan(ctx.spark, table, set_map, predicate)
-                )
-                return ["UPDATE", migration.predicate_match_count(ctx.spark, table, predicate)]
+                plan = migration.update_plan(ctx.spark, table, set_map, predicate)
+                return ["UPDATE", migration.shadow_execute(plan)]
             n = migration.update_where(ctx.spark, table, set_map, predicate)
             return ["UPDATE", n]
         n = _update_from(ctx, table, talias, rest[:fi], rest[fi + 4 :], dry=dry)
@@ -775,13 +768,10 @@ def _update_from(
     set_map = {c: realias(e) for c, e in raw_set.items()}
     src_df = ctx.spark.sql(src_sql)
     if dry:
-        migration.shadow_execute(
+        return migration.shadow_execute(
             migration.merge_update_plan(
                 ctx.spark, table, src_df, on, set_map, condition=condition
             )
-        )
-        return migration.merge_matched_count(
-            ctx.spark, table, src_df, on, condition=condition
         )
     return migration.merge_update(
         ctx.spark, table, src_df, on, set_map, condition=condition
@@ -992,8 +982,11 @@ class PacketRunner:
             session.conf.set(k, v)
         session.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         session.catalog.setCurrentDatabase(db)
+        # one job group per (target, packet), which the step watchdog and
+        # stop() cancel; the job description names the step and action that
+        # own each job, so the status store can attribute every one of them
         session.sparkContext.setJobGroup(
-            f"dbc_{db}_{pkt.name}", f"packet {pkt.name} on {db}", interruptOnCancel=True
+            f"dbc_{db}_{pkt.name}", _job_label(pkt.name, db), interruptOnCancel=True
         )
 
         tracker = ActionTracker(self.warehouse / db / "dbc_ledger.sqlite")
@@ -1051,8 +1044,9 @@ class PacketRunner:
                 # Live ledger snapshot as the dbc_packets view — reference
                 # packets introspect their own ledger row (reference:
                 # packets/test_insert_delete_select/01_step.sql)
-                session.createDataFrame(
-                    tracker.dump_packets() or [],
+                local_relation(
+                    session,
+                    tracker.dump_packets(),
                     "id bigint, name string, status string, dt string,"
                     " packet_hash string, meta_data string",
                 ).createOrReplaceTempView("dbc_packets")
@@ -1089,6 +1083,7 @@ class PacketRunner:
             seen_hashes: set[str] = set()
             for step in steps:
                 ctx.current_step_results = []
+                session.sparkContext.setJobDescription(_job_label(pkt.name, db, step.name))
                 step_id = tracker.upsert_step(packet_id, step.name) if track else -1
                 try:
                     with StepWatchdog(
@@ -1245,7 +1240,10 @@ class PacketRunner:
             else:
                 yield step.text, []
 
-        for action_sql, maints in actions():
+        for i, (action_sql, maints) in enumerate(actions(), 1):
+            session.sparkContext.setJobDescription(
+                _job_label(pkt.name, ctx.db_name, step.name, f"action {i}")
+            )
             h = hashlib.md5(action_sql.encode()).hexdigest()
             if h in seen_hashes or (track and tracker.is_action_done(packet_id, step_id, h)):
                 ctx.raise_notice("LOG", f"action {h[:8]} already applied, skipping")

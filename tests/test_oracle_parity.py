@@ -27,7 +27,8 @@ def test_query_matches_oracle(name, spark, duck):
 
 
 def _temp_views(spark) -> set[str]:
-    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    # SHOW VIEWS answers on the driver; Catalog.listTables runs Spark jobs
+    return {r.viewName for r in spark.sql("SHOW VIEWS").collect() if r.isTemporary}
 
 
 def test_dd10_concurrent_runs_keep_their_own_intermediates(spark, duck, tmp_path):

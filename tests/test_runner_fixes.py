@@ -189,6 +189,47 @@ def test_cartesian_runs_both_maint_commands(spark, runner, tmp_path):
     assert spark.sql("select count(*) from e2e_maint.maint_t").collect()[0][0] == 2
 
 
+def test_jobs_carry_step_and_action_descriptions(spark, runner, tmp_path):
+    """Every Spark job of a packet run is described by its packet, step and
+    generator action (the status store attributes each job to the action
+    that launched it)."""
+    pdir = _write_packet(
+        tmp_path / "desc_pkt",
+        {
+            "run_once.sql": (
+                "create table desc_t using parquet as"
+                " select * from values (1), (2), (3) as t(v)"
+            ),
+            "01_gen_obj.sql": "select '', c1 from values (1), (2) as t(c1)",
+            "01_step.sql": "select count(*) from desc_t where v > GEN_OBJ_FLD_1",
+            "02_step.sql": "select max(v) from desc_t",
+        },
+    )
+    store = spark.sparkContext._jsc.sc()
+
+    def jobs() -> dict[int, str]:
+        store.listenerBus().waitUntilEmpty()
+        seq = store.statusStore().jobsList(None)
+        out = {}
+        for i in range(seq.size()):
+            j = seq.apply(i)
+            d = j.description()
+            out[int(j.jobId())] = d.get() if d.isDefined() else None
+        return out
+
+    before = set(jobs())
+    res = runner.run(pdir, dbs=["e2e_desc"])
+    assert res.result_code["e2e_desc"] == ResultCode.SUCCESS
+    new = {d for jid, d in jobs().items() if jid not in before}
+    label = "packet desc_pkt on e2e_desc"
+    assert all(d and d.startswith(label) for d in new), new
+    assert {
+        f"{label} / 01_step.sql / action 1",
+        f"{label} / 01_step.sql / action 2",
+        f"{label} / 02_step.sql / action 1",
+    } <= new, new
+
+
 # ----------------------------------------------------------- no-commit DML
 
 

@@ -244,6 +244,40 @@ def test_dq05_injected_orphans_and_nulls(spark):
         assert out[edge]["n_orphan_rows"] == 0, out[edge]
 
 
+def test_dq05_empty_child_table_keeps_its_edge(spark):
+    """An edge whose child table is empty still reports its row: the fused
+    Spark form equals the per-edge DuckDB oracle, NULL sums included, and
+    the other edges are unaffected (supplier is both an empty child and an
+    empty parent here)."""
+    import duckdb
+
+    from db_converter_spark.operators.quality import _DQ05, _DQ05_SPARK
+    from tests.conftest import assert_oracle_match
+
+    tables = {
+        "region": "SELECT CAST(0 AS BIGINT) AS r_regionkey",
+        "nation": "SELECT CAST(1 AS BIGINT) AS n_nationkey, CAST(0 AS BIGINT) AS n_regionkey",
+        "customer": "SELECT CAST(1 AS BIGINT) AS c_custkey, CAST(1 AS BIGINT) AS c_nationkey",
+        "supplier": "SELECT CAST(1 AS BIGINT) AS s_suppkey, CAST(1 AS BIGINT) AS s_nationkey"
+        " WHERE 1 = 0",
+        "part": "SELECT CAST(1 AS BIGINT) AS p_partkey",
+        "orders": "SELECT CAST(10 AS BIGINT) AS o_orderkey, CAST(1 AS BIGINT) AS o_custkey",
+        "lineitem": "SELECT CAST(o AS BIGINT) AS l_orderkey, CAST(1 AS BIGINT) AS l_partkey,"
+        " CAST(s AS BIGINT) AS l_suppkey FROM (VALUES (10, 1), (99, NULL)) t(o, s)",
+    }
+    con = duckdb.connect()
+    for name, sql in tables.items():
+        spark.sql(sql).createOrReplaceTempView(name)
+        con.execute(f"CREATE VIEW {name} AS {sql}")
+    got = spark.sql(_DQ05_SPARK)
+    assert_oracle_match(got, con, _DQ05, "dq05_empty_child")
+    rows = {r["edge"]: r for r in got.collect()}
+    assert len(rows) == 7
+    assert rows["supplier.s_nationkey->nation"]["n_child_rows"] is None
+    assert rows["lineitem.l_suppkey->supplier"]["n_orphan_rows"] == 1
+    con.close()
+
+
 def test_q38_unpivot_drops_null_cells(spark):
     """A priority with no rows in some status must produce NO row for
     that (priority, status) — Spark UNPIVOT's default EXCLUDE NULLS,
