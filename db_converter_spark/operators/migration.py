@@ -9,16 +9,24 @@ whole ceremony collapses: a columnar rewrite with partition parallelism IS
 the backfill, and the swap is a table rename. No triggers needed — batch
 re-runs + the action ledger cover incremental sync (SURVEY §1.4).
 
+Every rewrite has a ``*_plan`` builder returning a :data:`CountedPlan`.
+:func:`commit` writes it over the table through :func:`_swap_write`;
+:func:`shadow_execute` runs it into the noop sink (no-commit). The packet
+runner maps each parsed DML statement to one counted plan and calls one of
+the two; the public wrappers (``merge_update``, ``update_where``, …) are
+``commit`` over their plan.
+
 Scale design:
-- ``change_column_type`` / ``merge_update`` rewrite via CTAS with the same
-  partitioning — one shuffle-free scan→write job; at 100 TB this is a
-  map-only job per partition, embarrassingly parallel across executors.
+- every rewrite, ``change_column_type`` included, is one shuffle-free
+  scan→write job through ``_swap_write``; at 100 TB this is a map-only job
+  per partition, embarrassingly parallel across executors.
 - ``merge_update`` broadcasts the source when it is small (the common
   UPDATE-FROM-subquery case) so the backfill join never shuffles the big
   table.
 - ``chunked_backfill`` keeps the reference's bounded-work semantics for
-  operational control (re-runnable per range, ledger-tracked): each chunk
-  is a partition-pruned overwrite, not a full-table rewrite.
+  operational control (re-runnable per range, ledger-tracked), but each
+  chunk is a :func:`merge_update`, i.e. a whole-table rewrite: N chunks
+  rewrite the table N times.
 """
 
 from __future__ import annotations
@@ -52,21 +60,15 @@ def change_column_type(
     """int4→int8-style column type widening via rewrite-and-swap
     (reference: the whole test_int4_to_int8 packet, 01-07_step.sql).
 
-    Parquet column types are immutable, so this is CTAS with a cast +
-    rename swap — the Spark analog of PG's add-column/backfill/drop/rename
-    dance, executed as ONE parallel scan→write."""
+    Parquet column types are immutable, so this is a cast projection
+    written through :func:`_swap_write` — the Spark analog of PG's
+    add-column/backfill/drop/rename dance, executed as ONE parallel
+    scan→write that keeps the recorded defaults, indexes and reloptions."""
     cols = [
         F.col(name).cast(new_type).alias(name) if name == column else F.col(name)
         for name, _ in column_types(spark, table)
     ]
-    tmp = f"{table}__mig_tmp"
-    bak = f"{table}__mig_old"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    spark.table(table).select(*cols).write.saveAsTable(tmp)
-    spark.sql(f"DROP TABLE IF EXISTS {bak}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {bak}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    spark.sql(f"DROP TABLE {bak}")
+    _swap_write(spark, table, spark.table(table).select(*cols))
 
 
 def merge_update_plan(
@@ -169,11 +171,9 @@ def merge_update(
     affected-row number, not just the command word. The count is observed
     on the rewrite's own join while the swap write runs — no semi-join pass
     over the target; :func:`merge_matched_count` is its reference."""
-    plan, matched_count = merge_update_plan(
+    return commit(spark, target_table, merge_update_plan(
         spark, target_table, source, on, set_map, broadcast_source, condition
-    )
-    _swap_write(spark, target_table, plan)
-    return matched_count()
+    ))
 
 
 def merge_matched_count(
@@ -195,6 +195,14 @@ def merge_matched_count(
         cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on]
         return t.join(s, cond, "left_semi").count()
     return t.join(s, F.expr(condition), "left_semi").count()
+
+
+def commit(spark: SparkSession, table: str, counted: CountedPlan) -> int:
+    """Write a counted rewrite plan over ``table`` (:func:`_swap_write`) and
+    return the affected-row count it observed while writing."""
+    plan, affected = counted
+    _swap_write(spark, table, plan)
+    return affected()
 
 
 def _swap_write(spark: SparkSession, table: str, df: DataFrame) -> None:
@@ -221,9 +229,10 @@ def _swap_write(spark: SparkSession, table: str, df: DataFrame) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
     df.write.saveAsTable(tmp)
     if props:
+        # values may carry quotes (a recorded DEFAULT nextval('s'))
+        esc = {ord("\\"): "\\\\", ord("'"): "\\'"}
         kv = ", ".join(
-            f"'{k}' = '{v}'".replace("\\", "\\\\")
-            for k, v in sorted(props.items())
+            f"'{k.translate(esc)}' = '{v.translate(esc)}'" for k, v in sorted(props.items())
         )
         spark.sql(f"ALTER TABLE {tmp} SET TBLPROPERTIES ({kv})")
     spark.sql(f"DROP TABLE IF EXISTS {bak}")
@@ -319,9 +328,7 @@ def upsert(
     ``DO UPDATE … WHERE`` excludes are not counted. The count is observed
     during the swap write; :func:`upsert_affected_count` is its
     reference."""
-    plan, affected = upsert_plan(spark, table, source, keys, set_map, update_where)
-    _swap_write(spark, table, plan)
-    return affected()
+    return commit(spark, table, upsert_plan(spark, table, source, keys, set_map, update_where))
 
 
 def upsert_affected_plan(
@@ -425,9 +432,7 @@ def delete_using(
     """Execute :func:`delete_using_plan` via swap write; returns the PG
     affected-row count (each target row counted at most once), observed
     during the write."""
-    plan, deleted = delete_using_plan(spark, table, talias, source, salias, condition)
-    _swap_write(spark, table, plan)
-    return deleted()
+    return commit(spark, table, delete_using_plan(spark, table, talias, source, salias, condition))
 
 
 def delete_plan(spark: SparkSession, table: str, predicate: str | None) -> CountedPlan:
@@ -471,9 +476,7 @@ def delete_where(spark: SparkSession, table: str, predicate: str | None) -> int:
     (reference: packets/test_insert_info/01_step.sql:1). ``predicate=None``
     deletes every row. Returns the deleted-row count (reference command-tuple
     semantics, dbccore/dbccore.py:866-870), observed during the write."""
-    plan, deleted = delete_plan(spark, table, predicate)
-    _swap_write(spark, table, plan)
-    return deleted()
+    return commit(spark, table, delete_plan(spark, table, predicate))
 
 
 def update_where(
@@ -488,9 +491,7 @@ def update_where(
     right-hand side sees the OLD row values (PostgreSQL semantics), even
     when one SET column references another. Returns the matched-row count,
     observed during the write."""
-    plan, matched_count = update_plan(spark, table, set_map, predicate)
-    _swap_write(spark, table, plan)
-    return matched_count()
+    return commit(spark, table, update_plan(spark, table, set_map, predicate))
 
 
 def update_plan(

@@ -15,9 +15,11 @@ Semantics kept from the reference:
   (reference: dbccore/dbccore.py:759-768);
 - file naming ``export_<md5(stm)[:6]>_<ts>_<db>.csv`` (reference:
   dbccore/dbccore.py:752-756);
-- optional LZMA zip of all CSVs, with AES password when pyzipper is present
-  (reference: dbccore/dbccore.py:781-826); plaintext CSVs are deleted after
-  zipping (reference: dbccore/dbccore.py:818-819).
+- optional zip of all CSVs (reference: dbccore/dbccore.py:781-826): LZMA
+  without a password; with one, always AES-encrypted — pyzipper when
+  installed, else the stdlib WinZip AE-2 writer in ``functions/wzaes.py``.
+  Plaintext CSVs are deleted after zipping (reference:
+  dbccore/dbccore.py:818-819).
 
 Scale note: the reference's export is inherently single-writer (one CSV per
 statement). ``export_statements_distributed`` offers the Spark-native path —
@@ -107,7 +109,6 @@ def export_statements(
     zipping, matching the reference's delete-after-zip)."""
     out_dir = Path(out_dir)
     pw_in_name = False
-    unencrypted_fallback = False
     if export_options:
         if str(export_options.get("use_zip", "")).lower() in ("yes", "true", "1"):
             zip_output = True
@@ -117,10 +118,6 @@ def export_statements(
             pw_in_name = True
         elif pw:
             zip_password = str(pw)
-        # AES is always available: pyzipper when installed (interop-
-        # preferred), else the pure-stdlib AE-2 writer (functions/wzaes.py,
-        # FIPS-197 AES-256 + WinZip AE-2 container). The old LOUD
-        # unencrypted fallback is gone — passwords now always encrypt.
     for stmt in statements:
         if statement_kind(stmt) != "query":
             raise ExportValidationError(
@@ -135,12 +132,7 @@ def export_statements(
         files.append(path)
     if not zip_output:
         return [str(f) for f in files]
-    if pw_in_name:
-        zip_name = f"export_{zip_password}_{ts}_{db}.zip"
-    elif unencrypted_fallback:
-        zip_name = f"export_UNENCRYPTED_{ts}_{db}.zip"
-    else:
-        zip_name = f"export_{ts}_{db}.zip"
+    zip_name = f"export_{zip_password}_{ts}_{db}.zip" if pw_in_name else f"export_{ts}_{db}.zip"
     zip_path = out_dir / zip_name
     _zip_files(files, zip_path, zip_password)
     for f in files:

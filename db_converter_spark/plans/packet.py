@@ -83,6 +83,35 @@ def apply_gen_placeholders(sql: str, row: tuple, prefix: str) -> str:
     return sql
 
 
+def bind_actions(text: str, obj_rows: list | None, nsp_rows: list | None):
+    """Yield ``(action_sql, [maint_cmds])`` per generator binding of a step
+    — the reference's three fan-out cases (dbccore/dbccore.py:921-1087):
+    nsp × obj cartesian, obj only, nsp only; ``(text, [])`` without
+    generators. A row's non-empty field 0 is its maintenance command. In the
+    cartesian case BOTH run, the nsp row's first, then the obj row's with
+    GEN_NSP placeholders applied to it."""
+    if obj_rows is not None and nsp_rows is not None:
+        for nrow in nsp_rows:
+            for orow in obj_rows:
+                sql = apply_gen_placeholders(text, nrow, "GEN_NSP")
+                maints = _maint(nrow) + [
+                    apply_gen_placeholders(m, nrow, "GEN_NSP") for m in _maint(orow)
+                ]
+                yield apply_gen_placeholders(sql, orow, "GEN_OBJ"), maints
+    elif obj_rows is not None:
+        for orow in obj_rows:
+            yield apply_gen_placeholders(text, orow, "GEN_OBJ"), _maint(orow)
+    elif nsp_rows is not None:
+        for nrow in nsp_rows:
+            yield apply_gen_placeholders(text, nrow, "GEN_NSP"), _maint(nrow)
+    else:
+        yield text, []
+
+
+def _maint(row: tuple) -> list[str]:
+    return [str(row[0])] if row and row[0] else []
+
+
 def parse_packet(
     packet_dir: str | Path, placeholders: dict[str, str] | None = None
 ) -> Packet:

@@ -16,6 +16,14 @@ Execution model:
   statement in it succeeded; re-runs skip completed actions. Cross-table
   atomicity is best-effort, same as the reference's reconnect-and-resume
   behavior (SURVEY §7.3).
+- DML: statement text is parsed only by ``sqlsplit.parse_dml``. Every
+  parsed statement Spark cannot run natively (UPDATE/DELETE on parquet,
+  upserts, the join forms, INSERT into a live JDBC table) maps to one
+  counted plan (:func:`_dml_plan`), and :func:`_run_statement` checks
+  ``ctx.no_commit`` once: the plan shadow-executes into the noop sink or is
+  committed (``migration.commit``, or the JDBC append). Intermediates reach
+  ``spark.sql`` as DataFrame arguments; the runner registers no temp view
+  other than the ``dbc_packets`` ledger snapshot.
 """
 
 from __future__ import annotations
@@ -28,8 +36,11 @@ from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from db_converter_spark.catalog import local_relation
+from db_converter_spark.operators import migration
+from db_converter_spark.operators.maintenance import DEFAULT_PROP_PREFIX, route_maintenance
 from db_converter_spark.plans.export import export_statements
 from db_converter_spark.plans.formatter import ANON_COLUMN, print_table
 from db_converter_spark.plans.ledger import ActionTracker
@@ -41,12 +52,9 @@ from db_converter_spark.plans.model import (
     PLRaiseError,
     ResultCode,
 )
-from db_converter_spark.plans.packet import (
-    Packet,
-    apply_gen_placeholders,
-    parse_packet,
-)
+from db_converter_spark.plans.packet import Packet, bind_actions, parse_packet
 from db_converter_spark.plans.hooks import ChatHook, notify_error, notify_results
+from db_converter_spark.plans.pgdialect import UnsupportedConstruct
 from db_converter_spark.plans.pgdialect import rewrite as pg_rewrite
 from db_converter_spark.plans.sequences import (
     route_sequence_ddl,
@@ -54,13 +62,13 @@ from db_converter_spark.plans.sequences import (
 )
 from db_converter_spark.plans.watchdog import StepWatchdog
 from db_converter_spark.plans.sqlsplit import (
+    Dml,
     _strip_leading_comments,
     is_read_only_ok,
-    mask_strings,
+    parse_dml,
     split_statements,
     statement_kind,
 )
-from db_converter_spark.operators.maintenance import route_maintenance
 
 
 class ReadOnlyViolation(Exception):
@@ -151,19 +159,26 @@ def _job_label(packet: str, db: str, *parts: str) -> str:
     return " / ".join((f"packet {packet} on {db}", *parts))
 
 
-def _capture_select(ctx: RunContext, df) -> list:
+def _capture_select(df) -> list:
     cols = [f if f else ANON_COLUMN for f in df.columns]
     rows = [list(r) for r in df.collect()]
     return [cols] + rows
 
 
-_JDBC_INSERT_RE = re.compile(
-    r"^\s*insert\s+into\s+([\w.`\"]+)\s*(\([^)]*\))?\s*(.+)$", re.I | re.S
-)
+# MERGE/TRUNCATE have no parsed form; every other remote write is a Dml
 _JDBC_WRITE_TARGET_RE = re.compile(
-    r"^\s*(update|delete\s+from|merge\s+into|truncate(?:\s+table)?)\s+([\w.`\"]+)",
-    re.I,
+    r"^\s*(merge\s+into|truncate(?:\s+table)?)\s+([\w.`\"]+)", re.I
 )
+# the PG command word a parsed DML statement reports
+_COMMAND = {
+    "insert": "INSERT",
+    "upsert": "INSERT",
+    "update": "UPDATE",
+    "update-from": "UPDATE",
+    "delete": "DELETE",
+    "delete-using": "DELETE",
+}
+_EQUI_RE = re.compile(r"\s*(\w+)\.`?(\w+)`?\s*=\s*(\w+)\.`?(\w+)`?\s*")
 
 
 def _jdbc_table_of(ctx: RunContext, name: str) -> "str | None":
@@ -174,59 +189,12 @@ def _jdbc_table_of(ctx: RunContext, name: str) -> "str | None":
     return bare if ctx.jdbc_target and bare in ctx.jdbc_target["tables"] else None
 
 
-def _route_jdbc_dml(ctx: RunContext, stmt: str, dry: bool = False) -> "list | None":
-    """Write statements against a LIVE JDBC target (E11 over a remote;
-    reference: every packet statement executes on the target connection,
-    dbccore/dbccore.py:905-1181).
-
-    INSERT is the Spark-expressible remote write: the source query runs as
-    a Spark plan and the rows stream through the JDBC append sink (one
-    INSERT batch per partition — the bounded-transaction shape of the
-    reference's migration packets); the snapshot view refreshes after, so
-    later statements see the write (PG statement visibility). Under
-    no_commit the plan SHADOW-EXECUTES — the rowcount is computed, nothing
-    is written (the execute+rollback analog, dbccore/dbccore.py:886-888).
-
-    UPDATE/DELETE/MERGE/TRUNCATE have no Spark JDBC sink spelling —
-    Spark's writer only appends/overwrites; rewriting them as
-    read-filter-overwrite would silently drop concurrent remote writes.
-    They fail loudly with the py-step escape hatch named."""
-    if ctx.jdbc_target is None:
-        return None
-    head = _strip_leading_comments(stmt)
-    im = _JDBC_INSERT_RE.match(head)
-    if im:
-        table = _jdbc_table_of(ctx, im.group(1))
-        if table is None:
-            return None
-        df = ctx.spark.sql(im.group(3))
-        if im.group(2):
-            cols = [c.strip().strip('`"') for c in im.group(2)[1:-1].split(",")]
-        else:
-            cols = ctx.spark.table(table).columns
-        df = df.toDF(*cols)
-        if dry:
-            return ["INSERT", df.count()]
-        df.write.jdbc(
-            ctx.jdbc_target["url"],
-            table,
-            mode="append",
-            properties=ctx.jdbc_target["properties"],
-        )
-        from db_converter_spark.sources.jdbc import register_remote_views
-
-        register_remote_views(
-            ctx.spark, ctx.jdbc_target["url"], ctx.jdbc_target["properties"], [table]
-        )
-        return ["INSERT"]
-    wm = _JDBC_WRITE_TARGET_RE.match(head)
-    if wm and _jdbc_table_of(ctx, wm.group(2)):
-        raise RuntimeError(
-            f"{wm.group(1).split()[0].upper()} against live JDBC table"
-            f" {wm.group(2)}: Spark's JDBC sink can only append — run remote"
-            " in-place DML from a py-step over the remote's own client"
-        )
-    return None
+def _jdbc_write_refused(command: str, name: str) -> RuntimeError:
+    return RuntimeError(
+        f"{command} against live JDBC table {name}: Spark's JDBC sink can only"
+        " append — run remote in-place DML from a py-step over the remote's"
+        " own client"
+    )
 
 
 def _run_statement(ctx: RunContext, stmt: str) -> list:
@@ -261,49 +229,50 @@ def _run_statement(ctx: RunContext, stmt: str) -> list:
         return [status]
     stmt = _expand_insert_defaults(ctx, stmt)
     stmt = substitute_sequence_calls(ctx, stmt)
-    # PG RETURNING: rows the DML touches, surfaced as a resultset
-    # (reference clients consume psycopg rows; pairs with sequence
-    # defaults — the standard way to read back generated ids). Rows are
-    # computed from the pre-statement snapshot (PG semantics), then the
-    # stripped statement executes through the normal flow below (a
-    # recursive call — every rewrite above is idempotent on its output).
-    if re.match(r"^\s*(insert|update|delete)\b", _strip_leading_comments(stmt), re.I):
-        head, ret = _split_returning(stmt)
-        if ret is not None:
-            table_rows = _capture_select(ctx, _returning_rows(ctx, head, ret))
-            _run_statement(ctx, head)
-            ctx.current_step_results.append(table_rows)
-            return table_rows
-    if ctx.no_commit and kind != "query":
-        # dry-run. Routed UPDATE/DELETE get SHADOW EXECUTION: the exact
-        # rewrite plan runs end-to-end into the noop sink and the status
-        # carries the would-be rowcount — the Spark analog of the
-        # reference's execute-then-rollback (dbccore/dbccore.py:886-888).
-        # Everything else goes through EXPLAIN EXTENDED, where a missing
-        # Physical Plan section marks failure (Spark prints the error text
-        # in place of the plan — never the literal word 'Exception' the
-        # old sniff looked for).
-        routed = _route_jdbc_dml(ctx, stmt, dry=True)
-        if routed is None:
-            routed = _route_v1_dml(ctx, stmt, dry=True)
-        if routed is None:
-            plan = ctx.spark.sql(f"EXPLAIN EXTENDED {stmt}").collect()[0][0]
-            if "== Physical Plan ==" not in plan or "Error occurred during query planning" in plan:
-                raise RuntimeError(f"no_commit validation failed: {plan[:500]}")
-            status = [_strip_leading_comments(stmt).split()[0].upper(), "no_commit"]
+    dml = parse_dml(stmt)
+    if dml is not None and dml.returning is not None:
+        # PG RETURNING: rows the DML touches, surfaced as a resultset
+        # (reference clients consume psycopg rows; pairs with sequence
+        # defaults — the standard way to read back generated ids). Rows are
+        # computed from the pre-statement snapshot (PG semantics), then the
+        # statement without the clause executes through the normal flow (a
+        # recursive call — every rewrite above is idempotent on its output).
+        table_rows = _capture_select(_returning_rows(ctx, dml))
+        _run_statement(ctx, dml.statement)
+        ctx.current_step_results.append(table_rows)
+        return table_rows
+    wm = _JDBC_WRITE_TARGET_RE.match(_strip_leading_comments(stmt))
+    if wm and _jdbc_table_of(ctx, wm[2]):
+        raise _jdbc_write_refused(wm[1].split()[0].upper(), wm[2])
+    routed = _dml_plan(ctx, dml) if dml is not None else None
+    if routed is not None:
+        command, (table, counted) = _COMMAND[dml.kind], routed
+        # the reference surfaces py-postgresql's ('UPDATE', n) command tuple
+        # (dbccore/dbccore.py:866-870); n is observed on the plan that runs.
+        # no_commit SHADOW-EXECUTES the exact plan a commit would write into
+        # the noop sink — the reference's execute-then-rollback
+        # (dbccore/dbccore.py:886-888) — and reports the would-be count
+        if ctx.no_commit:
+            status = [command, migration.shadow_execute(counted), "no_commit"]
+        elif _jdbc_table_of(ctx, table):
+            status = [command, _jdbc_append(ctx, table, counted)]
         else:
-            status = routed + ["no_commit"]
+            status = [command, migration.commit(ctx.spark, table, counted)]
         ctx.current_step_results.append([status])
         return [status]
-    routed = _route_jdbc_dml(ctx, stmt)
-    if routed is None:
-        routed = _route_v1_dml(ctx, stmt)
-    if routed is not None:
-        ctx.current_step_results.append([routed])
-        return [routed]
+    if ctx.no_commit and kind != "query":
+        # dry-run of every other write: EXPLAIN EXTENDED, where a missing
+        # Physical Plan section marks failure (Spark prints the error text
+        # in place of the plan)
+        plan = ctx.spark.sql(f"EXPLAIN EXTENDED {stmt}").collect()[0][0]
+        if "== Physical Plan ==" not in plan or "Error occurred during query planning" in plan:
+            raise RuntimeError(f"no_commit validation failed: {plan[:500]}")
+        status = [_strip_leading_comments(stmt).split()[0].upper(), "no_commit"]
+        ctx.current_step_results.append([status])
+        return [status]
     df = ctx.spark.sql(stmt)
     if kind == "query":
-        table = _capture_select(ctx, df)
+        table = _capture_select(df)
         ctx.current_step_results.append(table)
         return table
     # DML/DDL/utility: Spark reports no rowcount; capture the command word as
@@ -315,9 +284,115 @@ def _run_statement(ctx: RunContext, stmt: str) -> list:
     return [status]
 
 
-_INSERT_COLS_RE = re.compile(
-    r"^\s*insert\s+into\s+([\w.`\"]+)\s*\(([^)]*)\)\s*(.+)$", re.I | re.S
-)
+def _dml_plan(ctx: RunContext, dml: Dml) -> "tuple[str, migration.CountedPlan] | None":
+    """The table a parsed DML statement writes and its counted plan
+    (operators/migration.py), or None for an INSERT Spark runs natively.
+
+    Spark cannot UPDATE/DELETE v1 (parquet) catalog tables, so those,
+    upserts and the join forms compile onto the migration rewrites, and
+    reference packets like test_insert_info/01_step.sql:1 run unmodified.
+
+    On a LIVE JDBC target (E11 over a remote; reference: every packet
+    statement executes on the target connection, dbccore/dbccore.py:
+    905-1181) INSERT is the Spark-expressible remote write: the plan is its
+    row source, appended by :func:`_jdbc_append`. UPDATE/DELETE (like
+    MERGE/TRUNCATE) have no Spark JDBC sink spelling — Spark's writer only
+    appends/overwrites, and a read-filter-overwrite rewrite would silently
+    drop concurrent remote writes — so they fail loudly with the py-step
+    escape hatch named."""
+    spark = ctx.spark
+    remote = _jdbc_table_of(ctx, dml.table)
+    if remote is not None:
+        if dml.kind != "insert":
+            raise _jdbc_write_refused(_COMMAND[dml.kind], dml.table)
+        return remote, migration._observed(_insert_source(spark, dml, remote), F.lit(True))
+    if dml.kind == "insert":
+        return None
+    if dml.kind == "upsert":
+        source = _insert_source(spark, dml, dml.table)
+        return dml.table, migration.upsert_plan(
+            spark, dml.table, source, list(dml.conflict_keys), dml.set_map, dml.predicate
+        )
+    if dml.kind == "update":
+        return dml.table, migration.update_plan(spark, dml.table, dml.set_map, dml.predicate)
+    if dml.kind == "delete":
+        return dml.table, migration.delete_plan(spark, dml.table, dml.predicate)
+    source = spark.sql(dml.source)
+    if dml.kind == "delete-using":
+        return dml.table, migration.delete_using_plan(
+            spark, dml.table, dml.alias, source, dml.source_alias, dml.predicate
+        )
+    on, condition, set_map = _merge_args(dml)
+    return dml.table, migration.merge_update_plan(
+        spark, dml.table, source, on, set_map, condition=condition
+    )
+
+
+def _merge_args(dml: Dml) -> tuple[list[str] | None, str | None, dict[str, str]]:
+    """``(on, condition, set_map)`` of :func:`migration.merge_update_plan`
+    for ``UPDATE tgt [a] SET ... FROM (subquery|table) s WHERE <cond>`` —
+    the reference's canonical chunked-migration statement (reference:
+    packets/test_int4_to_int8/02_step.sql:3-5). A condition made only of
+    same-named ``t.k = s.k`` conjunctions takes the broadcast equi-join
+    path (the target never shuffles); anything else (range predicates,
+    cross-named keys, OR trees) takes the arbitrary-``condition`` path,
+    which updates each target row at most once via a first-match window —
+    the full PG UPDATE...FROM surface. A conjunct holding a literal or a
+    parenthesis never matches the equi shape, so splitting on ``and``
+    without masking cannot take the equi path wrongly."""
+    talias, salias = dml.alias, dml.source_alias
+
+    def realias(expr: str) -> str:
+        expr = re.sub(rf"\b{re.escape(salias)}\.", "\x02.", expr)
+        expr = re.sub(rf"\b{re.escape(talias)}\.", "t.", expr)
+        return expr.replace("\x02.", "s.")
+
+    on: list[str] | None = []
+    for cond in re.split(r"\s+and\s+", dml.predicate, flags=re.I):
+        m = _EQUI_RE.fullmatch(cond)
+        if m is None or {m[1], m[3]} != {talias, salias} or m[2] != m[4]:
+            on = None
+            break
+        on.append(m[2])
+    set_map = {c: realias(e) for c, e in dml.set_map.items()}
+    return on, None if on else realias(dml.predicate), set_map
+
+
+def _jdbc_append(ctx: RunContext, table: str, counted: migration.CountedPlan) -> int:
+    """Append an INSERT's rows to the live JDBC target through Spark's JDBC
+    sink (one INSERT batch per partition — the bounded-transaction shape of
+    the reference's migration packets), then refresh the table's snapshot
+    view so later statements see the write (PG statement visibility)."""
+    from db_converter_spark.sources.jdbc import register_remote_views
+
+    plan, appended = counted
+    url, props = ctx.jdbc_target["url"], ctx.jdbc_target["properties"]
+    plan.write.jdbc(url, table, mode="append", properties=props)
+    register_remote_views(ctx.spark, url, props, [table])
+    return appended()
+
+
+def _insert_source(spark: SparkSession, dml: Dml, table: str):
+    """An INSERT's row source as a DataFrame whose columns are named after
+    the ``table`` columns they fill (PG binds a missing column list by
+    position)."""
+    df = spark.sql(dml.source)
+    return df.toDF(*(dml.columns or spark.table(table).columns[: len(df.columns)]))
+
+
+def _recorded_defaults(spark: SparkSession, table: str) -> dict[str, str]:
+    """Lowercased column → recorded ``dbc.default.<col>`` expression
+    (operators/maintenance.py `_alter_default`); empty for a temp view or
+    an unknown table."""
+    try:
+        rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
+    except Exception:  # noqa: BLE001 — temp view / unknown table: not ours
+        return {}
+    return {
+        r["key"][len(DEFAULT_PROP_PREFIX) :].lower(): r["value"]
+        for r in rows
+        if r["key"].startswith(DEFAULT_PROP_PREFIX)
+    }
 
 
 def _expand_insert_defaults(ctx: RunContext, stmt: str) -> str:
@@ -325,70 +400,23 @@ def _expand_insert_defaults(ctx: RunContext, stmt: str) -> str:
     ``dbc.default.<col>`` property (operators/maintenance.py `_alter_default`,
     reference: packets/test_int4_to_int8/07_step.sql inserting through a
     serial DEFAULT) → rewrite to a full-projection INSERT with the default
-    expression inlined. Defaults containing sequence calls get block-inlined
-    by :func:`substitute_sequence_calls` immediately after. Statements whose
-    omitted columns have no recorded default are left to Spark (by-name
-    column-list INSERT fills NULLs natively)."""
-    from db_converter_spark.operators.maintenance import DEFAULT_PROP_PREFIX
-
-    body = _strip_leading_comments(stmt)
-    dm = re.match(
-        r"^\s*insert\s+into\s+([\w.`\"]+)\s+default\s+values\s*"
-        r"(returning\s.+)?$",
-        body.rstrip().rstrip(";"),
-        re.I | re.S,
-    )
-    if dm:
-        # PG `INSERT INTO t DEFAULT VALUES` (beyond-corpus): one row, every
-        # column from its recorded default (sequence calls inline next) or
-        # NULL — rewritten onto the same full-projection path
-        table = dm.group(1).strip('`"')
-        try:
-            props = {
-                r["key"][len(DEFAULT_PROP_PREFIX):].lower(): r["value"]
-                for r in ctx.spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-                if r["key"].startswith(DEFAULT_PROP_PREFIX)
-            }
-        except Exception:  # noqa: BLE001 — unknown table: let Spark report it
-            props = {}
-        proj = []
-        for f in ctx.spark.table(table).schema:
-            n = f.name.lower()
-            if n in props:
-                proj.append(f"({props[n]}) AS `{f.name}`")
-            else:
-                proj.append(f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
-        out = f"INSERT INTO {table} SELECT {', '.join(proj)}"
-        return f"{out} {dm.group(2)}" if dm.group(2) else out
-    m = _INSERT_COLS_RE.match(body)
-    if not m:
+    expression inlined; PG's ``INSERT INTO t DEFAULT VALUES`` takes the
+    same path with one row of defaults (or NULLs). Defaults containing
+    sequence calls get block-inlined by :func:`substitute_sequence_calls`
+    immediately after. Statements whose omitted columns have no recorded
+    default are left to Spark (by-name column-list INSERT fills NULLs
+    natively)."""
+    dml = parse_dml(stmt)
+    if dml is None or dml.kind not in ("insert", "upsert"):
         return stmt
-    table = m.group(1).strip('`"')
-    try:
-        props = {
-            r["key"][len(DEFAULT_PROP_PREFIX):].lower(): r["value"]
-            for r in ctx.spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-            if r["key"].startswith(DEFAULT_PROP_PREFIX)
-        }
-    except Exception:  # noqa: BLE001 — temp view / unknown table: not ours
+    props = _recorded_defaults(ctx.spark, dml.table)
+    cols = [c.lower() for c in dml.columns or ()]
+    if dml.source is not None and not (cols and props):
         return stmt
-    if not props:
+    schema = ctx.spark.table(dml.table).schema
+    omitted = {f.name.lower() for f in schema} - set(cols)
+    if dml.source is not None and not omitted & props.keys():
         return stmt
-    cols = [c.strip().strip('`"').lower() for c in m.group(2).split(",")]
-    schema = ctx.spark.table(table).schema
-    if not any(f.name.lower() in props and f.name.lower() not in cols for f in schema):
-        return stmt
-    src = m.group(3).rstrip().rstrip(";")
-    # trailing RETURNING / ON CONFLICT clauses are not part of the row
-    # source — detach both and re-attach to the rewritten INSERT (the
-    # upsert router / RETURNING capture handle them downstream)
-    src, returning = _split_returning(src)
-    src, conflict_clause = _split_on_conflict(src)
-    # bind the source's outputs to the provided column names positionally
-    # (arbitrary expressions have no usable names), then project the table's
-    # full column order with defaults/NULLs for the omitted ones
-    tmp = f"__dbc_ins_src_{hashlib.md5(stmt.encode()).hexdigest()[:8]}"
-    ctx.spark.sql(src).toDF(*cols).createOrReplaceTempView(tmp)
     proj = []
     for f in schema:
         n = f.name.lower()
@@ -398,386 +426,66 @@ def _expand_insert_defaults(ctx: RunContext, stmt: str) -> str:
             proj.append(f"({props[n]}) AS `{f.name}`")
         else:
             proj.append(f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
-    out = f"INSERT INTO {table} SELECT {', '.join(proj)} FROM {tmp}"
-    if conflict_clause:
-        out = f"{out} {conflict_clause}"
-    if returning:
-        out = f"{out} RETURNING {returning}"
-    return out
+    out = f"INSERT INTO {dml.table} SELECT {', '.join(proj)}"
+    if dml.source is not None:
+        # the source's outputs bind to the provided column names by position
+        # (arbitrary expressions have no usable names)
+        names = ", ".join(f"`{c}`" for c in cols)
+        out = f"{out} FROM ({dml.source}) AS __dbc_src({names})"
+    if dml.kind == "upsert":
+        keys = ", ".join(dml.conflict_keys)
+        action = "NOTHING"
+        if dml.set_map is not None:
+            action = "UPDATE SET " + ", ".join(f"`{c}` = {e}" for c, e in dml.set_map.items())
+            action += f" WHERE {dml.predicate}" if dml.predicate else ""
+        out = f"{out} ON CONFLICT ({keys}) DO {action}"
+    return f"{out} RETURNING {dml.returning}" if dml.returning else out
 
 
-def _split_returning(stmt: str) -> tuple[str, str | None]:
-    """Split a top-level trailing ``RETURNING <exprs>`` off a DML
-    statement (mask-aware: never matches inside strings/comments)."""
-    masked = mask_strings(stmt)
-    for m in re.finditer(r"\breturning\b", masked, re.I):
-        pre = masked[: m.start()]
-        if pre.count("(") == pre.count(")"):
-            return stmt[: m.start()].rstrip(), stmt[m.end() :].strip().rstrip(";")
-    return stmt, None
-
-
-def _returning_rows(ctx: RunContext, stmt: str, ret: str):
-    """DataFrame of PG ``RETURNING`` rows for ``stmt`` (already stripped of
-    the clause, defaults expanded, sequence calls inlined): DELETE returns
-    the OLD rows, UPDATE the NEW values of matched rows, INSERT the rows
-    being inserted, upsert the inserted + updated post-image. Evaluated
-    against the pre-statement state, like PG (the statement sees the same
-    snapshot)."""
-    from db_converter_spark.operators import migration
-    from db_converter_spark.plans.pgdialect import UnsupportedConstruct
-    from pyspark.sql import functions as F
-
-    spark = ctx.spark
-    s = _strip_leading_comments(stmt).rstrip().rstrip(";")
-    ups = _parse_insert_on_conflict(ctx, s)
-    if ups is not None:
-        table, src_df, keys, set_map, upd_where = ups
-        df = migration.upsert_affected_plan(spark, table, src_df, keys, set_map, upd_where)
-        df.createOrReplaceTempView("__dbc_ret")
-        return spark.sql(f"SELECT {ret} FROM __dbc_ret")
-    du = _parse_delete_using(ctx, s)
-    if du is not None:
-        table, talias, src_df, salias, cond = du
-        doomed = (
-            spark.table(table).alias(talias).join(src_df.alias(salias), _F_expr(cond), "left_semi")
+def _returning_rows(ctx: RunContext, dml: Dml):
+    """DataFrame of PG ``RETURNING`` rows for a parsed statement (defaults
+    expanded, sequence calls inlined): DELETE returns the OLD rows, UPDATE
+    the NEW values of matched rows, INSERT the rows being inserted, upsert
+    the inserted + updated post-image. Evaluated against the pre-statement
+    state, like PG (the statement sees the same snapshot)."""
+    spark, table = ctx.spark, dml.table
+    where = f" WHERE ({dml.predicate})" if dml.predicate else ""
+    if dml.kind == "update-from":
+        raise UnsupportedConstruct(
+            "RETURNING on UPDATE ... FROM is not supported — port to a py-step"
         )
-        doomed.createOrReplaceTempView("__dbc_ret")
-        # re-alias to the target's name so qualified RETURNING refs resolve
-        return spark.sql(f"SELECT {ret} FROM __dbc_ret {talias}")
-    m = _DELETE_RE.match(s)
-    if m:
-        table, pred = m.group(1).strip("`"), m.group(2)
-        where = f" WHERE ({pred})" if pred else ""
-        return spark.sql(f"SELECT {ret} FROM (SELECT * FROM {table}{where}) __dbc_ret")
-    m = _UPDATE_RE.match(s)
-    if m:
-        table, talias = m.group(1).strip("`"), m.group(2)
-        rest = s[m.end() :].rstrip().rstrip(";")
-        if _find_top_level(rest, "from") != -1:
-            raise UnsupportedConstruct(
-                "RETURNING on UPDATE ... FROM is not supported — port to a py-step"
-            )
-        set_map, pred = _split_set_clause(rest)
-        cols = [f.name for f in spark.table(table).schema]
+    if dml.kind == "update":
         proj = ", ".join(
-            f"({set_map[c]}) AS `{c}`" if c in set_map else f"`{c}`" for c in cols
+            f"({dml.set_map[c]}) AS `{c}`" if c in dml.set_map else f"`{c}`"
+            for c in spark.table(table).columns
         )
-        alias = f" {talias}" if talias else ""
-        where = f" WHERE ({pred})" if pred else ""
+        alias = f" {dml.alias}" if dml.alias else ""
         return spark.sql(
-            f"SELECT {ret} FROM (SELECT {proj} FROM {table}{alias}{where}) __dbc_ret"
+            f"SELECT {dml.returning} FROM (SELECT {proj} FROM {table}{alias}{where}) __dbc_ret"
         )
-    im = _INSERT_HEAD_RE.match(s)
-    if im:
-        table = im.group(1).strip('`"')
-        src = spark.sql(im.group(3))
-        schema = spark.table(table).schema
-        if im.group(2):
-            cols = [c.strip().strip('`"') for c in im.group(2).split(",")]
-        else:
-            cols = [f.name for f in schema][: len(src.columns)]
-        src = src.toDF(*cols)
-        for f in schema:
-            if f.name not in src.columns:
-                src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
-        src.createOrReplaceTempView("__dbc_ret")
-        return spark.sql(f"SELECT {ret} FROM __dbc_ret")
-    raise UnsupportedConstruct(
-        "RETURNING is supported on INSERT/UPDATE/DELETE statements only"
-    )
-
-
-def _split_on_conflict(stmt: str) -> tuple[str, str | None]:
-    """Split a top-level ``ON CONFLICT …`` clause off an INSERT statement.
-    Returns ``(head, clause)`` with ``clause=None`` when absent. Detection
-    runs on the literal-masked text so the keywords never match inside
-    strings/comments."""
-    masked = mask_strings(stmt)
-    for m in re.finditer(r"\bon\s+conflict\b", masked, re.I):
-        if masked[: m.start()].count("(") == masked[: m.start()].count(")"):
-            return stmt[: m.start()].rstrip(), stmt[m.start() :].rstrip().rstrip(";")
-    return stmt, None
-
-
-_DELETE_RE = re.compile(
-    r"^\s*delete\s+from\s+([\w.`]+)\s*(?:where\s+(.+))?$", re.I | re.S
-)
-_DELETE_USING_RE = re.compile(
-    r"^\s*delete\s+from\s+([\w.`]+)(?:\s+(?:as\s+)?(?!using\b|where\b)(\w+))?"
-    r"\s+using\s+(.+)$",
-    re.I | re.S,
-)
-
-
-def _parse_delete_using(ctx: RunContext, stmt: str):
-    """``DELETE FROM t [alias] USING <rel> WHERE cond`` (PG delete-join;
-    beyond-corpus) → (table, talias, source_df, salias, condition), or
-    None. Compiled onto operators.migration.delete_using."""
-    m = _DELETE_USING_RE.match(stmt)
-    if m is None:
-        return None
-    table, talias = m.group(1).strip("`"), m.group(2) or m.group(1).split(".")[-1].strip("`")
-    rest = m.group(3).rstrip().rstrip(";")
-    wi = _find_top_level(rest, "where")
-    if wi == -1:
-        raise ValueError("DELETE ... USING requires a WHERE join condition")
-    src_text, cond = rest[:wi].strip(), rest[wi + 5 :].strip()
-    src_sql, salias = _parse_relation(src_text, "DELETE ... USING")
-    return table, talias, ctx.spark.sql(src_sql), salias, cond
-_UPDATE_RE = re.compile(
-    r"^\s*update\s+([\w.`]+)(?:\s+(?:as\s+)?(?!set\b)(\w+))?\s+set\s+", re.I
-)
-
-
-def _find_top_level(text: str, word: str) -> int:
-    """Index of keyword ``word`` at paren depth 0 (word-bounded), or -1.
-    Scans the literal-masked copy (sqlsplit.mask_strings) so a keyword
-    inside a string literal, quoted identifier, or comment never matches —
-    ``SET note = 'a where b'`` keeps its literal intact."""
-    tl, wl = mask_strings(text).lower(), word.lower()
-    depth = 0
-    for i in range(len(tl)):
-        ch = tl[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and tl.startswith(wl, i):
-            before = tl[i - 1] if i else " "
-            j = i + len(wl)
-            after = tl[j] if j < len(tl) else " "
-            if not (before.isalnum() or before == "_") and not (
-                after.isalnum() or after == "_"
-            ):
-                return i
-    return -1
-
-
-def _split_top_level_and(text: str) -> list[str]:
-    parts, last = [], 0
-    rest = text
-    while True:
-        i = _find_top_level(rest, "and")
-        if i == -1:
-            parts.append(rest.strip())
-            return parts
-        parts.append(rest[:i].strip())
-        rest = rest[i + 3 :]
-
-
-def _split_set_clause(tail: str) -> tuple[dict[str, str], str | None]:
-    """Parse ``c1 = e1, c2 = e2 [WHERE p]``. All keyword/comma/= scanning
-    runs over the literal-masked copy so quoted text never splits a clause
-    (top-level WHERE and commas only; indices map 1:1 onto the original)."""
-    wi = _find_top_level(tail, "where")
-    set_part, predicate = (
-        (tail[:wi], tail[wi + 5 :].strip()) if wi != -1 else (tail, None)
-    )
-    set_map: dict[str, str] = {}
-    mask = mask_strings(set_part)
-    depth, parts, last = 0, [], 0
-    for i, ch in enumerate(mask):
-        depth += ch == "("
-        depth -= ch == ")"
-        if ch == "," and depth == 0:
-            parts.append(set_part[last:i])
-            last = i + 1
-    parts.append(set_part[last:])
-    for p in parts:
-        eq = mask_strings(p).find("=")
-        if eq < 0:
-            raise ValueError(f"cannot parse SET clause item: {p!r}")
-        col, expr = p[:eq], p[eq + 1 :]
-        set_map[col.strip().strip("`")] = expr.strip()
-    return set_map, predicate
-
-
-_INSERT_HEAD_RE = re.compile(
-    r"^\s*insert\s+into\s+([\w.`\"]+)\s*(?:\(([^)]*)\))?\s*(.+)$", re.I | re.S
-)
-
-
-def _parse_insert_on_conflict(ctx: RunContext, stmt: str):
-    """``INSERT INTO t[(cols)] <src> ON CONFLICT (keys) DO NOTHING |
-    DO UPDATE SET … [WHERE …]`` → (table, source_df, keys, set_map,
-    update_where), or None when the statement is not an upsert. PG's
-    upsert idiom (reference runs it server-side like all DML); compiled
-    onto operators.migration.upsert. In SET expressions reference the
-    proposed row as ``excluded.col`` and the existing row as ``t.col``."""
-    head, clause = _split_on_conflict(stmt.rstrip().rstrip(";"))
-    if clause is None:
-        return None
-    cm = re.match(
-        r"^on\s+conflict\s*\(([^)]*)\)\s*do\s+(nothing\b|update\s+set\s+)(.*)$",
-        clause,
-        re.I | re.S,
-    )
-    if cm is None:
-        raise ValueError(f"cannot parse ON CONFLICT clause: {clause!r}")
-    hm = _INSERT_HEAD_RE.match(head)
-    if hm is None:
-        raise ValueError(f"cannot parse INSERT head of upsert: {head!r}")
-    table = hm.group(1).strip('`"')
-    src_df = ctx.spark.sql(hm.group(3))
-    if hm.group(2):
-        cols = [c.strip().strip('`"') for c in hm.group(2).split(",")]
-        src_df = src_df.toDF(*cols)
-    keys = [k.strip().strip('`"').lower() for k in cm.group(1).split(",")]
-    if cm.group(2).lower().startswith("nothing"):
-        return table, src_df, keys, None, None
-    set_map, upd_where = _split_set_clause(cm.group(3))
-    return table, src_df, keys, set_map, upd_where
-
-
-def _F_expr(cond: str):
-    from pyspark.sql import functions as F
-
-    return F.expr(cond)
-
-
-def _route_v1_dml(ctx: RunContext, stmt: str, dry: bool = False) -> list | None:
-    """Spark cannot run DELETE/UPDATE against v1 (parquet) catalog tables —
-    route them through the migration rewrites (anti-filter delete,
-    conditional-projection update; operators/migration.py) so reference
-    packets like test_insert_info/01_step.sql:1 run unmodified. Returns the
-    command-status tuple, or None for statements Spark handles natively.
-    ``dry=True`` shadow-executes the same rewrite plan into the noop sink
-    (surfacing bad tables/columns/expressions and runtime errors) and
-    reports the count it observed, without writing — the no-commit path."""
-    from db_converter_spark.operators import migration
-
-    # reference packets wrap statements in '-- tx start/end' comment markers;
-    # the route match must see the first keyword, not the comment
-    stmt = _strip_leading_comments(stmt)
-    ups = _parse_insert_on_conflict(ctx, stmt)
-    if ups is not None:
-        table, src_df, keys, set_map, upd_where = ups
-        if dry:
-            return [
-                "INSERT",
-                migration.shadow_execute(
-                    migration.upsert_plan(ctx.spark, table, src_df, keys, set_map, upd_where)
-                ),
-            ]
-        n = migration.upsert(ctx.spark, table, src_df, keys, set_map, upd_where)
-        return ["INSERT", n]
-    du = _parse_delete_using(ctx, stmt)
-    if du is not None:
-        table, talias, src_df, salias, cond = du
-        if dry:
-            return [
-                "DELETE",
-                migration.shadow_execute(
-                    migration.delete_using_plan(ctx.spark, table, talias, src_df, salias, cond)
-                ),
-            ]
-        return [
-            "DELETE",
-            migration.delete_using(ctx.spark, table, talias, src_df, salias, cond),
-        ]
-    m = _DELETE_RE.match(stmt)
-    if m:
-        table, predicate = m.group(1).strip("`"), m.group(2)
-        if dry:
-            plan = migration.delete_plan(ctx.spark, table, predicate)
-            return ["DELETE", migration.shadow_execute(plan)]
-        n = migration.delete_where(ctx.spark, table, predicate)
-        # reference surfaces py-postgresql's ('DELETE', n) command tuple
-        # (dbccore/dbccore.py:866-870) — carry the affected-row count
-        return ["DELETE", n]
-    m = _UPDATE_RE.match(stmt)
-    if m:
-        table, talias = m.group(1).strip("`"), m.group(2)
-        rest = stmt[m.end() :].rstrip().rstrip(";")
-        fi = _find_top_level(rest, "from")
-        if fi == -1:
-            set_map, predicate = _split_set_clause(rest)
-            if dry:
-                plan = migration.update_plan(ctx.spark, table, set_map, predicate)
-                return ["UPDATE", migration.shadow_execute(plan)]
-            n = migration.update_where(ctx.spark, table, set_map, predicate)
-            return ["UPDATE", n]
-        n = _update_from(ctx, table, talias, rest[:fi], rest[fi + 4 :], dry=dry)
-        return ["UPDATE", n]
-    return None
-
-
-def _parse_relation(src_text: str, what: str) -> tuple[str, str]:
-    """``(subquery) [AS] alias`` or ``table [AS] alias`` → (sql, alias)."""
-    sm = re.match(r"^\((.*)\)\s*(?:as\s+)?(\w+)\s*$", src_text, re.I | re.S)
-    if sm:
-        return sm.group(1), sm.group(2)
-    tm = re.match(r"^([\w.`]+)(?:\s+(?:as\s+)?(\w+))?\s*$", src_text, re.I)
-    if not tm:
-        raise ValueError(f"cannot parse {what} source: {src_text!r}")
-    alias = tm.group(2) or tm.group(1).split(".")[-1].strip("`")
-    return f"SELECT * FROM {tm.group(1)}", alias
-
-
-def _update_from(
-    ctx: RunContext,
-    table: str,
-    talias: str | None,
-    set_part: str,
-    from_part: str,
-    dry: bool = False,
-) -> int:
-    """PostgreSQL ``UPDATE tgt [a] SET ... FROM (subquery|table) s WHERE
-    <cond>`` — the reference's canonical chunked-migration statement
-    (reference: packets/test_int4_to_int8/02_step.sql:3-5) — compiled onto
-    operators.migration.merge_update. Same-named ``t.k = s.k`` equi-key
-    conjunctions take the broadcast left-join path (target never shuffles);
-    anything else (range predicates, cross-named keys, OR trees) compiles
-    to the arbitrary-``condition`` path, which updates each target row at
-    most once via a first-match window — full PG UPDATE...FROM surface."""
-    from db_converter_spark.operators import migration
-
-    talias = talias or table.split(".")[-1]
-    wi = _find_top_level(from_part, "where")
-    if wi == -1:
-        raise ValueError("UPDATE ... FROM requires a WHERE join condition")
-    src_text, where_text = from_part[:wi].strip(), from_part[wi + 5 :].strip()
-    src_sql, salias = _parse_relation(src_text, "UPDATE ... FROM")
-
-    def realias(expr: str) -> str:
-        expr = re.sub(rf"\b{re.escape(salias)}\.", "\x02.", expr)
-        expr = re.sub(rf"\b{re.escape(talias)}\.", "t.", expr)
-        return expr.replace("\x02.", "s.")
-
-    on: list[str] | None = []
-    for cond in _split_top_level_and(where_text):
-        cm = re.match(r"^\s*(\w+)\.`?(\w+)`?\s*=\s*(\w+)\.`?(\w+)`?\s*$", cond)
-        if not cm or {cm.group(1), cm.group(3)} != {talias, salias}:
-            on = None  # not a pure equi conjunction → general condition path
-            break
-        tcol, scol = (
-            (cm.group(2), cm.group(4))
-            if cm.group(1) == talias
-            else (cm.group(4), cm.group(2))
+    if dml.kind == "delete":
+        return spark.sql(f"SELECT {dml.returning} FROM (SELECT * FROM {table}{where}) __dbc_ret")
+    alias = ""
+    if dml.kind == "delete-using":
+        rows = spark.table(table).alias(dml.alias).join(
+            spark.sql(dml.source).alias(dml.source_alias), F.expr(dml.predicate), "left_semi"
         )
-        if tcol != scol:
-            on = None
-            break
-        on.append(tcol)
-    condition = None if on else realias(where_text)
-    if on == []:
-        on = None
-
-    raw_set, _ = _split_set_clause(set_part)
-    set_map = {c: realias(e) for c, e in raw_set.items()}
-    src_df = ctx.spark.sql(src_sql)
-    if dry:
-        return migration.shadow_execute(
-            migration.merge_update_plan(
-                ctx.spark, table, src_df, on, set_map, condition=condition
-            )
+        # re-alias to the target's name so qualified RETURNING refs resolve
+        alias = f" {dml.alias}"
+    elif dml.kind == "upsert":
+        rows = migration.upsert_affected_plan(
+            spark, table, _insert_source(spark, dml, table), list(dml.conflict_keys),
+            dml.set_map, dml.predicate,
         )
-    return migration.merge_update(
-        ctx.spark, table, src_df, on, set_map, condition=condition
-    )
-
-
+    else:
+        rows = _insert_source(spark, dml, table)
+        for f in spark.table(table).schema:
+            if f.name not in rows.columns:
+                rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
+    # the rows are a DataFrame argument, never a temp view; literal braces
+    # in the RETURNING list are escaped for the argument formatter
+    ret = dml.returning.replace("{", "{{").replace("}", "}}")
+    return spark.sql(f"SELECT {ret} FROM {{rows}}{alias}", rows=rows)
 
 
 def _run_maint(ctx: RunContext, command: str) -> None:
@@ -1150,9 +858,6 @@ class PacketRunner:
                         # evaluate generators once run_once completed
                         gen_cache.update(self._eval_generators(session, pkt))
 
-            if not pkt.run_once and not gen_cache:
-                pass  # generators were evaluated lazily inside the step loop
-
             if track:
                 tracker.set_packet_status(
                     pkt.name, "done" if status == PacketStatus.DONE else "exception"
@@ -1203,44 +908,10 @@ class PacketRunner:
         if step is not pkt.run_once and (pkt.gen_obj or pkt.gen_nsp) and not gen_cache:
             gen_cache.update(self._eval_generators(session, pkt))
 
-        obj_rows = gen_cache.get(f"obj:{step.index}")
-        nsp_rows = gen_cache.get(f"nsp:{step.index}")
-
-        def actions():
-            """Yield (action_sql, [maint_cmds]) per binding — the reference's
-            three fan-out cases (dbccore/dbccore.py:921-1087). In the
-            cartesian case the reference runs BOTH maintenance commands —
-            the nsp row's first, then the obj row's with GEN_NSP
-            placeholders applied to it."""
-            if obj_rows is not None and nsp_rows is not None:
-                for nrow in nsp_rows:  # cartesian nsp × obj (case 1)
-                    for orow in obj_rows:
-                        sql = apply_gen_placeholders(step.text, nrow, "GEN_NSP")
-                        sql = apply_gen_placeholders(sql, orow, "GEN_OBJ")
-                        maints = []
-                        if nrow and nrow[0]:
-                            maints.append(str(nrow[0]))
-                        if orow and orow[0]:
-                            maints.append(
-                                apply_gen_placeholders(str(orow[0]), nrow, "GEN_NSP")
-                            )
-                        yield sql, maints
-            elif obj_rows is not None:
-                for orow in obj_rows:  # case 2
-                    yield (
-                        apply_gen_placeholders(step.text, orow, "GEN_OBJ"),
-                        [str(orow[0])] if orow and orow[0] else [],
-                    )
-            elif nsp_rows is not None:
-                for nrow in nsp_rows:  # case 3
-                    yield (
-                        apply_gen_placeholders(step.text, nrow, "GEN_NSP"),
-                        [str(nrow[0])] if nrow and nrow[0] else [],
-                    )
-            else:
-                yield step.text, []
-
-        for i, (action_sql, maints) in enumerate(actions(), 1):
+        actions = bind_actions(
+            step.text, gen_cache.get(f"obj:{step.index}"), gen_cache.get(f"nsp:{step.index}")
+        )
+        for i, (action_sql, maints) in enumerate(actions, 1):
             session.sparkContext.setJobDescription(
                 _job_label(pkt.name, ctx.db_name, step.name, f"action {i}")
             )

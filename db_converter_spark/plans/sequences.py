@@ -24,6 +24,8 @@ from __future__ import annotations
 import re
 from typing import TYPE_CHECKING
 
+from db_converter_spark.plans.sqlsplit import _strip_leading_comments, parse_dml
+
 if TYPE_CHECKING:  # pragma: no cover
     from db_converter_spark.plans.ledger import ActionTracker
     from db_converter_spark.plans.runner import RunContext
@@ -111,13 +113,6 @@ def route_sequence_ddl(
     return None
 
 
-_UPDATE_HEAD_RE = re.compile(
-    rf"^\s*update\s+({_IDENT}|[\w.`]+)(?:\s+(?:as\s+)?(\w+))?\s+set\b(.*)$",
-    re.I | re.S,
-)
-_DELETE_HEAD_RE = re.compile(r"^\s*delete\s+from\b", re.I)
-
-
 def _per_row_demand(ctx: "RunContext", stmt: str) -> tuple[int, str | None]:
     """How many per-row values the statement will draw, plus (for UPDATE)
     the row-matching predicate needed to number only the matched rows.
@@ -135,46 +130,36 @@ def _per_row_demand(ctx: "RunContext", stmt: str) -> tuple[int, str | None]:
     :class:`~db_converter_spark.plans.pgdialect.UnsupportedConstruct`
     (port to a py-step) instead of silently assigning one shared value."""
     from db_converter_spark.plans.pgdialect import UnsupportedConstruct
-    from db_converter_spark.plans.runner import (
-        _find_top_level,
-        _split_returning,
-        _strip_leading_comments,
-    )
 
-    body = _strip_leading_comments(stmt).rstrip().rstrip(";")
-    # a trailing RETURNING clause is not part of the row source — with it
-    # attached the demand-count subquery fails to parse and silently falls
-    # back to a SHARED scalar (one value for every row)
-    body, _ = _split_returning(body)
-    if _DELETE_HEAD_RE.match(body):
+    dml = parse_dml(stmt)
+    kind = dml.kind if dml is not None else None
+    if kind in ("delete", "delete-using"):
         raise UnsupportedConstruct(
             "nextval() inside DELETE is not supported — PG draws one value"
             " per evaluated row; port this statement to a py-step"
         )
-    um = _UPDATE_HEAD_RE.match(body)
-    if um:
-        table, rest = um.group(1).strip('`"'), um.group(3)
-        if _find_top_level(rest, "from") != -1:
-            raise UnsupportedConstruct(
-                "nextval() inside UPDATE ... FROM is not supported — port"
-                " this statement to a py-step (one nextval per matched row)"
-            )
-        wi = _find_top_level(rest, "where")
-        pred = rest[wi + 5 :].strip() if wi != -1 else None
+    if kind == "update-from":
+        raise UnsupportedConstruct(
+            "nextval() inside UPDATE ... FROM is not supported — port"
+            " this statement to a py-step (one nextval per matched row)"
+        )
+    if kind == "update":
+        pred = dml.predicate
         # nextval in the SET clause doesn't constrain the match; null any
         # occurrence inside the predicate itself before counting
         npred = _NEXTVAL_RE.sub("CAST(NULL AS BIGINT)", pred) if pred else None
         where = f" WHERE ({npred})" if npred else ""
         n = int(
-            ctx.spark.sql(f"SELECT count(*) AS c FROM {table}{where}").collect()[0][0]
+            ctx.spark.sql(f"SELECT count(*) AS c FROM {dml.table}{where}").collect()[0][0]
         )
         return n, pred
-    m = re.match(
-        r"^\s*insert\s+into\s+[\w.`\"]+\s*(?:\([^)]*\))?\s*(select\b.*)$",
-        body,
-        re.I | re.S,
-    )
-    sel = m.group(1) if m else body
+    # an INSERT draws per row of its source (RETURNING and ON CONFLICT are
+    # not part of it: with them attached the demand-count subquery would
+    # fail to parse and fall back to a SHARED scalar)
+    if dml is not None:
+        sel = dml.source or ""
+    else:
+        sel = _strip_leading_comments(stmt).rstrip().rstrip(";")
     if not re.match(r"^\s*(select|with)\b", sel, re.I | re.S) or not re.search(
         r"\bfrom\b", sel, re.I
     ):

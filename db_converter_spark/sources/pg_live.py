@@ -322,7 +322,7 @@ def execute_packet_native(
     the first tracked step (generator-free — generators still evaluate
     strictly after it), so a resumed run skips it like any applied
     action."""
-    from db_converter_spark.plans.packet import apply_gen_placeholders
+    from db_converter_spark.plans.packet import bind_actions
     from db_converter_spark.plans.sqlsplit import split_statements
 
     captures: "dict[str, list]" = {}
@@ -361,41 +361,15 @@ def execute_packet_native(
             for r in rows
         ]
 
-    def _bindings(step) -> "list[tuple[str, list[str]]]":
+    def _bindings(step):
         if (pkt.gen_obj or pkt.gen_nsp) and not gen_cache:
             for idx, sql in pkt.gen_obj.items():
                 gen_cache[f"obj:{idx}"] = _gen_rows(sql)
             for idx, sql in pkt.gen_nsp.items():
                 gen_cache[f"nsp:{idx}"] = _gen_rows(sql)
-        obj_rows = gen_cache.get(f"obj:{step.index}")
-        nsp_rows = gen_cache.get(f"nsp:{step.index}")
-        out: "list[tuple[str, list[str]]]" = []
-        if obj_rows is not None and nsp_rows is not None:
-            for nrow in nsp_rows:
-                for orow in obj_rows:
-                    sql = apply_gen_placeholders(step.text, nrow, "GEN_NSP")
-                    sql = apply_gen_placeholders(sql, orow, "GEN_OBJ")
-                    maints = []
-                    if nrow and nrow[0]:
-                        maints.append(str(nrow[0]))
-                    if orow and orow[0]:
-                        maints.append(apply_gen_placeholders(str(orow[0]), nrow, "GEN_NSP"))
-                    out.append((sql, maints))
-        elif obj_rows is not None:
-            for orow in obj_rows:
-                out.append((
-                    apply_gen_placeholders(step.text, orow, "GEN_OBJ"),
-                    [str(orow[0])] if orow and orow[0] else [],
-                ))
-        elif nsp_rows is not None:
-            for nrow in nsp_rows:
-                out.append((
-                    apply_gen_placeholders(step.text, nrow, "GEN_NSP"),
-                    [str(nrow[0])] if nrow and nrow[0] else [],
-                ))
-        else:
-            out.append((step.text, []))
-        return out
+        return bind_actions(
+            step.text, gen_cache.get(f"obj:{step.index}"), gen_cache.get(f"nsp:{step.index}")
+        )
 
     # bound-action dedup, packet-wide (reference steps_hashes, dbccore:
     # 941-943; the duplicate skips maint AND action). With a tracker the

@@ -60,6 +60,22 @@ def test_change_column_type(spark, mig_table):
     assert names == ["mig_t"]
 
 
+def test_change_column_type_keeps_recorded_default_and_index(spark, mig_table):
+    """The type change rewrites through the swap write, which carries the
+    table's recorded DEFAULT (a quoted nextval call) and index over."""
+    from db_converter_spark.operators.maintenance import list_indexes, route_maintenance
+
+    route_maintenance(spark, "ALTER TABLE mig_t ALTER COLUMN fld_1 SET DEFAULT nextval('mig_seq')")
+    route_maintenance(spark, "CREATE INDEX mig_t_fld_2_idx ON mig_t (fld_2)")
+
+    change_column_type(spark, mig_table, "id", "bigint")
+
+    assert dict(spark.table(mig_table).dtypes)["id"] == "bigint"
+    props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {mig_table}").collect()}
+    assert props["dbc.default.fld_1"] == "nextval('mig_seq')"
+    assert list(list_indexes(spark, mig_table)) == ["mig_t_fld_2_idx"]
+
+
 def test_merge_update(spark, mig_table):
     src = spark.range(1, 101).select(F.col("id").cast("int").alias("id"))
     merge_update(

@@ -937,6 +937,45 @@ def test_pg_target_resume_skips_ledgered_actions(spark, pg, tmp_path):
     assert pg.sql("SELECT v FROM prt ORDER BY v")[1:] == [["1"], ["11"]]
 
 
+def test_pg_target_cartesian_runs_both_maint_commands(spark, pg, tmp_path):
+    """The nsp × obj fan-out on a live target runs the nsp row's maintenance
+    command and the obj row's (GEN_NSP placeholders applied) per binding:
+    the same log as the Spark-target
+    test_runner_fixes::test_cartesian_runs_both_maint_commands."""
+    from db_converter_spark.plans.model import ResultCode
+    from db_converter_spark.plans.runner import PacketRunner
+
+    for t in ("maint_log", "maint_t"):
+        pg.sql(f"DROP TABLE IF EXISTS {t}")
+    pdir = tmp_path / "pg_cart_pkt"
+    pdir.mkdir()
+    (pdir / "run_once.sql").write_text(
+        "CREATE TABLE maint_log (src text); CREATE TABLE maint_t (s text, v int4)"
+    )
+    (pdir / "01_step.sql").write_text(
+        "INSERT INTO maint_t VALUES ('GEN_NSP_FLD_1', GEN_OBJ_FLD_1)"
+    )
+    (pdir / "01_gen_nsp.sql").write_text(
+        "SELECT 'insert into maint_log values (''nsp-'' || ''GEN'')', s"
+        " FROM (VALUES ('x')) AS t(s)"
+    )
+    (pdir / "01_gen_obj.sql").write_text(
+        "SELECT 'insert into maint_log values (''obj-GEN_NSP_FLD_1'')', c1"
+        " FROM (VALUES (1), (2)) AS t(c1)"
+    )
+    (pdir / "meta_data.json").write_text(
+        json.dumps({"type": "maintenance", "dialect": "postgres"})
+    )
+    runner = PacketRunner(spark, tmp_path / "wh", pg_targets={"cart_pg": {"server": pg}})
+
+    res = runner.run(pdir, dbs=["cart_pg"])
+    assert res.result_code["cart_pg"] == ResultCode.SUCCESS, res.result_data
+    assert pg.sql("SELECT src FROM maint_log ORDER BY src")[1:] == [
+        ["nsp-GEN"], ["nsp-GEN"], ["obj-x"], ["obj-x"],
+    ]
+    assert pg.sql("SELECT count(*) FROM maint_t")[1] == ["2"]
+
+
 def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
     """E25 + E27 on the live target — the twin of the reference's
     TestDBCLock (tests/test_packets.py:119-173): an externally-held

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from db_converter_spark.operators.migration import merge_update
 from db_converter_spark.plans.model import PacketStatus, ResultCode
-from db_converter_spark.plans.runner import PacketRunner, _split_set_clause
-from db_converter_spark.plans.sqlsplit import is_read_only_ok
+from db_converter_spark.plans.runner import PacketRunner
+from db_converter_spark.plans.sqlsplit import _split_set_clause, is_read_only_ok
 
 
 def _write_packet(path: Path, files: dict[str, str]) -> Path:
@@ -431,3 +431,51 @@ def test_insert_default_values(ret_ctx):
     ctx.execute("INSERT INTO dv DEFAULT VALUES")
     spark.catalog.refreshTable("retdb.dv")
     assert sorted(r.id for r in spark.table("retdb.dv").collect()) == [7, 8]
+
+
+def test_dml_paths_leave_no_temp_views(spark, runner, tmp_path):
+    """An INSERT through a recorded default and RETURNING on INSERT, UPDATE,
+    DELETE, DELETE USING and upsert pass their intermediates to spark.sql as
+    DataFrame arguments: the target session's temp-view set after the step
+    equals the set before it."""
+    pdir = _write_packet(
+        tmp_path / "tv_pkt",
+        {
+            "01_step.sql": "show views -- before",
+            "02_step.sql": (
+                "create table tv_d (id bigint, name string) using parquet;\n"
+                "create table tv_t using parquet as"
+                " select * from values (10, 'a'), (11, 'b'), (12, 'c'), (13, 'd') as t(id, name);\n"
+                "create table tv_s using parquet as select * from values (13), (20) as s(k);\n"
+                "create sequence tv_seq start with 10;\n"
+                "alter table tv_d alter column id set default nextval('tv_seq');\n"
+                "insert into tv_d(name) values ('a'), ('b');\n"
+                "insert into tv_d(name) values ('c') returning id, name;\n"
+                "update tv_t set name = 'B' where id = 11 returning id, name;\n"
+                "delete from tv_t where id = 12 returning id;\n"
+                "delete from tv_t using tv_s where tv_t.id = tv_s.k returning tv_t.id;\n"
+                "insert into tv_t(id, name) values (10, 'A'), (20, 'e')"
+                " on conflict (id) do update set name = excluded.name returning id, name"
+            ),
+            "03_step.sql": "show views -- after",
+            "04_step.sql": "select id, name from tv_t order by id",
+            "05_step.sql": "select id from tv_d order by id",
+        },
+    )
+    res = runner.run(pdir, dbs=["e2e_tv"])
+    assert res.result_code["e2e_tv"] == ResultCode.SUCCESS, res.result_data
+    data = res.result_data["e2e_tv"]
+    assert data["03_step.sql"] == data["01_step.sql"]
+    # resultsets (a header and rows), not [status] tuples or notices
+    returned = [
+        [r[0], *sorted(r[1:])] for r in data["02_step.sql"] if isinstance(r[0], list) and len(r) > 1
+    ]
+    assert returned == [
+        [["id", "name"], [12, "c"]],
+        [["id", "name"], [11, "B"]],
+        [["id"], [12]],
+        [["id"], [13]],
+        [["id", "name"], [10, "A"], [20, "e"]],
+    ]
+    assert data["04_step.sql"][0][1:] == [[10, "A"], [11, "B"], [20, "e"]]
+    assert data["05_step.sql"][0][1:] == [[10], [11], [12]]
