@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: run the engine's headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line:
+the host-fit ``local[N]`` of ``build_session`` and print ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 

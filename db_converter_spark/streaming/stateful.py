@@ -16,12 +16,21 @@ holds only the ACTIVE tail of users, not history.
 Semantics (matches ev02, reference-free extension SURVEY §6):
 - events within ``gap`` of the previous event extend the user's session;
 - a larger gap closes the open session (emitted) and starts a new one;
-- a processing-time timeout flushes still-open sessions.
+- an event-time timeout flushes a still-open session once the watermark
+  (latest event time seen minus ``lateness``) passes its last event plus
+  ``gap``: no later event can extend it any more.
 
-Within-stream ordering contract: like every watermark-less stateful
-operator, per-user event-time order must be non-decreasing ACROSS batches
-(late cross-batch events would start new sessions); the batch-parity test
-feeds time-split chunks to exercise exactly the carried-state path.
+The flush is driven by event time, not processing time. A processing-time
+timeout makes Spark run a no-data micro-batch after every batch to look
+for expired state, so an ``availableNow`` query never ends; the watermark
+only moves with data, so the query stops once its backlog is drained and
+the last watermark advance has been evicted.
+
+Within-stream ordering contract: events older than the watermark are
+dropped, and per-user event-time order must be non-decreasing ACROSS
+batches (late cross-batch events would start new sessions); the
+batch-parity test feeds time-split chunks to exercise exactly the
+carried-state path.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -60,7 +70,7 @@ _STATE_SCHEMA = StructType(
 _US = 1_000_000
 
 
-def _session_fn(gap_us: int, timeout_ms: int):
+def _session_fn(gap_us: int):
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -97,7 +107,9 @@ def _session_fn(gap_us: int, timeout_ms: int):
                         start_us, last_us, n = t, t, 1
             if start_us is not None:
                 state.update((start_us, last_us, n))
-                state.setTimeoutDuration(timeout_ms)
+                # every surviving event is at or past the watermark, so
+                # this never lies behind it
+                state.setTimeoutTimestamp((last_us + gap_us) // 1000)
 
         if closed:
             yield pd.DataFrame(
@@ -116,20 +128,24 @@ def _session_fn(gap_us: int, timeout_ms: int):
 
 
 def sessionize_stream(
-    events: DataFrame, gap_minutes: int = 30, timeout_ms: int = 3_600_000
+    events: DataFrame, gap_minutes: int = 30, lateness_minutes: int = 60
 ) -> DataFrame:
     """``events`` (streaming, with ``user_id`` and timestamp ``ts``) →
     stream of CLOSED sessions (user_id, session_start, session_end,
     n_events, closed_by). Open sessions stay in the per-user state row
-    until a gap closes them or the processing-time timeout flushes them."""
+    until a gap closes them or the watermark, ``lateness_minutes`` behind
+    the latest event, passes their last event plus the gap."""
     return (
-        events.select("user_id", "ts")
+        # watermarks reject TIMESTAMP_NTZ; under the UTC session the cast
+        # is a reinterpretation
+        events.select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+        .withWatermark("ts", f"{lateness_minutes} minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _session_fn(gap_minutes * 60 * _US, timeout_ms),
+            _session_fn(gap_minutes * 60 * _US),
             OUTPUT_SCHEMA,
             _STATE_SCHEMA,
             "append",
-            GroupStateTimeout.ProcessingTimeTimeout,
+            GroupStateTimeout.EventTimeTimeout,
         )
     )

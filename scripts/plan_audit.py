@@ -37,7 +37,7 @@ def formatted_plan(spark, df) -> str:
 
 def main() -> int:
     names = sys.argv[1:] or HEADLINE
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session()
     sf = "/root/testdata/sf0.01"
     qs = all_queries()
     for name in names:

@@ -88,9 +88,7 @@ def main() -> int:
     scales = [tuple(p.split(":", 1)) for p in args.scales.split(",")]
     base_label = scales[0][0]
 
-    spark = build_session(
-        app_name="scale-probe", master="local[32]", shuffle_partitions=32
-    )
+    spark = build_session(app_name="scale-probe")
     spark.range(1).count()  # warm the JVM
     qs = all_queries()
     out: dict[str, dict] = {}

@@ -26,14 +26,22 @@ def spark(tmp_path_factory):
     wh = tmp_path_factory.mktemp("spark-warehouse")
     s = build_session(
         app_name="dbc-spark-tests",
-        master="local[8]",
-        shuffle_partitions=8,
-        extra_conf={
-            "spark.driver.memory": "8g",
-            "spark.sql.warehouse.dir": str(wh),
-        },
+        extra_conf={"spark.sql.warehouse.dir": str(wh)},
     )
     yield s
+
+
+@pytest.fixture(autouse=True)
+def no_running_streams(request):
+    """Fail any test that leaves a streaming query running: it would keep
+    taking CPU from every later test. The leaked queries are stopped."""
+    yield
+    if "spark" not in request.fixturenames:
+        return
+    active = request.getfixturevalue("spark").streams.active
+    for q in active:
+        q.stop()
+    assert not active, f"streaming queries left running: {[q.name or q.id for q in active]}"
 
 
 @pytest.fixture(scope="session")

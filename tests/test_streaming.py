@@ -144,13 +144,15 @@ def test_windowed_event_stats_streaming(spark, tmp_path):
 
 def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
     """applyInPandasWithState sessionization must agree with the ev02
-    window-function batch twin on every CLOSED session. Events are fed as
+    window-function batch twin on every session it emits. Events are fed as
     two time-split parquet chunks so per-user state genuinely carries
     across micro-batches (the second chunk extends or closes sessions the
-    first chunk left open)."""
+    first chunk left open), and each ``availableNow`` query must end once
+    its chunk is drained."""
     from db_converter_spark.streaming.stateful import sessionize_stream
     from tests.conftest import SF_DIR
 
+    gap_minutes, lateness_minutes = 30, 60
     # 1-in-5 user subset: same state-carry semantics, fifth of the runtime
     events = (
         load_table(spark, SF_DIR, "events")
@@ -161,7 +163,9 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
     # (ns testdata) or TIMESTAMP_NTZ (us testdata; session tz is UTC so the
     # cast is a faithful reinterpretation)
     ts_us = "unix_micros(cast(ts as timestamp))"
-    cut = events.agg(F.expr(f"percentile_approx({ts_us}, 0.5)")).collect()[0][0]
+    cut, max_us = events.agg(
+        F.expr(f"percentile_approx({ts_us}, 0.5)"), F.expr(f"max({ts_us})")
+    ).collect()[0]
 
     src = tmp_path / "sess_src"
     ckpt = tmp_path / "sess_ckpt"
@@ -175,7 +179,9 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
             "maxFilesPerTrigger", "1"
         ).parquet(str(src) + "/*")
         q = (
-            sessionize_stream(stream, gap_minutes=30, timeout_ms=3_600_000)
+            sessionize_stream(
+                stream, gap_minutes=gap_minutes, lateness_minutes=lateness_minutes
+            )
             .writeStream.format("parquet")
             .outputMode("append")
             .option("path", str(out_dir))
@@ -183,25 +189,29 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        try:
+            assert q.awaitTermination(120), "availableNow query did not end"
+        finally:
+            q.stop()
 
     run_available(events.where(F.expr(f"{ts_us} <= {cut}")), "chunk1")
     run_available(events.where(F.expr(f"{ts_us} > {cut}")), "chunk2")
 
-    got = spark.read.parquet(str(out_dir)).select(
-        "user_id", "session_start", "session_end", "n_events"
-    )
+    out = spark.read.parquet(str(out_dir))
+    got = out.select("user_id", "session_start", "session_end", "n_events")
 
-    # batch truth: every session EXCEPT each user's last (which is still
-    # open in the state store, pending the processing-time timeout)
+    # batch truth: every session EXCEPT each user's last one that is still
+    # open in the state store: its last event plus the gap is not yet behind
+    # the final watermark (latest event, in ms, minus the lateness)
+    watermark_ms = max_us // 1000 - lateness_minutes * 60 * 1000
     events.createOrReplaceTempView("ev_batch")
     batch = spark.sql(
-        """
+        f"""
         WITH marked AS (
           SELECT user_id, ts,
             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
                    OR ts > lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                           + INTERVAL '30' MINUTE
+                           + INTERVAL '{gap_minutes}' MINUTE
             THEN 1 ELSE 0 END AS new_session
           FROM ev_batch
         ), sess AS (
@@ -217,12 +227,17 @@ def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
           FROM sess GROUP BY user_id, sid
         )
         SELECT user_id, session_start, session_end, n_events
-        FROM per WHERE sid < last_sid
+        FROM per
+        WHERE sid < last_sid
+           OR (unix_micros(cast(session_end AS timestamp))
+               + {gap_minutes * 60 * 1_000_000}) DIV 1000 < {watermark_ms}
         """
     )
     b = {tuple(r) for r in batch.collect()}
     g = {tuple(r) for r in got.collect()}
     assert len(b) > 0
+    # the watermark flush ran, not only gap closes
+    assert out.where("closed_by = 1").count() > 0
     assert g == b
 
 
