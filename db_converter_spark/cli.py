@@ -67,7 +67,7 @@ def _build_parser() -> argparse.ArgumentParser:
         help='JSON {target: {"base_dir": socket_dir[, "db", "schema"]}} —'
         " targets that ARE a live PostgreSQL server (reference: db alias ->"
         " conninfo map): packets execute natively over psql with the dbc_*"
-        " ledger in that database (r11; plans/runner.py _run_on_pg)",
+        " ledger in that database (sources/pg_live.py PgRunContext)",
     )
     p.add_argument("--yes", action="store_true", help="skip the multi-target confirmation gate")
     g = p.add_mutually_exclusive_group()

@@ -17,10 +17,12 @@ Format recap (AE-2):
 - zip method 99, extra field 0x9901 (AE-2, vendor "AE", strength 3,
   real method inside), CRC-32 field = 0 (AE-2 omits it)
 
-Throughput is pure-Python-AES-bound (~100 KB/s): correct for the
-export sizes the packet corpus produces; when pyzipper is installed the
-export path prefers it (plans/export.py) and an interop test validates
-this writer against it.
+Throughput is bound by the pure-Python AES over the DEFLATE output:
+about 250 KB/s of compressed bytes on a 4-core Xeon host (512 KB of
+random bytes in 2.0 s), so text CSVs, which compress several-fold,
+encrypt faster per CSV byte. It is the one AES writer of the export path
+(plans/export.py); a test checks its archives against pyzipper where
+pyzipper is installed.
 """
 
 from __future__ import annotations

@@ -1,13 +1,14 @@
-"""CSV export — the reference's ``export_data`` path rebuilt on Spark
+"""CSV export — the reference's ``export_data`` path
 (reference: dbccore/dbccore.py:724-829).
 
 Semantics kept from the reference:
 
 - every statement must be a plain SELECT-like query (reference validates via
   sqlparse token scan, dbccore/dbccore.py:728-738) — anything else raises;
-- all statements of one step share one snapshot: on Spark each parquet/Delta
-  read is snapshot-consistent per query; for stronger multi-statement
-  consistency the caller can pin table versions (SURVEY §3.3);
+- all statements of one action share one snapshot: on Spark each
+  parquet/Delta read is snapshot-consistent per query; for stronger
+  multi-statement consistency the caller can pin table versions (SURVEY
+  §3.3);
 - rows stream to the driver in chunks (reference: 10 000-row cursor reads,
   dbccore/dbccore.py:744,765-768 → ``df.toLocalIterator()``, which pulls one
   partition at a time — bounded driver memory at any scale);
@@ -16,16 +17,13 @@ Semantics kept from the reference:
 - file naming ``export_<md5(stm)[:6]>_<ts>_<db>.csv`` (reference:
   dbccore/dbccore.py:752-756);
 - optional zip of all CSVs (reference: dbccore/dbccore.py:781-826): LZMA
-  without a password; with one, always AES-encrypted — pyzipper when
-  installed, else the stdlib WinZip AE-2 writer in ``functions/wzaes.py``.
-  Plaintext CSVs are deleted after zipping (reference:
-  dbccore/dbccore.py:818-819).
+  without a password; with one, AES-encrypted by the stdlib WinZip AE-2
+  writer in ``functions/wzaes.py``. Plaintext CSVs are deleted after
+  zipping (reference: dbccore/dbccore.py:818-819).
 
-Scale note: the reference's export is inherently single-writer (one CSV per
-statement). ``export_statements_distributed`` offers the Spark-native path —
-``df.write.option("sep", "\t").csv`` writes one part-file per partition in
-parallel with no driver bottleneck — for when byte-identical single-file
-output is not required.
+:func:`export_statements` runs the queries on Spark; :func:`export_queries`
+takes any ``write(stmt, path)`` callable, which is how a live-PostgreSQL
+target exports its captures (sources/pg_live.py).
 """
 
 from __future__ import annotations
@@ -37,20 +35,13 @@ import secrets
 import string
 import time
 import zipfile
+from collections.abc import Callable, Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from db_converter_spark.plans.formatter import ANON_COLUMN
 from db_converter_spark.plans.sqlsplit import statement_kind
-
-try:  # optional AES-encrypted zip (reference uses pyzipper AES)
-    import pyzipper  # type: ignore
-
-    _HAS_PYZIPPER = True
-except ImportError:  # pragma: no cover - environment-dependent
-    pyzipper = None
-    _HAS_PYZIPPER = False
 
 
 class ExportValidationError(Exception):
@@ -72,16 +63,20 @@ def _export_name(stmt: str, db: str, ts: str | None = None) -> str:
 
 
 def write_csv(df: DataFrame, out_path: Path) -> int:
-    """Stream a DataFrame to one tab-delimited QUOTE_ALL CSV via
-    ``toLocalIterator`` (partition-at-a-time; bounded driver memory).
-    Returns the row count."""
+    """Stream a DataFrame to one CSV via ``toLocalIterator``
+    (partition-at-a-time; bounded driver memory). Returns the row count."""
+    return write_rows(df.columns, df.toLocalIterator(), out_path)
+
+
+def write_rows(columns: list[str], rows: Iterable, out_path: Path) -> int:
+    """Write a header and rows as one tab-delimited QUOTE_ALL CSV; NULL is
+    the empty field. Returns the row count."""
     out_path.parent.mkdir(parents=True, exist_ok=True)
-    cols = [c if c else ANON_COLUMN for c in df.columns]
     n = 0
     with out_path.open("w", newline="") as fh:
         w = csv.writer(fh, delimiter="\t", quoting=csv.QUOTE_ALL)
-        w.writerow(cols)
-        for row in df.toLocalIterator():
+        w.writerow([c if c else ANON_COLUMN for c in columns])
+        for row in rows:
             w.writerow(["" if v is None else str(v) for v in row])
             n += 1
     return n
@@ -96,8 +91,25 @@ def export_statements(
     zip_password: str | None = None,
     export_options: dict | None = None,
 ) -> list[str]:
-    """Run each SELECT statement and write one CSV per statement; optionally
-    zip them all (one archive per step, as the reference does per packet).
+    """Run each SELECT statement on Spark and write one CSV per statement;
+    see :func:`export_queries` for zipping and the result."""
+    return export_queries(
+        lambda stmt, path: write_csv(session.sql(stmt), path),
+        db, statements, out_dir, zip_output, zip_password, export_options,
+    )
+
+
+def export_queries(
+    write: Callable[[str, Path], object],
+    db: str,
+    statements: list[str],
+    out_dir: str | Path,
+    zip_output: bool = False,
+    zip_password: str | None = None,
+    export_options: dict | None = None,
+) -> list[str]:
+    """``write(stmt, path)`` one CSV per SELECT statement; optionally zip
+    them all into one archive per call (one per action in a packet run).
 
     ``export_options`` is the packet's ``meta_data.json`` block (reference
     format): ``{"use_zip": "yes", "password": "random" | "<literal>"}``.
@@ -126,9 +138,8 @@ def export_statements(
     files: list[Path] = []
     ts = time.strftime("%Y%m%d_%H%M%S")
     for stmt in statements:
-        df = session.sql(stmt)
         path = out_dir / _export_name(stmt, db, ts)
-        write_csv(df, path)
+        write(stmt, path)
         files.append(path)
     if not zip_output:
         return [str(f) for f in files]
@@ -142,60 +153,17 @@ def export_statements(
 
 def _zip_files(files: list[Path], zip_path: Path, password: str | None) -> None:
     """Zip the exports (reference: dbccore/dbccore.py:781-826). With a
-    password: pyzipper WZ_AES+LZMA when installed (byte-interop with the
-    reference's output), else the pure-stdlib WinZip AE-2 writer
-    (functions/wzaes.py — AES-256/CTR/HMAC-SHA1 per the public spec,
-    DEFLATE inside). Without a password: plain LZMA zip."""
+    password: the stdlib WinZip AE-2 writer (functions/wzaes.py —
+    AES-256/CTR/HMAC-SHA1 per the public spec, DEFLATE inside). Without a
+    password: plain LZMA zip."""
     if password is not None:
-        if _HAS_PYZIPPER:
-            with pyzipper.AESZipFile(
-                zip_path, "w", compression=pyzipper.ZIP_LZMA,
-                encryption=pyzipper.WZ_AES,
-            ) as zf:
-                zf.setpassword(password.encode())
-                for f in files:
-                    zf.write(f, f.name)
-            return
         from db_converter_spark.functions.wzaes import write_aes_zip
 
-        write_aes_zip(
-            zip_path, [(f.name, f.read_bytes()) for f in files], password
-        )
+        write_aes_zip(zip_path, [(f.name, f.read_bytes()) for f in files], password)
         return
     with zipfile.ZipFile(zip_path, "w", compression=zipfile.ZIP_LZMA) as zf:
         for f in files:
             zf.write(f, f.name)
-
-
-def export_statements_distributed(
-    session: SparkSession,
-    statements: list[str],
-    out_dir: str | Path,
-) -> list[str]:
-    """Spark-native export: parallel part-file CSV write per statement — the
-    100 TB path (no driver funnel; every executor writes its partitions).
-    Directory naming mirrors the single-file scheme."""
-    out_dir = Path(out_dir)
-    ts = time.strftime("%Y%m%d_%H%M%S")
-    out: list[str] = []
-    for stmt in statements:
-        if statement_kind(stmt) != "query":
-            raise ExportValidationError(
-                f"export packets accept only SELECT statements, got: {stmt[:80]}"
-            )
-        h = hashlib.md5(stmt.encode()).hexdigest()[:6]
-        target = str(out_dir / f"export_{h}_{ts}")
-        (
-            session.sql(stmt)
-            .write.mode("overwrite")
-            .option("sep", "\t")
-            .option("header", True)
-            .option("quoteAll", True)
-            .option("emptyValue", "")
-            .csv(target)
-        )
-        out.append(target)
-    return out
 
 
 # lzma import is part of the public surface: stdlib zipfile's ZIP_LZMA needs

@@ -3,23 +3,28 @@ Spark (reference: worker_db_func + execute_step + execute_q,
 dbccore/dbccore.py:379-627, 831-903, 905-1181).
 
 Execution model:
-- one *target* = one Spark catalog database + its own SQLite ledger; targets
-  run in parallel driver threads over isolated ``spark.newSession()``
-  children (session-scoped SQL conf / current database / temp views), which
-  is the Spark analog of the reference's thread-per-DB fan-out
-  (reference: db_converter.py:633-647) — intra-query parallelism comes from
-  partitions, inter-target from threads sharing one SparkContext.
+- one loop, :meth:`PacketRunner._run_on_db`, runs every packet type on
+  every target: lock, hash guard, ledger rows, ``run_once`` then
+  generators, action binding and md5 dedup, skip flags, status.
+- a *target* supplies only its channel (a :class:`RunContext`: run one
+  statement, evaluate a generator, run a maintenance command, export)
+  and its ledger. A Spark target is one catalog database in an isolated
+  ``spark.newSession()`` child with a SQLite ledger; a live-PostgreSQL
+  target (``sources/pg_live.PgRunContext``) runs server-side over psql
+  with the ``dbc_*`` ledger in that database. Targets run in parallel
+  driver threads (reference: db_converter.py:633-647).
 - one *step* = one SQL (or Python) file; one *action* = one placeholder
   binding of a step, identity = md5 of the final SQL, dedup'd against the
   ledger for idempotent resume (reference: dbccore/dbccore.py:941-951).
-- "transaction" semantics: an action is recorded done only after every
-  statement in it succeeded; re-runs skip completed actions. Cross-table
-  atomicity is best-effort, same as the reference's reconnect-and-resume
-  behavior (SURVEY §7.3).
-- DML: statement text is parsed only by ``sqlsplit.parse_dml``. Every
-  parsed statement Spark cannot run natively (UPDATE/DELETE on parquet,
-  upserts, the join forms, INSERT into a live JDBC table) maps to one
-  counted plan (:func:`_dml_plan`), and :func:`_run_statement` checks
+  An action is recorded done only after every statement in it succeeded;
+  cross-table atomicity is best-effort, as in the reference (SURVEY §7.3).
+- export: in an EXPORT_DATA packet an action whose statements are all
+  SELECTs writes one CSV per statement; any other action runs normally
+  (reference: ``execute_q`` → ``export_data``, dbccore/dbccore.py:724-831).
+- DML on Spark: statement text is parsed only by ``sqlsplit.parse_dml``.
+  Every parsed statement Spark cannot run natively (UPDATE/DELETE on
+  parquet, upserts, the join forms, INSERT into a live JDBC table) maps to
+  one counted plan (:func:`_dml_plan`), and :func:`_run_statement` checks
   ``ctx.no_commit`` once: the plan shadow-executes into the noop sink or is
   committed (``migration.commit``, or the JDBC append). Intermediates reach
   ``spark.sql`` as DataFrame arguments; the runner registers no temp view
@@ -31,7 +36,6 @@ from __future__ import annotations
 import fnmatch
 import hashlib
 import re
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
@@ -82,9 +86,18 @@ class PacketHashChanged(Exception):
 
 
 class RunContext:
-    """Per-(target, packet) execution context; also the ``ctx`` object handed
-    to Python steps (reference exposes ``self``/``db_local`` to py-steps,
-    dbccore/dbccore.py:1113-1115)."""
+    """Per-(target, packet) execution context and a Spark target's channel;
+    also the ``ctx`` object handed to Python steps (reference exposes
+    ``self``/``db_local`` to py-steps, dbccore/dbccore.py:1113-1115).
+
+    The packet loop reaches its target only through ``prepare``,
+    ``execute``, ``generator_rows``, ``maint``, ``export``, ``label``,
+    ``watchdog`` and ``refresh_catalog``; a live-PostgreSQL target
+    overrides them (``sources/pg_live.PgRunContext``)."""
+
+    # False: the target has no Python channel; the loop lists its py steps
+    # under ``skipped_py`` instead of running them
+    python_steps = True
 
     def __init__(self, spark: SparkSession, db_name: str, packet: Packet, read_only: bool):
         self.spark = spark
@@ -100,6 +113,8 @@ class RunContext:
         # of the reference's execute+rollback, dbccore/dbccore.py:886-888);
         # remaining writes are validated with EXPLAIN EXTENDED (E13)
         self.no_commit = False
+        # set for an EXPORT_DATA run: where all-SELECT actions write CSVs
+        self.export_dir: Path | None = None
         self.messages: list[tuple[str, str]] = []  # (severity, text) — E16 channel
         self.current_step_results: list = []
         # per-target ledger; attached by the run loop when tracking is on
@@ -124,6 +139,25 @@ class RunContext:
         filter_notices, dbccore/dbccore.py:838-844)."""
         self.messages.append((severity.upper(), message))
         self.current_step_results.append([severity.upper(), message])
+
+    def prepare(self, ledger: ActionTracker) -> None:
+        """Once the packet row is in ``ledger``, PG-dialect packets get the
+        surface the reference's alert_*/dba_* family introspects: pg_catalog
+        + information_schema views, PG-named SQL shims and the ledger as the
+        ``dbc_packets`` view (packets/test_insert_delete_select/01_step.sql
+        reads its own row). Driver-side metadata, no scans."""
+        if self.dialect != "postgres":
+            return
+        from db_converter_spark.functions import register_pg_compat
+
+        register_pg_compat(self.spark)
+        self.refresh_catalog()
+        local_relation(
+            self.spark,
+            ledger.dump_packets(),
+            "id bigint, name string, status string, dt string,"
+            " packet_hash string, meta_data string",
+        ).createOrReplaceTempView("dbc_packets")
 
     def refresh_catalog(self) -> None:
         """Rebuild the pg_catalog / information_schema emulation views from
@@ -150,8 +184,44 @@ class RunContext:
             register_serial_sequence_lookup(self.spark, self.tracker.seq_owned_map())
 
     def execute(self, sql: str) -> list:
-        """Run one statement, capture like the engine does; for py-steps."""
+        """Run one statement and capture it (also for py-steps)."""
         return _run_statement(self, sql)
+
+    def generator_rows(self, sql: str) -> list[tuple]:
+        """One generator's rows, collected to the driver: generators are
+        small parameter grids. PG-dialect packets run their generator SQL
+        through the same rewriter as step SQL."""
+        if self.dialect == "postgres":
+            sql = pg_rewrite(sql, self.packet.session_conf)
+        return [tuple(r) for r in self.spark.sql(sql).collect()]
+
+    def maint(self, command: str) -> None:
+        """A generator row's maintenance command: ``vacuum analyze t`` →
+        ANALYZE TABLE (operators/maintenance.py); anything else verbatim."""
+        if route_maintenance(self.spark, command) is None:
+            self.spark.sql(command).collect()
+
+    def export(self, statements: list[str]) -> list[str]:
+        """Write each SELECT to a CSV under ``export_dir`` (plans/export.py)."""
+        return export_statements(
+            self.spark, self.db_name, statements, self.export_dir,
+            export_options=self.packet.meta.get("export_options"),
+        )
+
+    def label(self, *parts: str) -> None:
+        """Name the step or action that owns the Spark jobs that follow."""
+        self.spark.sparkContext.setJobDescription(
+            _job_label(self.packet.name, self.db_name, *parts)
+        )
+
+    def watchdog(self, timeout_s: float | None) -> StepWatchdog:
+        """Cancel the target's job group when a step overruns ``timeout_s``."""
+        return StepWatchdog(self.spark, _job_group(self.packet.name, self.db_name), timeout_s)
+
+
+def _job_group(packet: str, db: str) -> str:
+    """The Spark job group of one (target, packet) run; stop() cancels it."""
+    return f"dbc_{db}_{packet}"
 
 
 def _job_label(packet: str, db: str, *parts: str) -> str:
@@ -490,12 +560,10 @@ def _returning_rows(ctx: RunContext, dml: Dml):
 
 def _run_maint(ctx: RunContext, command: str) -> None:
     """The generator's field-0 maintenance side channel (reference:
-    dbccore/dbccore.py:954-965). ``vacuum analyze t`` → ANALYZE TABLE;
-    other commands run verbatim; failures are notices, not errors."""
+    dbccore/dbccore.py:954-965), on the target's own channel; failures are
+    notices, not errors."""
     try:
-        routed = route_maintenance(ctx.spark, command)
-        if routed is None:
-            ctx.spark.sql(command).collect()
+        ctx.maint(command)
         ctx.raise_notice("LOG", f"maint done: {command}")
     except Exception as e:  # noqa: BLE001 — maint is advisory
         ctx.raise_notice("WARNING", f"maint failed: {command}: {e}")
@@ -532,16 +600,13 @@ class PacketRunner:
         self.jdbc_targets = jdbc_targets or {}
         # db-name → {"server": PgServer, "db": <pg database, default
         # 'postgres'>, "schema": <ledger schema, default 'dbc'>}: targets
-        # that ARE a live PostgreSQL database (r11, the reference's core
+        # that ARE a live PostgreSQL database (the reference's core
         # deployment shape — db_converter.py:556-685 routes every packet
         # to a PG conninfo with the dbc_* ledger IN that database,
-        # actiontracker/actiontracker.py:38-95). Packets on these targets
-        # execute natively server-side (sources/pg_live.py) with lock,
-        # hash guard, exactly-once action resume, and status all recorded
-        # in the target's own dbc schema.
+        # actiontracker/actiontracker.py:38-95). The same packet loop runs
+        # them; statements execute server-side (sources/pg_live.py) and
+        # the ledger is the target's own dbc schema.
         self.pg_targets = pg_targets or {}
-        self._stop_requested: set[str] = set()
-        self._stop_lock = threading.Lock()
 
     # -- target selection (reference: init_dbs_list, db_converter.py:459-484)
 
@@ -565,9 +630,7 @@ class PacketRunner:
     def stop(self, db_name: str, packet_name: str) -> None:
         """--stop analog: cancel the job group (reference terminates backends
         by application_name, db_converter.py:390-411)."""
-        with self._stop_lock:
-            self._stop_requested.add(f"{db_name}:{packet_name}")
-        self.spark.sparkContext.cancelJobGroup(f"dbc_{db_name}_{packet_name}")
+        self.spark.sparkContext.cancelJobGroup(_job_group(packet_name, db_name))
 
     # -- main entry (reference: MainRoutine.run → run_on_db) ---------------
 
@@ -590,13 +653,10 @@ class PacketRunner:
 
         def one(db: str) -> None:
             try:
-                if db in self.pg_targets:
-                    code, status, data = self._run_on_pg(pkt, ptype, db, force)
-                else:
-                    code, status, data = self._run_on_db(
-                        pkt, ptype, db, force, skip_step_cancel, skip_action_cancel,
-                        export_dir,
-                    )
+                code, status, data = self._run_on_db(
+                    *self._open_target(pkt, db), ptype, force, skip_step_cancel,
+                    skip_action_cancel, export_dir,
+                )
             except Exception as e:  # noqa: BLE001 — surface as FAIL
                 code, status, data = ResultCode.FAIL, PacketStatus.EXCEPTION, {
                     "__error__": [str(e)]
@@ -619,72 +679,20 @@ class PacketRunner:
                 list(pool.map(one, dbs))
         return result
 
-    # -- live-PostgreSQL target (reference: run_on_db, db_converter.py:
-    # -- 556-685 — every packet executes against a PG conninfo with the
-    # -- dbc_* ledger in that database) ------------------------------------
+    # -- targets (reference: run_on_db, db_converter.py:556-685) -----------
 
-    def _run_on_pg(self, pkt: Packet, ptype: PacketType, db: str, force: bool):
-        """Route the packet NATIVELY to a live PostgreSQL target (r11).
+    def _open_target(self, pkt: Packet, db: str):
+        """``(ctx, ledger)`` for target ``db``: a live-PostgreSQL target runs
+        over psql with its ledger in the target database; any other is a
+        Spark catalog database with a SQLite ledger in the warehouse."""
+        cfg = self.pg_targets.get(db)
+        if cfg is not None:
+            from db_converter_spark.sources.pg_live import PgActionTracker, PgRunContext
 
-        Reference parity, in the reference's own order (db_converter.py:
-        556-685 + dbccore): init the dbc_* ledger tables in the target DB,
-        take the packet lock there (LOCKED + STARTED when already held —
-        reference tests/test_packets.py TestDBCLock), enforce the
-        hash-change guard (E27), execute every statement server-side with
-        exactly-once action resume against the live ``dbc_actions`` (E6),
-        stamp step/packet status, and release the lock. READ_ONLY /
-        NO_COMMIT / EXPORT_DATA types run untracked (reference: those
-        types never consult the ActionTracker, db_converter.py:564-570)
-        and LOCKED still applies."""
-        from db_converter_spark.sources.pg_live import (
-            PgActionTracker,
-            PgServerError,
-            execute_packet_native,
-        )
-
-        cfg = self.pg_targets[db]
-        pg_db = cfg.get("db", "postgres")
-        tracker = PgActionTracker(
-            cfg["server"], db=pg_db, schema=cfg.get("schema", "dbc")
-        )
-        track = ptype in (PacketType.DEFAULT, PacketType.MAINTENANCE)
-        if not tracker.try_lock(pkt.name):
-            # reference: ResultCode.LOCKED + PacketStatus.STARTED
-            # (db_converter.py:619-627, asserted by TestDBCLock)
-            return ResultCode.LOCKED, PacketStatus.STARTED, {}
-        try:
-            prev_hash = tracker.packet_hash(pkt.name)
-            if track and prev_hash not in (None, pkt.packet_hash) and not force:
-                raise PacketHashChanged(
-                    f"packet {pkt.name} changed (was {prev_hash}, now"
-                    f" {pkt.packet_hash}); wipe or force"
-                )
-            try:
-                data = execute_packet_native(
-                    cfg["server"], pkt, db=pg_db,
-                    tracker=tracker if track else None,
-                )
-            except PgServerError as e:
-                notify_error(self.hook, pkt.name, db, str(e))
-                return ResultCode.FAIL, PacketStatus.EXCEPTION, {
-                    "__error__": [str(e)]
-                }
-            return ResultCode.SUCCESS, PacketStatus.DONE, data
-        finally:
-            tracker.unlock(pkt.name)
-
-    # -- per-target worker (reference: worker_db_func) ---------------------
-
-    def _run_on_db(
-        self,
-        pkt: Packet,
-        ptype: PacketType,
-        db: str,
-        force: bool,
-        skip_step_cancel: bool,
-        skip_action_cancel: bool,
-        export_dir: str | Path | None,
-    ):
+            pg_db = cfg.get("db", "postgres")
+            return PgRunContext(cfg["server"], pg_db, pkt, db), PgActionTracker(
+                cfg["server"], db=pg_db, schema=cfg.get("schema", "dbc")
+            )
         session = self.spark.newSession()
         for k, v in pkt.session_conf.items():
             session.conf.set(k, v)
@@ -694,20 +702,56 @@ class PacketRunner:
         # stop() cancel; the job description names the step and action that
         # own each job, so the status store can attribute every one of them
         session.sparkContext.setJobGroup(
-            f"dbc_{db}_{pkt.name}", _job_label(pkt.name, db), interruptOnCancel=True
+            _job_group(pkt.name, db), _job_label(pkt.name, db), interruptOnCancel=True
         )
+        ctx = RunContext(session, db, pkt, read_only=False)
+        jdbc_cfg = self.jdbc_targets.get(db)
+        if jdbc_cfg:
+            # LIVE target: every remote table becomes a snapshot view
+            # BEFORE generators evaluate, so fan-out SQL reads the remote
+            # (reference: generators run server-side on the target
+            # connection, dbccore/dbccore.py:538-541)
+            from db_converter_spark.sources.jdbc import register_remote_views
 
-        tracker = ActionTracker(self.warehouse / db / "dbc_ledger.sqlite")
-        lock_name = pkt.name
-        if not tracker.try_lock(lock_name):
-            return ResultCode.LOCKED, PacketStatus.NEW, {}
+            props = dict(jdbc_cfg.get("properties") or {})
+            tables = register_remote_views(session, jdbc_cfg["url"], props)
+            ctx.jdbc_target = {
+                "url": jdbc_cfg["url"],
+                "properties": props,
+                "tables": {t.lower() for t in tables},
+            }
+        return ctx, ActionTracker(self.warehouse / db / "dbc_ledger.sqlite")
+
+    # -- the packet loop (reference: worker_db_func) -----------------------
+
+    def _run_on_db(
+        self,
+        ctx: RunContext,
+        tracker: ActionTracker,
+        ptype: PacketType,
+        force: bool,
+        skip_step_cancel: bool,
+        skip_action_cancel: bool,
+        export_dir: str | Path | None,
+    ):
+        """Run ``ctx.packet`` on ``ctx``'s target with ``tracker`` as its
+        ledger; returns ``(ResultCode, PacketStatus, step results)``."""
+        pkt, db = ctx.packet, ctx.db_name
+        if not tracker.try_lock(pkt.name):
+            # reference: ResultCode.LOCKED + PacketStatus.STARTED
+            # (db_converter.py:619-627, asserted by TestDBCLock)
+            tracker.close()
+            return ResultCode.LOCKED, PacketStatus.STARTED, {}
         try:
-            # READ_ONLY gates writes; EXPORT_DATA does NOT — in the reference
-            # only all-SELECT steps export, any other step executes normally
-            # (test_export_data/01_test.sql creates its tables in-packet;
-            # reference: export_data returns False on mixed statements and
-            # the step falls through to normal execution, dbccore:724-831)
-            read_only = ptype == PacketType.READ_ONLY
+            # READ_ONLY gates writes; EXPORT_DATA does NOT — only all-SELECT
+            # actions export, any other action executes normally
+            # (test_export_data/01_test.sql creates its tables in-packet)
+            ctx.read_only = ptype == PacketType.READ_ONLY
+            ctx.no_commit = ptype == PacketType.NO_COMMIT
+            if ptype == PacketType.EXPORT_DATA:
+                ctx.export_dir = Path(export_dir or (self.warehouse / db / "export"))
+            # READ_ONLY / NO_COMMIT / EXPORT_DATA never consult the ledger
+            # (reference: db_converter.py:564-570); the lock still applies
             track = ptype == PacketType.DEFAULT or ptype == PacketType.MAINTENANCE
             # per-step budget in seconds (reference: statement_timeout GUC,
             # db_converter.py:78; enforced here by the job-group watchdog E21)
@@ -720,68 +764,11 @@ class PacketRunner:
                     " wipe or force"
                 )
             packet_id = tracker.upsert_packet(pkt.name, pkt.packet_hash, pkt.meta) if track else -1
-
-            ctx = RunContext(session, db, pkt, read_only)
             if track:
                 ctx.tracker = tracker  # sequence counters share the ledger
-            ctx.no_commit = ptype == PacketType.NO_COMMIT
-            jdbc_cfg = self.jdbc_targets.get(db)
-            if jdbc_cfg:
-                # LIVE target: every remote table becomes a snapshot view
-                # BEFORE generators evaluate, so fan-out SQL reads the
-                # remote (reference: generators run server-side on the
-                # target connection, dbccore/dbccore.py:538-541)
-                from db_converter_spark.sources.jdbc import register_remote_views
-
-                props = dict(jdbc_cfg.get("properties") or {})
-                tables = register_remote_views(session, jdbc_cfg["url"], props)
-                ctx.jdbc_target = {
-                    "url": jdbc_cfg["url"],
-                    "properties": props,
-                    "tables": {t.lower() for t in tables},
-                }
-            if ctx.dialect == "postgres":
-                # PG-dialect packets get the full introspection surface the
-                # reference's alert_*/dba_* family expects: pg_catalog +
-                # information_schema emulation views and the PG-named SQL
-                # shims (quote_ident etc.). Driver-side metadata, no scans.
-                from db_converter_spark.functions import register_pg_compat
-
-                register_pg_compat(session)
-                ctx.refresh_catalog()
-                # Live ledger snapshot as the dbc_packets view — reference
-                # packets introspect their own ledger row (reference:
-                # packets/test_insert_delete_select/01_step.sql)
-                local_relation(
-                    session,
-                    tracker.dump_packets(),
-                    "id bigint, name string, status string, dt string,"
-                    " packet_hash string, meta_data string",
-                ).createOrReplaceTempView("dbc_packets")
+            ctx.prepare(tracker)
             data: dict[str, list] = {}
             status = PacketStatus.DONE
-
-            if ptype == PacketType.EXPORT_DATA:
-                out_dir = Path(export_dir or (self.warehouse / db / "export"))
-                for step in pkt.steps:
-                    ctx.current_step_results = []
-                    stmts = split_statements(step.text)
-                    if stmts and all(statement_kind(s) == "query" for s in stmts):
-                        files = export_statements(
-                            session, db, stmts, out_dir,
-                            export_options=pkt.meta.get("export_options"),
-                        )
-                        ctx.current_step_results.append(
-                            [["exported"], *[[f] for f in files]]
-                        )
-                    else:
-                        # mixed/DDL step: executes normally (reference
-                        # behavior — setup steps live inside export packets)
-                        for stmt in stmts:
-                            _run_statement(ctx, stmt)
-                    data[step.name] = ctx.current_step_results
-                tracker.set_packet_status(pkt.name, "done") if track else None
-                return ResultCode.SUCCESS, PacketStatus.DONE, data
 
             # generators are evaluated AFTER run_once (reference ordering,
             # dbccore/dbccore.py:536-541)
@@ -790,13 +777,14 @@ class PacketRunner:
 
             seen_hashes: set[str] = set()
             for step in steps:
+                if step.kind == "py" and not ctx.python_steps:
+                    data.setdefault("skipped_py", []).append(step.name)
+                    continue
                 ctx.current_step_results = []
-                session.sparkContext.setJobDescription(_job_label(pkt.name, db, step.name))
+                ctx.label(step.name)
                 step_id = tracker.upsert_step(packet_id, step.name) if track else -1
                 try:
-                    with StepWatchdog(
-                        session, f"dbc_{db}_{pkt.name}", step_timeout
-                    ) as wd:
+                    with ctx.watchdog(step_timeout) as wd:
                         if step.kind == "py":
                             # A py step is one action: same md5 exactly-once
                             # dedup as SQL actions (reference applies the
@@ -839,6 +827,7 @@ class PacketRunner:
                 except Exception as e:  # noqa: BLE001
                     if track:
                         tracker.set_step_status(step_id, "exception", str(e)[:2000])
+                    notify_error(self.hook, pkt.name, db, str(e))
                     ctx.raise_notice("EXCEPTION", str(e))
                     if skip_step_cancel:
                         continue
@@ -856,7 +845,7 @@ class PacketRunner:
                         ctx.refresh_catalog()
                     if not gen_cache:
                         # evaluate generators once run_once completed
-                        gen_cache.update(self._eval_generators(session, pkt))
+                        gen_cache.update(self._eval_generators(ctx, pkt))
 
             if track:
                 tracker.set_packet_status(
@@ -865,26 +854,19 @@ class PacketRunner:
             code = ResultCode.SUCCESS if status == PacketStatus.DONE else ResultCode.FAIL
             return code, status, data
         finally:
-            tracker.unlock(lock_name)
+            tracker.unlock(pkt.name)
             tracker.close()
 
-    # -- generators --------------------------------------------------------
+    # -- generators and actions --------------------------------------------
 
-    def _eval_generators(self, session: SparkSession, pkt: Packet) -> dict[str, list]:
-        """collect() every generator resultset once (reference:
-        dbccore/dbccore.py:538-541). Generators are small parameter grids —
-        driver-side materialization is the point. PG-dialect packets run
-        their generator SQL through the same rewriter as step SQL."""
+    def _eval_generators(self, ctx: RunContext, pkt: Packet) -> dict[str, list]:
+        """Every generator resultset, evaluated once on the target
+        (reference: dbccore/dbccore.py:538-541)."""
         out: dict[str, list] = {}
-        if pkt.meta.get("dialect") == "postgres":
-            gen_obj = {i: pg_rewrite(s, pkt.session_conf) for i, s in pkt.gen_obj.items()}
-            gen_nsp = {i: pg_rewrite(s, pkt.session_conf) for i, s in pkt.gen_nsp.items()}
-        else:
-            gen_obj, gen_nsp = pkt.gen_obj, pkt.gen_nsp
-        for idx, sql in gen_obj.items():
-            out[f"obj:{idx}"] = [tuple(r) for r in session.sql(sql).collect()]
-        for idx, sql in gen_nsp.items():
-            out[f"nsp:{idx}"] = [tuple(r) for r in session.sql(sql).collect()]
+        for idx, sql in pkt.gen_obj.items():
+            out[f"obj:{idx}"] = ctx.generator_rows(sql)
+        for idx, sql in pkt.gen_nsp.items():
+            out[f"nsp:{idx}"] = ctx.generator_rows(sql)
         return out
 
     def _run_sql_step(
@@ -900,21 +882,20 @@ class PacketRunner:
         seen_hashes: set[str],
         skip_action_cancel: bool,
     ) -> None:
-        session = ctx.spark
         # lazily evaluate generators if not yet done (packets without
         # run_once) — but NEVER while executing run_once itself: generators
         # may reference tables run_once is about to create (reference
         # evaluates generators strictly after run_once, dbccore:536-541)
         if step is not pkt.run_once and (pkt.gen_obj or pkt.gen_nsp) and not gen_cache:
-            gen_cache.update(self._eval_generators(session, pkt))
+            gen_cache.update(self._eval_generators(ctx, pkt))
 
         actions = bind_actions(
             step.text, gen_cache.get(f"obj:{step.index}"), gen_cache.get(f"nsp:{step.index}")
         )
         for i, (action_sql, maints) in enumerate(actions, 1):
-            session.sparkContext.setJobDescription(
-                _job_label(pkt.name, ctx.db_name, step.name, f"action {i}")
-            )
+            ctx.label(step.name, f"action {i}")
+            # the duplicate binding skips its maintenance command too
+            # (reference steps_hashes, dbccore/dbccore.py:941-943)
             h = hashlib.md5(action_sql.encode()).hexdigest()
             if h in seen_hashes or (track and tracker.is_action_done(packet_id, step_id, h)):
                 ctx.raise_notice("LOG", f"action {h[:8]} already applied, skipping")
@@ -922,8 +903,13 @@ class PacketRunner:
             for mc in maints:
                 _run_maint(ctx, mc)
             try:
-                for stmt in split_statements(action_sql):
-                    _run_statement(ctx, stmt)
+                stmts = split_statements(action_sql)
+                if ctx.export_dir and stmts and all(statement_kind(s) == "query" for s in stmts):
+                    files = ctx.export(stmts)
+                    ctx.current_step_results.append([["exported"], *[[f] for f in files]])
+                else:
+                    for stmt in stmts:
+                        ctx.execute(stmt)
             except ReadOnlyViolation:
                 raise
             except Exception as e:  # noqa: BLE001

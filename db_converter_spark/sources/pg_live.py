@@ -1,4 +1,5 @@
-"""Live-PostgreSQL adapter: a managed local server + the COPY pipeline.
+"""Live-PostgreSQL adapter: a managed local server, the COPY pipeline and
+the packet target.
 
 The reference's entire runtime is a live PostgreSQL connection (reference:
 psc/postgresql/driver/pq3.py; every packet executes server-side through
@@ -8,7 +9,7 @@ but ships NO Python wire driver and NO PG JDBC jar — so the one channel a
 Spark engine can legitimately drive is the one the binaries themselves
 provide: ``psql`` over a unix socket, and PostgreSQL's COPY bulk pipeline.
 
-Two things live here:
+What lives here:
 
 1. :class:`PgServer` — initdb/start/stop a throwaway cluster on a unix
    socket (no TCP), plus ``sql()`` statement execution with CSV capture.
@@ -25,12 +26,16 @@ Two things live here:
    the bulk path the reference used COPY for, and the shape a cluster
    deployment keeps (each executor COPYs its own partition; here the
    part files COPY sequentially through one client).
+
+3. A live-PostgreSQL packet target: :class:`PgRunContext` is its channel
+   for the packet loop in plans/runner.py and :class:`PgActionTracker` its
+   ``dbc_*`` ledger in the target database; :func:`run_packet_native` runs
+   one packet on it untracked (reference test layer 5).
 """
 
 from __future__ import annotations
 
 import csv
-import hashlib
 import io
 import os
 import shutil
@@ -40,7 +45,11 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from db_converter_spark.plans.export import export_queries, write_rows
 from db_converter_spark.plans.pgdialect import _map_type
+from db_converter_spark.plans.runner import RunContext
+from db_converter_spark.plans.sqlsplit import split_statements
+from db_converter_spark.plans.watchdog import StepWatchdog
 
 PG_BIN_CANDIDATES = ("/usr/local/bin", "/usr/bin")
 
@@ -143,13 +152,6 @@ class PgServer:
             return []
         return [row for row in csv.reader(io.StringIO(out))]
 
-    def run_script(self, statements: "list[str]", db: str = "postgres") -> "list[list[list[str]]]":
-        """Execute statements in order (one autocommitted session each —
-        the same per-statement execute-and-capture cadence the packet
-        runner uses), returning each statement's capture in order: the
-        live twin of the runner's per-step results."""
-        return [self.sql(s, db=db) for s in statements]
-
     def columns(self, table: str, db: str = "postgres") -> "list[tuple[str, str]]":
         rows = self.sql(
             "SELECT column_name, data_type FROM information_schema.columns"
@@ -240,107 +242,64 @@ def write_pg_table(
 
 
 # ---------------------------------------------------------------------------
-# Native packet execution — the live twin of reference test layer 5
+# A live-PostgreSQL target's channel for the packet loop
 # ---------------------------------------------------------------------------
 
 
-def run_packet_native(
-    server: PgServer,
-    packet_dir: "str | Path",
-    db: str = "postgres",
-    placeholders: "dict[str, str] | None" = None,
-    tracker: "PgActionTracker | None" = None,
-) -> "dict[str, list]":
-    """Execute a packet NATIVELY on live PostgreSQL — the live twin of the
-    reference's test layer 5 (reference tests/test_packets.py:547-583 runs
-    every alert_*/dba_* packet against a live DB and requires SUCCESS).
-    Reuses the engine's own packet parser and placeholder engine
-    (plans/packet.py — reference dbccore/dbccore.py:280-345, fan-out
-    :921-1087) but every statement executes server-side through psql, the
-    way the reference's wire driver did. With ``tracker`` (r11: the dbc_*
-    ledger IN the target database) actions dedup against the live ledger
-    and step/packet status land server-side — PacketRunner's pg-target
-    path drives :func:`execute_packet_native` this way.
+class PgRunContext(RunContext):
+    """A live-PostgreSQL target as the packet loop sees it
+    (plans/runner.py ``PacketRunner._run_on_db``): statements, generators
+    and maintenance commands execute server-side through psql, the way the
+    reference's wire driver did (dbccore/dbccore.py:905-1181); a capture is
+    psql's ``[header, *rows]`` (strings) or ``[]`` for a non-query.
 
-    Semantics mirrored from plans/runner.py:
+    Python steps have no channel without a wire driver: the loop lists them
+    under ``"skipped_py"`` instead of dropping them silently. PG's catalog
+    is live, so there is no emulation to prepare or refresh, and no Spark
+    job group for a step watchdog to cancel."""
 
-    - ``run_once.sql`` executes first; generators evaluate strictly AFTER
-      it (they may read tables it creates);
-    - per-step ``NN_gen_obj.sql`` / ``NN_gen_nsp.sql`` generators evaluate
-      server-side; the step text executes once per binding (cartesian
-      nsp × obj when both exist), with ``GEN_NSP_FLD_i`` applied before
-      ``GEN_OBJ_FLD_i``;
-    - a generator row's field 0 is the maintenance side channel: when
-      non-empty it executes natively before the bound action (the
-      reference ran it on a dedicated maintenance connection);
-    - multi-statement steps split dollar-quote-aware (plans/sqlsplit.py).
+    python_steps = False
 
-    - each bound action dedups on md5 of the final SQL across the whole
-      packet run (reference ``steps_hashes``, dbccore/dbccore.py:941-943 —
-      the duplicate ``continue``s BEFORE its maintenance command, so a
-      dedup'd binding runs neither the action nor its maint side-channel;
-      plans/runner.py ``seen_hashes`` applies the same rule).
+    def __init__(self, server: PgServer, pg_db: str, packet, db_name: str):
+        super().__init__(None, db_name, packet, read_only=False)
+        self.server = server
+        self.pg_db = pg_db
 
-    Python steps have no native channel without a wire driver — they are
-    recorded under the ``"skipped_py"`` key, not silently dropped.
+    def prepare(self, ledger) -> None:
+        pass
 
-    Channel note: the reference's driver yielded Python ``None`` for SQL
-    NULL, which the placeholder engine rendered as the literal ``'None'``
-    (packets test for it — alert_int4_capacity's ``'GEN_OBJ_FLD_5' =
-    'None'``), while a genuinely empty (non-NULL) text field stayed ``''``.
-    psql's CSV output collapses BOTH to the bare empty field (probed live:
-    ``SELECT NULL::text, ''::text`` → ``,,``), so generators re-select
-    through a ``coalesce(col::text, E'\\x01None')`` wrapper — the control
-    character cannot appear in real settings text — and only true NULLs
-    map to ``'None'`` (fields 1+) / no-op (field 0).
+    def refresh_catalog(self) -> None:
+        pass
 
-    Returns ``{step_file_name: [capture, ...]}`` — one psql capture
-    (header + string rows, [] for non-queries) per executed statement.
-    Raises :class:`PgServerError` on the first failing statement, i.e. a
-    clean return IS the layer-5 SUCCESS criterion.
-    """
-    from db_converter_spark.plans.packet import parse_packet
+    def label(self, *parts: str) -> None:
+        pass
 
-    pkt = parse_packet(packet_dir, placeholders)
-    return execute_packet_native(server, pkt, db=db, tracker=tracker)
+    def watchdog(self, timeout_s: "float | None") -> StepWatchdog:
+        return StepWatchdog(None, "", None)  # never starts
 
+    def execute(self, sql: str) -> list:
+        capture = self.server.sql(sql, db=self.pg_db)
+        self.current_step_results.append(capture)
+        return capture
 
-def execute_packet_native(
-    server: PgServer,
-    pkt,
-    db: str = "postgres",
-    tracker: "PgActionTracker | None" = None,
-) -> "dict[str, list]":
-    """Native execution over an already-parsed :class:`~db_converter_spark.
-    plans.packet.Packet` (see :func:`run_packet_native` for the execution
-    contract). When ``tracker`` is given, the run is LEDGERED in the
-    target database exactly like plans/runner.py's tracked path: packet +
-    step rows upsert to started, each successful action records its md5
-    in ``dbc_actions`` (exactly-once resume, E6), a failing step stamps
-    ``exception`` + the error text before the raise propagates, and a
-    clean finish stamps packet ``done``. ``run_once.sql`` participates as
-    the first tracked step (generator-free — generators still evaluate
-    strictly after it), so a resumed run skips it like any applied
-    action."""
-    from db_converter_spark.plans.packet import bind_actions
-    from db_converter_spark.plans.sqlsplit import split_statements
+    def maint(self, command: str) -> None:
+        for stmt in split_statements(command):
+            self.server.sql(stmt, db=self.pg_db)
 
-    captures: "dict[str, list]" = {}
+    def generator_rows(self, sql: str) -> "list[tuple]":
+        """A generator's rows with SQL NULL kept apart from empty text.
 
-    def _exec(text: str) -> "list[list[list[str]]]":
-        return [server.sql(s, db=db) for s in split_statements(text) if s.strip()]
-
-    gen_cache: "dict[str, list[tuple]]" = {}
-
-    def _gen_rows(sql: str) -> "list[tuple]":
-        # NULL/empty disambiguation (see docstring): probe the generator's
-        # column names via a temp view (same single-session trick as
-        # read_pg_query), then re-select each column through
-        # coalesce(col::text, E'\x01None') so true NULL survives the CSV
-        # channel distinctly from empty text.
+        The reference's driver rendered SQL NULL as the literal ``'None'``
+        (alert_int4_capacity tests ``'GEN_OBJ_FLD_5' = 'None'``) and kept
+        empty text ``''``; psql's CSV output collapses both to an empty
+        field, so the generator is re-selected through
+        ``coalesce(col::text, E'\\x01None')`` (the control character cannot
+        appear in real settings text): NULL becomes ``'None'`` in fields 1+
+        and no maintenance command in field 0. Column names come from a
+        temp view of the query, the probe :func:`read_pg_query` uses."""
         body = sql.strip().rstrip(";")
-        probe_out = server._psql(
-            ["-d", db, "--csv"],
+        probe_out = self.server._psql(
+            ["-d", self.pg_db, "--csv"],
             sql=(
                 f"CREATE TEMP VIEW _dbc_gen_probe AS {body};\n"
                 "SELECT column_name FROM information_schema.columns"
@@ -349,74 +308,57 @@ def execute_packet_native(
         )
         cols = [r[0] for r in list(csv.reader(io.StringIO(probe_out)))[1:] if r]
         sel = ", ".join(f"coalesce(_g.\"{c}\"::text, E'\\x01None')" for c in cols)
-        rows = server.sql(f"SELECT {sel} FROM ({body}) _g", db=db)[1:]
-        # field 0 (maint): NULL -> no-op (empty); fields 1+: NULL -> the
-        # literal 'None' for reference-driver parity; real '' stays ''.
-        null_tok = "\x01None"
+        null = "\x01None"
         return [
-            tuple(
-                [("" if r[0] == null_tok else r[0])]
-                + [("None" if c == null_tok else c) for c in r[1:]]
-            )
-            for r in rows
+            ("" if r[0] == null else r[0], *("None" if c == null else c for c in r[1:]))
+            for r in self.server.sql(f"SELECT {sel} FROM ({body}) _g", db=self.pg_db)[1:]
         ]
 
-    def _bindings(step):
-        if (pkt.gen_obj or pkt.gen_nsp) and not gen_cache:
-            for idx, sql in pkt.gen_obj.items():
-                gen_cache[f"obj:{idx}"] = _gen_rows(sql)
-            for idx, sql in pkt.gen_nsp.items():
-                gen_cache[f"nsp:{idx}"] = _gen_rows(sql)
-        return bind_actions(
-            step.text, gen_cache.get(f"obj:{step.index}"), gen_cache.get(f"nsp:{step.index}")
+    def export(self, statements: "list[str]") -> "list[str]":
+        def write(stmt: str, path: Path) -> int:
+            header, *rows = self.server.sql(stmt, db=self.pg_db)
+            return write_rows(header, rows, path)
+
+        return export_queries(
+            write, self.db_name, statements, self.export_dir,
+            export_options=self.packet.meta.get("export_options"),
         )
 
-    # bound-action dedup, packet-wide (reference steps_hashes, dbccore:
-    # 941-943; the duplicate skips maint AND action). With a tracker the
-    # live dbc_actions ledger extends the dedup across RUNS (E6 resume).
-    # run_once leads the step loop exactly as in plans/runner.py —
-    # generator-free, so generators never evaluate before it completes.
-    track = tracker is not None
-    packet_id = (
-        tracker.upsert_packet(pkt.name, pkt.packet_hash, pkt.meta) if track else -1
-    )
-    seen_hashes: "set[str]" = set()
-    steps = ([pkt.run_once] if pkt.run_once else []) + pkt.steps
 
-    for step in steps:
-        if step.kind == "py":
-            captures.setdefault("skipped_py", []).append(step.name)
-            continue
-        step_id = tracker.upsert_step(packet_id, step.name) if track else -1
-        caps: list = []
-        try:
-            binds = (
-                [(step.text, [])] if step is pkt.run_once else _bindings(step)
-            )
-            for action_sql, maints in binds:
-                h = hashlib.md5(action_sql.encode()).hexdigest()
-                if h in seen_hashes or (
-                    track and tracker.is_action_done(packet_id, step_id, h)
-                ):
-                    continue
-                for mc in maints:
-                    _exec(mc)
-                caps.extend(_exec(action_sql))
-                seen_hashes.add(h)
-                if track:
-                    tracker.apply_action(packet_id, step_id, h)
-            if track:
-                tracker.set_step_status(step_id, "done")
-        except PgServerError as e:
-            if track:
-                tracker.set_step_status(step_id, "exception", str(e)[:2000])
-                tracker.set_packet_status(pkt.name, "exception")
-            captures[step.name] = caps
-            raise
-        captures[step.name] = caps
-    if track:
-        tracker.set_packet_status(pkt.name, "done")
-    return captures
+def run_packet_native(
+    server: PgServer,
+    packet_dir: "str | Path",
+    db: str = "postgres",
+    placeholders: "dict[str, str] | None" = None,
+) -> "dict[str, list]":
+    """Execute a packet NATIVELY on live PostgreSQL — the live twin of the
+    reference's test layer 5 (reference tests/test_packets.py:547-583 runs
+    every alert_*/dba_* packet against a live DB and requires SUCCESS).
+
+    The packet runs through the packet loop on a :class:`PgRunContext`,
+    untracked and lock-free: its ledger is an in-memory one that ends with
+    the call, so nothing is written to the target besides what the packet
+    itself does (an export packet's files go to a temporary directory
+    removed on return). Returns ``{step_file_name: [capture or notice,
+    ...]}``.
+    Raises :class:`PgServerError` on the first failing statement, i.e. a
+    clean return IS the layer-5 SUCCESS criterion."""
+    import tempfile
+
+    from db_converter_spark.plans.ledger import ActionTracker
+    from db_converter_spark.plans.model import ResultCode
+    from db_converter_spark.plans.packet import parse_packet
+    from db_converter_spark.plans.runner import PacketRunner
+
+    pkt = parse_packet(packet_dir, placeholders)
+    ctx = PgRunContext(server, db, pkt, db)
+    with tempfile.TemporaryDirectory() as warehouse:
+        code, _, data = PacketRunner(None, warehouse)._run_on_db(
+            ctx, ActionTracker(":memory:"), pkt.packet_type, False, False, False, None
+        )
+    if code != ResultCode.SUCCESS:
+        raise PgServerError(next(m for sev, m in reversed(ctx.messages) if sev == "EXCEPTION"))
+    return data
 
 
 # ---------------------------------------------------------------------------

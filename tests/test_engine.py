@@ -335,6 +335,7 @@ def test_runner_lock_contention(runner, tmp_path):
     assert tracker.try_lock("lk_pkt")
     res = runner.run(pdir, dbs=["e2e_lk"])
     assert res.result_code["e2e_lk"] == ResultCode.LOCKED
+    assert res.packet_status["e2e_lk"] == PacketStatus.STARTED
     tracker.unlock("lk_pkt")
     tracker.close()
     res2 = runner.run(pdir, dbs=["e2e_lk"])
@@ -403,6 +404,32 @@ def test_export_packet_via_runner(runner, tmp_path):
     csv_path = Path(produced[1][0])
     assert csv_path.exists()
     assert '"42"' in csv_path.read_text()
+
+
+def test_export_packet_binds_generators_and_runs_run_once_and_py(runner, spark, tmp_path):
+    """An export packet runs through the same step/action loop as every
+    other type: run_once first, generator-bound SELECTs export one CSV per
+    bound action, and a py step runs as Python."""
+    pdir = _write_packet(
+        tmp_path / "exp_gen_pkt",
+        {
+            "run_once.sql": "create table exp_src using parquet as select 1 as k, 'a' as v",
+            "01_gen_obj.sql": "select cast(null as string), c from values (1), (2) as t(c)",
+            "01_step.sql": "select GEN_OBJ_FLD_1 as n, v from exp_src",
+            "02_step.py": "ctx.raise_notice('NOTICE', 'py ran')",
+            "meta_data.json": '{"type": "export_data"}',
+        },
+    )
+    res = runner.run(pdir, dbs=["e2e_exp_gen"], export_dir=tmp_path / "exp_gen_out")
+    data = res.result_data["e2e_exp_gen"]
+    assert res.result_code["e2e_exp_gen"] == ResultCode.SUCCESS, data
+    assert spark.catalog.tableExists("e2e_exp_gen.exp_src")
+    exported = data["01_step.sql"]
+    assert [r[0] for r in exported] == [["exported"], ["exported"]]
+    bodies = sorted(Path(r[1][0]).read_text() for r in exported)
+    assert bodies == ['"n"\t"v"\n"1"\t"a"\n', '"n"\t"v"\n"2"\t"a"\n']
+    assert len(list((tmp_path / "exp_gen_out").glob("*.csv"))) == 2
+    assert data["02_step.py"] == [["NOTICE", "py ran"]]
 
 
 def test_pipe01_plan_shape(spark):

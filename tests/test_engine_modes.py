@@ -160,6 +160,18 @@ def test_runner_pushes_results_to_hook(spark, tmp_path):
     assert sent and "9" in sent[0]["text"]
 
 
+def test_runner_pushes_step_failure_to_hook(spark, tmp_path):
+    """A failing step posts the error (reference: raise_error_logic,
+    dbccore:1183-1219) on every target, and the packet still fails."""
+    sent = []
+    hook = ChatHook("http://x", transport=lambda u, b, h: sent.append(json.loads(b)) or 200)
+    runner = PacketRunner(spark, tmp_path / "wh", hook=hook)
+    pdir = _write_packet(tmp_path / "hk3_pkt", {"01_step.sql": "select * from hk3_missing"})
+    res = runner.run(pdir, dbs=["e2e_hk3"])
+    assert res.result_code["e2e_hk3"] == ResultCode.FAIL
+    assert len(sent) == 1 and ":x:" in sent[0]["text"] and "hk3_missing" in sent[0]["text"]
+
+
 # ----------------------------------------------------------------- watchdog
 
 

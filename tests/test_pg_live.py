@@ -833,8 +833,8 @@ def test_native_runner_dedups_bound_actions_and_distinguishes_null(pg, tmp_path)
 
     caps = run_packet_native(pg, pdir)  # raises on any failing statement
 
-    # dedup: one CREATE per distinct binding, duplicate skipped silently
-    assert len(caps["01_step.sql"]) == 2, caps["01_step.sql"]
+    # dedup: one CREATE per distinct binding (LOG notices are not captures)
+    assert len([c for c in caps["01_step.sql"] if c[:1] != ["LOG"]]) == 2, caps["01_step.sql"]
     tables = pg.sql(
         "SELECT tablename FROM pg_tables WHERE tablename LIKE 'nd_tbl_%'"
         " ORDER BY tablename"
@@ -974,6 +974,83 @@ def test_pg_target_cartesian_runs_both_maint_commands(spark, pg, tmp_path):
         ["nsp-GEN"], ["nsp-GEN"], ["obj-x"], ["obj-x"],
     ]
     assert pg.sql("SELECT count(*) FROM maint_t")[1] == ["2"]
+
+
+def test_pg_target_skip_step_cancel(spark, pg, tmp_path):
+    """--skip-step-cancel on a live target: the failing step is recorded
+    and the run continues to the next step, as on a Spark target
+    (test_engine::test_runner_skip_step_cancel)."""
+    from db_converter_spark.plans.model import ResultCode
+    from db_converter_spark.plans.runner import PacketRunner
+
+    pg.sql("DROP TABLE IF EXISTS ssc_t")
+    pdir = tmp_path / "pg_ssc_pkt"
+    pdir.mkdir()
+    (pdir / "run_once.sql").write_text("CREATE TABLE ssc_t (v int4)")
+    (pdir / "01_step.sql").write_text("INSERT INTO ssc_t SELECT v FROM ssc_missing")
+    (pdir / "02_step.sql").write_text("INSERT INTO ssc_t VALUES (2)")
+    (pdir / "meta_data.json").write_text(json.dumps({"type": "maintenance"}))
+    runner = PacketRunner(spark, tmp_path / "wh", pg_targets={"ssc_pg": {"server": pg}})
+
+    res = runner.run(pdir, dbs=["ssc_pg"], skip_step_cancel=True)
+    assert res.result_code["ssc_pg"] == ResultCode.SUCCESS, res.result_data
+    assert res.result_data["ssc_pg"]["01_step.sql"][0][0] == "EXCEPTION"
+    assert pg.sql("SELECT v FROM ssc_t")[1:] == [["2"]]
+    assert pg.sql(
+        "SELECT status FROM dbc.dbc_steps WHERE name = '01_step.sql'"
+        " AND packet_id = (SELECT id FROM dbc.dbc_packets WHERE name = 'pg_ssc_pkt')"
+    )[1] == ["exception"]
+
+
+def test_pg_target_skip_action_cancel(spark, pg, tmp_path):
+    """--skip-action-cancel on a live target: the failing middle binding is
+    skipped and the others apply, as on a Spark target
+    (test_engine::test_runner_skip_action_cancel)."""
+    from db_converter_spark.plans.model import ResultCode
+    from db_converter_spark.plans.runner import PacketRunner
+
+    pg.sql("DROP TABLE IF EXISTS sac_t")
+    pdir = tmp_path / "pg_sac_pkt"
+    pdir.mkdir()
+    (pdir / "run_once.sql").write_text("CREATE TABLE sac_t (v int4)")
+    (pdir / "01_step.sql").write_text("INSERT INTO sac_t SELECT 'GEN_OBJ_FLD_1'::int4")
+    (pdir / "01_gen_obj.sql").write_text(
+        "SELECT NULL::text, c FROM (VALUES ('1'), ('not_a_number!'), ('3')) t(c)"
+    )
+    (pdir / "meta_data.json").write_text(json.dumps({"type": "maintenance"}))
+    runner = PacketRunner(spark, tmp_path / "wh", pg_targets={"sac_pg": {"server": pg}})
+
+    res = runner.run(pdir, dbs=["sac_pg"], skip_action_cancel=True)
+    assert res.result_code["sac_pg"] == ResultCode.SUCCESS, res.result_data
+    assert pg.sql("SELECT v FROM sac_t ORDER BY v")[1:] == [["1"], ["3"]]
+    assert any("failed, skipped" in str(r) for r in res.result_data["sac_pg"]["01_step.sql"])
+
+
+def test_pg_target_export_packet(spark, pg, tmp_path):
+    """EXPORT_DATA on a live target: setup SQL runs server-side, each
+    all-SELECT action writes its CSV from the live capture, and a Python
+    step is listed under skipped_py."""
+    from db_converter_spark.plans.model import ResultCode
+    from db_converter_spark.plans.runner import PacketRunner
+
+    pg.sql("DROP TABLE IF EXISTS exp_pg_t")
+    pdir = tmp_path / "pg_exp_pkt"
+    pdir.mkdir()
+    (pdir / "01_step.sql").write_text(
+        "CREATE TABLE exp_pg_t (k int4, v text); INSERT INTO exp_pg_t VALUES (1, 'a'), (2, NULL)"
+    )
+    (pdir / "02_step.sql").write_text("SELECT k, v FROM exp_pg_t ORDER BY k")
+    (pdir / "03_step.py").write_text("ctx.raise_notice('NOTICE', 'never')")
+    (pdir / "meta_data.json").write_text(json.dumps({"type": "export_data"}))
+    runner = PacketRunner(spark, tmp_path / "wh", pg_targets={"exp_pg": {"server": pg}})
+
+    res = runner.run(pdir, dbs=["exp_pg"], export_dir=tmp_path / "out")
+    data = res.result_data["exp_pg"]
+    assert res.result_code["exp_pg"] == ResultCode.SUCCESS, data
+    exported = data["02_step.sql"][0]
+    assert exported[0] == ["exported"]
+    assert Path(exported[1][0]).read_text() == '"k"\t"v"\n"1"\t"a"\n"2"\t""\n'
+    assert data["skipped_py"] == ["03_step.py"]
 
 
 def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
