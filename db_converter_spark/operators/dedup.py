@@ -1987,10 +1987,17 @@ _DD14_PAIRS_RAW_SCHEMA = (
 )
 
 
+# pairs enumerated per block of a cell: about 40 bytes each in index and
+# accumulator arrays, so a block holds about 40 MB whatever the cell size
+_DD14_PAIR_BLOCK = 1 << 20
+
+
 def _dd14_cell_pairs(pdf):
     """applyInPandas worker: all >= (tau - 1e-6) cosine pairs within one
     cell, dot computed with the exact left-fold dimension loop (see the
-    block comment above for the bit-exactness argument)."""
+    block comment above for the bit-exactness argument). Pairs (i, j > i)
+    are enumerated in row blocks of about ``_DD14_PAIR_BLOCK`` pairs (at
+    least one row), in ``triu_indices`` order."""
     import numpy as np
     import pandas as pd
 
@@ -2003,20 +2010,34 @@ def _dd14_cell_pairs(pdf):
     cs = pdf["cs"].to_numpy(np.int64)
     nrm = pdf["nrm"].to_numpy(np.float64)
     emb = np.stack([np.asarray(e) for e in pdf["embedding"]]).astype(np.float64)
-    ii, jj = np.triu_indices(n, 1)
-    acc = np.zeros(len(ii), dtype=np.float64)
-    for d in range(emb.shape[1]):
-        acc = acc + emb[ii, d] * emb[jj, d]
-    sim_raw = acc / (nrm[ii] * nrm[jj])
-    keep = sim_raw >= _DD14_PY_GATE
+    # first[i]: pairs in rows before row i
+    first = np.concatenate(([0], np.cumsum(np.arange(n - 1, 0, -1))))
+    kept_i, kept_j, kept_sim = [], [], []
+    lo = 0
+    while lo < n - 1:
+        hi = int(np.searchsorted(first, first[lo] + _DD14_PAIR_BLOCK, side="right")) - 1
+        hi = max(hi, lo + 1)
+        ii, jj = np.triu_indices(hi - lo, 1, n - lo)
+        ii += lo
+        jj += lo
+        acc = np.zeros(len(ii), dtype=np.float64)
+        for d in range(emb.shape[1]):
+            acc = acc + emb[ii, d] * emb[jj, d]
+        sim_raw = acc / (nrm[ii] * nrm[jj])
+        keep = sim_raw >= _DD14_PY_GATE
+        kept_i.append(ii[keep])
+        kept_j.append(jj[keep])
+        kept_sim.append(sim_raw[keep])
+        lo = hi
+    ii, jj = np.concatenate(kept_i), np.concatenate(kept_j)
     return pd.DataFrame(
         {
-            "va": ids[ii[keep]],
-            "vb": ids[jj[keep]],
-            "cid": np.full(int(keep.sum()), np.int64(pdf["cid"].iloc[0])),
-            "cs_a": cs[ii[keep]],
-            "cs_b": cs[jj[keep]],
-            "sim_raw": sim_raw[keep],
+            "va": ids[ii],
+            "vb": ids[jj],
+            "cid": np.full(len(ii), np.int64(pdf["cid"].iloc[0])),
+            "cs_a": cs[ii],
+            "cs_b": cs[jj],
+            "sim_raw": np.concatenate(kept_sim),
         }
     )
 

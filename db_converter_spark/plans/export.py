@@ -17,9 +17,10 @@ Semantics kept from the reference:
 - file naming ``export_<md5(stm)[:6]>_<ts>_<db>.csv`` (reference:
   dbccore/dbccore.py:752-756);
 - optional zip of all CSVs (reference: dbccore/dbccore.py:781-826): LZMA
-  without a password; with one, AES-encrypted by the stdlib WinZip AE-2
-  writer in ``functions/wzaes.py``. Plaintext CSVs are deleted after
-  zipping (reference: dbccore/dbccore.py:818-819).
+  without a password; with one, encrypted by the WinZip AE-2 writer in
+  ``functions/wzaes.py`` (AES-256 from the ``cryptography`` package).
+  Plaintext CSVs are deleted after zipping (reference:
+  dbccore/dbccore.py:818-819).
 
 :func:`export_statements` runs the queries on Spark; :func:`export_queries`
 takes any ``write(stmt, path)`` callable, which is how a live-PostgreSQL
@@ -153,9 +154,9 @@ def export_queries(
 
 def _zip_files(files: list[Path], zip_path: Path, password: str | None) -> None:
     """Zip the exports (reference: dbccore/dbccore.py:781-826). With a
-    password: the stdlib WinZip AE-2 writer (functions/wzaes.py —
-    AES-256/CTR/HMAC-SHA1 per the public spec, DEFLATE inside). Without a
-    password: plain LZMA zip."""
+    password: the WinZip AE-2 writer (functions/wzaes.py — AES-256 CTR
+    from the ``cryptography`` package, HMAC-SHA1 per the public spec,
+    DEFLATE inside). Without a password: plain LZMA zip."""
     if password is not None:
         from db_converter_spark.functions.wzaes import write_aes_zip
 

@@ -91,9 +91,10 @@ class RunContext:
     ``self``/``db_local`` to py-steps, dbccore/dbccore.py:1113-1115).
 
     The packet loop reaches its target only through ``prepare``,
-    ``execute``, ``generator_rows``, ``maint``, ``export``, ``label``,
+    ``execute`` (which applies the READ ONLY gate, then the channel's
+    ``_execute``), ``generator_rows``, ``maint``, ``export``, ``label``,
     ``watchdog`` and ``refresh_catalog``; a live-PostgreSQL target
-    overrides them (``sources/pg_live.PgRunContext``)."""
+    overrides all of them but ``execute`` (``sources/pg_live.PgRunContext``)."""
 
     # False: the target has no Python channel; the loop lists its py steps
     # under ``skipped_py`` instead of running them
@@ -184,7 +185,16 @@ class RunContext:
             register_serial_sequence_lookup(self.spark, self.tracker.seq_owned_map())
 
     def execute(self, sql: str) -> list:
-        """Run one statement and capture it (also for py-steps)."""
+        """Run one statement and capture it (also for py-steps). Every
+        target's statements pass here, so a READ ONLY packet's write is
+        refused before any channel sees it."""
+        if self.read_only and not is_read_only_ok(sql):
+            raise ReadOnlyViolation(f"write statement in read-only packet: {sql[:80]}...")
+        return self._execute(sql)
+
+    def _execute(self, sql: str) -> list:
+        """The target's statement channel: dialect rewrite, routing and the
+        counted DML plans on Spark."""
         return _run_statement(self, sql)
 
     def generator_rows(self, sql: str) -> list[tuple]:
@@ -269,8 +279,6 @@ def _jdbc_write_refused(command: str, name: str) -> RuntimeError:
 
 def _run_statement(ctx: RunContext, stmt: str) -> list:
     kind = statement_kind(stmt)
-    if ctx.read_only and not is_read_only_ok(stmt):
-        raise ReadOnlyViolation(f"write statement in read-only packet: {stmt[:80]}...")
     if ctx.dialect == "postgres":
         stmt = pg_rewrite(stmt, ctx.packet.session_conf)
     # Sequence surface (SURVEY §7.4.6): CREATE/ALTER/DROP SEQUENCE → ledger

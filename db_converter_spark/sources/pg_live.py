@@ -256,7 +256,9 @@ class PgRunContext(RunContext):
     Python steps have no channel without a wire driver: the loop lists them
     under ``"skipped_py"`` instead of dropping them silently. PG's catalog
     is live, so there is no emulation to prepare or refresh, and no Spark
-    job group for a step watchdog to cancel."""
+    job group for a step watchdog to cancel. A no_commit packet's
+    statements run inside ``BEGIN … ROLLBACK``; the READ ONLY gate is
+    :meth:`RunContext.execute`'s, shared with Spark targets."""
 
     python_steps = False
 
@@ -277,7 +279,11 @@ class PgRunContext(RunContext):
     def watchdog(self, timeout_s: "float | None") -> StepWatchdog:
         return StepWatchdog(None, "", None)  # never starts
 
-    def execute(self, sql: str) -> list:
+    def _execute(self, sql: str) -> list:
+        if self.no_commit:
+            # execute, then roll back (reference: dbccore/dbccore.py:886-888);
+            # the newlines end a trailing line comment before ROLLBACK
+            sql = f"BEGIN;\n{sql}\n;ROLLBACK"
         capture = self.server.sql(sql, db=self.pg_db)
         self.current_step_results.append(capture)
         return capture

@@ -136,9 +136,8 @@ def test_port_int4_to_int8(runner, spark):
 def test_port_export_data(runner, spark, tmp_path):
     """Export packet: in-packet setup DDL runs normally, the all-SELECT step
     exports to CSV and AES-zips. With "password": "random" the generated
-    password lands in the file name (reference behavior); without
-    pyzipper the pure-stdlib AE-2 writer (functions/wzaes.py) encrypts —
-    the archive must decrypt with the in-name password and refuse a
+    password lands in the file name (reference behavior); the AE-2
+    writer (functions/wzaes.py) encrypts — the archive must decrypt with the in-name password and refuse a
     wrong one."""
     db = "port_export"
     res = runner.run(

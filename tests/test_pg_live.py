@@ -1053,6 +1053,60 @@ def test_pg_target_export_packet(spark, pg, tmp_path):
     assert data["skipped_py"] == ["03_step.py"]
 
 
+def test_pg_target_read_only_packet_refuses_writes(spark, pg, tmp_path):
+    """A READ ONLY packet on a live target: queries run, a write is a
+    ReadOnlyViolation before it reaches the server (the gate every
+    target's statements pass), and the table never appears."""
+    from db_converter_spark.plans.model import PacketStatus, ResultCode
+    from db_converter_spark.plans.runner import PacketRunner
+
+    pg.sql("DROP TABLE IF EXISTS ro_pg_t")
+    pdir = tmp_path / "pg_ro_pkt"
+    pdir.mkdir()
+    (pdir / "01_step.sql").write_text("SELECT 1 AS one")
+    (pdir / "02_step.sql").write_text("CREATE TABLE ro_pg_t (v int4)")
+    (pdir / "meta_data.json").write_text(json.dumps({"type": "read_only"}))
+    runner = PacketRunner(spark, tmp_path / "wh", pg_targets={"ro_pg": {"server": pg}})
+
+    res = runner.run(pdir, dbs=["ro_pg"])
+    data = res.result_data["ro_pg"]
+    assert res.result_code["ro_pg"] == ResultCode.FAIL, data
+    assert res.packet_status["ro_pg"] == PacketStatus.EXCEPTION
+    assert data["01_step.sql"] == [[["one"], ["1"]]]
+    assert "read-only" in str(data["02_step.sql"])
+    assert pg.sql("SELECT to_regclass('ro_pg_t') IS NULL AS absent")[1] == ["t"]
+
+
+def test_pg_target_no_commit_packet_rolls_back(spark, pg, tmp_path):
+    """A no_commit packet on a live target executes each statement and
+    rolls it back (reference: dbccore/dbccore.py:886-888): the run
+    succeeds, a created table is absent afterwards, and an INSERT (with a
+    trailing line comment, which must not swallow the ROLLBACK) leaves the
+    existing table's row count unchanged."""
+    from db_converter_spark.plans.model import PacketStatus, ResultCode
+    from db_converter_spark.plans.runner import PacketRunner
+
+    for t in ("nc_pg_new", "nc_pg_t"):
+        pg.sql(f"DROP TABLE IF EXISTS {t}")
+    pg.sql("CREATE TABLE nc_pg_t (v int4)")
+    pg.sql("INSERT INTO nc_pg_t VALUES (1)")
+    pdir = tmp_path / "pg_nc_pkt"
+    pdir.mkdir()
+    (pdir / "01_step.sql").write_text("CREATE TABLE nc_pg_new (v int4)")
+    (pdir / "02_step.sql").write_text("INSERT INTO nc_pg_t VALUES (2), (3) -- rolled back")
+    (pdir / "03_step.sql").write_text("SELECT count(*) AS n FROM nc_pg_t")
+    (pdir / "meta_data.json").write_text(json.dumps({"type": "no_commit"}))
+    runner = PacketRunner(spark, tmp_path / "wh", pg_targets={"nc_pg": {"server": pg}})
+
+    res = runner.run(pdir, dbs=["nc_pg"])
+    data = res.result_data["nc_pg"]
+    assert res.result_code["nc_pg"] == ResultCode.SUCCESS, data
+    assert res.packet_status["nc_pg"] == PacketStatus.DONE
+    assert data["03_step.sql"] == [[["n"], ["1"]]]
+    assert pg.sql("SELECT to_regclass('nc_pg_new') IS NULL AS absent")[1] == ["t"]
+    assert pg.sql("SELECT count(*) FROM nc_pg_t")[1] == ["1"]
+
+
 def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
     """E25 + E27 on the live target — the twin of the reference's
     TestDBCLock (tests/test_packets.py:119-173): an externally-held

@@ -256,3 +256,76 @@ def test_dd14_vectorized_assign_matches_sql_assign(spark):
     finally:
         spark.catalog.dropTempView("embeddings")
     assert sql_rows == py_rows
+
+
+def _dd14_cell(n: int, dim: int, seed: int):
+    """One cell's applyInPandas input: shuffled rows, gapped vec_ids,
+    float32 embeddings with their float64 norms."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    emb = rng.standard_normal((n, dim)).astype(np.float32)
+    order = rng.permutation(n)
+    return pd.DataFrame(
+        {
+            "vec_id": (np.arange(n, dtype=np.int64) * 3 + 5)[order],
+            "cid": np.full(n, 42, dtype=np.int64),
+            "cs": rng.integers(0, 10**6, n),
+            "embedding": list(emb[order]),
+            "nrm": np.sqrt((emb[order].astype(np.float64) ** 2).sum(axis=1)),
+        }
+    )
+
+
+def _dd14_pairs_reference(pdf):
+    """The whole-cell ``triu_indices`` enumeration the blocked pair stage
+    must reproduce bit for bit, in the same (i, j) order."""
+    import numpy as np
+    import pandas as pd
+
+    from db_converter_spark.operators.dedup import _DD14_PY_GATE
+
+    pdf = pdf.sort_values("vec_id", kind="mergesort")
+    ids = pdf["vec_id"].to_numpy(np.int64)
+    cs = pdf["cs"].to_numpy(np.int64)
+    nrm = pdf["nrm"].to_numpy(np.float64)
+    emb = np.stack(list(pdf["embedding"])).astype(np.float64)
+    ii, jj = np.triu_indices(len(pdf), 1)
+    acc = np.zeros(len(ii), dtype=np.float64)
+    for d in range(emb.shape[1]):
+        acc = acc + emb[ii, d] * emb[jj, d]
+    sim = acc / (nrm[ii] * nrm[jj])
+    keep = sim >= _DD14_PY_GATE
+    return pd.DataFrame(
+        {
+            "va": ids[ii[keep]],
+            "vb": ids[jj[keep]],
+            "cid": np.full(int(keep.sum()), np.int64(42)),
+            "cs_a": cs[ii[keep]],
+            "cs_b": cs[jj[keep]],
+            "sim_raw": sim[keep],
+        }
+    )
+
+
+@pytest.mark.parametrize("n, dim, block", [(1500, 8, None), (60, 5, 7), (61, 4, 100)])
+def test_dd14_cell_pairs_blocks_match_whole_cell(monkeypatch, n, dim, block):
+    """The pair stage enumerates a cell in row blocks; the rows it returns,
+    their order and every sim_raw bit match the whole-cell enumeration.
+    1,500 rows span two blocks at the module's budget; the small budgets
+    force one-row blocks (row 0 alone exceeds 7 pairs) and mixed blocks."""
+    import pandas as pd
+
+    from db_converter_spark.operators import dedup
+
+    if block is not None:
+        monkeypatch.setattr(dedup, "_DD14_PAIR_BLOCK", block)
+    assert n * (n - 1) // 2 > dedup._DD14_PAIR_BLOCK
+    pdf = _dd14_cell(n, dim, seed=n)
+    got = dedup._dd14_cell_pairs(pdf)
+    want = _dd14_pairs_reference(pdf)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True), check_exact=True
+    )
