@@ -27,12 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from db_converter_spark.benchutil import (
-    build_compact_line,
-    gc_drain,
-    read_steal_ticks,
-    reset_cross_query_memos,
-)
+from db_converter_spark.benchutil import build_compact_line, read_steal_ticks
 from db_converter_spark.registry import all_queries
 from db_converter_spark.session import build_session
 
@@ -62,7 +57,6 @@ def main() -> int:
     for _warm in sorted(queries):
         if _warm.split("_", 1)[0][:2] in ("dc", "dd"):
             queries[_warm].builder(spark, sf_dir).collect()
-    gc_drain(spark)
 
     # best-of-3: two same-code runs this round recorded 83 s vs 140 s totals
     # purely from ambient host spikes (dd04 0.9 s vs 15.3 s) — a third
@@ -93,57 +87,10 @@ def main() -> int:
     steal_by: dict[str, list[int]] = {}
     degraded: list[str] = []
 
-    # GC-drain hygiene lives in benchutil; its rationale is documented there.
-    # The heaviest queries leave the most shuffle/checkpoint state behind;
-    # GC immediately after them (not on the fixed cadence) so their state
-    # doesn't inflate the next five queries' numbers (r3 verdict).
-    heavy = {
-        "dd05_ngram_jaccard",
-        "dd08_neardup_components",
-        "dd10_lsh_jaccard_verify",
-        "q36_recursive_cte",
-        # leave localCheckpoint / streaming state behind — GC right after
-        # so the next queries (q01 follows pipe02 alphabetically) don't
-        # absorb their cleanup
-        "pipe02_sequence_pack",
-        "ev03_streaming_window",
-        "ev07_stream_dedup",
-        "ev08_stream_stream_join",
-        "ev09_stream_static_join",
-        "ev10_session_window_stream",
-        "ss07_kmeans_train",
-        "ta07_trigram_lm",
-        "dd12_dup_substring_runs",
-        "ss08_ivf_trained_topk",
-        "dd13_neardup_purge",
-        "pipe06_token_budget",
-        "ta09_bpe_train",
-        "dd14_semdedup",
-        "dc03_bloom_decontaminate",
-        "dd15_containment",
-        "ss09_lsh_recall",
-        "ss11_pq_train",
-        "pipe13_importance_resample",
-        # r6 additions that leave checkpoint chains behind (ss12's
-        # training loop alone checkpoints ~10 relations; its residue
-        # inflated ta04 0.9 s -> 25 s three positions later)
-        "ss12_pq_trained_topk",
-        "dd16_lsh_calibration",
-        "ta12_ppl_buckets",
-        # r9: these now run ta14's BPE train chain (~18 localCheckpoints
-        # each) to price tokens in real subwords — drain right after
-        "ta14_bpe_encode",
-        "pipe11_context_fit",
-        "pipe12_epoch_plan",
-    }
-    since_gc = 0
+    # Each registered builder frees the checkpoints of the one before it
+    # on this session (registry.checkpoint), so no query inherits the
+    # previous one's cached blocks and the suite needs no forced GC.
     for name in sorted(queries):
-        # Periodic driver GC keeps the map-output tracker small (see
-        # benchutil: a 90 GB heap never GCs on its own and per-query time
-        # inflates 5-25x by query ~60 otherwise).
-        if since_gc >= 6:
-            gc_drain(spark)
-            since_gc = 0
         samples = []
         n_runs = max(1, runs)
         if time.perf_counter() - bench_t0 > budget:
@@ -151,7 +98,6 @@ def main() -> int:
             degraded.append(name)
         stl = []
         for _ in range(n_runs):
-            reset_cross_query_memos(spark)
             s0 = read_steal_ticks()
             t0 = time.perf_counter()
             queries[name].builder(spark, sf_dir).collect()
@@ -164,10 +110,6 @@ def main() -> int:
         timings[name] = round(samples[0], 3)
         medians[name] = round(samples[len(samples) // 2], 3)
         print(f"{name}: best {timings[name]:.3f}s median {medians[name]:.3f}s", file=sys.stderr)
-        since_gc += 1
-        if name in heavy:
-            gc_drain(spark)
-            since_gc = 0
     if degraded:
         print(
             f"wall budget {budget}s exceeded: {len(degraded)} queries ran"
@@ -179,18 +121,17 @@ def main() -> int:
     # Two failure classes put harness noise into the artifact of record:
     #   (a) IN-RUN churn — some samples slow, median diverges from best
     #       (r6: dq04 3.7 s best / 9.7 s median, code unchanged);
-    #   (b) PERSISTENT residue — ALL samples slow because session state
-    #       from the preceding heavy block outlived the scheduled drains
-    #       (r6: dq05 10.1 s best-of-3 vs 1.85 s in r5, code unchanged —
-    #       the med_hot diagnostic can NOT see this one, best==median).
+    #   (b) PERSISTENT slowness — ALL samples slow (r6: dq05 10.1 s
+    #       best-of-3 vs 1.85 s in r5, code unchanged — the med_hot
+    #       diagnostic can NOT see this one, best==median).
     # (a) is detected by the med_hot criterion; (b) by a committed
     # expected-time reference (bench_expected.json — per-query bests from a
     # clean idle-host run; only ever a TRIGGER, never a recorded number).
-    # Every suspect is re-measured at END of suite after a full two-cycle
-    # drain: fresh samples are APPENDED (a genuine slow query stays slow);
-    # the original samples are DISCARDED only when the post-drain
-    # re-measure is decisively (1.5x) faster — proof they measured harness
-    # state, not the operator. The compact line records who was re-sampled.
+    # Every suspect is re-measured at END of suite: fresh samples are
+    # APPENDED (a genuine slow query stays slow); the original samples are
+    # DISCARDED only when the re-measure is decisively (1.5x) faster —
+    # proof they measured a transient, not the operator. The compact line
+    # records who was re-sampled.
     expected: dict[str, float] = {}
     try:
         with open(
@@ -216,10 +157,8 @@ def main() -> int:
         if time.perf_counter() - bench_t0 > budget * 1.5:
             print(f"resample budget exhausted before {name}", file=sys.stderr)
             break
-        gc_drain(spark, pause=1.5, cycles=2)
         fresh = []
         for _ in range(2):
-            reset_cross_query_memos(spark)
             t0 = time.perf_counter()
             queries[name].builder(spark, sf_dir).collect()
             fresh.append(time.perf_counter() - t0)

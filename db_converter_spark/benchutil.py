@@ -1,56 +1,10 @@
-"""Shared measurement-harness hygiene for bench.py and the scale probes.
-
-Two facts of life about timing a long suite of operators in ONE Spark
-session drive everything here (r3–r6 bench archaeology):
-
-1. Spark's ContextCleaner only unregisters old shuffles / broadcasts /
-   checkpoint RDDs when the DRIVER garbage-collects, and a large heap
-   never does on its own — measured (r3): by query ~60 of the suite,
-   per-query time inflates 5–25× purely from accumulated shuffle state.
-2. ``System.gc()`` queues that unregistration ASYNCHRONOUSLY; without an
-   off-clock pause the cleanup storm lands inside the NEXT queries' timed
-   runs (measured r5: 12–15 s spikes on q02/q03 right after the heavy
-   tail). The drain sleep is part of the hygiene, not slack.
-
-Operators hand their intermediates to ``spark.sql`` as DataFrame
-arguments and leave no temp views behind, so a query's checkpoint blocks
-become collectable as soon as its result is dropped.
+"""Helpers for ``bench.py``: the hypervisor steal-tick reader and the
+compact final bench line that must fit the driver's stdout capture window.
 """
 
 from __future__ import annotations
 
 import json
-import time
-
-
-def reset_cross_query_memos(spark) -> None:
-    """Clear session-scoped serving-artifact memos (r10: ta14's trained
-    vocab keyed on sf_dir) before a TIMED sample. The memo is a real
-    multi-query-session win — pipe06→pipe11→pipe12→ta14 train BPE once —
-    but bench's contract is the cold end-to-end cost of each query, and
-    without this reset samples 2..n of a best-of-3 would price only the
-    serve-after-training tail."""
-    from db_converter_spark.operators.textops import TA14_MEMO_ATTR
-
-    for attr in (TA14_MEMO_ATTR,):
-        try:
-            delattr(spark, attr)
-        except AttributeError:
-            pass
-
-
-def gc_drain(spark, pause: float = 2.0, cycles: int = 1) -> None:
-    """Force a driver GC and pause OFF-CLOCK while the ContextCleaner's
-    asynchronous shuffle/broadcast/RDD unregistration storm passes.
-
-    ``cycles=2`` runs a second GC after the first pause: weak references
-    processed by cycle 1 enqueue cleanups whose own garbage (py4j proxies,
-    broadcast metadata) only becomes collectable afterwards — the second
-    cycle is the standard reference-processing idiom and is what the r7
-    churn pin uses before re-sampling a divergent query."""
-    for _ in range(max(1, cycles)):
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(pause)
 
 
 # --- compact bench line (r8 verdict Next #1) -------------------------------
@@ -97,7 +51,7 @@ def build_compact_line(
     size; everything dropped here still lands verbatim in
     bench_verbose_last.json. ``resampled`` is names-only by design — the
     re-measured values are already IN ``timings``; the line only needs to
-    record WHO got the post-drain verdict.
+    record WHO got the end-of-suite re-measure.
     """
     def _fmt(v: float, decimals):
         # above 100 s the fraction is measurement noise; an int is 2 chars
@@ -123,7 +77,7 @@ def build_compact_line(
         ("mixed", True, True, False),
         ("mixed", False, True, False),
         # sub-second precision OUTRANKS the resampled name list (which is
-        # recoverable from the committed bench_verbose_last.json): at the
+        # recoverable from bench_verbose_last.json): at the
         # live registry size the mixed line misses the window by ~20
         # chars with names and fits comfortably without them
         ("mixed", False, False, False),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_converter_spark.catalog import load_table, register_views
-from db_converter_spark.registry import query
+from db_converter_spark.registry import checkpoint, query, scoped_conf
 
 # serialized big-checkpoint storage level, shared by every corpus-scale
 # localCheckpoint in this module (same constant as similarity._BIG_CKPT_LEVEL:
@@ -319,7 +319,7 @@ def dd05_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE form re-ran the explode+DISTINCT for each of its three references
     (both self-join sides + the size table)."""
     register_views(spark, sf_dir)
-    doc_sh = spark.sql(_DD05_DOCSH_SPARK).localCheckpoint(eager=True)
+    doc_sh = checkpoint(spark.sql(_DD05_DOCSH_SPARK), eager=True)
     return spark.sql(_DD05_TAIL_SPARK, doc_sh=doc_sh)
 
 
@@ -535,11 +535,11 @@ def _min_label_components(sym: DataFrame, max_rounds: int = 50) -> tuple[DataFra
     # so each round costs ONE job instead of a checkpoint job + a checksum
     # job (guide §2.4: the barrier and the probe share a pass; 2 jobs/round
     # -> 1 with identical labels).
-    labels = (
+    labels = checkpoint(
         sym.select(F.col("src").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=False)
+        .withColumn("label", F.col("doc_id")),
+        eager=False,
     )
     checksum = lambda df: df.agg(  # noqa: E731
         F.sum(F.col("label").cast("decimal(38,0)"))
@@ -559,10 +559,10 @@ def _min_label_components(sym: DataFrame, max_rounds: int = 50) -> tuple[DataFra
         ptr = hop.select(
             F.col("doc_id").alias("_pid"), F.col("label").alias("_plabel")
         )
-        new = (
+        new = checkpoint(
             hop.join(ptr, hop["label"] == ptr["_pid"])
-            .select("doc_id", F.least("label", "_plabel").alias("label"))
-            .localCheckpoint(eager=False)
+            .select("doc_id", F.least("label", "_plabel").alias("label")),
+            eager=False,
         )
         new_sum = checksum(new)
         labels = new
@@ -588,7 +588,7 @@ def dd08_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the edge list BEFORE symmetrizing: union references the
     # edges lineage twice, so without this the md5-heavy MinHash banding
     # pipeline executes twice inside the first job
-    edges = spark.sql(_dd08_bands_spark()).localCheckpoint(eager=True)
+    edges = checkpoint(spark.sql(_dd08_bands_spark()), eager=True)
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
@@ -1137,11 +1137,9 @@ def dc05_sketched_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinalities) read the checkpoint: Catalyst inlines WITH bodies, so
     the single-statement form scanned the corpus 4x."""
     register_views(spark, sf_dir)
-    grams = spark.sql(_DC05_GRAMS_SPARK).localCheckpoint(
-        eager=True, storageLevel=_BIG_CKPT_LEVEL
-    )
-    sk = spark.sql(_DC05_SK_SPARK, grams=grams).localCheckpoint(eager=True)
-    szs = spark.sql(_DC05_SZS_SPARK, grams=grams).localCheckpoint(eager=True)
+    grams = checkpoint(spark.sql(_DC05_GRAMS_SPARK), eager=True, storage_level=_BIG_CKPT_LEVEL)
+    sk = checkpoint(spark.sql(_DC05_SK_SPARK, grams=grams), eager=True)
+    szs = checkpoint(spark.sql(_DC05_SZS_SPARK, grams=grams), eager=True)
     return spark.sql(_DC05_TAIL_SPARK, sk=sk, szs=szs)
 
 
@@ -1418,11 +1416,11 @@ def _dd10_prepare(
     index, so the candidate-restricted shingle table would be wasted
     work."""
     register_views(spark, sf_dir)
-    sig = spark.sql(_DD10_SIG_SPARK).localCheckpoint(eager=True)
-    cand = spark.sql(_DD10_CAND_SPARK, sig=sig).localCheckpoint(eager=True)
+    sig = checkpoint(spark.sql(_DD10_SIG_SPARK), eager=True)
+    cand = checkpoint(spark.sql(_DD10_CAND_SPARK, sig=sig), eager=True)
     out = {"sig": sig, "cand": cand}
     if with_doc_sh:
-        out["doc_sh"] = spark.sql(_DD10_DOCSH_SPARK, cand=cand).localCheckpoint(eager=True)
+        out["doc_sh"] = checkpoint(spark.sql(_DD10_DOCSH_SPARK, cand=cand), eager=True)
     return out
 
 
@@ -1544,12 +1542,12 @@ def dd13_neardup_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     a verified-edge graph that is tiny by construction, log-round
     propagation, one join back to the corpus on doc_id, low-cardinality
     rollup."""
-    edges = spark.sql(
+    edges = checkpoint(spark.sql(
         "WITH "
         + _dd10_jac_ctes("{cand}", "{doc_sh}", hints=True)
         + f"\nSELECT da AS src, db AS dst FROM jac WHERE j >= {_DD13_J}",
         **_dd10_prepare(spark, sf_dir),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
@@ -1701,7 +1699,7 @@ def dc03_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (the exact tier restores dc01's precision); the Bloom tier
     bounds the exact join's probe side at any corpus size."""
     register_views(spark, sf_dir)
-    grams = spark.sql(_DC03_GRAMS_SPARK).localCheckpoint(eager=True)
+    grams = checkpoint(spark.sql(_DC03_GRAMS_SPARK), eager=True)
     return spark.sql(_DC03_SPARK_MAIN, grams=grams)
 
 
@@ -2315,17 +2313,14 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splitting and the rest of AQE stay on. (The deprecated
     # coalescePartitions.minPartitionNum floor is settable but ignored on
     # Spark 4.1 — measured; enabled=false is the lever that works.)
-    floor_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_floor = spark.conf.get(floor_key, None)
-    spark.conf.set(floor_key, "false")
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"):
         # r12: the n-scale coarse+fine argmax runs vectorized in numpy
         # over the embeddings scan (zero exchanges — the SQL form
         # shuffled the n-row relation twice); the k-scale supers/fine
         # derivation stays engine-side (see _dd14_assign_py).
         vecs_df = spark.sql("SELECT vec_id, embedding FROM embeddings")
         assign, bc = _dd14_assign_py(spark, vecs_df)
-        assign = assign.localCheckpoint(eager=True, storageLevel=_BIG_CKPT_LEVEL)
+        assign = checkpoint(assign, eager=True, storage_level=_BIG_CKPT_LEVEL)
         bc.destroy()
         # materialize dup_pairs ONCE (tiny post-filter): the report's two
         # stat branches would otherwise each re-run the pair pass
@@ -2333,14 +2328,11 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in numpy per cid group (see _dd14_cell_pairs) — one cid-keyed
         # exchange, no interpreted lambdas; the exact ROUND + tau gate
         # stays in SQL (_DD14_PAIRS_FROM_RAW).
-        pairs = spark.sql(
-            _DD14_PAIRS_FROM_RAW, raw=_dd14_pairs_py(assign)
-        ).localCheckpoint(eager=True, storageLevel=_BIG_CKPT_LEVEL)
-    finally:
-        if prev_floor is None:
-            spark.conf.unset(floor_key)
-        else:
-            spark.conf.set(floor_key, prev_floor)
+        pairs = checkpoint(
+            spark.sql(_DD14_PAIRS_FROM_RAW, raw=_dd14_pairs_py(assign)),
+            eager=True,
+            storage_level=_BIG_CKPT_LEVEL,
+        )
     # r11: the k-row cell sizes are an inline aggregate of the report job
     # (_DD14_CELLS_INLINE) — the report references the n-row assignment
     # exactly once, streaming the serialized checkpoint the same way the
@@ -2581,7 +2573,7 @@ def dd15_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     fires on. The tail is the same O(candidates) intersection join
     normalized by the smaller set."""
     sym_cand = _dd10_prepare(spark, sf_dir, with_doc_sh=False)["cand"]
-    full_sh = spark.sql(_DD15_FULLSH_SPARK).localCheckpoint(eager=True)
+    full_sh = checkpoint(spark.sql(_DD15_FULLSH_SPARK), eager=True)
     # Spark 4.1 bug dodge: the deduplicating union trips an internal
     # AttributeMap error (UnionBase.rewriteConstraints: key not found)
     # when a branch's lineage carries LEAST/GREATEST- or da<db-derived
@@ -2590,15 +2582,10 @@ def dd15_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # channel's CTEs live INSIDE this statement (one checkpoint job
     # instead of two — each CTE is referenced exactly once, so nothing
     # recomputes), which this conf scope also makes legal.
-    conf_key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        cand = spark.sql(
-            _DD15_CAND_SPARK, full_sh=full_sh, sym_cand=sym_cand
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(conf_key, prev)
+    with scoped_conf(spark, "spark.sql.constraintPropagation.enabled", "false"):
+        cand = checkpoint(
+            spark.sql(_DD15_CAND_SPARK, full_sh=full_sh, sym_cand=sym_cand), eager=True
+        )
     return spark.sql(_DD15_TAIL_SPARK, cand=cand, full_sh=full_sh)
 
 
@@ -2971,7 +2958,7 @@ def dd17_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles) are materialized once, same as dd10 (Catalyst CTE inlining
     would recompute signatures per tail reference)."""
     register_views(spark, sf_dir)
-    sig = spark.sql(_DD17_SIG_SPARK).localCheckpoint(eager=True)
-    cand = spark.sql(_DD17_CAND_SPARK, sig=sig).localCheckpoint(eager=True)
-    doc_sh = spark.sql(_DD10_DOCSH_SPARK, cand=cand).localCheckpoint(eager=True)
+    sig = checkpoint(spark.sql(_DD17_SIG_SPARK), eager=True)
+    cand = checkpoint(spark.sql(_DD17_CAND_SPARK, sig=sig), eager=True)
+    doc_sh = checkpoint(spark.sql(_DD10_DOCSH_SPARK, cand=cand), eager=True)
     return spark.sql(_DD17_TAIL_SPARK, cand=cand, doc_sh=doc_sh)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_converter_spark.catalog import load_table, register_views
-from db_converter_spark.registry import query
+from db_converter_spark.registry import checkpoint, query, scoped_conf
 
 # ---------------------------------------------------------------------------
 # ev01 — tumbling-window event stats (batch twin of windowed_event_stats)
@@ -184,23 +184,12 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
 FROM events GROUP BY 1, 2
 """
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily pin spark.sql.shuffle.partitions around a streaming query
-    start: the state-store instance count binds to the conf at query start,
-    and 32 stores for a few-hundred-row aggregate is pure fixed cost
-    (measured: ev03 1.6 s -> 0.9 s warm at 8). Restored afterwards so batch
-    queries keep the session default."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+# Streaming starts pin spark.sql.shuffle.partitions with scoped_conf: the
+# state-store instance count binds to the conf at query start, and 32
+# stores for a few-hundred-row aggregate is pure fixed cost (measured:
+# ev03 1.6 s -> 0.9 s warm at 8). The scope restores the session default
+# for batch queries.
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def _events_stream_source(spark: SparkSession, sf_dir: str):
@@ -263,7 +252,7 @@ def ev03_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    with _scoped_shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -538,7 +527,7 @@ def ev07_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    with _scoped_shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
         q = (
             deduped.writeStream.format("memory")
             .queryName(sink)
@@ -625,7 +614,7 @@ def ev08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FOUR state stores per partition, and store init dominates at this
     # state volume (measured 6.8 s @ 8 → 3.5 s @ 4; a production deployment
     # sizes this to state volume / executor count instead)
-    with _scoped_shuffle_partitions(spark, 4):
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "4"):
         q = (
             joined.writeStream.format("memory")
             .queryName(sink)
@@ -686,7 +675,7 @@ def ev09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    with _scoped_shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -774,7 +763,7 @@ def ev10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    with _scoped_shuffle_partitions(spark, 4):
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "4"):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -1531,7 +1520,7 @@ _EV17_DUCK = (
 def _ev17_run(spark: SparkSession) -> DataFrame:
     """Materialize the per-user exact relation once (cells + topk both read
     it; CTE inlining would scan events twice), then run the audit tail."""
-    exact = spark.sql(_EV17_EXACT).localCheckpoint(eager=True)
+    exact = checkpoint(spark.sql(_EV17_EXACT), eager=True)
     return spark.sql(_EV17_TAIL_SPARK, exact=exact)
 
 
@@ -1632,7 +1621,7 @@ def ev18_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
         )
     )
-    with _scoped_shuffle_partitions(spark, 8):
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
         q = (
             hist.writeStream.format("memory")
             .queryName(sink)

@@ -30,7 +30,7 @@ from db_converter_spark.operators.textops import (
     _ta14_duck_ctes,
     ta14_vocab,
 )
-from db_converter_spark.registry import query
+from db_converter_spark.registry import checkpoint, query
 
 _ALL_STOPWORDS = sorted({w for ws in LANG_PROFILES.values() for w in ws})
 
@@ -191,14 +191,14 @@ def _pack(spark: SparkSession, docs: DataFrame, nparts: int) -> DataFrame:
     # runs the scan + tokenize TWICE (once in RangePartitioner's sampling
     # job, again through the shuffle; guide §2.4). Both the sample and the
     # shuffle now read ~24-byte checkpointed rows; the text pass runs once.
-    docs = docs.localCheckpoint(eager=True)
+    docs = checkpoint(docs, eager=True)
     parts = docs.repartitionByRange(nparts, "doc_id").withColumn(
         "pid", F.spark_partition_id()
     )
     # materialize the post-shuffle relation too: it is consumed twice — by
     # the per-partition totals and by the placement pass — and the
     # checkpoint freezes the pid assignment the two passes share.
-    parts = parts.localCheckpoint(eager=True)
+    parts = checkpoint(parts, eager=True)
     # phase 1.5: per-partition totals → driver prefix sum (tiny: one row per
     # partition), rebroadcast as a join on pid
     ptotals = sorted(
@@ -505,7 +505,7 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    vocab = ta14_vocab(spark, sf_dir)["vocab"]
+    vocab = ta14_vocab(spark)["vocab"]
     # r11: materialize metrics BEFORE the range repartition. A bare
     # repartitionByRange over the live metrics plan runs the corpus-scale
     # explode + encode-map join TWICE — once inside RangePartitioner's
@@ -513,12 +513,12 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accidental recompute behind an exchange). Checkpointing the narrow
     # (doc_id, source, n_tok, q) relation first makes both the sample and
     # the shuffle read ~40-byte rows; the corpus pass runs exactly once.
-    m = spark.sql(_PIPE06_METRICS_SPARK, vocab=vocab).localCheckpoint(eager=True)
+    m = checkpoint(spark.sql(_PIPE06_METRICS_SPARK, vocab=vocab), eager=True)
     nparts = max(2, spark.sparkContext.defaultParallelism // 2)
     parts = m.repartitionByRange(
         nparts, F.col("q").desc(), F.col("doc_id")
     ).withColumn("pid", F.spark_partition_id())
-    parts = parts.localCheckpoint(eager=True)
+    parts = checkpoint(parts, eager=True)
     ptotals = sorted(
         parts.groupBy("pid")
         .agg(
@@ -798,7 +798,7 @@ def pipe10_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    per_doc = spark.sql(_PIPE10_PD_SPARK).localCheckpoint(eager=True)
+    per_doc = checkpoint(spark.sql(_PIPE10_PD_SPARK), eager=True)
     return spark.sql(_PIPE10, per_doc=per_doc)
 
 
@@ -882,7 +882,7 @@ def pipe11_context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(_PIPE11_SPARK, vocab=ta14_vocab(spark, sf_dir)["vocab"])
+    return spark.sql(_PIPE11_SPARK, vocab=ta14_vocab(spark)["vocab"])
 
 
 # ---------------------------------------------------------------------------
@@ -970,7 +970,7 @@ def pipe12_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from db_converter_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    rels = ta14_vocab(spark, sf_dir)
+    rels = ta14_vocab(spark)
     return spark.sql(_PIPE12_SPARK, swc=rels["swc"], vocab=rels["vocab"])
 
 
@@ -1074,7 +1074,7 @@ def pipe13_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-domain fixed-point score keeps Spark and DuckDB bit-identical
     (float log-ratio sums are partition-order dependent)."""
     register_views(spark, sf_dir)
-    feat = spark.sql(_PIPE13_FEAT_SPARK).localCheckpoint(eager=True)
+    feat = checkpoint(spark.sql(_PIPE13_FEAT_SPARK), eager=True)
     return spark.sql(_pipe13_main("{feat}", "DIV", "/*+ BROADCAST(w) */"), feat=feat)
 
 
@@ -1181,7 +1181,7 @@ def pipe14_unimax_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlining re-scanned parquet 4x in the single-statement form); the
     waterfill is a rank+cumsum window over the bounded source relation."""
     register_views(spark, sf_dir)
-    lim = spark.sql(_PIPE14_LIM_SPARK).localCheckpoint(eager=True)
+    lim = checkpoint(spark.sql(_PIPE14_LIM_SPARK), eager=True)
     return spark.sql(_PIPE14_TAIL_SPARK, lim=lim)
 
 

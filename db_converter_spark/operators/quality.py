@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from db_converter_spark.catalog import register_views
-from db_converter_spark.registry import query
+from db_converter_spark.registry import checkpoint, query
 
 
 def _sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
@@ -167,7 +167,7 @@ def dq01_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes the reference's alert packets (SQL health checks emitting
     violation rows) to analytic tables."""
     register_views(spark, sf_dir)
-    stats = spark.sql(_DQ01_COMBINED).localCheckpoint(eager=True)
+    stats = checkpoint(spark.sql(_DQ01_COMBINED), eager=True)
     return spark.sql(_DQ01_LONG_COMBINED, stats=stats)
 
 
@@ -390,7 +390,7 @@ def dq03_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlaps the two table aggregates and the emission reads one
     checkpoint; 3 jobs -> 2)."""
     register_views(spark, sf_dir)
-    stats = spark.sql(_DQ03_COMBINED).localCheckpoint(eager=True)
+    stats = checkpoint(spark.sql(_DQ03_COMBINED), eager=True)
     return spark.sql(_DQ03_LONG_COMBINED, stats=stats)
 
 
@@ -722,8 +722,8 @@ def dq06_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the bounded (type, half, bin) key space; the TV fold runs on
     the |types|×10 matrix."""
     register_views(spark, sf_dir)
-    span = spark.sql(_DQ06_SPAN_SPARK).localCheckpoint(eager=True)
-    ref = spark.sql(_DQ06_REF_SPARK, span=span).localCheckpoint(eager=True)
+    span = checkpoint(spark.sql(_DQ06_SPAN_SPARK), eager=True)
+    ref = checkpoint(spark.sql(_DQ06_REF_SPARK, span=span), eager=True)
     return spark.sql(_DQ06_SPARK, span=span, ref=ref)
 
 
@@ -847,12 +847,12 @@ def dq07_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned relation are materialized once (CTE inlining would re-scan
     orders ~5x)."""
     register_views(spark, sf_dir)
-    mm = spark.sql(_DQ07_MM).localCheckpoint(eager=True)
-    binned = spark.sql(_DQ07_BINNED_SPARK, mm=mm).localCheckpoint(eager=True)
+    mm = checkpoint(spark.sql(_DQ07_MM), eager=True)
+    binned = checkpoint(spark.sql(_DQ07_BINNED_SPARK, mm=mm), eager=True)
     # the <= 4,096-row cum relation is read by targets/pick/within/final:
     # inlined it re-aggregated the binned checkpoint ~4x and re-ran the
     # single-partition cumulative window each time
-    cum = spark.sql(_DQ07_CUM_SPARK, binned=binned).localCheckpoint(eager=True)
+    cum = checkpoint(spark.sql(_DQ07_CUM_SPARK, binned=binned), eager=True)
     return spark.sql(_DQ07_TAIL_SPARK, mm=mm, binned=binned, cum=cum)
 
 
@@ -1152,11 +1152,11 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # worth milliseconds at scale; measured neutral at bench scale); a
     # lazy cum could double-execute the corpus-histogram subtree, which
     # the within statement references twice (pick + the picked-bin probe).
-    mm = spark.sql(_DQ08_MM_SPARK).localCheckpoint(eager=True)
-    cum = spark.sql(
+    mm = checkpoint(spark.sql(_DQ08_MM_SPARK), eager=True)
+    cum = checkpoint(spark.sql(
         _DQ08_CUM_SPARK.format(binned_src=f"({_DQ08_BINNED_SPARK})"), vals=vals, mm=mm
-    ).localCheckpoint(eager=True)
-    within = spark.sql(_DQ08_WITHIN_SPARK, mm=mm, cum=cum).localCheckpoint(eager=False)
+    ), eager=True)
+    within = checkpoint(spark.sql(_DQ08_WITHIN_SPARK, mm=mm, cum=cum), eager=False)
     # metadata-scale collect over the <= cols x quantiles checkpoint: the
     # mixed bins' literal value ranges parameterize the extraction scans
     # (and, r11, this collect IS the job that materializes `within`)

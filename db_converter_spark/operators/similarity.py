@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from db_converter_spark.catalog import load_table, register_views
 from db_converter_spark.functions.vectors import cosine_similarity
-from db_converter_spark.registry import query
+from db_converter_spark.registry import checkpoint, query
 
 # Storage level for the CORPUS-SCALE checkpointed intermediates (the
 # exploded n·d vflat/pqflat tables, ~128M rows at sf100): the
@@ -739,15 +739,15 @@ def _km_train(
     returned assignment is the checkpoint or the lazy inline relation
     respectively."""
     sqls = _km_sqls(extra)
-    cent = spark.sql(sqls["cent0"], vflat=vflat, k16=k16).localCheckpoint(eager=True)
+    cent = checkpoint(spark.sql(sqls["cent0"], vflat=vflat, k16=k16), eager=True)
     asg = None
     for t in range(n_iter):
         asg = spark.sql(sqls["asg"], vflat=vflat, cent=cent)
         if keep_last_asg and t == n_iter - 1:
-            asg = asg.localCheckpoint(eager=True)
-        cent = spark.sql(
+            asg = checkpoint(asg, eager=True)
+        cent = checkpoint(spark.sql(
             sqls["cent_next"], vflat=vflat, cent=cent, asg=asg
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     return cent, asg
 
 
@@ -818,9 +818,7 @@ def ss08_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/k of the corpus, and the top-10 compiles to
     TakeOrderedAndProject, never a global sort."""
     register_views(spark, sf_dir)
-    vflat = spark.sql(_SS07_VFLAT_SPARK).localCheckpoint(
-        eager=True, storageLevel=_BIG_CKPT_LEVEL
-    )
+    vflat = checkpoint(spark.sql(_SS07_VFLAT_SPARK), eager=True, storage_level=_BIG_CKPT_LEVEL)
     cent, _ = _km_train(spark, vflat, _KM_T, _KM_K * 16)
     return spark.sql(_SS08_TAIL, vflat=vflat, cent=cent)
 
@@ -853,9 +851,7 @@ def ss07_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     # materialize the exploded quantized-vector table ONCE. Narrow
     # schema: (vec_id, d, x) ≈ 24 B/row.
-    vflat = spark.sql(_SS07_VFLAT_SPARK).localCheckpoint(
-        eager=True, storageLevel=_BIG_CKPT_LEVEL
-    )
+    vflat = checkpoint(spark.sql(_SS07_VFLAT_SPARK), eager=True, storage_level=_BIG_CKPT_LEVEL)
     cent, asg = _km_train(spark, vflat, _KM_T, _KM_K * 16, keep_last_asg=True)
     return spark.sql(_KM_FINAL_SS07, cent=cent, asg=asg)
 
@@ -1010,7 +1006,7 @@ def ss09_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket filter is a predicate on the checkpoint, not a second scan);
     windows key on the 10-value qid; the report is 10 rows."""
     register_views(spark, sf_dir)
-    sims = spark.sql(_SS09_SIMS_SPARK).localCheckpoint(eager=True)
+    sims = checkpoint(spark.sql(_SS09_SIMS_SPARK), eager=True)
     return spark.sql(_SS09_TAIL_SPARK, sims=sims)
 
 
@@ -1246,8 +1242,8 @@ def _ss11_body(spark: SparkSession) -> DataFrame:
     """ss11 over whatever `embeddings` view is registered — split out so
     structural tests can inject synthetic corpora without the builder
     re-registering the real tables."""
-    pqflat = spark.sql(_SS11_PQFLAT_SPARK).localCheckpoint(
-        eager=True, storageLevel=_BIG_CKPT_LEVEL
+    pqflat = checkpoint(
+        spark.sql(_SS11_PQFLAT_SPARK), eager=True, storage_level=_BIG_CKPT_LEVEL
     )
     cent, asg = _km_train(
         spark, pqflat, _PQT_T, _PQT_K * 16, extra="m", keep_last_asg=True
@@ -1364,13 +1360,13 @@ def ss12_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined per-vector sum and a TakeOrderedAndProject top-10
     — no global sort, no raw-vector access."""
     register_views(spark, sf_dir)
-    pqflat = spark.sql(_SS11_PQFLAT_SPARK).localCheckpoint(
-        eager=True, storageLevel=_BIG_CKPT_LEVEL
+    pqflat = checkpoint(
+        spark.sql(_SS11_PQFLAT_SPARK), eager=True, storage_level=_BIG_CKPT_LEVEL
     )
     cent, _ = _km_train(spark, pqflat, _PQT_T, _PQT_K * 16, extra="m")
-    codes = spark.sql(
+    codes = checkpoint(spark.sql(
         _km_sqls(extra="m")["asg"], vflat=pqflat, cent=cent
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     return spark.sql(_SS12_TAIL, cent=cent, pqflat=pqflat, codes=codes)
 
 
@@ -1488,7 +1484,7 @@ _SS13_DUCK = "WITH sims AS (" + _SS13_DUCK_SIMS + ")" + _ss13_tail("sims", lead=
 def _ss13_run(spark: SparkSession) -> DataFrame:
     """Materialize the similarity relation once, then run the ranking/audit
     tail (shared by the builder and the planted-fixture tests)."""
-    sims = spark.sql(_SS13_SIMS_SPARK).localCheckpoint(eager=True)
+    sims = checkpoint(spark.sql(_SS13_SIMS_SPARK), eager=True)
     return spark.sql(_SS13_TAIL_SPARK, sims=sims)
 
 
@@ -1673,12 +1669,12 @@ def ss14_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stats/srow/codes relations are each materialized once (CTE
     inlining would re-scan embeddings per tail reference)."""
     register_views(spark, sf_dir)
-    dims = spark.sql(_SS14_DIMS_SPARK).localCheckpoint(eager=True)
-    srow = spark.sql(_SS14_SROW_SPARK, dims=dims).localCheckpoint(eager=True)
-    codes = spark.sql(_SS14_CODES_SPARK, srow=srow).localCheckpoint(
-        eager=True, storageLevel=_BIG_CKPT_LEVEL
+    dims = checkpoint(spark.sql(_SS14_DIMS_SPARK), eager=True)
+    srow = checkpoint(spark.sql(_SS14_SROW_SPARK, dims=dims), eager=True)
+    codes = checkpoint(
+        spark.sql(_SS14_CODES_SPARK, srow=srow), eager=True, storage_level=_BIG_CKPT_LEVEL
     )
     # the audit's exact-sim relation: one embeddings scan, referenced
     # twice by the tail
-    exact = spark.sql(_SS14_EXACT_SPARK).localCheckpoint(eager=True)
+    exact = checkpoint(spark.sql(_SS14_EXACT_SPARK), eager=True)
     return spark.sql(_SS14_TAIL_SPARK, codes=codes, srow=srow, exact=exact)

@@ -9,11 +9,13 @@ whole-stage-codegen'd, linear at 100 TB.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_converter_spark.catalog import load_table, register_views
-from db_converter_spark.registry import query
+from db_converter_spark.registry import checkpoint, query
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 # (A real pipeline ships bigger profiles; the operator shape is identical.)
@@ -486,7 +488,7 @@ def ta07_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     a reliable checkpoint or persist(DISK_ONLY)), then one bounded-key
     shuffle and one O(n_docs) shuffle — no UDFs, fully codegen'd."""
     register_views(spark, sf_dir)
-    base = spark.sql(_TA07_BASE_SPARK).localCheckpoint(eager=True)
+    base = checkpoint(spark.sql(_TA07_BASE_SPARK), eager=True)
     return spark.sql(_TA07_SPARK, base=base)
 
 
@@ -542,11 +544,11 @@ def ta08_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     from pyspark.sql.window import Window
 
-    counts = spark.sql(
+    counts = checkpoint(spark.sql(
         "SELECT w, COUNT(*) AS cnt FROM "
         "(SELECT explode(split(text, ' ')) AS w FROM documents) t "
         "WHERE w <> '' GROUP BY w"
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     tot = counts.agg(F.sum("cnt").alias("n"))
     top = counts.orderBy(F.col("cnt").desc(), "w").limit(100)
     w_ord = Window.orderBy(F.col("cnt").desc(), "w")
@@ -707,7 +709,7 @@ def ta09_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus is touched exactly once (word counts); iterations are
     vocab-bounded and materialized per step."""
     register_views(spark, sf_dir)
-    cur = spark.sql(_TA09_SPELL0_SPARK).localCheckpoint(eager=True)
+    cur = checkpoint(spark.sql(_TA09_SPELL0_SPARK), eager=True)
     # r11 shape: ONE job per merge. The 1-row argmax is collected (the
     # TakeOrdered job that ran anyway now also returns the row) and applied
     # as a LITERAL projection (_ta09_apply_lit) — no per-merge b/s
@@ -804,7 +806,7 @@ def ta10_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (decile, word) aggregate (materialized once); first-appearance is a
     vocab-scale MIN, and the windows run on 10 rows."""
     register_views(spark, sf_dir)
-    dw = spark.sql(_TA10_DW_SPARK).localCheckpoint(eager=True)
+    dw = checkpoint(spark.sql(_TA10_DW_SPARK), eager=True)
     return spark.sql(_TA10_TAIL, dw=dw)
 
 
@@ -877,7 +879,7 @@ def ta11_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is built from ONE corpus explode and materialized once;
     df/N/scoring all read the checkpoint; top-k is a doc-keyed window."""
     register_views(spark, sf_dir)
-    tf = spark.sql(_TA11_TF_SPARK).localCheckpoint(eager=True)
+    tf = checkpoint(spark.sql(_TA11_TF_SPARK), eager=True)
     return spark.sql(_TA11_TAIL, tf=tf)
 
 
@@ -1000,8 +1002,8 @@ def ta12_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed into sampling. No global sort anywhere; the doc-score table is
     checkpointed once and re-read by the histogram and the labeler."""
     register_views(spark, sf_dir)
-    base = spark.sql(_TA07_BASE_SPARK).localCheckpoint(eager=True)
-    docs = spark.sql(_TA12_DOCS_SPARK, base=base).localCheckpoint(eager=True)
+    base = checkpoint(spark.sql(_TA07_BASE_SPARK), eager=True)
+    docs = checkpoint(spark.sql(_TA12_DOCS_SPARK, base=base), eager=True)
     return spark.sql(_TA12_TAIL_SPARK, docs=docs)
 
 
@@ -1386,7 +1388,7 @@ _TA13_STAGED_DOC_THRESHOLD = 100_000
 # the on-disk shuffle+spill footprint to 1/K of an n-pass (the r9 probe
 # showed a full sf100 n-pass sorts ~225 GB of occurrence rows — spilling
 # worked, the 74 GB scratch disk didn't; SCALE_PROBE_R9 third attempt
-# died on ENOSPC, not memory). A gc_drain between sub-passes lets the
+# died on ENOSPC, not memory). A forced GC between sub-passes lets the
 # ContextCleaner delete each completed sub-pass's shuffle files.
 _TA13_DOCS_PER_SHARD = 500_000  # r10: halved — smaller sorts spill less
 # Phase-B broadcast ceiling: dup keys above this row count (per sub-pass)
@@ -1398,11 +1400,6 @@ _TA13_DOCS_PER_SHARD = 500_000  # r10: halved — smaller sorts spill less
 # ≤1 GB hashed worst-case — comfortably under executor memory, and the
 # sf100 probes' per-sub-pass key counts sit far below it anyway.
 _TA13_DUP_BROADCAST_ROWS = 4_000_000
-# per-run record of (relation, n, shard_idx, key_count) sub-passes that fell
-# back to the single-pass wide shape (keys outgrew the broadcast ceiling)
-# — reset by _ta13_run; read by scale probes to report WHICH sub-passes
-# paid the wide exchange (VERDICT r10 Next #2's reporting requirement).
-TA13_LAST_RUN_FALLBACKS: "list[tuple[str, int, int, int]]" = []
 
 
 def _ta13_run(spark: SparkSession) -> DataFrame:
@@ -1411,7 +1408,7 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
     sub-pass's occurrences — the memory-decade fix), then the
     checkpoint-only tail (shared by the builder and the planted-fixture
     tests)."""
-    docs = spark.sql(_TA13_DOCS_SPARK).localCheckpoint(eager=True)
+    docs = checkpoint(spark.sql(_TA13_DOCS_SPARK), eager=True)
     # Scale-adaptive stage concurrency (both points measured at r8,
     # SCALE_PROBE_R8_MEM.json): sequential per-n checkpoint jobs bound the
     # peak aggregate working set to ONE n's occurrences — sf10 under a
@@ -1426,7 +1423,6 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
     # (r8 ADVICE: otherwise the oracle-compared path is always non-staged
     # and the staged union is exercised only by probes/bench).
     n_docs = docs.count()
-    del TA13_LAST_RUN_FALLBACKS[:]
     staged = n_docs > _TA13_STAGED_DOC_THRESHOLD
     shards = (
         max(1, -(-n_docs // _TA13_DOCS_PER_SHARD)) if staged else 1
@@ -1444,10 +1440,11 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
     def _drain() -> None:
         if shards > 1:
             # release the finished sub-pass's shuffle files before the
-            # next one writes its own (disk bound = 1 sub-pass)
-            from db_converter_spark.benchutil import gc_drain
-
-            gc_drain(spark, pause=1.0)
+            # next one writes its own (disk bound = 1 sub-pass): Spark's
+            # ContextCleaner deletes them only after a driver GC, and
+            # asynchronously, hence the pause
+            spark.sparkContext._jvm.System.gc()
+            time.sleep(1.0)
 
     def _publish(parts: "list[DataFrame]") -> DataFrame:
         out = parts[0]
@@ -1467,7 +1464,7 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
         if staged:
             parts = []
             for q in sqls:
-                parts.append(spark.sql(q, docs=docs).localCheckpoint(eager=True))
+                parts.append(checkpoint(spark.sql(q, docs=docs), eager=True))
                 _drain()
         else:
             parts = [spark.sql(q, docs=docs) for q in sqls]
@@ -1475,7 +1472,7 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
 
     def _two_phase(
         ns: "range | tuple", keys_tpl: str, from_keys_tpl: str,
-        fallback_tpl: str, label: str,
+        fallback_tpl: str,
     ) -> DataFrame:
         """Staged two-phase sub-passes (the r10 notes above
         _TA13_DUPKEYS_SPARK / _TA13_TOPKEYS_SPARK): a narrow key-count
@@ -1484,19 +1481,18 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
         broadcast."""
         parts = []
         for n in ns:
-            for si, sh in enumerate(shard_preds):
-                dk = spark.sql(
-                    keys_tpl.format(n=n, shard=sh), docs=docs
-                ).localCheckpoint(eager=True)
+            for sh in shard_preds:
+                dk = checkpoint(
+                    spark.sql(keys_tpl.format(n=n, shard=sh), docs=docs), eager=True
+                )
                 n_keys = dk.count()
                 if n_keys <= _TA13_DUP_BROADCAST_ROWS:
                     part = spark.sql(
                         from_keys_tpl.format(n=n, shard=sh), docs=docs, kv=dk
                     )
                 else:  # pathological corpus: keys not broadcastable
-                    TA13_LAST_RUN_FALLBACKS.append((label, n, si, n_keys))
                     part = spark.sql(fallback_tpl.format(n=n, shard=sh), docs=docs)
-                parts.append(part.localCheckpoint(eager=True))
+                parts.append(checkpoint(part, eager=True))
                 _drain()
         return _publish(parts)
 
@@ -1511,11 +1507,11 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
     if staged and shards > 1:
         top = _two_phase(
             (2, 3, 4), _TA13_TOPKEYS_SPARK, _TA13_TOPN_FROM_KEYS_SPARK,
-            _TA13_TOPN_SPARK, "ta13_top",
+            _TA13_TOPN_SPARK,
         )
         covered = _two_phase(
             range(5, 11), _TA13_DUPKEYS_SPARK, _TA13_COVN_FROM_KEYS_SPARK,
-            _TA13_COVN_SPARK, "ta13_covered",
+            _TA13_COVN_SPARK,
         )
     else:
         top = _ckpt_union([q for n in (2, 3, 4) for q in _fmt(_TA13_TOPN_SPARK, n)])
@@ -1662,13 +1658,7 @@ _TA14_DUCK = _ta14_duck()
 _TA14_TAIL_SPARK = _ta14_tail("{swc}", "size(split(sp, '··'))")
 
 
-# session attribute carrying the ta14 memo: (sf_dir, serving relations) of
-# the last training; benchutil clears it between timed samples so bench
-# keeps pricing the FULL train+serve cost
-TA14_MEMO_ATTR = "_dbc_ta14_vocab_sf_dir"
-
-
-def ta14_vocab(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
+def ta14_vocab(spark: SparkSession) -> dict[str, DataFrame]:
     """Train ta09's merge table over the ONE corpus-scale (source, word)
     aggregate and return the serving artifacts: ``swc`` (source, word,
     cnt, checkpointed), ``s_final`` (word, cnt, sp — the final spellings)
@@ -1677,19 +1667,12 @@ def ta14_vocab(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Data
     report tail, pipe06/pipe11/pipe12's BPE token pricing)
     broadcast-join these instead of re-touching token-scale data.
 
-    Memoized per (session, sf_dir): when ``sf_dir`` is given and this
-    session's ta14 relations were already trained on the SAME sf_dir, the
-    call is a metadata no-op — a multi-query session
-    (pipe06→pipe11→pipe12→ta14) pays the ~30-job training once instead of
-    four times. ``sf_dir=None`` (tests that register a hand-built
-    ``documents`` view) always retrains, since the corpus identity is
-    unknowable then."""
-    memo = getattr(spark, TA14_MEMO_ATTR, None)
-    if sf_dir is not None and memo is not None and memo[0] == sf_dir:
-        return memo[1]
-    setattr(spark, TA14_MEMO_ATTR, None)
-    swc = spark.sql(_TA14_SWC_SPARK).localCheckpoint(eager=True)
-    cur = spark.sql(_TA14_S0_SPARK, swc=swc).localCheckpoint(eager=True)
+    Every call trains over the session's ``documents`` view. The
+    checkpoints belong to the calling builder and are freed when the next
+    registered builder on the session starts, so nothing trained here
+    outlives one query."""
+    swc = checkpoint(spark.sql(_TA14_SWC_SPARK), eager=True)
+    cur = checkpoint(spark.sql(_TA14_S0_SPARK, swc=swc), eager=True)
     # r11 shape (same rework as ta09): per merge, ONE TakeOrdered job
     # collects the 1-row argmax and the merge is applied as a LITERAL
     # projection — the spelling chain is a linear stack of fused replaces
@@ -1704,12 +1687,10 @@ def ta14_vocab(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Data
             cur = _ta09_apply_lit(cur, got[0]["pa"], got[0]["pb"])
         else:  # degenerate fully-merged corpus: empty b emptied later stages
             cur = cur.limit(0)
-    vocab = spark.sql(
+    vocab = checkpoint(spark.sql(
         "SELECT word, size(split(sp, '··')) AS n_sub FROM {s}", s=cur
-    ).localCheckpoint(eager=True)
-    rels = {"swc": swc, "s_final": cur, "vocab": vocab}
-    setattr(spark, TA14_MEMO_ATTR, (sf_dir, rels))
-    return rels
+    ), eager=True)
+    return {"swc": swc, "s_final": cur, "vocab": vocab}
 
 
 @query("ta14_bpe_encode", oracle=_TA14_DUCK, tags=("text", "tokenizer", "encode", "serve"))
@@ -1723,5 +1704,5 @@ def ta14_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ever re-shuffled. Closes the train→apply loop the r7 verdict flagged
     (ta09 trained merges nothing consumed; ss11→ss12 is the PQ analog)."""
     register_views(spark, sf_dir)
-    rels = ta14_vocab(spark, sf_dir)
+    rels = ta14_vocab(spark)
     return spark.sql(_TA14_TAIL_SPARK, swc=rels["swc"], s_final=rels["s_final"])

@@ -81,11 +81,7 @@ def main() -> int:
         qs = {n: qs[n] for n in keep}
     fails: list[str] = []
     t0 = time.time()
-    for qi, name in enumerate(sorted(qs)):
-        # ContextCleaner only frees old shuffle state when the driver GCs
-        # (see bench.py) — keep the session clean across the 70+ queries
-        if qi % 6 == 5:
-            spark.sparkContext._jvm.System.gc()
+    for name in sorted(qs):
         try:
             sdf = qs[name](spark, SF_DIR)
             if name not in oracles:

@@ -1,10 +1,12 @@
 """Registry contract invariants: unique bench prefixes, a docstring and
-builder per query, and the bench artifact line fitting its capture
-window at the live registry size."""
+builder per query, the bench artifact line fitting its capture window at
+the live registry size, and registered builders freeing the previous
+builder's checkpoints on the same session (and only that session)."""
 
 from __future__ import annotations
 
-from db_converter_spark.registry import all_queries
+from db_converter_spark.registry import all_queries, scoped_conf
+from tests.conftest import SF_DIR, assert_oracle_match
 
 
 def test_compact_bench_prefixes_unique():
@@ -78,16 +80,55 @@ def test_every_query_has_doc_and_builder():
         assert callable(spec.builder)
 
 
-def test_bench_heavy_set_names_are_real():
-    """bench.py GCs after the queries in its `heavy` set — a renamed query
-    would silently stop getting its post-query GC and its shuffle state
-    would inflate the next five queries' numbers."""
-    import re
-    from pathlib import Path
 
-    src = Path(__file__).resolve().parent.parent.joinpath("bench.py").read_text()
-    m = re.search(r"heavy = \{(.*?)\}", src, re.S)
-    heavy = set(re.findall(r'"([^"]+)"', m.group(1)))
-    assert heavy, "heavy set not found in bench.py"
-    unknown = heavy - set(all_queries())
-    assert not unknown, f"bench.py heavy set names not in registry: {unknown}"
+def _cached_rdd_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_next_builder_frees_previous_checkpoints(spark, duck):
+    """ta14 trains a BPE vocab through ~18 checkpoints, and pipe06 trains
+    its own: entering pipe06's builder drops every block ta14 left cached,
+    and both results still match their oracles."""
+    qs = all_queries()
+    session = spark.newSession()
+    before = _cached_rdd_ids(session)
+    ta14 = qs["ta14_bpe_encode"]
+    assert_oracle_match(ta14.builder(session, SF_DIR), duck, ta14.oracle, ta14.name)
+    ta14_ids = _cached_rdd_ids(session) - before
+    assert ta14_ids, "ta14 should leave checkpoint blocks until the next builder"
+
+    pipe06 = qs["pipe06_token_budget"]
+    df = pipe06.builder(session, SF_DIR)
+    assert not ta14_ids & _cached_rdd_ids(session), "ta14's blocks outlived pipe06's entry"
+    assert_oracle_match(df, duck, pipe06.oracle, pipe06.name)
+
+
+def test_release_is_per_session(spark, duck):
+    """A builder on another session leaves an unconsumed result's blocks
+    alone; the next builder on the result's own session frees them."""
+    qs = all_queries()
+    s1 = spark.newSession()
+    before = _cached_rdd_ids(s1)
+    dd10 = qs["dd10_lsh_jaccard_verify"]
+    held = dd10.builder(s1, SF_DIR)  # not consumed yet
+    dd10_ids = _cached_rdd_ids(s1) - before
+    assert dd10_ids
+
+    qs["q01_pricing_summary"].builder(s1.newSession(), SF_DIR).collect()
+    assert_oracle_match(held, duck, dd10.oracle, dd10.name)
+
+    qs["q01_pricing_summary"].builder(s1, SF_DIR).collect()
+    assert not dd10_ids & _cached_rdd_ids(s1)
+
+
+def test_scoped_conf_restores_or_unsets(spark):
+    key = "spark.sql.constraintPropagation.enabled"
+    session = spark.newSession()
+    assert session.conf.get(key, None) is None
+    with scoped_conf(session, key, "false"):
+        assert session.conf.get(key) == "false"
+    assert session.conf.get(key, None) is None  # unset again, not pinned
+    session.conf.set(key, "true")
+    with scoped_conf(session, key, "false"):
+        assert session.conf.get(key) == "false"
+    assert session.conf.get(key) == "true"
