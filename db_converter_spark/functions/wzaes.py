@@ -98,7 +98,7 @@ def write_aes_zip(
     records: list[tuple[str, int, int, int]] = []  # name, usize, payload_len, offset
     for name, content in files:
         nb = name.encode()
-        comp = zlib.compressobj(9, zlib.DEFLATED, -15)
+        comp = zlib.compressobj(zlib.Z_DEFAULT_COMPRESSION, zlib.DEFLATED, -15)
         deflated = comp.compress(content) + comp.flush()
         salt = salt_fn(name) if salt_fn else os.urandom(_SALT_LEN)
         payload = _seal(deflated, password_b, salt)

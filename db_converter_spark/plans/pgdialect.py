@@ -1,4 +1,4 @@
-"""PostgreSQL → Spark SQL dialect rewriter (SURVEY §4.3 item 1).
+r"""PostgreSQL → Spark SQL dialect rewriter (SURVEY §4.3 item 1).
 
 The reference ships SQL packets written for PostgreSQL and hands them to the
 server verbatim (reference: dbccore/dbccore.py:852-865). Our engine executes
@@ -35,14 +35,29 @@ PG-isms so reference-style packets run unmodified:
 - ``DO $$…$$`` blocks raise :class:`UnsupportedConstruct` directing authors
   to a ``.py`` step — the design decision of SURVEY §2.10.
 
-The rewriter is token-safe: string literals, quoted identifiers, and
-comments are sentinel-protected before any pass runs, so nothing inside
-quotes is ever rewritten.
+The rewriter is token-safe: before any pass runs, every span of
+``sqlsplit.lex`` read as PostgreSQL text is replaced by a sentinel, so
+nothing inside quotes, comments or dollar bodies is ever rewritten. At the
+end each span is respelled for Spark:
+
+    span            PostgreSQL text (input)         Spark SQL text (output)
+    --------------  ------------------------------  ------------------------
+    -- ..., /*...*/ comment; /* */ nests            kept
+    '...'           '' doubles; \ is a character    '...', every \ doubled
+    E'...'          '' doubles; \ escapes           '...' (E dropped)
+    "..."           identifier; "" doubles          `...`
+    `...`           identifier; `` doubles          kept
+    $tag$...$tag$   body; tag empty or identifier   kept
+
+Passes find brackets, top-level commas and top-level keywords with the
+``sqlsplit`` bracket helpers over the protected text.
 """
 
 from __future__ import annotations
 
 import re
+
+from db_converter_spark.plans.sqlsplit import close_bracket, find_top, lex, split_top
 
 __all__ = ["rewrite", "UnsupportedConstruct"]
 
@@ -111,69 +126,16 @@ def _map_type(pg_type: str) -> str:
 
 
 def _protect(sql: str) -> tuple[str, list[str]]:
-    """Replace strings / quoted idents / comments / dollar-quotes with
-    ``\\x01<i>\\x01`` sentinels (same scanner rules as sqlsplit)."""
+    """Replace every :func:`~db_converter_spark.plans.sqlsplit.lex` span of
+    PostgreSQL text with a ``\\x01<i>\\x01`` sentinel; ``lits[i]`` keeps
+    the span's text."""
     lits: list[str] = []
-    out: list[str] = []
-    i, n = 0, len(sql)
-
-    def keep(seg: str) -> None:
-        out.append(_SENT.format(len(lits)))
-        lits.append(seg)
-
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if ch == "-" and nxt == "-":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            keep(sql[i:j])
-            i = j
-        elif ch == "/" and nxt == "*":
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if sql.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
-                elif sql.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
-                else:
-                    j += 1
-            keep(sql[i:j])
-            i = j
-        elif ch == "'" or (ch in "eE" and nxt == "'"):
-            j = i + (2 if ch in "eE" else 1)
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                if sql[j] == "\\" and ch in "eE":
-                    j += 2
-                    continue
-                j += 1
-            keep(sql[i:j])
-            i = j
-        elif ch == '"':
-            j = sql.find('"', i + 1)
-            j = n if j < 0 else j + 1
-            keep(sql[i:j])
-            i = j
-        elif ch == "$":
-            m = re.match(r"\$[A-Za-z_]*\$", sql[i:])
-            if m:
-                tag = m.group(0)
-                j = sql.find(tag, i + len(tag))
-                j = n if j < 0 else j + len(tag)
-                keep(sql[i:j])
-                i = j
-            else:
-                out.append(ch)
-                i += 1
-        else:
-            out.append(ch)
-            i += 1
+    out, pos = [], 0
+    for a, b in lex(sql):
+        out += (sql[pos:a], _SENT.format(len(lits)))
+        lits.append(sql[a:b])
+        pos = b
+    out.append(sql[pos:])
     return "".join(out), lits
 
 
@@ -199,36 +161,17 @@ def _lit_value(tok: str, lits: list[str]) -> str:
 
 def _find_call(text: str, name: str, start: int = 0) -> tuple[int, int, int] | None:
     """Locate ``name ( … )`` → (name_start, args_start, close_paren_idx)."""
-    pat = re.compile(rf"(?<![\w.])({name})\s*\(", re.I)
-    m = pat.search(text, start)
+    m = re.compile(rf"(?<![\w.])({name})\s*\(", re.I).search(text, start)
     if not m:
         return None
-    depth, j = 1, m.end()
-    while j < len(text) and depth:
-        if text[j] == "(":
-            depth += 1
-        elif text[j] == ")":
-            depth -= 1
-        j += 1
-    return m.start(), m.end(), j - 1
+    return m.start(), m.end(), close_bracket(text, m.end())
 
 
 def _split_args(argtext: str) -> list[str]:
-    args, depth, buf = [], 0, []
-    for ch in argtext:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    tail = "".join(buf).strip()
-    if tail:
-        args.append(tail)
-    return args
+    """Top-level comma-separated arguments, stripped; an empty last one is
+    dropped."""
+    args = [argtext[a:b].strip() for a, b in split_top(argtext)]
+    return args if args[-1] else args[:-1]
 
 
 def _rewrite_calls(text: str, name: str, fn) -> str:
@@ -276,9 +219,8 @@ def _rw_from_srf_alias(text: str) -> str:
         m = _FROM_SRF_RE.search(text, pos)
         if not m:
             return text
-        open_idx = text.index("(", m.end() - 1)
-        close = _match_paren(text, open_idx)
-        args = text[open_idx + 1 : close]
+        close = close_bracket(text, m.end())
+        args = text[m.end() : close]
         am = re.match(
             r"\s*(?:as\s+)?([A-Za-z_]\w*)(\s*\(\s*([A-Za-z_]\w*)\s*\))?",
             text[close + 1 :],
@@ -510,45 +452,25 @@ _KEYWORDS = frozenset(
 def _rw_array_ctor(text: str) -> str:
     """PG ``ARRAY[a, b, c]`` constructor → Spark ``array(a, b, c)``
     (reference: dba_top_tables/01_step.sql ``ARRAY['pg_catalog'::name, …]``).
-    Bracket-matching scan; nested constructors resolve on repeat passes."""
-    while True:
-        m = re.search(r"\barray\s*\[", text, re.I)
-        if not m:
-            return text
-        depth, j = 1, m.end()
-        while j < len(text) and depth:
-            if text[j] == "[":
-                depth += 1
-            elif text[j] == "]":
-                depth -= 1
-            j += 1
-        inner = text[m.end() : j - 1]
-        text = text[: m.start()] + f"array({inner})" + text[j:]
+    Nested constructors resolve on repeat passes."""
+    while m := re.search(r"\barray\s*\[", text, re.I):
+        j = close_bracket(text, m.end())
+        text = text[: m.start()] + f"array({text[m.end() : j]})" + text[j + 1 :]
+    return text
 
 
 def _rw_any(text: str) -> str:
     """``x = ANY(arr)`` → ``array_contains(arr, x)``; ``x <> ALL(arr)`` →
     ``NOT array_contains(arr, x)`` (SURVEY §2.3)."""
-    while True:
-        m = re.search(
-            rf"({_OPERAND})\s*(=\s*any|<>\s*all|!=\s*all)\s*\(", text, re.I
-        )
-        if not m:
-            return text
-        depth, j = 1, m.end()
-        while j < len(text) and depth:
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-            j += 1
-        arr = text[m.end() : j - 1]
+    while m := re.search(rf"({_OPERAND})\s*(=\s*any|<>\s*all|!=\s*all)\s*\(", text, re.I):
+        j = close_bracket(text, m.end())
         neg = "" if m.group(2).lower().startswith("=") else "NOT "
         text = (
             text[: m.start()]
-            + f"{neg}array_contains({arr}, {m.group(1)})"
-            + text[j:]
+            + f"{neg}array_contains({text[m.end() : j]}, {m.group(1)})"
+            + text[j + 1 :]
         )
+    return text
 
 
 # an operand that may carry a PG array-cast suffix ('{a,b}'::text[]), which
@@ -612,6 +534,15 @@ def _rw_alter_options(text: str, lits: list[str]) -> str:
     return text
 
 
+_MIRROR = str.maketrans("()[]", ")(][")
+
+
+def _open_paren(text: str) -> int:
+    """Index of the bracket that the ``)`` ending ``text`` closes (0 when
+    unbalanced): the matching close bracket in the mirrored text."""
+    return max(0, len(text) - 1 - close_bracket(text[::-1].translate(_MIRROR), 1))
+
+
 def _rw_casts(text: str, lits: list[str]) -> str:
     """``expr::type`` → ``CAST(expr AS type)`` with special interval/array
     literal forms. Handles identifier, literal-sentinel, and ``(...)``/
@@ -637,19 +568,10 @@ def _rw_casts(text: str, lits: list[str]) -> str:
         left_end = m.start()
         seg = text[:left_end]
         if seg.rstrip().endswith(")"):
-            j = len(seg.rstrip()) - 1
-            depth = 1
-            k = j - 1
-            while k >= 0 and depth:
-                if seg[k] == ")":
-                    depth += 1
-                elif seg[k] == "(":
-                    depth -= 1
-                k -= 1
+            start = _open_paren(seg.rstrip())
             # include a preceding function name if present (but never a SQL
             # keyword — "select (a+b)::text" has no function call)
-            fn = re.search(r"[\w.\x01]+\s*$", seg[: k + 1])
-            start = k + 1
+            fn = re.search(r"[\w.\x01]+\s*$", seg[:start])
             if fn and fn.group(0).strip().lower() not in _KEYWORDS:
                 start = fn.start()
             operand = seg[start:].rstrip()
@@ -745,14 +667,8 @@ def _rw_types_ddl(text: str) -> str:
     m = re.search(r"\bcreate\s+table\b[^(]*\(", text, re.I)
     if not m:
         return text
-    depth, j = 1, m.end()
-    while j < len(text) and depth:
-        if text[j] == "(":
-            depth += 1
-        elif text[j] == ")":
-            depth -= 1
-        j += 1
-    body = text[m.end() : j - 1]
+    j = close_bracket(text, m.end())
+    body = text[m.end() : j]
 
     def map_types(segment: str) -> str:
         # parameterized varchar(n)/char(n) are valid Spark DDL — only the
@@ -784,7 +700,7 @@ def _rw_types_ddl(text: str) -> str:
             out_defs.append(lead + map_types(head))
         else:
             out_defs.append(lead + ident + first.group(2) + map_types(first.group(3)))
-    return text[: m.end()] + ", ".join(s.strip() for s in out_defs) + text[j - 1 :]
+    return text[: m.end()] + ", ".join(s.strip() for s in out_defs) + text[j:]
 
 
 _INTERVAL_UNIT = {
@@ -811,7 +727,7 @@ def _rw_interval_cmp_literals(text: str, lits: list[str]) -> str:
     """PG auto-casts the string in ``interval_expr > '15 days'`` /
     ``>= '00:00:00.000001'``; Spark does not — spell the RHS as an interval
     literal. Heuristic on the literal SHAPE (duration words / hh:mm:ss).
-    Runs on the protected form (ADVICE r3): only real single-quoted SQL
+    Runs on the protected form: only real single-quoted SQL
     literals directly after an ordering op are candidates — text inside
     comments or other strings is already sentineled away and untouched."""
 
@@ -844,47 +760,22 @@ def _rw_select_into(text: str) -> str:
     INTO are untouched."""
     if not _SELECT_INTO_RE.match(text):
         return text
-    depth = 0
-    for m in re.finditer(r"[()]|\binto\b|\bfrom\b", text, re.I):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0 and tok.lower() == "from":
-            return text  # reached FROM before any top-level INTO
-        elif depth == 0:
-            tm = re.match(
-                r"into\s+(?:temp(?:orary)?\s+|unlogged\s+)?([\w.`\x01]+)",
-                text[m.start() :],
-                re.I,
-            )
-            if tm is None:
-                return text
-            table = tm.group(1)
-            rest = text[m.start() + tm.end() :]
-            return (
-                f"CREATE TABLE {table} AS {text[: m.start()].rstrip()} {rest.lstrip()}"
-            )
-    return text
+    m = find_top(text, r"\binto\b|\bfrom\b")
+    if m is None or m[0].lower() == "from":
+        return text  # no top-level INTO before FROM
+    tm = re.match(
+        r"into\s+(?:temp(?:orary)?\s+|unlogged\s+)?([\w.`\x01]+)", text[m.start() :], re.I
+    )
+    if tm is None:
+        return text
+    rest = text[m.start() + tm.end() :]
+    return f"CREATE TABLE {tm.group(1)} AS {text[: m.start()].rstrip()} {rest.lstrip()}"
 
 
 _DISTINCT_ON_RE = re.compile(r"(?<![\w.])select\s+distinct\s+on\s*\(", re.I)
-_DON_BOUND_RE = re.compile(
-    r"\b(order\s+by|limit|offset|group\s+by|having|union|intersect|except)\b",
-    re.I,
-)
-
-
-def _match_paren(text: str, open_idx: int) -> int:
-    depth, j = 1, open_idx + 1
-    while j < len(text) and depth:
-        if text[j] == "(":
-            depth += 1
-        elif text[j] == ")":
-            depth -= 1
-        j += 1
-    return j - 1
+_DON_BOUND = r"(?<![\w.])(?:order\s+by|limit|offset|group\s+by|having|union|intersect|except)\b"
+# a FROM keyword, not the tail of a name
+_FROM_KW = r"(?<![\w.])from\b"
 
 
 def _rw_distinct_on(text: str) -> str:
@@ -903,56 +794,30 @@ def _rw_distinct_on(text: str) -> str:
         m = _DISTINCT_ON_RE.search(text)
         if m is None:
             return text
-        kclose = _match_paren(text, m.end() - 1)
+        kclose = close_bracket(text, m.end())
         keys = text[m.end() : kclose].strip()
         # select list: kclose+1 .. top-level FROM
-        depth, j, from_start = 0, kclose + 1, None
-        while j < len(text):
-            ch = text[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    break
-            elif depth == 0 and ch in "fF" and re.match(r"from\b", text[j:], re.I):
-                if not re.search(r"[\w.]$", text[j - 1 : j]):
-                    from_start = j
-                    break
-            j += 1
-        if from_start is None:
+        fm = find_top(text, _FROM_KW, kclose + 1)
+        if fm is None:
             raise UnsupportedConstruct("DISTINCT ON without a FROM clause")
+        from_start = fm.start()
         sel_list = text[kclose + 1 : from_start].strip()
-        # walk the body: FROM+WHERE part, then ORDER BY / LIMIT-OFFSET tail
-        depth, j = 0, from_start
-        ob_start = tail_start = body_end = None
-        while j < len(text):
-            ch = text[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    body_end = j
-                    break
-            elif depth == 0:
-                km = _DON_BOUND_RE.match(text, j)
-                if km and not re.search(r"[\w.]$", text[j - 1 : j]):
-                    kw = km.group(1).lower().split()[0]
-                    if kw in ("group", "having", "union", "intersect", "except"):
-                        raise UnsupportedConstruct(
-                            f"DISTINCT ON combined with {km.group(1).upper()} has"
-                            " no mechanical rewrite — restructure the query"
-                        )
-                    if kw == "order" and ob_start is None:
-                        ob_start = j
-                    elif kw in ("limit", "offset") and tail_start is None:
-                        tail_start = j
-                    j += len(km.group(1))
-                    continue
-            j += 1
-        if body_end is None:
-            body_end = len(text)
+        # the body: FROM+WHERE part, then ORDER BY / LIMIT-OFFSET tail
+        body_end = close_bracket(text, from_start)
+        ob_start = tail_start = None
+        pos = from_start
+        while km := find_top(text, _DON_BOUND, pos, body_end):
+            kw = km[0].lower().split()[0]
+            if kw in ("group", "having", "union", "intersect", "except"):
+                raise UnsupportedConstruct(
+                    f"DISTINCT ON combined with {km[0].upper()} has"
+                    " no mechanical rewrite — restructure the query"
+                )
+            if kw == "order" and ob_start is None:
+                ob_start = km.start()
+            elif kw in ("limit", "offset") and tail_start is None:
+                tail_start = km.start()
+            pos = km.end()
         fw_end = ob_start if ob_start is not None else (tail_start if tail_start is not None else body_end)
         from_where = text[from_start:fw_end].rstrip()
         ob_end = tail_start if tail_start is not None else body_end
@@ -981,10 +846,9 @@ def _rw_distinct_on(text: str) -> str:
     return text
 
 
-_SRF_CLAUSE_END_RE = re.compile(
-    r"\b(where|group\s+by|having|qualify|window|order\s+by|limit"
-    r"|union|intersect|except)\b",
-    re.I,
+_SRF_CLAUSE_END = (
+    r"(?<![\w.])(?:where|group\s+by|having|qualify|window|order\s+by|limit"
+    r"|union|intersect|except)\b"
 )
 
 
@@ -994,36 +858,13 @@ def _hoist_in_select(text: str, list_start: int, counter: int):
     or None when this select needs no hoist."""
     m = re.match(r"\s*(distinct\s+|all\s+)?", text[list_start:], re.I)
     items_start = list_start + m.end()
-    # find the top-level FROM terminating the select list
-    depth, j, from_start = 0, items_start, None
-    while j < len(text):
-        ch = text[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None  # select list closed with no FROM → nothing to attach
-        elif depth == 0 and ch in "fF" and re.match(r"from\b", text[j:], re.I):
-            if not re.search(r"[\w.]$", text[j - 1 : j]):
-                from_start = j
-                break
-        j += 1
-    if from_start is None:
+    # the top-level FROM terminating the select list; none when the select
+    # closes first → nothing to attach
+    fm = find_top(text, _FROM_KW, items_start)
+    if fm is None:
         return None
-    # split select items at top-level commas
-    spans, depth, s = [], 0, items_start
-    for k in range(items_start, from_start):
-        ch = text[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            spans.append((s, k))
-            s = k + 1
-    spans.append((s, from_start))
-    for a, b in spans:
+    from_start = fm.start()
+    for a, b in split_top(text, items_start, from_start):
         hit = _find_call(text[a:b], "explode")
         if hit is None:
             continue
@@ -1038,23 +879,8 @@ def _hoist_in_select(text: str, list_start: int, counter: int):
         var, view = f"__srf_c{counter}", f"__srf_v{counter}"
         # insertion point: end of the FROM relations (before the first
         # top-level WHERE/GROUP BY/... or the select's closing paren/end)
-        depth, j = 0, from_start + 4
-        ins = len(text)
-        while j < len(text):
-            ch = text[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    ins = j
-                    break
-            elif depth == 0:
-                km = _SRF_CLAUSE_END_RE.match(text, j)
-                if km and not re.search(r"[\w.]$", text[j - 1 : j]):
-                    ins = j
-                    break
-            j += 1
+        km = find_top(text, _SRF_CLAUSE_END, from_start + 4)
+        ins = km.start() if km else close_bracket(text, from_start + 4)
         new_item = text[a : a + cs] + var + text[a + ce + 1 : b]
         return (
             text[:a]

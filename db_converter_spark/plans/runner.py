@@ -107,7 +107,8 @@ class RunContext:
         self.read_only = read_only
         # "postgres" → run each statement through the PG→Spark rewriter so
         # reference-style packets execute unmodified (meta_data.json key
-        # ``dialect``; SURVEY §7.1 L2 dialect level)
+        # ``dialect``; SURVEY §7.1 L2 dialect level). Actions are split
+        # under the same dialect's lexer rules (plans/sqlsplit.lex).
         self.dialect = packet.meta.get("dialect", "spark")
         # no_commit = dry-run: queries run; routed DML SHADOW-EXECUTES into
         # the noop sink and reports its would-be rowcount (the Spark analog
@@ -911,7 +912,7 @@ class PacketRunner:
             for mc in maints:
                 _run_maint(ctx, mc)
             try:
-                stmts = split_statements(action_sql)
+                stmts = split_statements(action_sql, ctx.dialect)
                 if ctx.export_dir and stmts and all(statement_kind(s) == "query" for s in stmts):
                     files = ctx.export(stmts)
                     ctx.current_step_results.append([["exported"], *[[f] for f in files]])

@@ -1,24 +1,44 @@
-"""Statement splitting and classification.
+r"""Statement splitting and classification, over one SQL lexer.
 
-The reference leans on sqlparse for splitting (reference:
-dbccore/dbccore.py:852) and on token sniffing for DML/DDL detection
-(reference: dbccore/dbccore.py:728-738). sqlparse isn't available here, so
-this is a small from-scratch splitter that understands:
+The reference sends every packet file through one tokenizer,
+``sqlparse.split`` (reference: dbccore/dbccore.py:852), and sniffs tokens to
+tell DML from DDL (reference: dbccore/dbccore.py:728-738). Here
+:func:`lex` is that tokenizer: one pass that yields the span of every
+comment, string literal, quoted identifier and dollar body. Splitting,
+masking, comment stripping and the PG rewriter's literal protection
+(``pgdialect._protect``) all read its spans and keep no quote rule of their
+own. Its rules, where only a backslash in a plain literal depends on the
+dialect:
 
-- single quotes (with '' escapes), double-quoted identifiers
-- line comments ``--`` and block comments ``/* ... */`` (nested OK)
-- PG dollar-quoting ``$$ .. $$`` / ``$tag$ .. $tag$`` (packet SQL uses it
-  for DO blocks; we split around them correctly even though DO blocks are
-  handled by py-steps per SURVEY §2.10)
+    span          PostgreSQL text                 Spark SQL text
+    ------------  ------------------------------  ----------------------
+    -- ...        comment to the end of the line  same
+    /* ... */     comment; nests                  same
+    '...'         '' doubles; \ is a character    '' doubles; \ escapes
+    E'...'        '' doubles; \ escapes           same
+    "..."         identifier; "" doubles          same
+    `...`         identifier; `` doubles          same
+    $tag$...$tag$ body; tag empty or identifier   same
 
-It also owns the accepted PG DML grammar: :func:`parse_dml` is the one place
-an INSERT / UPDATE / DELETE statement is read from text. The runner, the
-sequence layer and the RETURNING capture all consume its :class:`Dml`.
+``E`` and ``$`` open a span only where no identifier character precedes
+them. An unterminated span runs to the end of the text. The dialect is the
+text's, which the caller knows: PG-dialect packets and live-PG targets are
+PostgreSQL text, the rewriter's output is Spark SQL text.
+
+Over text whose spans are masked (:func:`mask_strings`) or protected, the
+bracket helpers :func:`find_top`, :func:`close_bracket` and
+:func:`split_top` read paren depth for this module and ``pgdialect``.
+
+This module also owns the accepted PG DML grammar: :func:`parse_dml` is the
+one place an INSERT / UPDATE / DELETE statement is read from text. The
+runner, the sequence layer and the RETURNING capture all consume its
+:class:`Dml`.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 _STMT_KIND_RE = re.compile(r"^\s*([a-zA-Z]+)")
@@ -37,153 +57,130 @@ NON_TX_PREFIXES = (
     "drop index concurrently",
 )
 
+# ------------------------------------------------------------------- lexer
 
-def split_statements(sql: str) -> list[str]:
-    """Split a script into individual statements on top-level semicolons."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if ch == "-" and nxt == "-":  # line comment
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            buf.append(sql[i:j])
-            i = j
-            continue
-        if ch == "/" and nxt == "*":  # block comment (nesting per PG)
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if sql.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
-                elif sql.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
-                else:
-                    j += 1
-            buf.append(sql[i:j])
-            i = j
-            continue
-        if ch == "'":  # string literal, '' escapes
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    j += 1
+# where a span opens; an E-string or dollar tag only where no identifier
+# character precedes it
+_OPEN_RE = re.compile(r"--|/\*|(?<![\w$])[eE]'|['\"`]|(?<![\w$])\$(?:[^\W\d]\w*)?\$")
+_NEST_RE = re.compile(r"/\*|\*/")
+
+
+def _close_re(quote: str, backslash: bool) -> re.Pattern:
+    """The rest of a quoted span after its opening ``quote``: doubled quotes
+    (and backslash escapes when ``backslash``), then the closing quote or
+    the end of the text."""
+    q = re.escape(quote)
+    if backslash:
+        return re.compile(rf"[^{q}\\]*(?:(?:\\.|{q}{q})[^{q}\\]*)*(?:{q}|\\?\Z)", re.S)
+    return re.compile(rf"[^{q}]*(?:{q}{q}[^{q}]*)*(?:{q}|\Z)")
+
+
+_CLOSE = {(q, b): _close_re(q, b) for q in "'\"`" for b in (False, True)}
+
+
+def lex(sql: str, dialect: str = "postgres") -> Iterator[tuple[int, int]]:
+    """``(start, end)`` of every comment, string literal, quoted identifier
+    and dollar body in ``sql``, in order (rules in the module docstring).
+    ``dialect`` is ``"postgres"`` or ``"spark"``: only a backslash in a
+    plain ``'…'`` literal tells them apart."""
+    backslash, pos, n = dialect != "postgres", 0, len(sql)
+    while m := _OPEN_RE.search(sql, pos):
+        a, tok = m.start(), m[0]
+        if tok == "--":
+            b = sql.find("\n", a)
+            b = n if b < 0 else b
+        elif tok == "/*":
+            depth, b = 1, n
+            for c in _NEST_RE.finditer(sql, m.end()):
+                depth += 1 if c[0] == "/*" else -1
+                if not depth:
+                    b = c.end()
                     break
-                j += 1
-            buf.append(sql[i:j])
-            i = j
-            continue
-        if ch == '"':  # quoted identifier
-            j = sql.find('"', i + 1)
-            j = n if j < 0 else j + 1
-            buf.append(sql[i:j])
-            i = j
-            continue
-        if ch == "$":  # dollar quoting
-            m = re.match(r"\$[A-Za-z_]*\$", sql[i:])
-            if m:
-                tag = m.group(0)
-                j = sql.find(tag, i + len(tag))
-                j = n if j < 0 else j + len(tag)
-                buf.append(sql[i:j])
-                i = j
-                continue
-        if ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt and _strip_leading_comments(stmt):
-                stmts.append(stmt)
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    # comment-only fragments (e.g. a trailing '-- tx end' marker) are not
-    # statements — the reference's sqlparse splitter drops them too
-    if tail and _strip_leading_comments(tail):
-        stmts.append(tail)
-    return stmts
+        elif tok[0] == "$":
+            b = sql.find(tok, m.end())
+            b = n if b < 0 else b + len(tok)
+        else:
+            escapes = tok[0] in "eE" or (backslash and tok == "'")
+            b = _CLOSE[tok[-1], escapes].match(sql, m.end()).end()
+        yield a, b
+        pos = b
 
 
-def mask_strings(sql: str) -> str:
-    """Same-length copy with string literals, quoted identifiers, comments,
-    and dollar-quoted bodies blanked to spaces. Keyword/operator scanning
-    over the mask maps indices 1:1 onto the original text, so a WHERE or
-    comma INSIDE a literal can never be mistaken for syntax (quote rules
-    identical to :func:`split_statements`)."""
-    out = list(sql)
-    i, n = 0, len(sql)
-
-    def blank(a: int, b: int) -> None:
-        for k in range(a, min(b, n)):
-            if out[k] != "\n":
-                out[k] = " "
-
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if ch == "-" and nxt == "-":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            blank(i, j)
-            i = j
-            continue
-        if ch == "/" and nxt == "*":
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if sql.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
-                elif sql.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
-                else:
-                    j += 1
-            blank(i, j)
-            i = j
-            continue
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            blank(i + 1, j - 1)
-            i = j
-            continue
-        if ch == '"':
-            j = sql.find('"', i + 1)
-            j = n if j < 0 else j + 1
-            blank(i + 1, j - 1)
-            i = j
-            continue
-        if ch == "$":
-            m = re.match(r"\$[A-Za-z_]*\$", sql[i:])
-            if m:
-                tag = m.group(0)
-                j = sql.find(tag, i + len(tag))
-                j = n if j < 0 else j + len(tag)
-                blank(i + len(tag), j - len(tag))
-                i = j
-                continue
-        i += 1
+def mask_strings(sql: str, dialect: str = "spark") -> str:
+    """Same-length copy of ``sql`` with every :func:`lex` span blanked to
+    spaces (newlines kept). Keyword and operator scanning over the mask maps
+    indices 1:1 onto the original text, so a WHERE or comma inside a
+    literal can never be mistaken for syntax. ``dialect`` defaults to Spark
+    SQL: DML is parsed after the PG rewrite."""
+    out, pos = [], 0
+    for a, b in lex(sql, dialect):
+        out += (sql[pos:a], re.sub(r"[^\n]", " ", sql[a:b]))
+        pos = b
+    out.append(sql[pos:])
     return "".join(out)
 
 
+def split_statements(sql: str, dialect: str = "postgres") -> list[str]:
+    """Split a script into statements on the semicolons outside every
+    :func:`lex` span. Comment-only fragments (e.g. a trailing ``-- tx end``
+    marker) are not statements; the reference's sqlparse splitter drops
+    them too."""
+    ends = [m.start() for m in re.finditer(";", mask_strings(sql, dialect))]
+    stmts, start = [], 0
+    for end in [*ends, len(sql)]:
+        stmt = sql[start:end].strip()
+        if _strip_leading_comments(stmt):
+            stmts.append(stmt)
+        start = end + 1
+    return stmts
+
+
 def _strip_leading_comments(stmt: str) -> str:
-    prev = None
-    while prev != stmt:
-        prev = stmt
-        stmt = re.sub(r"^\s*--[^\n]*(\n|$)", "", stmt)
-        stmt = re.sub(r"^\s*/\*.*?\*/", "", stmt, flags=re.S)
-        stmt = stmt.lstrip()
-    return stmt
+    pos = 0
+    for a, b in lex(stmt):
+        if stmt[pos:a].strip() or not stmt.startswith(("--", "/*"), a):
+            break
+        pos = b
+    return stmt[pos:].lstrip()
+
+
+def find_top(text: str, pattern: str, start: int = 0, end: int | None = None) -> re.Match | None:
+    """First case-insensitive match of regex ``pattern`` at bracket depth 0
+    of ``text[start:end]``, or None once a ``)`` or ``]`` closes a bracket
+    opened before ``start``. ``text`` must be masked or protected, and
+    ``pattern`` must not match across a bracket."""
+    scan = re.compile(rf"(?P<hit>{pattern})|[()\[\]]", re.I)
+    depth = 0
+    for m in scan.finditer(text, start, len(text) if end is None else end):
+        if depth == 0 and m.lastgroup == "hit":
+            return m
+        if m[0] in ("(", "["):
+            depth += 1
+        elif m[0] in (")", "]"):
+            if not depth:
+                return None
+            depth -= 1
+    return None
+
+
+def close_bracket(text: str, start: int) -> int:
+    """Index of the ``)`` or ``]`` at or after ``start`` that closes a
+    bracket opened before ``start``, or ``len(text)``; so for an opening
+    bracket at ``i``, ``close_bracket(text, i + 1)`` is its partner."""
+    m = find_top(text, r"[)\]]", start)
+    return len(text) if m is None else m.start()
+
+
+def split_top(text: str, start: int = 0, end: int | None = None) -> list[tuple[int, int]]:
+    """``(start, end)`` spans of ``text[start:end]`` between its commas at
+    bracket depth 0."""
+    end = len(text) if end is None else end
+    spans = []
+    while m := find_top(text, ",", start, end):
+        spans.append((start, m.start()))
+        start = m.end()
+    spans.append((start, end))
+    return spans
 
 
 def statement_kind(stmt: str) -> str:
@@ -344,36 +341,26 @@ def _unquote(name: str) -> str:
 
 def _cut(text: str, pattern: str) -> tuple[str, str | None]:
     """``text`` split around the first case-insensitive, word-bounded match
-    of regex ``pattern`` at paren depth 0 — ``(before, after)``, both
-    stripped — or ``(text, None)``. Matching runs over the literal-masked
-    copy (:func:`mask_strings`), whose indices map 1:1 onto ``text``."""
-    masked = mask_strings(text)
-    for m in re.finditer(rf"\b(?:{pattern})\b", masked, re.I):
-        if masked.count("(", 0, m.start()) == masked.count(")", 0, m.start()):
-            return text[: m.start()].strip(), text[m.end() :].strip()
-    return text.strip(), None
+    of regex ``pattern`` at paren depth 0 of its mask — ``(before,
+    after)``, both stripped — or ``(text, None)``."""
+    m = find_top(mask_strings(text), rf"\b(?:{pattern})\b")
+    if m is None:
+        return text.strip(), None
+    return text[: m.start()].strip(), text[m.end() :].strip()
 
 
 def _split_set_clause(tail: str) -> tuple[dict[str, str], str | None]:
     """Parse ``c1 = e1, c2 = e2 [WHERE p]`` into (column → expression,
-    predicate). Keyword, comma and ``=`` scanning runs over the
-    literal-masked copy, so quoted text never splits a clause."""
+    predicate). Keyword, comma and ``=`` scanning runs over the mask, so
+    quoted text never splits a clause."""
     set_part, predicate = _cut(tail, "where")
     mask = mask_strings(set_part)
-    depth, parts, last = 0, [], 0
-    for i, ch in enumerate(mask):
-        depth += ch == "("
-        depth -= ch == ")"
-        if ch == "," and depth == 0:
-            parts.append(set_part[last:i])
-            last = i + 1
-    parts.append(set_part[last:])
     set_map: dict[str, str] = {}
-    for p in parts:
-        eq = mask_strings(p).find("=")
+    for a, b in split_top(mask):
+        eq = mask.find("=", a, b)
         if eq < 0:
-            raise ValueError(f"cannot parse SET clause item: {p!r}")
-        set_map[p[:eq].strip().strip("`")] = p[eq + 1 :].strip()
+            raise ValueError(f"cannot parse SET clause item: {set_part[a:b]!r}")
+        set_map[set_part[a:eq].strip().strip("`")] = set_part[eq + 1 : b].strip()
     return set_map, predicate
 
 

@@ -49,26 +49,26 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-# checkpoint RDDs (py4j handles) recorded by the wrapped builder running
-# on this thread; None outside one
+# ids of the checkpoint RDDs recorded by the wrapped builder running on
+# this thread; None outside one
 _running = threading.local()
-# session UUID -> checkpoint RDDs recorded by its last wrapped builder;
+# session UUID -> checkpoint RDD ids recorded by its last wrapped builder;
 # every access is one dict operation, atomic under the GIL
-_held: dict[str, list] = {}
+_held: dict[str, list[int]] = {}
 
 
 def checkpoint(
     df: DataFrame, eager: bool = True, storage_level: StorageLevel | None = None
 ) -> DataFrame:
     """``df.localCheckpoint`` whose blocks the next registered builder on
-    the same session frees. The handle kept is the analyzed plan's
-    ``LogicalRDD`` RDD: on Spark 4.1 it is the only one whose
-    ``unpersist`` drops the blocks (``df.unpersist()`` and
-    ``df.rdd.unpersist()`` leave them cached)."""
+    the same session frees. The id kept is that of the analyzed plan's
+    ``LogicalRDD`` RDD: on Spark 4.1 it is the only RDD whose blocks hold
+    the checkpoint (``df.unpersist()`` and ``df.rdd.unpersist()`` leave
+    them cached)."""
     out = df.localCheckpoint(eager=eager, storageLevel=storage_level)
     held = getattr(_running, "held", None)
     if held is not None:
-        held.append(out._jdf.queryExecution().analyzed().rdd())
+        held.append(out._jdf.queryExecution().analyzed().rdd().id())
     return out
 
 
@@ -89,13 +89,15 @@ def scoped_conf(spark: SparkSession, key: str, value) -> Iterator[None]:
 
 def _releasing(fn: Builder) -> Builder:
     """Wrap a raw builder: free what the previous wrapped builder on this
-    session checkpointed, then record what this one checkpoints."""
+    session checkpointed, then record what this one checkpoints. Blocks are
+    freed through ``SparkContext.unpersistRDD``, the call ``RDD.unpersist``
+    makes after it logs a "was locally checkpointed" WARN per RDD."""
 
     @functools.wraps(fn)
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
         key = spark._jsparkSession.sessionUUID()
-        for rdd in _held.pop(key, ()):
-            rdd.unpersist(True)
+        for rdd_id in _held.pop(key, ()):
+            spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)
         _running.held = held = []
         try:
             return fn(spark, sf_dir)

@@ -264,6 +264,7 @@ class PgRunContext(RunContext):
 
     def __init__(self, server: PgServer, pg_db: str, packet, db_name: str):
         super().__init__(None, db_name, packet, read_only=False)
+        self.dialect = "postgres"  # the server reads every statement as PG text
         self.server = server
         self.pg_db = pg_db
 

@@ -21,7 +21,6 @@ Writes SCALE_PROBE.json and prints a markdown table for BASELINE.md.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import re
 import time
@@ -97,8 +96,6 @@ def main() -> int:
             spec = qs[name]
             best = float("inf")
             for _ in range(args.runs):
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
                 t0 = time.monotonic()
                 df = spec.builder(spark, sf_dir)
                 # collect(), not count(): count lets Catalyst prune the

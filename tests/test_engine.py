@@ -55,6 +55,37 @@ def test_split_dollar_quoting():
     assert stmts[0].startswith("DO $$")
 
 
+@pytest.mark.parametrize(
+    ("sql", "want"),
+    [
+        # E'…': a backslash escapes the quote
+        ("SELECT E'it\\'s; here' AS a; SELECT 2", ["SELECT E'it\\'s; here' AS a", "SELECT 2"]),
+        # backtick-quoted identifier
+        ("SELECT 1 AS `a;b`; SELECT 2", ["SELECT 1 AS `a;b`", "SELECT 2"]),
+        # a dollar tag may contain digits
+        ("SELECT $fn1$ a; b $fn1$ AS x; SELECT 2", ["SELECT $fn1$ a; b $fn1$ AS x", "SELECT 2"]),
+        # nested comments: the comment-only tail is no statement
+        ("/* a /* b */ c */ SELECT 1; /* x /* y */ z */", ["/* a /* b */ c */ SELECT 1"]),
+    ],
+)
+def test_split_lexer_spans(sql, want):
+    assert split_statements(sql) == want
+
+
+def test_split_backslash_follows_dialect():
+    # Spark SQL escapes with a backslash in a plain literal; PostgreSQL
+    # reads it as a character
+    sql = "SELECT 'a\\'; b' AS x; SELECT 2"
+    assert split_statements(sql, "spark") == ["SELECT 'a\\'; b' AS x", "SELECT 2"]
+    assert split_statements(sql) == ["SELECT 'a\\'", "b' AS x; SELECT 2"]
+
+
+def test_nested_comment_head_is_read_only_query():
+    stmt = "/* a /* b */ c */ SELECT 1"
+    assert statement_kind(stmt) == "query"
+    assert is_read_only_ok(stmt)
+
+
 def test_statement_kind():
     assert statement_kind("-- c\nSELECT 1") == "query"
     assert statement_kind("with x as (select 1) select * from x") == "query"

@@ -9,6 +9,7 @@ import re
 
 import pytest
 
+from db_converter_spark.plans.pgdialect import rewrite
 from db_converter_spark.plans.sqlsplit import parse_dml
 
 # (statement, expected fields; fields not named are not checked)
@@ -152,6 +153,10 @@ _CASES = {
         "update t set a = 1 where b is distinct from c",
         dict(kind="update", predicate="b is distinct from c"),
     ),
+    "backtick_identifier_with_quote": (
+        "DELETE FROM t WHERE `o'k` = 1 RETURNING *",
+        dict(kind="delete", predicate="`o'k` = 1", returning="*"),
+    ),
     "comment_heads_and_semicolon": (
         "-- tx start\n/* block */\n  delete from t where id = 1;",
         dict(kind="delete", statement="delete from t where id = 1", predicate="id = 1"),
@@ -164,6 +169,23 @@ def test_parse_dml(case):
     stmt, want = _CASES[case]
     dml = parse_dml(stmt)
     assert dml is not None
+    assert {k: getattr(dml, k) for k in want} == want
+
+
+@pytest.mark.parametrize(
+    ("pg", "want"),
+    [
+        # E'…' literal: the escaped quote does not end it
+        (
+            "UPDATE t SET a = E'x\\' where b' WHERE id = 1",
+            dict(set_map={"a": "'x\\' where b'"}, predicate="id = 1"),
+        ),
+        # a quote inside a quoted identifier (backtick-quoted by the rewrite)
+        ('UPDATE t SET "it\'s" = 1 WHERE id = 2', dict(set_map={"it's": "1"}, predicate="id = 2")),
+    ],
+)
+def test_parse_dml_of_rewritten_pg(pg, want):
+    dml = parse_dml(rewrite(pg))
     assert {k: getattr(dml, k) for k in want} == want
 
 

@@ -73,6 +73,10 @@ from db_converter_spark.plans.model import ResultCode
         # strings are protected — no rewriting inside literals
         ("select 'a::b ~ now()'", "select 'a::b ~ now()'"),
         ("select x -- c::text\nfrom t", "select x -- c::text\nfrom t"),
+        # dollar bodies are protected whatever their tag
+        ("select $fn1$ a::int $fn1$ as x", "select $fn1$ a::int $fn1$ as x"),
+        # the E of a keyword before a literal is no E'…' prefix
+        ("select case when a then 'x' ELSE'y' end", "select case when a then 'x' ELSE'y' end"),
     ],
 )
 def test_rewrite_unit(pg, spark_sql):

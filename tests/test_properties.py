@@ -9,8 +9,8 @@ import re
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from db_converter_spark.plans.pgdialect import UnsupportedConstruct, rewrite
-from db_converter_spark.plans.sqlsplit import split_statements
+from db_converter_spark.plans.pgdialect import UnsupportedConstruct, _protect, _restore, rewrite
+from db_converter_spark.plans.sqlsplit import mask_strings, split_statements
 
 # identifiers / simple exprs / literals with nasty content
 _ident = st.from_regex(r"[a-z_][a-z0-9_]{0,8}", fullmatch=True)
@@ -62,7 +62,7 @@ def test_rewrite_never_touches_literal_interiors(body):
 @given(st.lists(st.sampled_from(
     ["select a::int8 from t", "select x ~ 'p' from u", "select 2^8",
      "select generate_series(1, 3)", "select now()",
-     # expression-nested SRFs: the r4 auto-hoist must also be stable
+     # expression-nested SRFs: the auto-hoist must also be stable
      "select unnest(a)::int as v from t",
      "select coalesce(unnest(a), 0) as v from t where k > 1",
      "select f(unnest(a)) as x, unnest(b)::text as y from t group by 1"]
@@ -79,12 +79,69 @@ def test_rewrite_is_idempotent_on_its_output(stmts):
 @given(st.text(alphabet=st.characters(codec="ascii", exclude_characters="\x00\x01"), max_size=60))
 @settings(max_examples=300, deadline=None)
 def test_split_and_rewrite_never_crash(garbage):
-    """Total functions over arbitrary ASCII input: clean exceptions only."""
+    """Total functions over arbitrary ASCII input: clean exceptions only;
+    masking and protection keep every character."""
     split_statements(garbage)
+    for dialect in ("postgres", "spark"):
+        assert len(mask_strings(garbage, dialect)) == len(garbage)
+    assert _restore(*_protect(garbage)) == garbage
     try:
         rewrite(garbage)
     except UnsupportedConstruct:
         pass
+
+
+# literal bodies built from every character the lexer rules turn on
+_lexer_body = st.lists(
+    st.sampled_from(["\\", ";", "'", "`", '"', "$x1$", "$$", "--", "/*", "*/", "a", " ", "\n"]),
+    max_size=8,
+).map("".join)
+
+
+def _quoted(body: str, kind: str, dialect: str) -> str:
+    """``body`` spelled as one ``kind`` span of ``dialect`` text."""
+    if kind == "plain" and dialect == "postgres":
+        return "'" + body.replace("'", "''") + "'"
+    if kind in ("plain", "e"):
+        esc = body.replace("\\", "\\\\").replace("'", "\\'")
+        return ("E'" if kind == "e" else "'") + esc + "'"
+    if kind == "ident":
+        return '"' + body.replace('"', '""') + '"'
+    if kind == "backtick":
+        return "`" + body.replace("`", "``") + "`"
+    # dollar body: the first tag that closes exactly after the body
+    tag = next(t for t in (f"$x{i}$" for i in range(10)) if (body + t).find(t) == len(body))
+    return tag + body + tag
+
+
+@st.composite
+def _lexer_script(draw):
+    """(dialect, statements) — each statement holds one span of every kind."""
+    dialect = draw(st.sampled_from(["postgres", "spark"]))
+    stmts = []
+    for i in range(draw(st.integers(1, 4))):
+        items = [
+            f"{_quoted(draw(_lexer_body), kind, dialect)} AS c{j}"
+            for j, kind in enumerate(["plain", "e", "ident", "backtick", "dollar"])
+        ]
+        stmts.append(f"select {', '.join(items)} from t{i}")
+    return dialect, stmts
+
+
+@given(_lexer_script())
+@settings(max_examples=300, deadline=None)
+def test_lexer_rules_round_trip(script):
+    """Under both dialect rules: the split gives the statements back, the
+    mask keeps the length and blanks every quoted ``;``, and protecting
+    then restoring a statement is the identity."""
+    dialect, stmts = script
+    joined = ";\n".join(stmts) + ";"
+    assert split_statements(joined, dialect) == stmts
+    mask = mask_strings(joined, dialect)
+    assert len(mask) == len(joined)
+    assert mask.count(";") == len(stmts)
+    for s in stmts:
+        assert _restore(*_protect(s)) == s
 
 
 _WRAPPERS = ["{srf}", "{srf}::int", "coalesce({srf}, 0)", "f({srf}) + 1"]
