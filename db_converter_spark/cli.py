@@ -27,9 +27,8 @@ import time
 from pathlib import Path
 
 from db_converter_spark.plans.hooks import ChatHook
-from db_converter_spark.plans.ledger import ActionTracker
 from db_converter_spark.plans.model import PacketType, ResultCode
-from db_converter_spark.plans.runner import PacketRunner, render_results
+from db_converter_spark.plans.runner import PacketRunner, open_ledger, render_results
 from db_converter_spark.plans.watchdog import install_sigint_cancel
 
 
@@ -155,15 +154,7 @@ def main(argv: list[str] | None = None, spark=None, confirm=input) -> int:
             return 2
         rc = 0
         for d in dbs:
-            if d in pg_cfgs:
-                # the ledger lives IN the target database (reference:
-                # actiontracker run against the conninfo, db_converter.py)
-                from db_converter_spark.sources.pg_live import PgActionTracker
-
-                c = pg_cfgs[d]
-                tracker = PgActionTracker(c["server"], db=c["db"], schema=c["schema"])
-            else:
-                tracker = ActionTracker(warehouse / d / "dbc_ledger.sqlite")
+            tracker = open_ledger(warehouse, d, pg_cfgs)
             if args.status:
                 for row in tracker.status(args.packet_name):
                     print(d, *row)

@@ -1,16 +1,25 @@
-"""Idempotency ledger — the ActionTracker rebuilt over SQLite.
+"""Idempotency ledger: the reference's ActionTracker over a SQL channel.
 
 The reference keeps four relational tables in each target PostgreSQL
 (``dbc_packets``/``dbc_steps``/``dbc_actions``/``dbc_locks``; reference:
 actiontracker/actiontracker.py:38-95) providing: exactly-once actions (md5
 dedup), packet status, per-packet locks, wipe and status commands.
 
-Here the ledger is driver-side orchestration state (small, transactional,
-per-target) — a local SQLite file per target keeps the same schema and
-semantics. On a shared cluster deployment the same class can point at any
-DB-API target; the engine only needs single-row upserts and lookups.
-(A Delta-table ledger would force a full Spark job per action lookup —
-wrong tool for metadata of this shape.)
+:class:`ActionTracker` writes each ledger statement once, with ``?``
+parameters and ``{p}`` for the table prefix. A backend is a channel that
+runs one statement and returns its rows:
+
+- :class:`SqliteChannel` (this module) holds a SQLite file per Spark
+  target (or ``":memory:"``); each call is one transaction under its
+  thread lock. Its schema adds ``dbc_sequences``, the driver-side home of
+  PG sequences (SURVEY §7.4.6).
+- ``sources/pg_live.PsqlChannel`` runs the statement in the target
+  PostgreSQL through psql, under the configured schema, the deployment
+  shape of the reference (a reference deployment's ledger reads in place).
+
+A read-modify-write is one statement (upsert, ``UPDATE … RETURNING``), so
+two processes sharing a ledger serialize on the backend: the packet lock
+is held iff ``try_lock``'s upsert returns a row.
 """
 
 from __future__ import annotations
@@ -20,6 +29,7 @@ import sqlite3
 import threading
 from datetime import datetime, timezone
 from pathlib import Path
+from typing import Protocol
 
 _SCHEMA = """
 CREATE TABLE IF NOT EXISTS dbc_packets (
@@ -67,135 +77,151 @@ def _now() -> str:
     return datetime.now(timezone.utc).isoformat()
 
 
-class ActionTracker:
-    """Per-target ledger (reference: actiontracker/actiontracker.py)."""
+class Channel(Protocol):
+    """Runs one ledger statement (``?`` parameters) and returns its rows;
+    ``prefix`` qualifies the ``dbc_*`` table names."""
 
-    def __init__(self, ledger_path: str | Path):
-        self.path = str(ledger_path)
-        Path(self.path).parent.mkdir(parents=True, exist_ok=True)
+    prefix: str
+
+    def run(self, sql: str, params: tuple) -> list[tuple]: ...
+
+    def close(self) -> None: ...
+
+
+class SqliteChannel:
+    """A ledger in a SQLite file: every statement, reads included, runs
+    under the thread lock inside its own transaction."""
+
+    prefix = ""
+
+    def __init__(self, path: str | Path):
+        Path(path).parent.mkdir(parents=True, exist_ok=True)
         self._lock = threading.Lock()
-        self._conn = sqlite3.connect(self.path, check_same_thread=False)
+        self._conn = sqlite3.connect(str(path), check_same_thread=False)
         with self._lock, self._conn:
             self._conn.executescript(_SCHEMA)
+
+    def run(self, sql: str, params: tuple = ()) -> list[tuple]:
+        with self._lock, self._conn:
+            return self._conn.execute(sql, params).fetchall()
 
     def close(self) -> None:
         self._conn.close()
 
+
+def _missing(name: str) -> KeyError:
+    return KeyError(f'sequence "{name}" does not exist')
+
+
+class ActionTracker:
+    """Per-target ledger (reference: actiontracker/actiontracker.py) over a
+    channel, or over a SQLite file when given a path."""
+
+    def __init__(self, ledger: str | Path | Channel):
+        self._channel = SqliteChannel(ledger) if isinstance(ledger, (str, Path)) else ledger
+
+    def _run(self, sql: str, *params) -> list[tuple]:
+        return self._channel.run(sql.format(p=self._channel.prefix), params)
+
+    def close(self) -> None:
+        self._channel.close()
+
     # -- packets ----------------------------------------------------------
 
     def upsert_packet(self, name: str, packet_hash: str, meta: dict | None = None) -> int:
-        with self._lock, self._conn:
-            cur = self._conn.execute("SELECT id FROM dbc_packets WHERE name = ?", (name,))
-            row = cur.fetchone()
-            if row:
-                self._conn.execute(
-                    "UPDATE dbc_packets SET status='started', dt=?, packet_hash=? WHERE id=?",
-                    (_now(), packet_hash, row[0]),
-                )
-                return row[0]
-            cur = self._conn.execute(
-                "INSERT INTO dbc_packets(name, status, dt, packet_hash, meta_data)"
-                " VALUES (?, 'started', ?, ?, ?)",
-                (name, _now(), packet_hash, json.dumps(meta or {})),
-            )
-            return cur.lastrowid
+        """A re-run restarts the packet row and replaces its meta."""
+        [(pid,)] = self._run(
+            "INSERT INTO {p}dbc_packets (name, status, dt, packet_hash, meta_data)"
+            " VALUES (?, 'started', ?, ?, ?)"
+            " ON CONFLICT (name) DO UPDATE SET status = 'started', dt = excluded.dt,"
+            " packet_hash = excluded.packet_hash, meta_data = excluded.meta_data"
+            " RETURNING id",
+            name, _now(), packet_hash, json.dumps(meta or {}),
+        )
+        return int(pid)
 
     def dump_packets(self) -> list[tuple]:
         """Ledger rows for the ``dbc_packets`` introspection view — the
         reference's packets SELECT from their own ledger table
-        (reference: packets/test_insert_delete_select/01_step.sql:4); here
-        the ledger is SQLite, so the runner snapshots it into a temp view."""
-        with self._lock:
-            cur = self._conn.execute(
-                "SELECT id, name, status, dt, packet_hash, meta_data FROM dbc_packets"
-            )
-            return [tuple(r) for r in cur.fetchall()]
+        (reference: packets/test_insert_delete_select/01_step.sql:4); the
+        runner snapshots them into a temp view."""
+        return self._run(
+            "SELECT id, name, status, dt, packet_hash, meta_data FROM {p}dbc_packets"
+            " ORDER BY id"
+        )
 
     def packet_hash(self, name: str) -> str | None:
         """For the hash-change guard (reference: dbccore/dbccore.py:449-463)."""
-        cur = self._conn.execute("SELECT packet_hash FROM dbc_packets WHERE name = ?", (name,))
-        row = cur.fetchone()
-        return row[0] if row else None
+        rows = self._run("SELECT packet_hash FROM {p}dbc_packets WHERE name = ?", name)
+        return rows[0][0] if rows else None
 
     def set_packet_status(self, name: str, status: str) -> None:
-        with self._lock, self._conn:
-            self._conn.execute(
-                "UPDATE dbc_packets SET status=?, dt=? WHERE name=?", (status, _now(), name)
-            )
+        self._run(
+            "UPDATE {p}dbc_packets SET status = ?, dt = ? WHERE name = ?",
+            status, _now(), name,
+        )
 
     # -- steps / actions --------------------------------------------------
 
     def upsert_step(self, packet_id: int, step_name: str) -> int:
-        with self._lock, self._conn:
-            cur = self._conn.execute(
-                "SELECT id FROM dbc_steps WHERE packet_id=? AND name=?",
-                (packet_id, step_name),
-            )
-            row = cur.fetchone()
-            if row:
-                self._conn.execute(
-                    "UPDATE dbc_steps SET status='started', dt=? WHERE id=?", (_now(), row[0])
-                )
-                return row[0]
-            cur = self._conn.execute(
-                "INSERT INTO dbc_steps(name, packet_id, status, dt) VALUES (?, ?, 'started', ?)",
-                (step_name, packet_id, _now()),
-            )
-            return cur.lastrowid
+        # dbc_steps has no (packet_id, name) key to upsert on; the packet
+        # lock makes its holder the only writer of these rows
+        rows = self._run(
+            "UPDATE {p}dbc_steps SET status = 'started', dt = ?"
+            " WHERE packet_id = ? AND name = ? RETURNING id",
+            _now(), packet_id, step_name,
+        ) or self._run(
+            "INSERT INTO {p}dbc_steps (name, packet_id, status, dt)"
+            " VALUES (?, ?, 'started', ?) RETURNING id",
+            step_name, packet_id, _now(),
+        )
+        return int(rows[0][0])
 
     def set_step_status(self, step_id: int, status: str, exception_descr: str | None = None) -> None:
-        with self._lock, self._conn:
-            self._conn.execute(
-                "UPDATE dbc_steps SET status=?, dt=?, exception_descr=? WHERE id=?",
-                (status, _now(), exception_descr, step_id),
-            )
+        self._run(
+            "UPDATE {p}dbc_steps SET status = ?, dt = ?, exception_descr = ? WHERE id = ?",
+            status, _now(), exception_descr, step_id,
+        )
 
     def is_action_done(self, packet_id: int, step_id: int, step_hash: str) -> bool:
         """Exactly-once dedup (reference: actiontracker:101-116, dbccore:941-951)."""
-        cur = self._conn.execute(
-            "SELECT 1 FROM dbc_actions WHERE packet_id=? AND step_id=? AND step_hash=?",
-            (packet_id, step_id, step_hash),
-        )
-        return cur.fetchone() is not None
+        return bool(self._run(
+            "SELECT 1 FROM {p}dbc_actions WHERE packet_id = ? AND step_id = ? AND step_hash = ?",
+            packet_id, step_id, step_hash,
+        ))
 
     def apply_action(self, packet_id: int, step_id: int, step_hash: str) -> None:
         """Record a completed action (reference: actiontracker:200-223)."""
-        with self._lock, self._conn:
-            self._conn.execute(
-                "INSERT OR IGNORE INTO dbc_actions(dt, packet_id, step_id, step_hash)"
-                " VALUES (?, ?, ?, ?)",
-                (_now(), packet_id, step_id, step_hash),
-            )
+        self._run(
+            "INSERT INTO {p}dbc_actions (dt, packet_id, step_id, step_hash)"
+            " VALUES (?, ?, ?, ?) ON CONFLICT (packet_id, step_id, step_hash) DO NOTHING",
+            _now(), packet_id, step_id, step_hash,
+        )
 
     # -- locks ------------------------------------------------------------
 
     def try_lock(self, name: str) -> bool:
-        """Per-(target, packet) mutex (reference: actiontracker:118-164)."""
-        with self._lock, self._conn:
-            cur = self._conn.execute("SELECT locked FROM dbc_locks WHERE name=?", (name,))
-            row = cur.fetchone()
-            if row and row[0]:
-                return False
-            self._conn.execute(
-                "INSERT INTO dbc_locks(name, locked, dt) VALUES (?, 1, ?)"
-                " ON CONFLICT(name) DO UPDATE SET locked=1, dt=excluded.dt",
-                (name, _now()),
-            )
-            return True
+        """Per-(target, packet) mutex (reference: actiontracker:118-164).
+        The upsert flips only an unlocked row, so a row comes back iff this
+        caller got the lock; the reference's check-then-set lets two
+        callers both take it."""
+        return bool(self._run(
+            "INSERT INTO {p}dbc_locks (name, locked, dt) VALUES (?, TRUE, ?)"
+            " ON CONFLICT (name) DO UPDATE SET locked = TRUE, dt = excluded.dt"
+            " WHERE {p}dbc_locks.locked = FALSE RETURNING id",
+            name, _now(),
+        ))
 
     def unlock(self, name: str) -> None:
-        with self._lock, self._conn:
-            self._conn.execute(
-                "UPDATE dbc_locks SET locked=0, dt=? WHERE name=?", (_now(), name)
-            )
+        self._run("UPDATE {p}dbc_locks SET locked = FALSE, dt = ? WHERE name = ?", _now(), name)
 
     # -- sequences --------------------------------------------------------
-    # PG sequences re-homed in the ledger (SURVEY §7.4.6): the counter is
-    # driver-side orchestration state exactly like action dedup — small,
-    # transactional, serialized by design (PG serializes nextval too).
-    # Executors never touch it: statements reserve a contiguous BLOCK up
-    # front and distribute base+row_number, so 100 TB inserts cost ONE
-    # counter update, not one per row.
+    # PG sequences re-homed in the SQLite ledger (SURVEY §7.4.6): the
+    # counter is driver-side orchestration state exactly like action dedup —
+    # small, transactional, serialized by design (PG serializes nextval
+    # too). Executors never touch it: statements reserve a contiguous BLOCK
+    # up front and distribute base+row_number, so 100 TB inserts cost ONE
+    # counter update, not one per row. A live-PG target has real sequences.
 
     def seq_create(
         self,
@@ -204,25 +230,18 @@ class ActionTracker:
         increment: int = 1,
         if_not_exists: bool = False,
     ) -> None:
-        with self._lock, self._conn:
-            if if_not_exists:
-                self._conn.execute(
-                    "INSERT OR IGNORE INTO dbc_sequences(name, start_value, increment)"
-                    " VALUES (?, ?, ?)",
-                    (name, start, increment),
-                )
-            else:
-                self._conn.execute(
-                    "INSERT INTO dbc_sequences(name, start_value, increment)"
-                    " VALUES (?, ?, ?)",
-                    (name, start, increment),
-                )
+        created = self._run(
+            "INSERT INTO {p}dbc_sequences (name, start_value, increment) VALUES (?, ?, ?)"
+            " ON CONFLICT (name) DO NOTHING RETURNING name",
+            name, start, increment,
+        )
+        if not created and not if_not_exists:
+            raise ValueError(f'relation "{name}" already exists')
 
     def seq_drop(self, name: str, if_exists: bool = False) -> None:
-        with self._lock, self._conn:
-            cur = self._conn.execute("DELETE FROM dbc_sequences WHERE name=?", (name,))
-            if cur.rowcount == 0 and not if_exists:
-                raise KeyError(f'sequence "{name}" does not exist')
+        if not self._run("DELETE FROM {p}dbc_sequences WHERE name = ? RETURNING name", name):
+            if not if_exists:
+                raise _missing(name)
 
     def seq_alter(
         self,
@@ -232,150 +251,99 @@ class ActionTracker:
         increment: int | None = None,
         owned_by: str | None = None,
     ) -> None:
-        with self._lock, self._conn:
-            cur = self._conn.execute(
-                "SELECT start_value, increment FROM dbc_sequences WHERE name=?",
-                (name,),
-            )
-            row = cur.fetchone()
-            if row is None:
-                raise KeyError(f'sequence "{name}" does not exist')
-            if restart_default:
-                # bare RESTART: PG restarts from the stored START WITH value;
-                # last_value→NULL makes the next nextval return start_value
-                # without touching start_value itself
-                self._conn.execute(
-                    "UPDATE dbc_sequences SET last_value=NULL WHERE name=?",
-                    (name,),
-                )
-            elif restart is not None:
-                # RESTART WITH n: next nextval returns n. PG does NOT change
-                # the sequence's START value here (that's the START clause),
-                # so store last_value=n-increment instead of rewriting start
-                self._conn.execute(
-                    "UPDATE dbc_sequences SET last_value=? WHERE name=?",
-                    (restart - row[1], name),
-                )
-            if increment is not None:
-                self._conn.execute(
-                    "UPDATE dbc_sequences SET increment=? WHERE name=?",
-                    (increment, name),
-                )
-            if owned_by is not None:
-                self._conn.execute(
-                    "UPDATE dbc_sequences SET owned_by=? WHERE name=?",
-                    (owned_by if owned_by.upper() != "NONE" else None, name),
-                )
+        """Bare RESTART (``restart_default``) makes the next nextval return
+        the stored START WITH value (last_value NULL). RESTART WITH n keeps
+        START as PG does: last_value becomes n minus the old increment.
+        OWNED BY NONE clears the owner."""
+        owner = None if owned_by is None or owned_by.upper() == "NONE" else owned_by
+        if not self._run(
+            "UPDATE {p}dbc_sequences SET"
+            " last_value = CASE WHEN ? = 1 THEN NULL"
+            " ELSE COALESCE(? - increment, last_value) END,"
+            " increment = COALESCE(?, increment),"
+            " owned_by = CASE WHEN ? = 1 THEN ? ELSE owned_by END"
+            " WHERE name = ? RETURNING name",
+            int(restart_default), restart, increment, int(owned_by is not None), owner, name,
+        ):
+            raise _missing(name)
 
     def seq_nextval(self, name: str, block: int = 1) -> int:
         """Reserve ``block`` consecutive values; return the FIRST. One
         transactional counter bump regardless of block size."""
         if block < 1:
             raise ValueError("block must be >= 1")
-        with self._lock, self._conn:
-            cur = self._conn.execute(
-                "SELECT last_value, start_value, increment FROM dbc_sequences"
-                " WHERE name=?",
-                (name,),
-            )
-            row = cur.fetchone()
-            if row is None:
-                raise KeyError(f'sequence "{name}" does not exist')
-            last, start, inc = row
-            first = start if last is None else last + inc
-            new_last = first + (block - 1) * inc
-            self._conn.execute(
-                "UPDATE dbc_sequences SET last_value=? WHERE name=?",
-                (new_last, name),
-            )
-            return first
+        rows = self._run(
+            "UPDATE {p}dbc_sequences"
+            " SET last_value = COALESCE(last_value + increment, start_value) + ? * increment"
+            " WHERE name = ? RETURNING last_value, increment",
+            block - 1, name,
+        )
+        if not rows:
+            raise _missing(name)
+        last, inc = rows[0]
+        return last - (block - 1) * inc
 
     def seq_info(self, name: str) -> tuple[int | None, int, int]:
         """(last_value, start_value, increment) — raises on unknown name."""
-        cur = self._conn.execute(
-            "SELECT last_value, start_value, increment FROM dbc_sequences"
-            " WHERE name=?",
-            (name,),
+        rows = self._run(
+            "SELECT last_value, start_value, increment FROM {p}dbc_sequences WHERE name = ?",
+            name,
         )
-        row = cur.fetchone()
-        if row is None:
-            raise KeyError(f'sequence "{name}" does not exist')
-        return row
+        if not rows:
+            raise _missing(name)
+        return rows[0]
 
     def seq_currval(self, name: str) -> int:
-        cur = self._conn.execute(
-            "SELECT last_value FROM dbc_sequences WHERE name=?", (name,)
-        )
-        row = cur.fetchone()
-        if row is None:
-            raise KeyError(f'sequence "{name}" does not exist')
-        if row[0] is None:
+        last = self.seq_info(name)[0]
+        if last is None:
             raise ValueError(f'currval of sequence "{name}" is not yet defined')
-        return row[0]
+        return last
 
     def seq_setval(self, name: str, value: int, is_called: bool = True) -> int:
         """PG ``setval(seq, n[, is_called])``: with ``is_called`` true
         (default) the next nextval returns n+increment; with false it
         returns n (stored as last_value=n-increment). Returns n."""
-        with self._lock, self._conn:
-            if not is_called:
-                cur = self._conn.execute(
-                    "SELECT increment FROM dbc_sequences WHERE name=?", (name,)
-                )
-                row = cur.fetchone()
-                if row is None:
-                    raise KeyError(f'sequence "{name}" does not exist')
-                stored = value - row[0]
-            else:
-                stored = value
-            cur = self._conn.execute(
-                "UPDATE dbc_sequences SET last_value=? WHERE name=?", (stored, name)
-            )
-            if cur.rowcount == 0:
-                raise KeyError(f'sequence "{name}" does not exist')
-            return value
+        if not self._run(
+            "UPDATE {p}dbc_sequences SET last_value = ? - ? * increment"
+            " WHERE name = ? RETURNING name",
+            value, int(not is_called), name,
+        ):
+            raise _missing(name)
+        return value
 
     def seq_owned_map(self) -> dict[str, str]:
         """All recorded ownerships: {'table.column' → sequence name}."""
-        return {
-            r[0]: r[1]
-            for r in self._conn.execute(
-                "SELECT owned_by, name FROM dbc_sequences WHERE owned_by IS NOT NULL"
-            )
-        }
+        return dict(self._run(
+            "SELECT owned_by, name FROM {p}dbc_sequences WHERE owned_by IS NOT NULL"
+        ))
 
     def seq_owned_by(self, qualified_column: str) -> str | None:
         """pg_get_serial_sequence lookup: 'schema.table.column' → name."""
-        cur = self._conn.execute(
-            "SELECT name FROM dbc_sequences WHERE owned_by=?", (qualified_column,)
-        )
-        row = cur.fetchone()
-        return row[0] if row else None
+        rows = self._run("SELECT name FROM {p}dbc_sequences WHERE owned_by = ?", qualified_column)
+        return rows[0][0] if rows else None
 
     # -- commands ---------------------------------------------------------
 
     def status(self, packet_name: str | None = None) -> list[tuple]:
         """--status output (reference: db_converter.py:526-539)."""
-        q = (
+        return self._run(
             "SELECT p.name, p.status, p.dt, s.name, s.status, s.exception_descr"
-            " FROM dbc_packets p LEFT JOIN dbc_steps s ON s.packet_id = p.id"
+            " FROM {p}dbc_packets p LEFT JOIN {p}dbc_steps s ON s.packet_id = p.id"
+            " WHERE ? IS NULL OR p.name = ? ORDER BY p.name, s.id",
+            packet_name or None, packet_name or None,
         )
-        args: tuple = ()
-        if packet_name:
-            q += " WHERE p.name = ?"
-            args = (packet_name,)
-        return list(self._conn.execute(q + " ORDER BY p.name, s.id", args))
 
     def wipe(self, packet_name: str) -> int:
-        """--wipe: cascade-delete packet history (reference: actiontracker:
-        257-294). Returns number of packets wiped."""
-        with self._lock, self._conn:
-            cur = self._conn.execute("SELECT id FROM dbc_packets WHERE name=?", (packet_name,))
-            row = cur.fetchone()
-            if not row:
-                return 0
-            pid = row[0]
-            self._conn.execute("DELETE FROM dbc_actions WHERE packet_id=?", (pid,))
-            self._conn.execute("DELETE FROM dbc_steps WHERE packet_id=?", (pid,))
-            self._conn.execute("DELETE FROM dbc_packets WHERE id=?", (pid,))
-            return 1
+        """--wipe: cascade-delete packet history, children first (reference:
+        actiontracker:257-294). Returns number of packets wiped."""
+        self._run(
+            "DELETE FROM {p}dbc_actions WHERE packet_id IN"
+            " (SELECT id FROM {p}dbc_packets WHERE name = ?)",
+            packet_name,
+        )
+        self._run(
+            "DELETE FROM {p}dbc_steps WHERE packet_id IN"
+            " (SELECT id FROM {p}dbc_packets WHERE name = ?)",
+            packet_name,
+        )
+        return len(self._run("DELETE FROM {p}dbc_packets WHERE name = ? RETURNING id", packet_name))

@@ -578,6 +578,20 @@ def _run_maint(ctx: RunContext, command: str) -> None:
         ctx.raise_notice("WARNING", f"maint failed: {command}: {e}")
 
 
+def open_ledger(warehouse: Path, db: str, pg_targets: dict[str, dict]) -> ActionTracker:
+    """Target ``db``'s ``dbc_*`` ledger (reference: run_on_db,
+    db_converter.py:556-685): in the target database for a live-PostgreSQL
+    target, else a SQLite file in the warehouse. Starts no Spark session."""
+    cfg = pg_targets.get(db)
+    if cfg is None:
+        return ActionTracker(Path(warehouse) / db / "dbc_ledger.sqlite")
+    from db_converter_spark.sources.pg_live import PsqlChannel
+
+    return ActionTracker(
+        PsqlChannel(cfg["server"], cfg.get("db", "postgres"), cfg.get("schema", "dbc"))
+    )
+
+
 class PacketRunner:
     """Packet executor over per-target child sessions.
 
@@ -692,16 +706,13 @@ class PacketRunner:
 
     def _open_target(self, pkt: Packet, db: str):
         """``(ctx, ledger)`` for target ``db``: a live-PostgreSQL target runs
-        over psql with its ledger in the target database; any other is a
-        Spark catalog database with a SQLite ledger in the warehouse."""
+        over psql; any other is a Spark catalog database."""
         cfg = self.pg_targets.get(db)
         if cfg is not None:
-            from db_converter_spark.sources.pg_live import PgActionTracker, PgRunContext
+            from db_converter_spark.sources.pg_live import PgRunContext
 
-            pg_db = cfg.get("db", "postgres")
-            return PgRunContext(cfg["server"], pg_db, pkt, db), PgActionTracker(
-                cfg["server"], db=pg_db, schema=cfg.get("schema", "dbc")
-            )
+            ctx = PgRunContext(cfg["server"], cfg.get("db", "postgres"), pkt, db)
+            return ctx, open_ledger(self.warehouse, db, self.pg_targets)
         session = self.spark.newSession()
         for k, v in pkt.session_conf.items():
             session.conf.set(k, v)
@@ -729,7 +740,7 @@ class PacketRunner:
                 "properties": props,
                 "tables": {t.lower() for t in tables},
             }
-        return ctx, ActionTracker(self.warehouse / db / "dbc_ledger.sqlite")
+        return ctx, open_ledger(self.warehouse, db, self.pg_targets)
 
     # -- the packet loop (reference: worker_db_func) -----------------------
 

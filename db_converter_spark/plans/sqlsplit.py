@@ -7,8 +7,8 @@ tell DML from DDL (reference: dbccore/dbccore.py:728-738). Here
 comment, string literal, quoted identifier and dollar body. Splitting,
 masking, comment stripping and the PG rewriter's literal protection
 (``pgdialect._protect``) all read its spans and keep no quote rule of their
-own. Its rules, where only a backslash in a plain literal depends on the
-dialect:
+own. Its rules, where only a backslash in a plain or double-quoted span
+depends on the dialect:
 
     span          PostgreSQL text                 Spark SQL text
     ------------  ------------------------------  ----------------------
@@ -16,7 +16,8 @@ dialect:
     /* ... */     comment; nests                  same
     '...'         '' doubles; \ is a character    '' doubles; \ escapes
     E'...'        '' doubles; \ escapes           same
-    "..."         identifier; "" doubles          same
+    "..."         identifier; "" doubles          string; "" doubles;
+                                                  \ escapes
     `...`         identifier; `` doubles          same
     $tag$...$tag$ body; tag empty or identifier   same
 
@@ -82,7 +83,7 @@ def lex(sql: str, dialect: str = "postgres") -> Iterator[tuple[int, int]]:
     """``(start, end)`` of every comment, string literal, quoted identifier
     and dollar body in ``sql``, in order (rules in the module docstring).
     ``dialect`` is ``"postgres"`` or ``"spark"``: only a backslash in a
-    plain ``'…'`` literal tells them apart."""
+    plain ``'…'`` or a ``"…"`` span tells them apart."""
     backslash, pos, n = dialect != "postgres", 0, len(sql)
     while m := _OPEN_RE.search(sql, pos):
         a, tok = m.start(), m[0]
@@ -100,7 +101,7 @@ def lex(sql: str, dialect: str = "postgres") -> Iterator[tuple[int, int]]:
             b = sql.find(tok, m.end())
             b = n if b < 0 else b + len(tok)
         else:
-            escapes = tok[0] in "eE" or (backslash and tok == "'")
+            escapes = tok[0] in "eE" or (backslash and tok in ("'", '"'))
             b = _CLOSE[tok[-1], escapes].match(sql, m.end()).end()
         yield a, b
         pos = b
@@ -313,9 +314,12 @@ def parse_dml(stmt: str) -> Dml | None:
 def _parse_insert(
     table: str, rest: str, statement: str, returning: str | None
 ) -> Dml | None:
-    cm = re.match(r"\s*\((?!\s*(?:select|with|values)\b)([^)]*)\)", rest, re.I)
-    columns = tuple(_unquote(c) for c in cm[1].split(",")) if cm else None
-    source, conflict = _cut(rest[cm.end() :] if cm else rest, r"on\s+conflict")
+    mask, columns = mask_strings(rest), None
+    if cm := re.match(r"\s*\((?!\s*(?:select|with|values)\b)", mask, re.I):
+        close = close_bracket(mask, cm.end())
+        columns = tuple(_unquote(rest[a:b]) for a, b in split_top(mask, cm.end(), close))
+        rest = rest[close + 1 :]
+    source, conflict = _cut(rest, r"on\s+conflict")
     if re.fullmatch(r"default\s+values", source, re.I):
         source = None
     elif not source:
@@ -323,15 +327,17 @@ def _parse_insert(
     common = dict(columns=columns, source=source, returning=returning)
     if conflict is None:
         return Dml("insert", table, statement, **common)
-    m = re.fullmatch(
-        r"\(([^)]*)\)\s*do\s+(?:(nothing)|update\s+set\s+(.*))", conflict, re.I | re.S
-    )
+    mask = mask_strings(conflict)
+    close = close_bracket(mask, 1) if mask.startswith("(") else len(mask)
+    do = conflict[close + 1 :]
+    m = re.fullmatch(r"\s*do\s+(?:(nothing)|update\s+set\s+(.*))", do, re.I | re.S)
     if m is None:
         raise ValueError(f"cannot parse ON CONFLICT clause: {conflict!r}")
-    set_map, predicate = (None, None) if m[2] else _split_set_clause(m[3])
+    set_map, predicate = (None, None) if m[1] else _split_set_clause(m[2])
+    keys = tuple(_unquote(conflict[a:b]).lower() for a, b in split_top(mask, 1, close))
     return Dml(
         "upsert", table, statement, set_map=set_map, predicate=predicate,
-        conflict_keys=tuple(_unquote(k).lower() for k in m[1].split(",")), **common,
+        conflict_keys=keys, **common,
     )
 
 

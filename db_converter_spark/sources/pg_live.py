@@ -28,8 +28,9 @@ What lives here:
    part files COPY sequentially through one client).
 
 3. A live-PostgreSQL packet target: :class:`PgRunContext` is its channel
-   for the packet loop in plans/runner.py and :class:`PgActionTracker` its
-   ``dbc_*`` ledger in the target database; :func:`run_packet_native` runs
+   for the packet loop in plans/runner.py, and :class:`PsqlChannel` runs
+   the ledger's statements (plans/ledger.py ``ActionTracker``) against the
+   ``dbc_*`` tables in the target database; :func:`run_packet_native` runs
    one packet on it untracked (reference test layer 5).
 """
 
@@ -38,6 +39,7 @@ from __future__ import annotations
 import csv
 import io
 import os
+import re
 import shutil
 import subprocess
 import uuid
@@ -369,54 +371,10 @@ def run_packet_native(
 
 
 # ---------------------------------------------------------------------------
-# The dbc_* ledger IN the target database (r11 — VERDICT Next #1)
+# The dbc_* ledger in the target database
 # ---------------------------------------------------------------------------
 
-
-class PgActionTracker:
-    """Idempotency ledger living in the TARGET PostgreSQL database — the
-    reference's core deployment shape (reference: actiontracker/
-    actiontracker.py:38-95 creates ``dbc_packets``/``dbc_steps``/
-    ``dbc_actions``/``dbc_locks`` in every target under the configured
-    ``schema_location``, default ``dbc`` in conf/db_converter.conf.example;
-    db_converter.py:556-685 routes every run through it).
-
-    Same method surface as :class:`db_converter_spark.plans.ledger.
-    ActionTracker` (the SQLite twin PacketRunner uses for Spark-warehouse
-    targets), same table/column names as the reference (a reference
-    deployment's ledger is readable in place) — but this repo's own
-    implementation: single-statement psql round-trips with atomic
-    ``ON CONFLICT`` upserts where the reference used check-then-set DO
-    blocks (one driver process is the writer here; atomicity still wins
-    when two operators race a lock).
-
-    Sequences (the SQLite ledger's ``dbc_sequences``) are deliberately
-    absent: a live PostgreSQL target has REAL sequences server-side."""
-
-    def __init__(self, server: PgServer, db: str = "postgres", schema: str = "dbc"):
-        self.server = server
-        self.db = db
-        self.schema = schema
-        self._init_tbls()
-
-    # -- helpers -----------------------------------------------------------
-
-    @staticmethod
-    def _q(s: str) -> str:
-        return str(s).replace("'", "''")
-
-    def _sql(self, statement: str) -> "list[list[str]]":
-        return self.server.sql(statement, db=self.db)
-
-    def _scalar(self, statement: str) -> "str | None":
-        rows = self._sql(statement)
-        return rows[1][0] if len(rows) > 1 and rows[1] else None
-
-    def _init_tbls(self) -> None:
-        s = self.schema
-        self.server._psql(
-            ["-d", self.db],
-            sql=f"""
+_LEDGER_DDL = """
 CREATE SCHEMA IF NOT EXISTS {s};
 CREATE TABLE IF NOT EXISTS {s}.dbc_packets (
   id serial PRIMARY KEY,
@@ -451,149 +409,36 @@ CREATE TABLE IF NOT EXISTS {s}.dbc_locks (
   locked boolean NOT NULL DEFAULT true,
   dt timestamptz DEFAULT now()
 );
-""",
-        )
+"""
+
+
+def _literal(value) -> str:
+    """A ledger parameter as PG literal text (standard_conforming_strings:
+    only ``'`` is special inside a literal)."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, int):
+        return str(int(value))
+    return "'" + str(value).replace("'", "''") + "'"
+
+
+class PsqlChannel:
+    """The ``dbc_*`` ledger in the target database, for
+    :class:`~db_converter_spark.plans.ledger.ActionTracker` — the
+    reference's deployment shape (actiontracker/actiontracker.py:38-95
+    creates the tables in every target under ``schema_location``, default
+    ``dbc``). Each statement runs as one ``psql -c`` with its ``?``
+    parameters rendered as literals; rows come back as psql's text (NULL as
+    empty). There is no ``dbc_sequences``: the target has real sequences."""
+
+    def __init__(self, server: PgServer, db: str = "postgres", schema: str = "dbc"):
+        self.server, self.db, self.prefix = server, db, f"{schema}."
+        server._psql(["-d", db], sql=_LEDGER_DDL.format(s=schema))
+
+    def run(self, sql: str, params: tuple = ()) -> "list[tuple]":
+        values = iter(params)
+        text = re.sub(r"\?", lambda _: _literal(next(values)), sql)
+        return [tuple(r) for r in self.server.sql(text, db=self.db)[1:]]
 
     def close(self) -> None:  # psql is per-call; nothing held open
         pass
-
-    # -- packets -----------------------------------------------------------
-
-    def upsert_packet(self, name: str, packet_hash: str, meta: "dict | None" = None) -> int:
-        import json as _json
-
-        meta_j = self._q(_json.dumps(meta or {}))
-        rid = self._scalar(
-            f"INSERT INTO {self.schema}.dbc_packets(name, status, packet_hash, meta_data)"
-            f" VALUES ('{self._q(name)}', 'started', '{self._q(packet_hash)}',"
-            f" '{meta_j}'::jsonb)"
-            f" ON CONFLICT (name) DO UPDATE SET status = 'started', dt = now(),"
-            f" packet_hash = EXCLUDED.packet_hash, meta_data = EXCLUDED.meta_data"
-            f" RETURNING id"
-        )
-        return int(rid)
-
-    def packet_hash(self, name: str) -> "str | None":
-        return self._scalar(
-            f"SELECT packet_hash FROM {self.schema}.dbc_packets"
-            f" WHERE name = '{self._q(name)}'"
-        )
-
-    def set_packet_status(self, name: str, status: str) -> None:
-        self._sql(
-            f"UPDATE {self.schema}.dbc_packets SET status = '{self._q(status)}',"
-            f" dt = now() WHERE name = '{self._q(name)}'"
-        )
-
-    def dump_packets(self) -> "list[tuple]":
-        rows = self._sql(
-            f"SELECT id, name, status, dt, packet_hash, meta_data::text"
-            f" FROM {self.schema}.dbc_packets ORDER BY id"
-        )
-        return [tuple(r) for r in rows[1:]]
-
-    # -- steps / actions ---------------------------------------------------
-
-    def upsert_step(self, packet_id: int, step_name: str) -> int:
-        rid = self._scalar(
-            f"SELECT id FROM {self.schema}.dbc_steps"
-            f" WHERE packet_id = {int(packet_id)} AND name = '{self._q(step_name)}'"
-        )
-        if rid is not None:
-            self._sql(
-                f"UPDATE {self.schema}.dbc_steps SET status = 'started', dt = now()"
-                f" WHERE id = {int(rid)}"
-            )
-            return int(rid)
-        return int(
-            self._scalar(
-                f"INSERT INTO {self.schema}.dbc_steps(name, packet_id, status)"
-                f" VALUES ('{self._q(step_name)}', {int(packet_id)}, 'started')"
-                f" RETURNING id"
-            )
-        )
-
-    def set_step_status(
-        self, step_id: int, status: str, exception_descr: "str | None" = None
-    ) -> None:
-        descr = "NULL" if exception_descr is None else f"'{self._q(exception_descr)}'"
-        self._sql(
-            f"UPDATE {self.schema}.dbc_steps SET status = '{self._q(status)}',"
-            f" dt = now(), exception_descr = {descr} WHERE id = {int(step_id)}"
-        )
-
-    def is_action_done(self, packet_id: int, step_id: int, step_hash: str) -> bool:
-        got = self._scalar(
-            f"SELECT EXISTS(SELECT 1 FROM {self.schema}.dbc_actions"
-            f" WHERE packet_id = {int(packet_id)} AND step_id = {int(step_id)}"
-            f" AND step_hash = '{self._q(step_hash)}')"
-        )
-        return got == "t"
-
-    def apply_action(self, packet_id: int, step_id: int, step_hash: str) -> None:
-        self._sql(
-            f"INSERT INTO {self.schema}.dbc_actions(packet_id, step_id, step_hash)"
-            f" VALUES ({int(packet_id)}, {int(step_id)}, '{self._q(step_hash)}')"
-            f" ON CONFLICT (packet_id, step_id, step_hash) DO NOTHING"
-        )
-
-    # -- locks (E25) -------------------------------------------------------
-
-    def try_lock(self, name: str) -> bool:
-        """Atomic acquire: the upsert only flips rows whose ``locked`` is
-        false, so RETURNING yields a row iff this caller got the lock
-        (reference: is_packet_locked + set_packet_lock check-then-set,
-        actiontracker:118-164)."""
-        got = self._scalar(
-            f"INSERT INTO {self.schema}.dbc_locks(name, locked)"
-            f" VALUES ('{self._q(name)}', true)"
-            f" ON CONFLICT (name) DO UPDATE SET locked = true, dt = now()"
-            f" WHERE {self.schema}.dbc_locks.locked = false"
-            f" RETURNING id"
-        )
-        return got is not None
-
-    def is_locked(self, name: str) -> bool:
-        got = self._scalar(
-            f"SELECT EXISTS(SELECT 1 FROM {self.schema}.dbc_locks"
-            f" WHERE name = '{self._q(name)}' AND locked = true)"
-        )
-        return got == "t"
-
-    def unlock(self, name: str) -> None:
-        self._sql(
-            f"UPDATE {self.schema}.dbc_locks SET locked = false, dt = now()"
-            f" WHERE name = '{self._q(name)}'"
-        )
-
-    # -- commands ----------------------------------------------------------
-
-    def status(self, packet_name: "str | None" = None) -> "list[tuple]":
-        q = (
-            f"SELECT p.name, p.status, p.dt, s.name, s.status, s.exception_descr"
-            f" FROM {self.schema}.dbc_packets p"
-            f" LEFT JOIN {self.schema}.dbc_steps s ON s.packet_id = p.id"
-        )
-        if packet_name:
-            q += f" WHERE p.name = '{self._q(packet_name)}'"
-        rows = self._sql(q + " ORDER BY p.name, s.id")
-        return [tuple(r) for r in rows[1:]]
-
-    def wipe(self, packet_name: str) -> int:
-        """--wipe: cascade-delete packet history (reference: wipe_packet,
-        actiontracker:257-294). Returns number of packets wiped."""
-        pid = self._scalar(
-            f"SELECT id FROM {self.schema}.dbc_packets"
-            f" WHERE name = '{self._q(packet_name)}'"
-        )
-        if pid is None:
-            return 0
-        self.server._psql(
-            ["-d", self.db],
-            sql=(
-                f"DELETE FROM {self.schema}.dbc_actions WHERE packet_id = {int(pid)};\n"
-                f"DELETE FROM {self.schema}.dbc_steps WHERE packet_id = {int(pid)};\n"
-                f"DELETE FROM {self.schema}.dbc_packets WHERE id = {int(pid)};\n"
-            ),
-        )
-        return 1

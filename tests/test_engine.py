@@ -78,6 +78,9 @@ def test_split_backslash_follows_dialect():
     sql = "SELECT 'a\\'; b' AS x; SELECT 2"
     assert split_statements(sql, "spark") == ["SELECT 'a\\'; b' AS x", "SELECT 2"]
     assert split_statements(sql) == ["SELECT 'a\\'", "b' AS x; SELECT 2"]
+    # Spark SQL reads "..." as a string literal, with the same escapes
+    sql = 'SELECT "a\\"; b" AS x; SELECT 2'
+    assert split_statements(sql, "spark") == ['SELECT "a\\"; b" AS x', "SELECT 2"]
 
 
 def test_nested_comment_head_is_read_only_query():
@@ -140,28 +143,86 @@ def test_to_json_and_diff_golden():
 # ------------------------------------------------------------------- ledger
 
 
-def test_ledger_roundtrip(tmp_path):
-    t = ActionTracker(tmp_path / "ledger.sqlite")
-    pid = t.upsert_packet("p1", "hash1")
+def ledger_roundtrip(t: ActionTracker) -> None:
+    """The ledger scenario every backend must pass (the SQLite run is
+    below, the psql run in test_pg_live). Ids and text come back as the
+    backend renders them (psql: strings), so ids compare through int()."""
+    pid = t.upsert_packet("p1", "hash1", {"v": 1})
     sid = t.upsert_step(pid, "01_step.sql")
     assert not t.is_action_done(pid, sid, "abc")
     t.apply_action(pid, sid, "abc")
+    t.apply_action(pid, sid, "abc")  # recording twice is a no-op
     assert t.is_action_done(pid, sid, "abc")
+    assert not t.is_action_done(pid, sid, "abd")
     assert t.packet_hash("p1") == "hash1"
-    # same names upsert to the same ids (resume path)
-    assert t.upsert_packet("p1", "hash1") == pid
+    pid0 = t.upsert_packet("p0", "hash0")
+    # same names upsert to the same ids (resume path); a re-run replaces meta
+    assert t.upsert_packet("p1", "hash1", {"v": 2}) == pid
     assert t.upsert_step(pid, "01_step.sql") == sid
+    dump = t.dump_packets()
+    assert [(int(r[0]), r[1]) for r in dump] == [(pid, "p1"), (pid0, "p0")]
+    assert json.loads(dump[0][5]) == {"v": 2}
     # locks
     assert t.try_lock("p1")
     assert not t.try_lock("p1")
     t.unlock("p1")
     assert t.try_lock("p1")
     t.unlock("p1")
-    # status + wipe
-    assert t.status("p1")
+    # status
+    t.set_step_status(sid, "done")
+    t.set_packet_status("p1", "done")
+    st = t.status("p1")
+    assert [(r[0], r[1], r[3], r[4]) for r in st] == [("p1", "done", "01_step.sql", "done")]
+    assert [r[0] for r in t.status()] == ["p0", "p1"]
+    # wipe
     assert t.wipe("p1") == 1
+    assert t.wipe("p1") == 0
+    assert t.status("p1") == []
     assert t.packet_hash("p1") is None
+    assert [r[1] for r in t.dump_packets()] == ["p0"]
     t.close()
+
+
+def test_ledger_roundtrip(tmp_path):
+    ledger_roundtrip(ActionTracker(tmp_path / "ledger.sqlite"))
+
+
+def _race_try_lock(path: str, barrier, rounds: int, out) -> None:
+    t = ActionTracker(path)
+    got = []
+    for _ in range(rounds):
+        barrier.wait()
+        got.append(t.try_lock("raced"))
+        barrier.wait()
+        if got[-1]:
+            t.unlock("raced")
+        barrier.wait()
+    t.close()
+    out.put(got)
+
+
+def test_try_lock_excludes_another_process(tmp_path):
+    """Two processes take the same SQLite ledger's lock at once, round
+    after round: exactly one of them gets it each time."""
+    import multiprocessing
+
+    rounds, mp = 50, multiprocessing.get_context("spawn")
+    path = str(tmp_path / "race.sqlite")
+    ActionTracker(path).close()  # the schema exists before the race
+    barrier, out = mp.Barrier(2, timeout=120), mp.Queue()
+    procs = [
+        mp.Process(target=_race_try_lock, args=(path, barrier, rounds, out))
+        for _ in range(2)
+    ]
+    for p in procs:
+        p.start()
+    try:
+        a, b = out.get(timeout=300), out.get(timeout=300)
+    finally:
+        for p in procs:
+            p.join(timeout=60)
+            p.kill()
+    assert [x + y for x, y in zip(a, b)] == [1] * rounds
 
 
 # ------------------------------------------------------------ packet parse

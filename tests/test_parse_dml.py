@@ -153,6 +153,10 @@ _CASES = {
         "update t set a = 1 where b is distinct from c",
         dict(kind="update", predicate="b is distinct from c"),
     ),
+    "quoted_comma_in_conflict_key": (
+        "INSERT INTO t (a, b) VALUES (1, 2) ON CONFLICT (`k,1`, b) DO NOTHING",
+        dict(kind="upsert", columns=("a", "b"), conflict_keys=("k,1", "b")),
+    ),
     "backtick_identifier_with_quote": (
         "DELETE FROM t WHERE `o'k` = 1 RETURNING *",
         dict(kind="delete", predicate="`o'k` = 1", returning="*"),
@@ -182,6 +186,8 @@ def test_parse_dml(case):
         ),
         # a quote inside a quoted identifier (backtick-quoted by the rewrite)
         ('UPDATE t SET "it\'s" = 1 WHERE id = 2', dict(set_map={"it's": "1"}, predicate="id = 2")),
+        # a comma inside a quoted column name
+        ('INSERT INTO t ("a,b", c) VALUES (1, 2)', dict(columns=("a,b", "c"), source="VALUES (1, 2)")),
     ],
 )
 def test_parse_dml_of_rewritten_pg(pg, want):

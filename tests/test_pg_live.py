@@ -1115,7 +1115,8 @@ def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
     after a tracked run raises unless --force."""
     from db_converter_spark.plans.model import PacketStatus, ResultCode
     from db_converter_spark.plans.runner import PacketRunner
-    from db_converter_spark.sources.pg_live import PgActionTracker
+    from db_converter_spark.plans.ledger import ActionTracker
+    from db_converter_spark.sources.pg_live import PsqlChannel
 
     for t in ("lk_t",):
         pg.sql(f"DROP TABLE IF EXISTS {t}")
@@ -1135,7 +1136,7 @@ def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
     )
 
     # hold the lock externally (reference: ActionTracker.set_packet_lock)
-    tracker = PgActionTracker(pg)
+    tracker = ActionTracker(PsqlChannel(pg))
     assert tracker.try_lock("pg_lock_pkt")
     res = runner.run(pdir, dbs=["live_pg"])
     assert res.result_code["live_pg"] == ResultCode.LOCKED
@@ -1144,7 +1145,7 @@ def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
         "SELECT EXISTS(SELECT 1 FROM pg_tables WHERE tablename = 'lk_t')"
     )[1] == ["f"]  # nothing executed
     # the external lock survives the LOCKED bounce (not stolen/released)
-    assert tracker.is_locked("pg_lock_pkt")
+    assert pg.sql("SELECT locked FROM dbc.dbc_locks WHERE name = 'pg_lock_pkt'")[1] == ["t"]
 
     tracker.unlock("pg_lock_pkt")
     res2 = runner.run(pdir, dbs=["live_pg"])
@@ -1164,26 +1165,16 @@ def test_pg_target_packet_lock_and_hash_guard(spark, pg, tmp_path):
     assert pg.sql("SELECT v FROM lk_t ORDER BY v")[1:] == [["7"], ["8"]]
 
 
-def test_pg_tracker_wipe_and_status(pg):
-    """--wipe / --status against the live ledger (reference: wipe_packet
-    actiontracker:257-294, status db_converter.py:526-539)."""
-    from db_converter_spark.sources.pg_live import PgActionTracker
+def test_ledger_roundtrip_on_pg(pg):
+    """The ledger scenario of the SQLite backend, over psql in the target
+    database (reference: wipe_packet actiontracker:257-294, status
+    db_converter.py:526-539), in a schema of its own."""
+    from db_converter_spark.plans.ledger import ActionTracker
+    from db_converter_spark.sources.pg_live import PsqlChannel
+    from tests.test_engine import ledger_roundtrip
 
-    for t in ("dbc_actions", "dbc_steps", "dbc_packets", "dbc_locks"):
-        pg.sql(f"DROP TABLE IF EXISTS dbc.{t}")
-    tr = PgActionTracker(pg)
-    pid = tr.upsert_packet("wp", "h" * 32, {"type": "maintenance"})
-    sid = tr.upsert_step(pid, "01_step.sql")
-    tr.apply_action(pid, sid, "a" * 32)
-    assert tr.is_action_done(pid, sid, "a" * 32)
-    assert not tr.is_action_done(pid, sid, "b" * 32)
-    tr.set_step_status(sid, "done")
-    tr.set_packet_status("wp", "done")
-    st = tr.status("wp")
-    assert [r[0] for r in st] == ["wp"] and st[0][4] == "done"
-    assert tr.wipe("wp") == 1
-    assert tr.wipe("wp") == 0
-    assert tr.status("wp") == []
+    pg.sql("DROP SCHEMA IF EXISTS ledger_rt CASCADE")
+    ledger_roundtrip(ActionTracker(PsqlChannel(pg, schema="ledger_rt")))
 
 
 def test_cli_runs_packet_on_pg_target_and_reads_ledger(spark, pg, tmp_path, capsys):

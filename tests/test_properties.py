@@ -105,6 +105,8 @@ def _quoted(body: str, kind: str, dialect: str) -> str:
     if kind in ("plain", "e"):
         esc = body.replace("\\", "\\\\").replace("'", "\\'")
         return ("E'" if kind == "e" else "'") + esc + "'"
+    if kind == "ident" and dialect == "spark":  # a string literal in Spark SQL
+        return '"' + body.replace("\\", "\\\\").replace('"', '\\"') + '"'
     if kind == "ident":
         return '"' + body.replace('"', '""') + '"'
     if kind == "backtick":
