@@ -2,16 +2,22 @@
 columns with typed metadata, processed by Arrow-batched Pandas UDFs via
 ``mapInPandas``.
 
-The decode step is REAL for PNG (functions/png.py, RFC 2083), baseline
-JPEG (functions/jpeg.py, ITU-T T.81 — r10) and animated GIF
-(functions/gif.py, GIF89a — r10), all pure-stdlib; PIL is preferred when
-installed (probed each session, absent so far). Only WebP still falls to
-the clearly-marked deterministic stub (``decode_image_stub``) — as do the
-synthetic corpus's text-bytes payloads, whose md5-derived fake metadata is
-what the DuckDB oracle pins, keeping the whole Arrow round-trip
-(binary column → batch iterator → output schema) verifiable end-to-end
-while real image bytes take the codec path (tests/test_png.py, test_jpeg.
-py, test_gif.py push real payloads through these same pipelines).
+Each per-payload function is a codec slot-in point with three legs:
+
+- PIL, when it is installed, does the pixel work (metadata, resize);
+- otherwise the header readers in ``functions/imagemeta.py`` recognise a
+  PNG, JPEG, GIF or WebP payload and give its true width, height, frame
+  count and format. They decode no pixel, so frame sampling and resize
+  give NULL outputs for a recognised image;
+- any other payload goes to a clearly-marked deterministic stub
+  (``decode_image_stub``, ``sample_frames_stub``, ``resize_stub``).
+
+The synthetic corpus's payloads are UTF-8 text bytes, so they take the
+stub leg. Its md5-derived fake metadata is what the DuckDB oracle pins,
+which keeps the whole Arrow round-trip (binary column → batch iterator →
+output schema) verifiable end to end. Real image headers go through the
+same pipelines in tests/test_png.py, test_jpeg.py, test_gif.py and
+test_vp8l.py.
 
 At 100 TB: binary payloads ride in parquet with the metadata columns
 alongside; ``spark.sql.files.maxPartitionBytes`` bounds scan partitions;
@@ -35,7 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from db_converter_spark.catalog import load_table, register_views
+from db_converter_spark.catalog import load_table
+from db_converter_spark.functions.imagemeta import image_meta
 from db_converter_spark.registry import query
 
 _MM01_SCHEMA = StructType(
@@ -78,7 +85,6 @@ def mm01_binary_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding of ``text`` (a stand-in for image bytes); the 'decode' extracts
     byte length + md5 inside the Pandas UDF, so the oracle can verify the
     whole Arrow round-trip produced exactly the original bytes."""
-    register_views(spark, sf_dir)
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
@@ -99,7 +105,7 @@ _MM02_SCHEMA = StructType(
 
 
 def decode_image_stub(payload: bytes) -> dict:
-    """STUB for the real image decoder (PIL/libvips not in this container).
+    """STUB for the real image decoder (PIL/libvips are not installed).
 
     Deterministic fake: dimensions derived from the payload's md5 so tests
     and the oracle can check the plumbing. A real implementation returns
@@ -126,11 +132,11 @@ def _pil_available() -> bool:
 
 def decode_image_real(payload: bytes) -> dict | None:
     """Real decoder (requires PIL). Returns None for payloads that are not
-    decodable images — the auto path then falls back to the stub, so the
-    synthetic testdata (text bytes, not images) keeps its oracle rows while
-    real image columns get real metadata the moment the container gains
-    PIL. Runs inside the executor's Arrow batch loop: one import per
-    worker process, no per-row overhead beyond the decode itself."""
+    decodable images; :func:`decode_image` then tries the header readers
+    and the stub, so the synthetic testdata (text bytes, not images) keeps
+    its oracle rows. Runs inside the executor's Arrow batch loop: one
+    import per worker process, no per-row overhead beyond the decode
+    itself."""
     import io
 
     from PIL import Image, UnidentifiedImageError
@@ -149,27 +155,24 @@ def decode_image_real(payload: bytes) -> dict | None:
 
 def decode_image(payload: bytes) -> dict:
     """Codec slot-in point, tried in order: PIL (any format, when
-    installed) → the pure-stdlib PNG codec (functions/png.py) → the
-    pure-Python baseline JPEG codec (functions/jpeg.py, r10 — REAL
-    metadata/pixels for JPEG payloads, no dependency) → GIF89a
-    (functions/gif.py, r10) → WebP (functions/vp8l.py, r11 — real
-    dimensions for lossless AND lossy streams, real n_frames from ANMF
-    chunks) → deterministic stub (the synthetic corpus's text-bytes
-    payloads land here, keeping their oracle rows)."""
+    installed) → the PNG/JPEG/GIF/WebP header readers (true dimensions
+    and frame count, no pixel decode) → the deterministic stub (the
+    synthetic corpus's text-bytes payloads land here, keeping their
+    oracle rows)."""
     if _pil_available():
         meta = decode_image_real(payload)
         if meta is not None:
             return meta
-    from db_converter_spark.functions.gif import gif_meta
-    from db_converter_spark.functions.jpeg import jpeg_meta
-    from db_converter_spark.functions.png import png_meta
-    from db_converter_spark.functions.vp8l import webp_meta
-
-    meta = png_meta(payload) or jpeg_meta(payload) or gif_meta(payload) \
-        or webp_meta(payload)
+    meta = image_meta(payload)
     if meta is not None:
         return {k: meta[k] for k in ("width", "height", "n_frames", "format")}
     return decode_image_stub(payload)
+
+
+def _per_row(out: pd.Series, fn) -> pd.Series:
+    """``fn`` over each row's output tuple; a None tuple (a recognised
+    image with no pixel decoder) gives None, which Arrow writes as NULL."""
+    return out.map(lambda t: None if t is None else fn(t))
 
 
 def _decode_image_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -203,13 +206,12 @@ FROM h
 @query("mm02_image_metadata", oracle=_MM02_DUCK, tags=("multimodal", "udf", "codec"))
 def mm02_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image metadata extraction: binary payload → mapInPandas →
-    (width, height, n_frames, format). Real codecs decode real payloads
-    (:func:`decode_image` dispatch: PIL → PNG → baseline JPEG → GIF89a,
-    the latter giving TRUE n_frames for animations); non-image bytes —
-    including this synthetic corpus's utf-8 text payloads — fall to the
+    (width, height, n_frames, format). A real image gets its true
+    metadata (:func:`decode_image`: PIL, then the header readers, which
+    give the true frame count of an animation); other bytes, including
+    this synthetic corpus's UTF-8 text payloads, fall to the
     deterministic md5 stub the oracle pins, so Arrow batch shape, UDF
-    signature, and schema stay verified end-to-end either way."""
-    register_views(spark, sf_dir)
+    signature and schema are verified end to end either way."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 25 == 0)
@@ -236,7 +238,7 @@ _FRAME_STRIDE = 4  # keep every 4th frame
 
 
 def sample_frames_stub(payload: bytes) -> tuple[int, int, bytes]:
-    """STUB for a real frame sampler (ffmpeg/pyav not in this container).
+    """STUB for a real frame sampler (ffmpeg/pyav are not installed).
 
     Treats the payload as a stream of fixed 16-byte "frames" and keeps every
     4th one — the deterministic stand-in for keyframe extraction. A real
@@ -250,25 +252,16 @@ def sample_frames_stub(payload: bytes) -> tuple[int, int, bytes]:
     return len(frames), len(sampled), b"".join(sampled)
 
 
-def sample_frames(payload: bytes) -> tuple[int, int, bytes]:
-    """Codec slot-in point for frame sampling: an ANIMATED-capable real
-    decoder first — GIF via the pure-stdlib codec (functions/gif.py, r10:
-    n_frames is the real image count and every {stride}-th frame's
-    decoded RGB bytes are kept, concatenated) — then the deterministic
-    16-byte-frame stub (the synthetic corpus's text payloads land there,
-    keeping their oracle rows). A video container (mp4/webm) would slot
-    in exactly here when an ffmpeg/pyav gate opens. r11 adds animated
-    lossless WebP (functions/vp8l.py: real ANMF frame count, real VP8L
-    per-frame pixels)."""
-    from db_converter_spark.functions.gif import gif_frames
-    from db_converter_spark.functions.vp8l import webp_frames
-
-    frames = gif_frames(payload)
-    if frames is None and payload[:4] == b"RIFF":
-        frames = webp_frames(payload)
-    if frames is not None:
-        kept = frames[::_FRAME_STRIDE]
-        return len(frames), len(kept), b"".join(f[4] for f in kept)
+def sample_frames(payload: bytes) -> tuple[int, int, bytes] | None:
+    """Codec slot-in point for frame sampling. No frame decoder is
+    installed, so a payload the image header readers recognise gets None
+    (NULL outputs) rather than stub frames cut from its encoded bytes;
+    any other payload goes to the deterministic 16-byte-frame stub (the
+    synthetic corpus's text payloads land there, keeping their oracle
+    rows). A video or animation decoder (pyav, PIL) slots in here with
+    the same (n_frames, n_sampled, sampled_bytes) contract."""
+    if image_meta(payload) is not None:
+        return None
     return sample_frames_stub(payload)
 
 
@@ -280,9 +273,9 @@ def _sample_frames_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
-                "n_frames": out.map(lambda t: t[0]).astype("int64"),
-                "n_sampled": out.map(lambda t: t[1]).astype("int64"),
-                "sample_md5": out.map(lambda t: hashlib.md5(t[2]).hexdigest()),
+                "n_frames": _per_row(out, lambda t: t[0]).astype("Int64"),
+                "n_sampled": _per_row(out, lambda t: t[1]).astype("Int64"),
+                "sample_md5": _per_row(out, lambda t: hashlib.md5(t[2]).hexdigest()),
             }
         )
 
@@ -310,12 +303,10 @@ FROM s
 @query("mm03_frame_sample", oracle=_MM03_DUCK, tags=("multimodal", "video", "codec"))
 def mm03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling: binary payload → mapInPandas → every 4th frame,
-    fingerprinted. Animated GIF payloads decode for REAL (functions/
-    gif.py: true frame count, true per-frame pixels — tests/test_gif.py
-    pushes real animations through this exact pipeline); non-video bytes
-    fall to the deterministic stride stub the oracle pins. Arrow batch
-    shape, stride arithmetic, and byte-exact reassembly verified."""
-    register_views(spark, sf_dir)
+    fingerprinted. Non-video bytes fall to the deterministic stride stub
+    the oracle pins; a recognised image gets NULL outputs (see
+    :func:`sample_frames`). Arrow batch shape, stride arithmetic and
+    byte-exact reassembly are verified."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 25 == 0)
@@ -344,7 +335,7 @@ _RESIZE_BOX = 224  # fit-within target (the standard vision-model square)
 
 
 def resize_stub(payload: bytes) -> tuple[int, int, int, int, bytes]:
-    """STUB for a real resampler (PIL/cv2 not in this container): source
+    """STUB for a real resampler (PIL/cv2 are not installed): source
     dims come from :func:`decode_image_stub`; the target is integer
     fit-within-224 preserving aspect; the "resized" bytes are a stride
     decimation of the payload proportional to the area reduction — the
@@ -365,8 +356,8 @@ def resize_stub(payload: bytes) -> tuple[int, int, int, int, bytes]:
 
 def resize_real(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
     """Real fit-within-224 resample via PIL (same contract as
-    :func:`resize_stub`). None when the payload is not a decodable image —
-    the auto path falls back to the stub then."""
+    :func:`resize_stub`). None when the payload is not a decodable image;
+    :func:`resize_image` decides what such a payload gets."""
     import io
 
     from PIL import Image, UnidentifiedImageError
@@ -382,109 +373,17 @@ def resize_real(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
         return None
 
 
-def resize_png_stdlib(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
-    """Real fit-within-224 resample for PNG payloads via the pure-stdlib
-    codec (functions/png.py, nearest-neighbor) — same contract as
-    :func:`resize_stub`; None for non-PNG/unsupported payloads."""
-    from db_converter_spark.functions.png import png_meta, png_resize
-
-    meta = png_meta(payload)
-    if meta is None:
-        return None
-    w, h = meta["width"], meta["height"]
-    m = max(w, h)
-    if m > _RESIZE_BOX:
-        dst_w, dst_h = max(1, (w * _RESIZE_BOX) // m), max(1, (h * _RESIZE_BOX) // m)
-    else:
-        dst_w, dst_h = w, h
-    resized = png_resize(payload, dst_w, dst_h)
-    if resized is None:
-        return None
-    return w, h, dst_w, dst_h, resized
-
-
-def resize_jpeg_stdlib(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
-    """Real fit-within-224 resample for baseline-JPEG payloads via the
-    pure-Python codec (functions/jpeg.py, nearest-neighbor, re-encoded
-    baseline 4:4:4) — same contract as :func:`resize_stub`; None for
-    non-JPEG/unsupported payloads."""
-    from db_converter_spark.functions.jpeg import jpeg_meta, jpeg_resize
-
-    meta = jpeg_meta(payload)
-    if meta is None:
-        return None
-    w, h = meta["width"], meta["height"]
-    m = max(w, h)
-    if m > _RESIZE_BOX:
-        dst_w, dst_h = max(1, (w * _RESIZE_BOX) // m), max(1, (h * _RESIZE_BOX) // m)
-    else:
-        dst_w, dst_h = w, h
-    resized = jpeg_resize(payload, dst_w, dst_h)
-    if resized is None:
-        return None
-    return w, h, dst_w, dst_h, resized
-
-
-def resize_gif_stdlib(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
-    """Real fit-within-224 resample for GIF payloads via the pure-stdlib
-    codec (functions/gif.py — nearest-neighbor on palette indices, no
-    re-quantization); None for non-GIF/unsupported payloads."""
-    from db_converter_spark.functions.gif import gif_meta, gif_resize
-
-    meta = gif_meta(payload)
-    if meta is None:
-        return None
-    w, h = meta["width"], meta["height"]
-    m = max(w, h)
-    if m > _RESIZE_BOX:
-        dst_w, dst_h = max(1, (w * _RESIZE_BOX) // m), max(1, (h * _RESIZE_BOX) // m)
-    else:
-        dst_w, dst_h = w, h
-    resized = gif_resize(payload, dst_w, dst_h)
-    if resized is None:
-        return None
-    return w, h, dst_w, dst_h, resized
-
-
-def resize_webp_stdlib(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
-    """Real fit-within-224 resample for lossless-WebP payloads via the
-    pure-stdlib codec (functions/vp8l.py — nearest-neighbor, re-encoded
-    VP8L); None for non-WebP / lossy payloads (those keep metadata-only
-    support and fall to the stub for pixels)."""
-    from db_converter_spark.functions.vp8l import webp_decode, webp_meta, webp_resize
-
-    meta = webp_meta(payload)
-    if meta is None or webp_decode(payload) is None:
-        return None
-    w, h = meta["width"], meta["height"]
-    m = max(w, h)
-    if m > _RESIZE_BOX:
-        dst_w, dst_h = max(1, (w * _RESIZE_BOX) // m), max(1, (h * _RESIZE_BOX) // m)
-    else:
-        dst_w, dst_h = w, h
-    resized = webp_resize(payload, dst_w, dst_h)
-    if resized is None:
-        return None
-    return w, h, dst_w, dst_h, resized
-
-
-def resize_image(payload: bytes) -> tuple[int, int, int, int, bytes]:
-    """Codec slot-in point, tried in order: PIL → pure-stdlib PNG
-    resampler → pure-Python baseline-JPEG resampler (r10) → pure-stdlib
-    GIF resampler (r10) → pure-stdlib lossless-WebP resampler (r11) →
+def resize_image(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
+    """Codec slot-in point: PIL when installed; otherwise a payload the
+    image header readers recognise gets None (NULL outputs: there is no
+    pixel resampler without PIL), and any other payload goes to the
     deterministic stub (see :func:`decode_image`)."""
     if _pil_available():
         out = resize_real(payload)
         if out is not None:
             return out
-    out = (
-        resize_png_stdlib(payload)
-        or resize_jpeg_stdlib(payload)
-        or resize_gif_stdlib(payload)
-        or resize_webp_stdlib(payload)
-    )
-    if out is not None:
-        return out
+    if image_meta(payload) is not None:
+        return None
     return resize_stub(payload)
 
 
@@ -496,14 +395,12 @@ def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
-                "src_w": out.map(lambda t: t[0]).astype("int64"),
-                "src_h": out.map(lambda t: t[1]).astype("int64"),
-                "dst_w": out.map(lambda t: t[2]).astype("int64"),
-                "dst_h": out.map(lambda t: t[3]).astype("int64"),
-                "n_bytes_out": out.map(lambda t: len(t[4])).astype("int64"),
-                "resized_md5": out.map(
-                    lambda t: hashlib.md5(t[4]).hexdigest()
-                ),
+                "src_w": _per_row(out, lambda t: t[0]).astype("Int64"),
+                "src_h": _per_row(out, lambda t: t[1]).astype("Int64"),
+                "dst_w": _per_row(out, lambda t: t[2]).astype("Int64"),
+                "dst_h": _per_row(out, lambda t: t[3]).astype("Int64"),
+                "n_bytes_out": _per_row(out, lambda t: len(t[4])).astype("Int64"),
+                "resized_md5": _per_row(out, lambda t: hashlib.md5(t[4]).hexdigest()),
             }
         )
 
@@ -548,13 +445,11 @@ FROM resized
 @query("mm04_image_resize", oracle=_MM04_DUCK, tags=("multimodal", "udf", "codec"))
 def mm04_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image resize: binary payload → mapInPandas → fit-within-224 target
-    dims + resampled bytes, fingerprinted. Real PNG/JPEG/GIF payloads
-    resize through the real codecs (nearest-neighbor on decoded pixels,
-    re-encoded; tests/test_png.py, test_jpeg.py, test_gif.py exercise
-    this pipeline on real images); other bytes fall to the deterministic
-    stride stub the oracle pins. Arrow batch shape, integer resize
-    arithmetic, and byte-exact output oracle-verified."""
-    register_views(spark, sf_dir)
+    dims + resampled bytes, fingerprinted. PIL resamples a real image
+    when installed; without it a recognised image gets NULL outputs (see
+    :func:`resize_image`). Other bytes fall to the deterministic stride
+    stub the oracle pins, so Arrow batch shape, integer resize arithmetic
+    and byte-exact output are oracle-verified."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 25 == 0)
@@ -659,7 +554,6 @@ def mm05_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pigeonhole), so the bucket join loses no true pair. The oracle
     recomputes the identical hash in SQL, pinning the UDF's Arrow
     round-trip bit-for-bit."""
-    register_views(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )

@@ -15,7 +15,8 @@ Semantics kept from the reference:
 - tab-delimited, QUOTE_ALL, values stringified with Python ``str()``
   (reference: dbccore/dbccore.py:759-768);
 - file naming ``export_<md5(stm)[:6]>_<ts>_<db>.csv`` (reference:
-  dbccore/dbccore.py:752-756);
+  dbccore/dbccore.py:752-756); a name already taken in the same action
+  (a repeated statement) gets ``_2``, ``_3``, … before ``.csv``;
 - optional zip of all CSVs (reference: dbccore/dbccore.py:781-826): LZMA
   without a password; with one, encrypted by the WinZip AE-2 writer in
   ``functions/wzaes.py`` (AES-256 from the ``cryptography`` package).
@@ -139,7 +140,11 @@ def export_queries(
     files: list[Path] = []
     ts = time.strftime("%Y%m%d_%H%M%S")
     for stmt in statements:
-        path = out_dir / _export_name(stmt, db, ts)
+        name = _export_name(stmt, db, ts)
+        path, n = out_dir / name, 1
+        while path in files:  # a repeated statement must not overwrite its twin
+            n += 1
+            path = out_dir / f"{name[:-4]}_{n}.csv"
         write(stmt, path)
         files.append(path)
     if not zip_output:

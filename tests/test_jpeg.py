@@ -1,129 +1,88 @@
-"""Pure-Python baseline JPEG codec (functions/jpeg.py) — round-trip,
-marker-parse and unsupported-fallback properties, plus the real payloads
-flowing through the actual mm02/mm04 mapInPandas pipelines (the PIL-less
-'codecs stubbed' gap, closed for JPEG the way test_png.py closed PNG)."""
+"""JPEG header reader (functions/imagemeta.jpeg_meta): baseline and
+progressive frame headers, truncation, and real JPEG headers through the
+mm02/mm03/mm04 mapInPandas pipelines."""
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
-
-from db_converter_spark.functions.jpeg import (
-    jpeg_decode,
-    jpeg_encode,
-    jpeg_meta,
-    jpeg_resize,
-)
+from db_converter_spark.functions.imagemeta import jpeg_meta
+from db_converter_spark.operators.multimodal import decode_image, resize_image, sample_frames
+from tests.image_fixtures import jpeg_baseline, jpeg_progressive_header, png
 
 
-def _gradient(w: int, h: int, ch: int) -> bytes:
-    """Smooth gradient — JPEG-friendly content with known pixel values."""
-    x = np.arange(w)[None, :]
-    y = np.arange(h)[:, None]
-    planes = [
-        (x * 255 // max(1, w - 1)) + 0 * y,
-        (y * 255 // max(1, h - 1)) + 0 * x,
-        ((x + y) * 127 // max(1, w + h - 2)),
-    ]
-    return (
-        np.stack(planes[:ch], axis=-1).astype(np.uint8).tobytes()
-    )
-
-
-@pytest.mark.parametrize("ch", [1, 3])
-@pytest.mark.parametrize("dims", [(40, 24), (41, 23)])  # odd dims stress pad
-def test_roundtrip_444(ch, dims):
-    w, h = dims
-    src = np.frombuffer(_gradient(w, h, ch), dtype=np.uint8).reshape(h, w, ch)
-    payload = jpeg_encode(w, h, ch, src.tobytes(), quality=90)
-    assert payload[:2] == b"\xff\xd8" and payload[-2:] == b"\xff\xd9"
-    meta = jpeg_meta(payload)
-    assert (meta["width"], meta["height"], meta["n_components"]) == (w, h, ch)
-    assert meta["format"] == "jpeg" and not meta["progressive"]
-    dw, dh, dch, px = jpeg_decode(payload)
-    assert (dw, dh, dch) == (w, h, ch)
-    got = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, ch)
-    err = np.abs(got.astype(float) - src.astype(float))
-    # quality-90 on a smooth gradient: small quantization loss only
-    assert err.max() <= 8 and err.mean() <= 2, (err.max(), err.mean())
-
-
-def test_roundtrip_420_subsampled():
-    """4:2:0 exercises the decoder's multi-block MCU + chroma upsampling
-    path; luma must stay tight, chroma loss bounded by the 2x2 box."""
-    w, h = 41, 23
-    src = np.frombuffer(_gradient(w, h, 3), dtype=np.uint8).reshape(h, w, 3)
-    payload = jpeg_encode(w, h, 3, src.tobytes(), quality=90, subsample=True)
-    p444 = jpeg_encode(w, h, 3, src.tobytes(), quality=90, subsample=False)
-    assert len(payload) < len(p444)  # subsampling actually shrank it
-    dw, dh, dch, px = jpeg_decode(payload)
-    assert (dw, dh, dch) == (w, h, 3)
-    got = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, 3)
-    err = np.abs(got.astype(float) - src.astype(float))
-    assert err.max() <= 24 and err.mean() <= 5, (err.max(), err.mean())
-
-
-def test_encode_is_deterministic():
-    w, h = 16, 16
-    a = jpeg_encode(w, h, 3, _gradient(w, h, 3))
-    b = jpeg_encode(w, h, 3, _gradient(w, h, 3))
-    assert a == b
+def test_baseline_header_meta():
+    for ncomp in (1, 3):
+        meta = jpeg_meta(jpeg_baseline(41, 23, ncomp))
+        assert meta == {
+            "width": 41, "height": 23, "bit_depth": 8, "n_components": ncomp,
+            "progressive": False, "n_frames": 1, "format": "jpeg",
+        }
 
 
 def test_meta_on_progressive_header_but_decode_falls_back():
-    """A hand-built SOF2 (progressive) header: metadata still parses —
-    width/height live in the frame header — but decode returns None
-    (fall back, never a wrong decode)."""
-    import struct
-
-    sof2 = struct.pack(">BHHB", 8, 30, 20, 3) + bytes(
-        [1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    payload = (
-        b"\xff\xd8"
-        + b"\xff\xc2" + struct.pack(">H", len(sof2) + 2) + sof2
-        + b"\xff\xd9"
-    )
+    """A progressive (SOF2) header: the metadata parses, since width and
+    height live in the frame header, but there is no pixel decoder, so
+    resize and frame sampling fall back to NULL outputs, never to stub
+    rows computed from the encoded bytes."""
+    payload = jpeg_progressive_header(20, 30)
     meta = jpeg_meta(payload)
     assert meta["width"] == 20 and meta["height"] == 30 and meta["progressive"]
-    assert jpeg_decode(payload) is None
+    assert decode_image(payload) == {
+        "width": 20, "height": 30, "n_frames": 1, "format": "jpeg",
+    }
+    assert resize_image(payload) is None
+    assert sample_frames(payload) is None
+
+
+def test_truncated_frame_header_returns_none():
+    """A JPEG cut inside its SOF segment: the marker walk sees the segment
+    length but not the six bytes of precision and dimensions."""
+    payload = jpeg_baseline(24, 16)
+    sof = payload.index(b"\xff\xc0")
+    for cut in range(sof + 4, sof + 10):
+        assert jpeg_meta(payload[:cut]) is None
+        decode_image(payload[:cut])  # falls to the stub, does not raise
+    assert jpeg_meta(payload[: sof + 10])["width"] == 24
 
 
 def test_non_jpeg_returns_none():
     assert jpeg_meta(b"not a jpeg") is None
-    assert jpeg_decode(b"\xff\xd8broken") is None
-    assert jpeg_resize(b"hello", 2, 2) is None
-    # PNG payloads must NOT be claimed by the JPEG codec
-    from db_converter_spark.functions.png import png_encode
-
-    png = png_encode(8, 8, 3, _gradient(8, 8, 3))
-    assert jpeg_meta(png) is None
+    assert jpeg_meta(b"\xff\xd8broken") is None
+    assert jpeg_meta(b"\xff\xd8\xff\xd9") is None  # SOI + EOI, no frame
+    assert jpeg_meta(png(8, 8)) is None  # PNG payloads are not claimed
 
 
 def test_resize_contract():
-    payload = jpeg_encode(64, 32, 3, _gradient(64, 32, 3))
-    out = jpeg_resize(payload, 32, 16)
-    meta = jpeg_meta(out)
-    assert (meta["width"], meta["height"]) == (32, 16)
-    # deterministic
-    assert out == jpeg_resize(payload, 32, 16)
+    """Without PIL a recognised JPEG has no resampler: ``resize_image``
+    gives None (NULL outputs) instead of the stub's stride decimation."""
+    from db_converter_spark.operators.multimodal import _pil_available, resize_stub
+
+    payload = jpeg_baseline(64, 32)
+    if _pil_available():
+        w, h, dw, dh, _ = resize_image(payload)
+        assert (w, h, dw, dh) == (64, 32, 64, 32)
+    else:
+        assert resize_image(payload) is None
+    assert resize_image(b"text bytes") == resize_stub(b"text bytes")
 
 
 def test_mm_operators_decode_real_jpeg(spark):
     """Real JPEG payloads through the actual mapInPandas pipelines: mm02's
-    metadata must be the TRUE dimensions (not the stub's md5-derived
-    fake), and mm04's resize must emit a valid fit-within-224 JPEG —
-    with the stub fallback intact for non-image payloads."""
+    metadata is the TRUE dimensions (not the stub's md5-derived fake);
+    mm03/mm04 rows of an image are NULL; the stub fallback stays intact
+    for non-image payloads."""
     from db_converter_spark.operators.multimodal import (
         _MM02_SCHEMA,
+        _MM03_SCHEMA,
         _MM04_SCHEMA,
         _decode_image_batch,
+        _pil_available,
         _resize_batch,
+        _sample_frames_batch,
     )
 
     payloads = [
-        (1, jpeg_encode(640, 480, 3, _gradient(640, 480, 3), subsample=True)),
-        (2, jpeg_encode(100, 50, 1, _gradient(100, 50, 1))),
+        (1, jpeg_baseline(640, 480)),
+        (2, jpeg_progressive_header(100, 50, 1)),
         (3, b"plainly not an image"),
     ]
     df = spark.createDataFrame(payloads, "doc_id LONG, payload BINARY")
@@ -137,12 +96,18 @@ def test_mm_operators_decode_real_jpeg(spark):
     assert (metas[2]["width"], metas[2]["height"]) == (100, 50)
     assert metas[3]["format"] in ("png", "jpeg", "webp", "gif")  # stub path
 
+    samples = {
+        r["doc_id"]: r
+        for r in df.mapInPandas(_sample_frames_batch, schema=_MM03_SCHEMA).collect()
+    }
+    assert tuple(samples[1])[1:] == tuple(samples[2])[1:] == (None, None, None)
+    assert samples[3]["sample_md5"] is not None
+
     sizes = {
         r["doc_id"]: r
         for r in df.mapInPandas(_resize_batch, schema=_MM04_SCHEMA).collect()
     }
-    r1 = sizes[1]
-    assert (r1["src_w"], r1["src_h"]) == (640, 480)
-    assert (r1["dst_w"], r1["dst_h"]) == (224, 168)  # fit-within-224
-    r2 = sizes[2]
-    assert (r2["dst_w"], r2["dst_h"]) == (100, 50)  # already inside the box
+    assert tuple(sizes[2])[1:] == (None,) * 6
+    if not _pil_available():
+        assert tuple(sizes[1])[1:] == (None,) * 6
+    assert sizes[3]["resized_md5"] is not None

@@ -1,9 +1,8 @@
 """Multimodal codec slot-in (SURVEY §6 multimodal family): the Spark-side
 plumbing (schema, Arrow batches, mapInPandas) is oracle-verified via
-mm01–mm04; these tests pin the codec dispatch — stub today, real PIL decode
-the moment the container gains the lib, with non-image payloads always
-falling back to the deterministic stub so synthetic-testdata oracle rows
-keep matching."""
+mm01–mm04; these tests pin the codec dispatch: PIL when installed, the
+image header readers for a recognised image, and the deterministic stub
+for every other payload, so synthetic-testdata oracle rows keep matching."""
 
 from __future__ import annotations
 
@@ -16,6 +15,8 @@ from db_converter_spark.operators.multimodal import (
     decode_image_stub,
     resize_image,
     resize_stub,
+    sample_frames,
+    sample_frames_stub,
 )
 
 _HAS_PIL = importlib.util.find_spec("PIL") is not None
@@ -27,6 +28,7 @@ def test_non_image_payload_falls_back_to_stub():
     payload = b"definitely not an image"
     assert decode_image(payload) == decode_image_stub(payload)
     assert resize_image(payload) == resize_stub(payload)
+    assert sample_frames(payload) == sample_frames_stub(payload)
 
 
 def test_stub_is_deterministic():

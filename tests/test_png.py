@@ -1,140 +1,70 @@
-"""Pure-stdlib PNG codec (functions/png.py) + its slot-in to the
-multimodal operators: encode/decode round-trips, filter-type coverage,
-nearest-neighbor resize, graceful None on non-PNG, and real PNG payloads
-flowing through the mm02/mm04 mapInPandas pipelines."""
+"""PNG header reader (functions/imagemeta.png_meta) and real PNG headers
+through the mm02/mm03/mm04 mapInPandas pipelines."""
 
 from __future__ import annotations
 
-import struct
-import zlib
-
-from db_converter_spark.functions.png import (
-    png_decode,
-    png_encode,
-    png_meta,
-    png_resize,
-)
+from db_converter_spark.functions.imagemeta import png_meta
+from tests.image_fixtures import gif_anim, jpeg_baseline, png
 
 
-def _gradient(w: int, h: int, ch: int) -> bytes:
-    return bytes(
-        ((x * 7 + y * 13 + c * 29) % 256)
-        for y in range(h)
-        for x in range(w)
-        for c in range(ch)
-    )
-
-
-def test_encode_decode_roundtrip_all_channel_counts():
-    for ch in (1, 2, 3, 4):
-        px = _gradient(9, 5, ch)
-        data = png_encode(9, 5, ch, px)
-        meta = png_meta(data)
-        assert meta["width"] == 9 and meta["height"] == 5
-        w, h, got_ch, got = png_decode(data)
-        assert (w, h, got_ch) == (9, 5, ch)
-        assert bytes(got) == px
-
-
-def test_decode_all_filter_types():
-    """Hand-build a PNG whose rows use filter types 0-4; the unfilter
-    must reconstruct the same pixels as the filter-0 encoding."""
-    w, h, ch = 6, 5, 3
-    px = _gradient(w, h, ch)
-    stride = w * ch
-
-    rows = [bytearray(px[y * stride : (y + 1) * stride]) for y in range(h)]
-    raw = bytearray()
-    prev = bytearray(stride)
-    for y, ftype in enumerate([0, 1, 2, 3, 4]):
-        line = rows[y]
-        enc = bytearray(line)
-        if ftype == 1:
-            for i in range(stride - 1, ch - 1, -1):
-                enc[i] = (line[i] - line[i - ch]) & 0xFF
-        elif ftype == 2:
-            for i in range(stride):
-                enc[i] = (line[i] - prev[i]) & 0xFF
-        elif ftype == 3:
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                enc[i] = (line[i] - ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:
-            from db_converter_spark.functions.png import _paeth
-
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                ul = prev[i - ch] if i >= ch else 0
-                enc[i] = (line[i] - _paeth(left, prev[i], ul)) & 0xFF
-        raw.append(ftype)
-        raw += enc
-        prev = line
-
-    from db_converter_spark.functions.png import _SIG, _chunk
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    data = (
-        _SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _chunk(b"IEND", b"")
-    )
-    got = png_decode(data)
-    assert got is not None
-    assert bytes(got[3]) == px
-
-
-def test_resize_dims_and_determinism():
-    big = png_encode(448, 300, 3, _gradient(448, 300, 3))
-    out = png_resize(big, 224, 150)
-    meta = png_meta(out)
-    assert (meta["width"], meta["height"]) == (224, 150)
-    assert out == png_resize(big, 224, 150)
-    # identity resize keeps pixels bit-for-bit
-    small = png_encode(8, 8, 4, _gradient(8, 8, 4))
-    same = png_resize(small, 8, 8)
-    assert png_decode(same)[3] == png_decode(small)[3]
+def test_ihdr_fields_for_every_color_type():
+    for color_type in (0, 2, 4, 6):
+        meta = png_meta(png(9, 5, color_type))
+        assert meta == {
+            "width": 9, "height": 5, "bit_depth": 8, "color_type": color_type,
+            "interlaced": False, "n_frames": 1, "format": "png",
+        }
+    assert png_meta(png(3, 3, interlace=1))["interlaced"] is True
 
 
 def test_non_png_returns_none():
+    real = png(8, 8)
     assert png_meta(b"not a png at all") is None
-    assert png_decode(b"\x89PNG\r\n\x1a\nbroken") is None
-    assert png_resize(b"hello", 2, 2) is None
+    assert png_meta(real[:32]) is None  # cut inside IHDR
+    assert png_meta(real[:12] + b"IDAT" + real[16:]) is None  # IHDR not first
+    assert png_meta(jpeg_baseline(8, 8)) is None
+    assert png_meta(gif_anim(4, 4, 1)) is None
 
 
 def test_mm_operators_decode_real_png(spark):
-    """Real PNG payloads through the actual mapInPandas pipelines: mm02's
-    metadata must be the TRUE dimensions (not the stub's md5-derived
-    fake), and mm04's resize must emit a valid fit-within-224 PNG."""
-    from pyspark.sql import functions as F
-
+    """Real PNG payloads through the actual mapInPandas pipelines: mm02
+    reports the TRUE dimensions, not the stub's md5-derived fake; mm03
+    and mm04 have no pixel decoder without PIL, so the image rows are
+    NULL while a text payload keeps its stub row."""
     from db_converter_spark.operators.multimodal import (
         _MM02_SCHEMA,
+        _MM03_SCHEMA,
         _MM04_SCHEMA,
         _decode_image_batch,
+        _pil_available,
         _resize_batch,
+        _sample_frames_batch,
     )
 
-    payloads = [
-        (1, png_encode(640, 480, 3, _gradient(640, 480, 3))),
-        (2, png_encode(100, 50, 4, _gradient(100, 50, 4))),
-        (3, b"plainly not an image"),
-    ]
+    payloads = [(1, png(640, 480)), (2, png(100, 50, 6)), (3, b"plainly not an image")]
     df = spark.createDataFrame(payloads, "doc_id LONG, payload BINARY")
     metas = {
         r["doc_id"]: r
         for r in df.mapInPandas(_decode_image_batch, schema=_MM02_SCHEMA).collect()
     }
     assert (metas[1]["width"], metas[1]["height"], metas[1]["format"]) == (640, 480, "png")
-    assert (metas[2]["width"], metas[2]["height"]) == (100, 50)
+    assert (metas[2]["width"], metas[2]["height"], metas[2]["n_frames"]) == (100, 50, 1)
     assert metas[3]["format"] in ("png", "jpeg", "webp", "gif")  # stub path
+
+    samples = {
+        r["doc_id"]: r
+        for r in df.mapInPandas(_sample_frames_batch, schema=_MM03_SCHEMA).collect()
+    }
+    assert tuple(samples[1])[1:] == (None, None, None)
+    assert samples[3]["n_frames"] == len(b"plainly not an image") // 16
 
     sizes = {
         r["doc_id"]: r
         for r in df.mapInPandas(_resize_batch, schema=_MM04_SCHEMA).collect()
     }
-    r1 = sizes[1]
-    assert (r1["src_w"], r1["src_h"]) == (640, 480)
-    assert (r1["dst_w"], r1["dst_h"]) == (224, 168)  # fit-within-224
-    r2 = sizes[2]
-    assert (r2["dst_w"], r2["dst_h"]) == (100, 50)  # already inside the box
+    if _pil_available():
+        assert (sizes[1]["dst_w"], sizes[1]["dst_h"]) == (224, 168)
+    else:
+        assert tuple(sizes[1])[1:] == (None,) * 6
+        assert tuple(sizes[2])[1:] == (None,) * 6
+    assert sizes[3]["src_w"] is not None  # stub path

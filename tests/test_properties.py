@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the pure-Python SQL machinery:
 the statement splitter and the PG dialect rewriter must never corrupt
-quoted content, lose statements, or crash on adversarial input."""
+quoted content, lose statements, or crash on adversarial input; and the
+multimodal image entry points must never raise on a damaged image."""
 
 from __future__ import annotations
 
@@ -304,3 +305,56 @@ def test_pipe13_oracle_matches_python_twin(docs):
     }
     expected = _expected_scores(rows)
     assert got == expected, (got, expected)
+
+
+# ---------------------------------------------------------------------------
+# image entry points over damaged payloads
+# ---------------------------------------------------------------------------
+
+
+def _check_image_entry_points(payload: bytes) -> None:
+    """``decode_image``, ``sample_frames`` and ``resize_image`` return
+    their contract types for any bytes: one bad payload must not fail the
+    whole mapInPandas task."""
+    from db_converter_spark.operators.multimodal import (
+        decode_image,
+        resize_image,
+        sample_frames,
+    )
+
+    meta = decode_image(payload)
+    assert all(isinstance(meta[k], int) for k in ("width", "height", "n_frames"))
+    assert meta["format"] in ("png", "jpeg", "gif", "webp")
+    frames = sample_frames(payload)
+    assert frames is None or len(frames) == 3
+    resized = resize_image(payload)
+    assert resized is None or len(resized) == 5
+
+
+def test_image_entry_points_never_raise_on_any_prefix():
+    from tests.image_fixtures import FIXTURES
+
+    for payload, _meta in FIXTURES.values():
+        for cut in range(len(payload)):
+            _check_image_entry_points(payload[:cut])
+
+
+@st.composite
+def _damaged_image(draw):
+    """A fixture with up to 8 bytes overwritten, then optionally cut; the
+    cut is drawn from the header region half of the time."""
+    from tests.image_fixtures import FIXTURES
+
+    payload = bytearray(FIXTURES[draw(st.sampled_from(sorted(FIXTURES)))][0])
+    for _ in range(draw(st.integers(0, 8))):
+        payload[draw(st.integers(0, len(payload) - 1))] = draw(st.integers(0, 255))
+    if draw(st.booleans()):
+        cut = draw(st.one_of(st.integers(0, 48), st.integers(0, len(payload))))
+        payload = payload[:cut]
+    return bytes(payload)
+
+
+@given(_damaged_image())
+@settings(max_examples=400, deadline=None, derandomize=True)
+def test_image_entry_points_never_raise_on_damaged_payloads(payload):
+    _check_image_entry_points(payload)

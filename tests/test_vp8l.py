@@ -1,326 +1,60 @@
-"""Pure-stdlib WebP / VP8L codec (functions/vp8l.py) — round-trip on
-every encoder path, hand-built micro-streams for the decoder paths the
-encoder deliberately never emits (2D distance codes, predictor and
-cross-color transforms — their spec tables are pinned against values
-computed independently in the tests, since no external decoder exists in
-this container), container metadata incl. lossy VP8 and animations, and
-real WebP payloads through the actual mm02/mm03/mm04 mapInPandas
-pipelines."""
+"""WebP header reader (functions/imagemeta.webp_meta) over the RIFF
+container: VP8L (lossless) header bits, the lossy VP8 key-frame header,
+the VP8X canvas and the ANMF frame count, and real WebP headers through
+the mm02/mm03/mm04 mapInPandas pipelines."""
 
 from __future__ import annotations
 
-import hashlib
-import struct
+from db_converter_spark.functions.imagemeta import webp_meta
+from db_converter_spark.operators.multimodal import decode_image, resize_image, sample_frames
+from tests.image_fixtures import webp_anim, webp_vp8, webp_vp8l, webp_vp8x
 
-from db_converter_spark.functions.vp8l import (
-    _BitWriter,
-    _DIST_MAP,
-    _write_huffman_code,
-    vp8l_decode,
-    vp8l_encode,
-    webp_decode,
-    webp_encode,
-    webp_encode_anim,
-    webp_frames,
-    webp_meta,
-    webp_resize,
-)
-
-
-def _frame(w: int, h: int, seed: int, ch: int = 3) -> bytes:
-    return bytes(
-        (x * 7 + y * 3 + seed + k * 11) % 256
-        for y in range(h)
-        for x in range(w)
-        for k in range(ch)
-    )
-
-
-def _rgb_of(pix: "list[int]") -> bytes:
-    return b"".join(
-        bytes([(p >> 16) & 255, (p >> 8) & 255, p & 255]) for p in pix
-    )
-
-
-# ---------------------------------------------------------------------------
-# encoder-path round trips (lossless = byte equality)
-# ---------------------------------------------------------------------------
-
-
-def test_literal_roundtrip_all_channel_counts():
-    for ch in (1, 3, 4):
-        w, h = 23, 17
-        px = _frame(w, h, ch, ch=ch)
-        got = vp8l_decode(vp8l_encode(w, h, ch, px, use_palette=False))
-        assert got is not None
-        gw, gh, pix = got
-        assert (gw, gh) == (w, h)
-        if ch == 1:
-            assert bytes((p >> 8) & 255 for p in pix) == px
-        elif ch == 3:
-            assert _rgb_of(pix) == px
-        else:
-            assert (
-                b"".join(
-                    bytes([(p >> 16) & 255, (p >> 8) & 255, p & 255, (p >> 24) & 255])
-                    for p in pix
-                )
-                == px
-            )
-
-
-def test_subtract_green_and_cache_variants():
-    w, h = 31, 13
-    px = _frame(w, h, 5)
-    for kw in (
-        dict(subtract_green=True),
-        dict(cache_bits=0),
-        dict(cache_bits=3),
-        dict(subtract_green=True, cache_bits=8),
-    ):
-        got = vp8l_decode(vp8l_encode(w, h, 3, px, use_palette=False, **kw))
-        assert got and _rgb_of(got[2]) == px, kw
-
-
-def test_palette_roundtrip_every_bundling_width():
-    # 2 / 4 / 13 / 200 colors -> 8 / 4 / 2 / 1 pixels per packed byte
-    for ncol, w, h in ((2, 21, 9), (4, 10, 7), (13, 33, 5), (200, 30, 20)):
-        px = bytes(
-            (((x * 5 + y * 13 + x * y) % ncol) * (255 // max(ncol - 1, 1))) % 256
-            for y in range(h)
-            for x in range(w)
-            for _ in range(3)
-        )
-        data = vp8l_encode(w, h, 3, px)  # auto-palette
-        got = vp8l_decode(data)
-        assert got and _rgb_of(got[2]) == px, ncol
-        # bundled palettes compress far below the literal encoding
-        assert len(data) < len(vp8l_encode(w, h, 3, px, use_palette=False))
-
-
-def test_rle_long_runs_cross_4096_token_limit():
-    w, h = 100, 50  # 5000 identical pixels -> copy length must split
-    px = bytes([7, 99, 31]) * (w * h)
-    data = vp8l_encode(w, h, 3, px, use_palette=False)
-    got = vp8l_decode(data)
-    assert got and _rgb_of(got[2]) == px
-    assert len(data) < 200  # the run actually compressed
-
-
-def test_color_cache_hits_on_scattered_repeats():
-    # alternating colors defeat RLE (no adjacent repeats) but hit the cache
-    w, h = 64, 8
-    colors = [(i * 37 % 256, i * 91 % 256, i * 53 % 256) for i in range(4)]
-    px = b"".join(bytes(colors[(x + y) % 4]) for y in range(h) for x in range(w))
-    with_cache = vp8l_encode(w, h, 3, px, cache_bits=4, use_palette=False)
-    no_cache = vp8l_encode(w, h, 3, px, cache_bits=0, use_palette=False)
-    for data in (with_cache, no_cache):
-        got = vp8l_decode(data)
-        assert got and _rgb_of(got[2]) == px
-
-
-# ---------------------------------------------------------------------------
-# hand-built micro-streams: decoder paths the encoder never emits
-# ---------------------------------------------------------------------------
-
-
-def _begin(w: int, h: int) -> _BitWriter:
-    bw = _BitWriter()
-    bw.write(w - 1, 14)
-    bw.write(h - 1, 14)
-    bw.write(0, 1)  # alpha hint
-    bw.write(0, 3)  # version
-    return bw
-
-
-def _write_group(bw: _BitWriter, gf, rf, bf, af, df):
-    codes = {}
-    codes["g"] = _write_huffman_code(bw, gf, 256 + 24)
-    codes["r"] = _write_huffman_code(bw, rf, 256)
-    codes["b"] = _write_huffman_code(bw, bf, 256)
-    codes["a"] = _write_huffman_code(bw, af, 256)
-    codes["d"] = _write_huffman_code(bw, df, 40)
-    return codes
-
-
-def _emit(bw: _BitWriter, codes, channel: str, sym: int):
-    c, ln = codes[channel][sym]
-    bw.write_code(c, ln)
-
-
-def _sub_image_constant(bw: _BitWriter, argb: int):
-    """A 1-pixel (or constant) sub-image: no cache, five single-symbol
-    codes, zero data bits."""
-    bw.write(0, 1)  # no color cache
-    _write_huffman_code(bw, {(argb >> 8) & 0xFF: 1}, 256 + 24)
-    _write_huffman_code(bw, {(argb >> 16) & 0xFF: 1}, 256)
-    _write_huffman_code(bw, {argb & 0xFF: 1}, 256)
-    _write_huffman_code(bw, {(argb >> 24) & 0xFF: 1}, 256)
-    _write_huffman_code(bw, {0: 1}, 40)
-
-
-def test_micro_2d_distance_code():
-    """Distance code 1 = offset (0, 1) = the pixel directly above
-    (dist = width); code 2 = (1, 0) = the previous pixel. Pinned against
-    the spec map with expected outputs computed by hand."""
-    assert _DIST_MAP[0] == (0, 1) and _DIST_MAP[1] == (1, 0)
-    w, h = 3, 2
-    lits = [10, 20, 30, 40]  # green values; r=b=0, a=255
-    bw = _begin(w, h)
-    bw.write(0, 1)  # no transforms
-    bw.write(0, 1)  # no cache
-    bw.write(0, 1)  # no meta huffman
-    gf = {v: 1 for v in lits}
-    gf[256 + 1] = 1  # length prefix code 1 -> length 2
-    codes = _write_group(bw, gf, {0: 4}, {0: 4}, {255: 4}, {0: 1})
-    for v in lits:  # literals: (0,0) (1,0) (2,0) (0,1)
-        _emit(bw, codes, "g", v)
-        _emit(bw, codes, "r", 0)
-        _emit(bw, codes, "b", 0)
-        _emit(bw, codes, "a", 255)
-    _emit(bw, codes, "g", 256 + 1)  # copy length 2
-    _emit(bw, codes, "d", 0)  # distance prefix 0 -> dist_code 1 -> (0,1)
-    got = vp8l_decode(bytes([0x2F]) + bw.getvalue())
-    assert got is not None
-    _, _, pix = got
-    greens = [(p >> 8) & 255 for p in pix]
-    # copied pixels (1,1),(2,1) come from one row above: 20, 30
-    assert greens == [10, 20, 30, 40, 20, 30]
-
-
-def test_micro_predictor_transform():
-    """Predictor transform with one tile forcing mode 7 (Average2(L, T)):
-    residuals decode, then each pixel adds its prediction — expected
-    values computed independently here from the spec formulas."""
-    w, h = 2, 2
-    # residual greens; all other channels residual 0 (alpha residual 0 too)
-    res = [100, 10, 7, 5]
-    bw = _begin(w, h)
-    bw.write(1, 1)  # transform present
-    bw.write(0, 2)  # predictor
-    bw.write(2, 3)  # size_bits = 4 -> one tile for a 2x2 image
-    _sub_image_constant(bw, 7 << 8)  # mode 7 in green channel
-    bw.write(0, 1)  # end of transforms
-    bw.write(0, 1)  # no cache
-    bw.write(0, 1)  # no meta
-    gf = {v: 1 for v in res}
-    codes = _write_group(bw, gf, {0: 4}, {0: 4}, {0: 4}, {0: 1})
-    for v in res:
-        _emit(bw, codes, "g", v)
-        _emit(bw, codes, "r", 0)
-        _emit(bw, codes, "b", 0)
-        _emit(bw, codes, "a", 0)
-    got = vp8l_decode(bytes([0x2F]) + bw.getvalue())
-    assert got is not None
-    _, _, pix = got
-    # hand-computed: p00 = res + ARGB_BLACK -> a=255 g=100
-    # p10 = res + left -> a=255 g=110; p01 = res + top -> a=255 g=107
-    # p11 = res + Average2(left=p01, top=p10) per channel:
-    #   a: (255+255)>>1 = 255 -> 255; g: (107+110)>>1 = 108 -> 113
-    a = [(p >> 24) & 255 for p in pix]
-    g = [(p >> 8) & 255 for p in pix]
-    assert a == [255, 255, 255, 255]
-    assert g == [100, 110, 107, 113]
-
-
-def test_micro_color_transform():
-    """Cross-color transform, one tile: g2r/g2b/r2b deltas applied per
-    the spec ((int8 t * int8 c) >> 5), expected values hand-computed."""
-    w, h = 1, 1
-    g2r, g2b, r2b = 64, 32, 0xF0  # r2b negative as int8 (-16)
-    cte = (0xFF << 24) | (r2b << 16) | (g2b << 8) | g2r
-    bw = _begin(w, h)
-    bw.write(1, 1)
-    bw.write(1, 2)  # color transform
-    bw.write(2, 3)  # size_bits = 4
-    _sub_image_constant(bw, cte)
-    bw.write(0, 1)  # end transforms
-    bw.write(0, 1)  # no cache
-    bw.write(0, 1)  # no meta
-    codes = _write_group(bw, {80: 1}, {10: 1}, {20: 1}, {255: 1}, {0: 1})
-    _emit(bw, codes, "g", 80)
-    _emit(bw, codes, "r", 10)
-    _emit(bw, codes, "b", 20)
-    _emit(bw, codes, "a", 255)
-    got = vp8l_decode(bytes([0x2F]) + bw.getvalue())
-    assert got is not None
-    p = got[2][0]
-    # hand-computed: delta(t, c) = (int8(t) * int8(c)) >> 5, g = 80
-    # r = 10 + (64*80)>>5 = 10 + 160 -> 170 & 0xff = 170
-    # b = 20 + (32*80)>>5 + ((-16)*int8(170)= -16*-86=1376)>>5=43
-    #   = 20 + 80 + 43 = 143
-    assert (p >> 8) & 255 == 80
-    assert (p >> 16) & 255 == 170
-    assert p & 255 == 143
-
-
-# ---------------------------------------------------------------------------
-# container
-# ---------------------------------------------------------------------------
+_STILL = {"bit_depth": 8, "n_frames": 1, "format": "webp"}
 
 
 def test_container_meta_decode_resize():
     w, h = 30, 44
-    px = _frame(w, h, 2)
-    payload = webp_encode(w, h, 3, px)
-    assert webp_meta(payload) == {
-        "width": w, "height": h, "bit_depth": 8, "n_frames": 1, "format": "webp",
+    payload = webp_vp8l(w, h)
+    assert webp_meta(payload) == {"width": w, "height": h, **_STILL}
+    assert decode_image(payload) == {
+        "width": w, "height": h, "n_frames": 1, "format": "webp",
     }
-    dw, dh, c, rgb = webp_decode(payload)
-    assert (dw, dh, c, rgb) == (w, h, 3, px)
-    rz = webp_resize(payload, 15, 22)
-    m = webp_meta(rz)
-    assert (m["width"], m["height"]) == (15, 22)
-    # nearest-neighbor 2:1 downscale keeps exact source pixels
-    _, _, _, rgb2 = webp_decode(rz)
-    assert rgb2[0:3] == px[0:3]
+    # no pixel decoder: a recognised image gets NULL outputs
+    assert resize_image(payload) is None
+    # the VP8X canvas wins over the dimensions of the stream inside it
+    assert webp_meta(webp_vp8x(64, 48)) == {"width": 64, "height": 48, **_STILL}
 
 
 def test_animation_meta_and_frames():
-    frames = [_frame(16, 12, s) for s in range(5)]
-    anim = webp_encode_anim(16, 12, frames)
+    anim = webp_anim(16, 12, 5)
     m = webp_meta(anim)
     assert m["n_frames"] == 5 and (m["width"], m["height"]) == (16, 12)
-    out = webp_frames(anim)
-    assert [f[4] for f in out] == frames
-    assert all(f[:4] == (0, 0, 16, 12) for f in out)
+    assert sample_frames(anim) is None  # frame count known, frames not decoded
 
 
 def test_lossy_vp8_header_gives_real_dims_but_no_pixels():
-    # minimal lossy VP8 key-frame header: frame tag + start code + dims
-    w, h = 320, 240
-    vp8 = bytes([0x00, 0x00, 0x00]) + b"\x9d\x01\x2a" + struct.pack("<HH", w, h)
-    payload = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(vp8)) + b"WEBP"
-        + b"VP8 " + struct.pack("<I", len(vp8)) + vp8
-    )
-    m = webp_meta(payload)
-    assert m == {
-        "width": w, "height": h, "bit_depth": 8, "n_frames": 1, "format": "webp",
-    }
-    assert webp_decode(payload) is None  # lossy pixels are out of scope
+    payload = webp_vp8(320, 240)
+    assert webp_meta(payload) == {"width": 320, "height": 240, **_STILL}
+    assert resize_image(payload) is None
+    # an inter frame (frame-tag bit 0 set) carries no dimensions
+    inter = bytearray(payload)
+    inter[20] |= 1
+    assert webp_meta(bytes(inter)) is None
 
 
 def test_garbage_and_truncation_return_none():
     assert webp_meta(b"not a webp at all") is None
-    assert vp8l_decode(b"\x00\x01\x02") is None
-    w, h = 40, 30
-    payload = webp_encode(w, h, 3, _frame(w, h, 1))
-    assert webp_decode(payload[: len(payload) // 2]) is None
-    # truncated container: meta parses nothing decodable -> None
-    assert webp_meta(payload[:14]) is None
-
-
-# ---------------------------------------------------------------------------
-# through the real mm pipelines
-# ---------------------------------------------------------------------------
+    payload = webp_vp8l(40, 30)
+    assert webp_meta(payload[:14]) is None  # container, no complete chunk
+    assert webp_meta(payload[:24]) is None  # VP8L chunk cut short
+    assert webp_meta(payload[:8] + b"WAVE" + payload[12:]) is None
 
 
 def test_mm_operators_decode_real_webp(spark):
     """Real WebP payloads through the actual mapInPandas pipelines: mm02
-    reads true still + animation metadata (and LOSSY VP8 dimensions),
-    mm03 samples real VP8L frames, mm04 resizes within 224 — stub
-    fallback intact for non-image payloads."""
+    reads true still, lossy and animation metadata; mm03/mm04 rows of an
+    image are NULL without PIL; the stub fallback stays intact for
+    non-image payloads."""
     from db_converter_spark.operators.multimodal import (
         _MM02_SCHEMA,
         _MM03_SCHEMA,
@@ -330,10 +64,12 @@ def test_mm_operators_decode_real_webp(spark):
         _sample_frames_batch,
     )
 
-    w, h = 300, 200
-    still = webp_encode(w, h, 3, _frame(w, h, 0))
-    anim = webp_encode_anim(24, 18, [_frame(24, 18, s) for s in range(9)])
-    payloads = [(1, still), (2, anim), (3, b"plainly not an image")]
+    payloads = [
+        (1, webp_vp8l(300, 200)),
+        (2, webp_anim(24, 18, 9)),
+        (3, b"plainly not an image"),
+        (4, webp_vp8(320, 240)),
+    ]
     df = spark.createDataFrame(payloads, "doc_id LONG, payload BINARY")
 
     metas = {
@@ -341,24 +77,23 @@ def test_mm_operators_decode_real_webp(spark):
         for r in df.mapInPandas(_decode_image_batch, schema=_MM02_SCHEMA).collect()
     }
     assert (metas[1]["width"], metas[1]["height"], metas[1]["format"]) == (
-        w, h, "webp",
+        300, 200, "webp",
     )
     assert metas[2]["n_frames"] == 9
     assert metas[3]["format"] in ("png", "jpeg", "webp", "gif")  # stub
+    assert (metas[4]["width"], metas[4]["height"]) == (320, 240)
 
     samples = {
         r["doc_id"]: r
         for r in df.mapInPandas(_sample_frames_batch, schema=_MM03_SCHEMA).collect()
     }
-    s2 = samples[2]
-    assert (s2["n_frames"], s2["n_sampled"]) == (9, 3)  # frames 0, 4, 8
-    want = b"".join(_frame(24, 18, s) for s in (0, 4, 8))
-    assert s2["sample_md5"] == hashlib.md5(want).hexdigest()
+    assert tuple(samples[2])[1:] == (None, None, None)
+    assert samples[3]["n_sampled"] is not None
 
     sizes = {
         r["doc_id"]: r
         for r in df.mapInPandas(_resize_batch, schema=_MM04_SCHEMA).collect()
     }
-    r1 = sizes[1]
-    assert (r1["src_w"], r1["src_h"]) == (w, h)
-    assert (r1["dst_w"], r1["dst_h"]) == (224, 149)
+    for doc_id in (1, 2, 4):  # stub bitstreams: even PIL cannot decode them
+        assert tuple(sizes[doc_id])[1:] == (None,) * 6
+    assert sizes[3]["dst_w"] is not None
