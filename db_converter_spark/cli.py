@@ -28,7 +28,12 @@ from pathlib import Path
 
 from db_converter_spark.plans.hooks import ChatHook
 from db_converter_spark.plans.model import PacketType, ResultCode
-from db_converter_spark.plans.runner import PacketRunner, open_ledger, render_results
+from db_converter_spark.plans.runner import (
+    PacketRunner,
+    expand_targets,
+    open_ledger,
+    render_results,
+)
 from db_converter_spark.plans.watchdog import install_sigint_cancel
 
 
@@ -114,23 +119,7 @@ def main(argv: list[str] | None = None, spark=None, confirm=input) -> int:
         print(f"created packet {dst} from template {args.template}")
         return 0
 
-    # runner is needed for mask expansion; but pure-ledger commands can
-    # resolve targets without Spark
-    import fnmatch
-
-    def expand(mask: str) -> list[str]:
-        if mask.startswith("ALL"):
-            excl = mask.split(",exclude:", 1)[1].split(",") if ",exclude:" in mask else []
-            return [d for d in known if not any(fnmatch.fnmatch(d, e) for e in excl)]
-        out: list[str] = []
-        for part in mask.split(","):
-            m = [d for d in known if fnmatch.fnmatch(d, part)]
-            if not m and not any(c in part for c in "*?["):
-                m = [part]  # literal target; databases are created on demand
-            out.extend(m)
-        return sorted(dict.fromkeys(out))
-
-    dbs = expand(args.db)
+    dbs = expand_targets(args.db, known)
 
     pg_cfgs: dict = {}
     if args.pg_targets:

@@ -110,7 +110,7 @@ def mg01_chunk_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's chunked-migration PK grid (reference:
     packets/test_int4_to_int8/02_gen_obj.sql:1-27) as one aggregate +
     sequence explode — the generator that fans a backfill into bounded
-    range actions (operators/migration.chunked_backfill)."""
+    range actions."""
     register_views(spark, sf_dir)
     from db_converter_spark.operators.migration import chunk_grid
 
@@ -192,6 +192,26 @@ FROM events GROUP BY 1, 2
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
+def _drain(spark: SparkSession, frame: DataFrame, output_mode: str, partitions: int) -> DataFrame:
+    """Run a streaming ``frame`` to completion under an ``availableNow``
+    trigger (process the backlog, then stop) into a uuid-named memory sink
+    with ``partitions`` shuffle partitions, and return the sink's rows; the
+    sink's view is dropped before this returns."""
+    sink = f"stream_sink_{uuid.uuid4().hex}"
+    with scoped_conf(spark, _SHUFFLE_PARTITIONS, str(partitions)):
+        q = (
+            frame.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
+
+
 def _events_stream_source(spark: SparkSession, sf_dir: str):
     """readStream source for the events table with a footer-driven ``ts``
     schema: parquet timestamp[ns] columns can only be scanned as raw longs
@@ -235,7 +255,6 @@ def ev03_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     and appends to a table sink). Watermark bounds state at scale; sums are
     integer cents so the oracle compares exactly. The ``ts`` stream schema is
     footer-driven (ns vs us), matching the batch reader."""
-    sink = f"ev03_sink_{uuid.uuid4().hex}"
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src
@@ -252,18 +271,7 @@ def ev03_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink)
-    spark.catalog.dropTempView(sink)
-    return out
+    return _drain(spark, agg, "complete", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -519,7 +527,6 @@ def ev07_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds one key per event in the horizon, not per event ever seen.
     Output (append sink, then a batch rollup) must equal the plain batch
     counts — duplicates are invisible downstream."""
-    sink = f"ev07_sink_{uuid.uuid4().hex}"
     one = _events_stream_source(spark, sf_dir)
     two = _events_stream_source(spark, sf_dir)
     deduped = (
@@ -527,18 +534,11 @@ def ev07_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    spark.catalog.dropTempView(sink)
-    return out
+    return (
+        _drain(spark, deduped, "append", 8)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -574,7 +574,6 @@ def ev08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join, which is exactly what the DuckDB oracle computes —
     row-level output, so the value-hash pins every attributed pair.
     Delay and cents are integer-scaled for the exact compare."""
-    sink = f"ev08_sink_{uuid.uuid4().hex}"
     clicks = (
         _events_stream_source(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -614,18 +613,7 @@ def ev08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FOUR state stores per partition, and store init dominates at this
     # state volume (measured 6.8 s @ 8 → 3.5 s @ 4; a production deployment
     # sizes this to state volume / executor count instead)
-    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "4"):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink)
-    spark.catalog.dropTempView(sink)
-    return out
+    return _drain(spark, joined, "append", 4)
 
 
 # ---------------------------------------------------------------------------
@@ -654,7 +642,6 @@ def ev09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``availableNow`` backlog equal the batch join — the DuckDB oracle."""
     from ..catalog import load_table
 
-    sink = f"ev09_sink_{uuid.uuid4().hex}"
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("mktsegment")
     )
@@ -675,18 +662,7 @@ def ev09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink)
-    spark.catalog.dropTempView(sink)
-    return out
+    return _drain(spark, agg, "complete", 8)
 
 
 # ---------------------------------------------------------------------------
@@ -746,7 +722,6 @@ def ev10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming semantics (open sessions are not final) expressed in
     batch SQL. State is bounded by open sessions per user — the point of
     the native operator at 100 TB/day."""
-    sink = f"ev10_sink_{uuid.uuid4().hex}"
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src.withWatermark("ts", "0 seconds")
@@ -763,18 +738,7 @@ def ev10_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "4"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(sink)
-    spark.catalog.dropTempView(sink)
-    return out
+    return _drain(spark, agg, "append", 4)
 
 
 # ---------------------------------------------------------------------------
@@ -1609,7 +1573,6 @@ def ev18_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts p50/p90/p99 as smallest-bin-reaching-ceil(q·n) (the dq07
     estimator; right-edge estimates, error <= one 400-cent bin). The
     batch oracle computes the identical sketch, so the compare is exact."""
-    sink = f"ev18_sink_{uuid.uuid4().hex}"
     src = _events_stream_source(spark, sf_dir)
     hist = (
         src.withWatermark("ts", "2 hours")
@@ -1621,18 +1584,7 @@ def ev18_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
         )
     )
-    with scoped_conf(spark, _SHUFFLE_PARTITIONS, "8"):
-        q = (
-            hist.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.sql(_ev18_tail("{hist}", "DIV"), hist=spark.table(sink))
-    spark.catalog.dropTempView(sink)
-    return out
+    return spark.sql(_ev18_tail("{hist}", "DIV"), hist=_drain(spark, hist, "complete", 8))
 
 
 # ---------------------------------------------------------------------------

@@ -20,13 +20,11 @@ Scale design:
 - every rewrite, ``change_column_type`` included, is one shuffle-free
   scan→write job through ``_swap_write``; at 100 TB this is a map-only job
   per partition, embarrassingly parallel across executors.
-- ``merge_update`` broadcasts the source when it is small (the common
-  UPDATE-FROM-subquery case) so the backfill join never shuffles the big
-  table.
-- ``chunked_backfill`` keeps the reference's bounded-work semantics for
-  operational control (re-runnable per range, ledger-tracked), but each
-  chunk is a :func:`merge_update`, i.e. a whole-table rewrite: N chunks
-  rewrite the table N times.
+- ``merge_update`` always broadcasts the source (the UPDATE-FROM-subquery
+  case: a small source) so the backfill join never shuffles the big table.
+- bounded-work chunking is the packet's business: a generator fans a
+  migration step into range actions (:func:`chunk_grid`, reference:
+  packets/test_int4_to_int8/02_gen_obj.sql), each one ledger-tracked.
 """
 
 from __future__ import annotations
@@ -77,7 +75,6 @@ def merge_update_plan(
     source: DataFrame,
     on: list[str] | None,
     set_map: dict[str, str],
-    broadcast_source: bool = True,
     condition: str | None = None,
 ) -> CountedPlan:
     """Logical plan of :func:`merge_update` and its matched-row count —
@@ -104,18 +101,17 @@ def merge_update_plan(
     the first-match filter on the condition path, so each target row counts
     at most once — PG's ``('UPDATE', n)``.
 
-    At scale: the equi path never shuffles the target (broadcast-hash
-    join + partition-parallel write). The condition path adds one window
-    shuffle keyed by the synthetic id — unavoidable for arbitrary
-    predicates; keep the source small/broadcast there (it plans as a
-    broadcast nested-loop join). For a huge equi source, pass
-    ``broadcast_source=False`` to let AQE pick a sort-merge join."""
+    At scale: the source is always broadcast, so the equi path never
+    shuffles the target (broadcast-hash join + partition-parallel write).
+    The condition path adds one window shuffle keyed by the synthetic id —
+    unavoidable for arbitrary predicates; it plans as a broadcast
+    nested-loop join."""
     if (on is None) == (condition is None):
         raise ValueError("merge_update: pass exactly one of `on` or `condition`")
     if on is not None:
         t = spark.table(target_table).alias("t")
         src = source.dropDuplicates(on)
-        s = (F.broadcast(src) if broadcast_source else src).alias("s")
+        s = F.broadcast(src).alias("s")
         # plain equality, not eqNullSafe: the `on` path is only taken for
         # `t.k = s.k` conjunctions, and PG `=` never matches NULL keys —
         # and with == a join hit implies s.k IS NOT NULL, so the matched
@@ -132,7 +128,7 @@ def merge_update_plan(
             uid, F.monotonically_increasing_id()
         ).alias("t")
         src = source.withColumn(flag, F.lit(True))
-        s = (F.broadcast(src) if broadcast_source else src).alias("s")
+        s = F.broadcast(src).alias("s")
         w = Window.partitionBy(uid).orderBy(
             *[F.col(f"s.{c}").asc_nulls_last() for c in source.columns]
         )
@@ -160,7 +156,6 @@ def merge_update(
     source: DataFrame,
     on: list[str] | None,
     set_map: dict[str, str],
-    broadcast_source: bool = True,
     condition: str | None = None,
 ) -> int:
     """Execute :func:`merge_update_plan` via two-phase swap write (a plain
@@ -172,7 +167,7 @@ def merge_update(
     on the rewrite's own join while the swap write runs — no semi-join pass
     over the target; :func:`merge_matched_count` is its reference."""
     return commit(spark, target_table, merge_update_plan(
-        spark, target_table, source, on, set_map, broadcast_source, condition
+        spark, target_table, source, on, set_map, condition
     ))
 
 
@@ -182,13 +177,12 @@ def merge_matched_count(
     source: DataFrame,
     on: list[str] | None,
     condition: str | None = None,
-    broadcast_source: bool = True,
 ) -> int:
     """Number of ``target_table`` rows a :func:`merge_update` would touch,
     by a separate left-semi join — the reference the observed count is
     tested against."""
     t = spark.table(target_table).alias("t")
-    s = (F.broadcast(source) if broadcast_source else source).alias("s")
+    s = F.broadcast(source).alias("s")
     if on is not None:
         # same plain-equality predicate as merge_update_plan's equi path —
         # NULL-key rows are neither updated nor counted (PG `=` semantics)
@@ -538,32 +532,3 @@ def chunk_grid(
             (F.col("a") + chunk_size - 1).alias("b"),
         )
     )
-
-
-def chunked_backfill(
-    spark: SparkSession,
-    target_table: str,
-    key: str,
-    set_map: dict[str, str],
-    chunk_size: int = 100_000,
-    maint_every: int | None = None,
-) -> int:
-    """Range-chunked in-place update, honoring the reference's bounded-work
-    semantics (one chunk = one re-runnable unit; reference: 10 000-id
-    UPDATE transactions, packets/test_int4_to_int8/02_step.sql).
-
-    On Spark a single :func:`merge_update` is normally better (partition
-    parallelism replaces chunking); this exists for operational parity —
-    e.g. when each chunk must be individually committed/resumable against
-    an external (JDBC) sink. Returns the number of chunks applied."""
-    chunks = chunk_grid(spark, target_table, key, chunk_size).collect()
-    n = 0
-    for i, row in enumerate(chunks):
-        src = spark.table(target_table).where(
-            (F.col(key) >= row["a"]) & (F.col(key) <= row["b"])
-        ).select(key)
-        merge_update(spark, target_table, src, [key], set_map)
-        n += 1
-        if maint_every and (i + 1) % maint_every == 0:
-            spark.sql(f"ANALYZE TABLE {target_table} COMPUTE STATISTICS")
-    return n

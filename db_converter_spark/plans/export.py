@@ -15,8 +15,9 @@ Semantics kept from the reference:
 - tab-delimited, QUOTE_ALL, values stringified with Python ``str()``
   (reference: dbccore/dbccore.py:759-768);
 - file naming ``export_<md5(stm)[:6]>_<ts>_<db>.csv`` (reference:
-  dbccore/dbccore.py:752-756); a name already taken in the same action
-  (a repeated statement) gets ``_2``, ``_3``, … before ``.csv``;
+  dbccore/dbccore.py:752-756); a name already taken in ``out_dir`` (a
+  repeated statement, or an earlier action in the same second) gets
+  ``_2``, ``_3``, … before ``.csv``; zip archives are numbered the same way;
 - optional zip of all CSVs (reference: dbccore/dbccore.py:781-826): LZMA
   without a password; with one, encrypted by the WinZip AE-2 writer in
   ``functions/wzaes.py`` (AES-256 from the ``cryptography`` package).
@@ -58,10 +59,14 @@ def generate_password(length: int = 12) -> str:
     return "".join(secrets.choice(alphabet) for _ in range(length))
 
 
-def _export_name(stmt: str, db: str, ts: str | None = None) -> str:
-    h = hashlib.md5(stmt.encode()).hexdigest()[:6]
-    ts = ts or time.strftime("%Y%m%d_%H%M%S")
-    return f"export_{h}_{ts}_{db}.csv"
+def _free_path(out_dir: Path, stem: str, suffix: str) -> Path:
+    """``out_dir/<stem><suffix>``, or the first ``<stem>_<n><suffix>``
+    (n = 2, 3, …) not on disk: an export never replaces an earlier one."""
+    path, n = out_dir / f"{stem}{suffix}", 1
+    while path.exists():
+        n += 1
+        path = out_dir / f"{stem}_{n}{suffix}"
+    return path
 
 
 def write_csv(df: DataFrame, out_path: Path) -> int:
@@ -89,15 +94,13 @@ def export_statements(
     db: str,
     statements: list[str],
     out_dir: str | Path,
-    zip_output: bool = False,
-    zip_password: str | None = None,
     export_options: dict | None = None,
 ) -> list[str]:
     """Run each SELECT statement on Spark and write one CSV per statement;
     see :func:`export_queries` for zipping and the result."""
     return export_queries(
         lambda stmt, path: write_csv(session.sql(stmt), path),
-        db, statements, out_dir, zip_output, zip_password, export_options,
+        db, statements, out_dir, export_options,
     )
 
 
@@ -106,8 +109,6 @@ def export_queries(
     db: str,
     statements: list[str],
     out_dir: str | Path,
-    zip_output: bool = False,
-    zip_password: str | None = None,
     export_options: dict | None = None,
 ) -> list[str]:
     """``write(stmt, path)`` one CSV per SELECT statement; optionally zip
@@ -122,16 +123,10 @@ def export_queries(
     Returns the list of produced file paths (the zip replaces the CSVs when
     zipping, matching the reference's delete-after-zip)."""
     out_dir = Path(out_dir)
-    pw_in_name = False
-    if export_options:
-        if str(export_options.get("use_zip", "")).lower() in ("yes", "true", "1"):
-            zip_output = True
-        pw = export_options.get("password")
-        if pw == "random":
-            zip_password = generate_password()
-            pw_in_name = True
-        elif pw:
-            zip_password = str(pw)
+    export_options = export_options or {}
+    zip_output = str(export_options.get("use_zip", "")).lower() in ("yes", "true", "1")
+    pw = export_options.get("password")
+    zip_password = generate_password() if pw == "random" else (str(pw) if pw else None)
     for stmt in statements:
         if statement_kind(stmt) != "query":
             raise ExportValidationError(
@@ -140,17 +135,14 @@ def export_queries(
     files: list[Path] = []
     ts = time.strftime("%Y%m%d_%H%M%S")
     for stmt in statements:
-        name = _export_name(stmt, db, ts)
-        path, n = out_dir / name, 1
-        while path in files:  # a repeated statement must not overwrite its twin
-            n += 1
-            path = out_dir / f"{name[:-4]}_{n}.csv"
+        h = hashlib.md5(stmt.encode()).hexdigest()[:6]
+        path = _free_path(out_dir, f"export_{h}_{ts}_{db}", ".csv")
         write(stmt, path)
         files.append(path)
     if not zip_output:
         return [str(f) for f in files]
-    zip_name = f"export_{zip_password}_{ts}_{db}.zip" if pw_in_name else f"export_{ts}_{db}.zip"
-    zip_path = out_dir / zip_name
+    pw_part = f"{zip_password}_" if pw == "random" else ""
+    zip_path = _free_path(out_dir, f"export_{pw_part}{ts}_{db}", ".zip")
     _zip_files(files, zip_path, zip_password)
     for f in files:
         f.unlink()

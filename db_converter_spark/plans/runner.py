@@ -6,13 +6,15 @@ Execution model:
 - one loop, :meth:`PacketRunner._run_on_db`, runs every packet type on
   every target: lock, hash guard, ledger rows, ``run_once`` then
   generators, action binding and md5 dedup, skip flags, status.
-- a *target* supplies only its channel (a :class:`RunContext`: run one
-  statement, evaluate a generator, run a maintenance command, export)
-  and its ledger. A Spark target is one catalog database in an isolated
+- a *target* is a Spark database or a live PostgreSQL database; it
+  supplies only its channel (a :class:`RunContext`: run one statement,
+  evaluate a generator, run a maintenance command, export) and its
+  ledger. A Spark target is one catalog database in an isolated
   ``spark.newSession()`` child with a SQLite ledger; a live-PostgreSQL
-  target (``sources/pg_live.PgRunContext``) runs server-side over psql
-  with the ``dbc_*`` ledger in that database. Targets run in parallel
-  driver threads (reference: db_converter.py:633-647).
+  target (``pg_targets``, ``sources/pg_live.PgRunContext``) runs
+  server-side over psql with the ``dbc_*`` ledger in that database.
+  Targets run in parallel driver threads (reference:
+  db_converter.py:633-647).
 - one *step* = one SQL (or Python) file; one *action* = one placeholder
   binding of a step, identity = md5 of the final SQL, dedup'd against the
   ledger for idempotent resume (reference: dbccore/dbccore.py:941-951).
@@ -23,12 +25,12 @@ Execution model:
   (reference: ``execute_q`` → ``export_data``, dbccore/dbccore.py:724-831).
 - DML on Spark: statement text is parsed only by ``sqlsplit.parse_dml``.
   Every parsed statement Spark cannot run natively (UPDATE/DELETE on
-  parquet, upserts, the join forms, INSERT into a live JDBC table) maps to
-  one counted plan (:func:`_dml_plan`), and :func:`_run_statement` checks
-  ``ctx.no_commit`` once: the plan shadow-executes into the noop sink or is
-  committed (``migration.commit``, or the JDBC append). Intermediates reach
-  ``spark.sql`` as DataFrame arguments; the runner registers no temp view
-  other than the ``dbc_packets`` ledger snapshot.
+  parquet, upserts, the join forms) maps to one counted plan
+  (:func:`_dml_plan`), and :func:`_run_statement` checks ``ctx.no_commit``
+  once: the plan shadow-executes into the noop sink or is committed
+  (``migration.commit``). Intermediates reach ``spark.sql`` as DataFrame
+  arguments; the runner registers no temp view other than the
+  ``dbc_packets`` ledger snapshot.
 """
 
 from __future__ import annotations
@@ -121,12 +123,6 @@ class RunContext:
         self.current_step_results: list = []
         # per-target ledger; attached by the run loop when tracking is on
         self.tracker: ActionTracker | None = None
-        # live-JDBC target (reference: every packet executes against a
-        # remote conninfo, dbccore/dbccore.py:905-1181): when set, remote
-        # tables are registered as snapshot temp views and INSERTs into
-        # them route through the JDBC append sink. Keys: url, properties,
-        # tables (lowercased names).
-        self.jdbc_target: dict | None = None
 
     def sequence_tracker(self) -> ActionTracker:
         """Ledger holding this target's sequence counters (SURVEY §7.4.6).
@@ -246,10 +242,6 @@ def _capture_select(df) -> list:
     return [cols] + rows
 
 
-# MERGE/TRUNCATE have no parsed form; every other remote write is a Dml
-_JDBC_WRITE_TARGET_RE = re.compile(
-    r"^\s*(merge\s+into|truncate(?:\s+table)?)\s+([\w.`\"]+)", re.I
-)
 # the PG command word a parsed DML statement reports
 _COMMAND = {
     "insert": "INSERT",
@@ -260,22 +252,6 @@ _COMMAND = {
     "delete-using": "DELETE",
 }
 _EQUI_RE = re.compile(r"\s*(\w+)\.`?(\w+)`?\s*=\s*(\w+)\.`?(\w+)`?\s*")
-
-
-def _jdbc_table_of(ctx: RunContext, name: str) -> "str | None":
-    """Resolve a statement's table reference against the live target's
-    remote tables (schema qualifiers are the remote's business — only the
-    terminal name identifies the snapshot view)."""
-    bare = name.strip().strip('`"').split(".")[-1].lower()
-    return bare if ctx.jdbc_target and bare in ctx.jdbc_target["tables"] else None
-
-
-def _jdbc_write_refused(command: str, name: str) -> RuntimeError:
-    return RuntimeError(
-        f"{command} against live JDBC table {name}: Spark's JDBC sink can only"
-        " append — run remote in-place DML from a py-step over the remote's"
-        " own client"
-    )
 
 
 def _run_statement(ctx: RunContext, stmt: str) -> list:
@@ -320,9 +296,6 @@ def _run_statement(ctx: RunContext, stmt: str) -> list:
         _run_statement(ctx, dml.statement)
         ctx.current_step_results.append(table_rows)
         return table_rows
-    wm = _JDBC_WRITE_TARGET_RE.match(_strip_leading_comments(stmt))
-    if wm and _jdbc_table_of(ctx, wm[2]):
-        raise _jdbc_write_refused(wm[1].split()[0].upper(), wm[2])
     routed = _dml_plan(ctx, dml) if dml is not None else None
     if routed is not None:
         command, (table, counted) = _COMMAND[dml.kind], routed
@@ -333,8 +306,6 @@ def _run_statement(ctx: RunContext, stmt: str) -> list:
         # (dbccore/dbccore.py:886-888) — and reports the would-be count
         if ctx.no_commit:
             status = [command, migration.shadow_execute(counted), "no_commit"]
-        elif _jdbc_table_of(ctx, table):
-            status = [command, _jdbc_append(ctx, table, counted)]
         else:
             status = [command, migration.commit(ctx.spark, table, counted)]
         ctx.current_step_results.append([status])
@@ -369,26 +340,12 @@ def _dml_plan(ctx: RunContext, dml: Dml) -> "tuple[str, migration.CountedPlan] |
 
     Spark cannot UPDATE/DELETE v1 (parquet) catalog tables, so those,
     upserts and the join forms compile onto the migration rewrites, and
-    reference packets like test_insert_info/01_step.sql:1 run unmodified.
-
-    On a LIVE JDBC target (E11 over a remote; reference: every packet
-    statement executes on the target connection, dbccore/dbccore.py:
-    905-1181) INSERT is the Spark-expressible remote write: the plan is its
-    row source, appended by :func:`_jdbc_append`. UPDATE/DELETE (like
-    MERGE/TRUNCATE) have no Spark JDBC sink spelling — Spark's writer only
-    appends/overwrites, and a read-filter-overwrite rewrite would silently
-    drop concurrent remote writes — so they fail loudly with the py-step
-    escape hatch named."""
+    reference packets like test_insert_info/01_step.sql:1 run unmodified."""
     spark = ctx.spark
-    remote = _jdbc_table_of(ctx, dml.table)
-    if remote is not None:
-        if dml.kind != "insert":
-            raise _jdbc_write_refused(_COMMAND[dml.kind], dml.table)
-        return remote, migration._observed(_insert_source(spark, dml, remote), F.lit(True))
     if dml.kind == "insert":
         return None
     if dml.kind == "upsert":
-        source = _insert_source(spark, dml, dml.table)
+        source = _insert_source(spark, dml)
         return dml.table, migration.upsert_plan(
             spark, dml.table, source, list(dml.conflict_keys), dml.set_map, dml.predicate
         )
@@ -437,26 +394,12 @@ def _merge_args(dml: Dml) -> tuple[list[str] | None, str | None, dict[str, str]]
     return on, None if on else realias(dml.predicate), set_map
 
 
-def _jdbc_append(ctx: RunContext, table: str, counted: migration.CountedPlan) -> int:
-    """Append an INSERT's rows to the live JDBC target through Spark's JDBC
-    sink (one INSERT batch per partition — the bounded-transaction shape of
-    the reference's migration packets), then refresh the table's snapshot
-    view so later statements see the write (PG statement visibility)."""
-    from db_converter_spark.sources.jdbc import register_remote_views
-
-    plan, appended = counted
-    url, props = ctx.jdbc_target["url"], ctx.jdbc_target["properties"]
-    plan.write.jdbc(url, table, mode="append", properties=props)
-    register_remote_views(ctx.spark, url, props, [table])
-    return appended()
-
-
-def _insert_source(spark: SparkSession, dml: Dml, table: str):
+def _insert_source(spark: SparkSession, dml: Dml):
     """An INSERT's row source as a DataFrame whose columns are named after
-    the ``table`` columns they fill (PG binds a missing column list by
+    the ``dml.table`` columns they fill (PG binds a missing column list by
     position)."""
     df = spark.sql(dml.source)
-    return df.toDF(*(dml.columns or spark.table(table).columns[: len(df.columns)]))
+    return df.toDF(*(dml.columns or spark.table(dml.table).columns[: len(df.columns)]))
 
 
 def _recorded_defaults(spark: SparkSession, table: str) -> dict[str, str]:
@@ -553,11 +496,11 @@ def _returning_rows(ctx: RunContext, dml: Dml):
         alias = f" {dml.alias}"
     elif dml.kind == "upsert":
         rows = migration.upsert_affected_plan(
-            spark, table, _insert_source(spark, dml, table), list(dml.conflict_keys),
+            spark, table, _insert_source(spark, dml), list(dml.conflict_keys),
             dml.set_map, dml.predicate,
         )
     else:
-        rows = _insert_source(spark, dml, table)
+        rows = _insert_source(spark, dml)
         for f in spark.table(table).schema:
             if f.name not in rows.columns:
                 rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -576,6 +519,26 @@ def _run_maint(ctx: RunContext, command: str) -> None:
         ctx.raise_notice("LOG", f"maint done: {command}")
     except Exception as e:  # noqa: BLE001 — maint is advisory
         ctx.raise_notice("WARNING", f"maint failed: {command}: {e}")
+
+
+def expand_targets(mask: str, known: list[str]) -> list[str]:
+    """Target names for a ``--db`` mask over ``known`` (reference:
+    init_dbs_list, db_converter.py:459-484): 'ALL', 'ALL,exclude:a,b', glob
+    masks, or comma lists."""
+    if mask.startswith("ALL"):
+        excl: list[str] = []
+        if ",exclude:" in mask:
+            excl = mask.split(",exclude:", 1)[1].split(",")
+        return [d for d in known if not any(fnmatch.fnmatch(d, e) for e in excl)]
+    out = []
+    for part in mask.split(","):
+        matched = [d for d in known if fnmatch.fnmatch(d, part)]
+        # non-glob names pass through verbatim — targets need not be
+        # pre-declared (Spark databases are created on demand)
+        if not matched and not any(c in part for c in "*?["):
+            matched = [part]
+        out.extend(matched)
+    return sorted(dict.fromkeys(out))
 
 
 def open_ledger(warehouse: Path, db: str, pg_targets: dict[str, dict]) -> ActionTracker:
@@ -606,21 +569,12 @@ class PacketRunner:
         spark: SparkSession,
         warehouse_dir: str | Path,
         hook: ChatHook | None = None,
-        jdbc_targets: dict[str, dict] | None = None,
         pg_targets: dict[str, dict] | None = None,
     ):
         self.spark = spark
         self.warehouse = Path(warehouse_dir)
         self.warehouse.mkdir(parents=True, exist_ok=True)
         self.hook = hook  # chat webhook (E17/E18); None = no notifications
-        # db-name → {"url", "properties"}: targets backed by a LIVE JDBC
-        # remote instead of the local Spark warehouse (the reference's
-        # db alias → PG conninfo map, db_converter.py/conf; every packet
-        # there executes against a remote connection). Reads register the
-        # remote's tables as snapshot views; INSERTs append via the Spark
-        # JDBC sink. The ledger/lock stay local per target, same as the
-        # reference keeping its actiontracker in the dbc schema.
-        self.jdbc_targets = jdbc_targets or {}
         # db-name → {"server": PgServer, "db": <pg database, default
         # 'postgres'>, "schema": <ledger schema, default 'dbc'>}: targets
         # that ARE a live PostgreSQL database (the reference's core
@@ -630,25 +584,6 @@ class PacketRunner:
         # them; statements execute server-side (sources/pg_live.py) and
         # the ledger is the target's own dbc schema.
         self.pg_targets = pg_targets or {}
-
-    # -- target selection (reference: init_dbs_list, db_converter.py:459-484)
-
-    def expand_targets(self, mask: str, known: list[str]) -> list[str]:
-        """'ALL', 'ALL,exclude:a,b', glob masks, or comma lists."""
-        if mask.startswith("ALL"):
-            excl: list[str] = []
-            if ",exclude:" in mask:
-                excl = mask.split(",exclude:", 1)[1].split(",")
-            return [d for d in known if not any(fnmatch.fnmatch(d, e) for e in excl)]
-        out = []
-        for part in mask.split(","):
-            matched = [d for d in known if fnmatch.fnmatch(d, part)]
-            # non-glob names pass through verbatim — targets need not be
-            # pre-declared (Spark databases are created on demand)
-            if not matched and not any(c in part for c in "*?["):
-                matched = [part]
-            out.extend(matched)
-        return sorted(dict.fromkeys(out))
 
     def stop(self, db_name: str, packet_name: str) -> None:
         """--stop analog: cancel the job group (reference terminates backends
@@ -725,21 +660,6 @@ class PacketRunner:
             _job_group(pkt.name, db), _job_label(pkt.name, db), interruptOnCancel=True
         )
         ctx = RunContext(session, db, pkt, read_only=False)
-        jdbc_cfg = self.jdbc_targets.get(db)
-        if jdbc_cfg:
-            # LIVE target: every remote table becomes a snapshot view
-            # BEFORE generators evaluate, so fan-out SQL reads the remote
-            # (reference: generators run server-side on the target
-            # connection, dbccore/dbccore.py:538-541)
-            from db_converter_spark.sources.jdbc import register_remote_views
-
-            props = dict(jdbc_cfg.get("properties") or {})
-            tables = register_remote_views(session, jdbc_cfg["url"], props)
-            ctx.jdbc_target = {
-                "url": jdbc_cfg["url"],
-                "properties": props,
-                "tables": {t.lower() for t in tables},
-            }
         return ctx, open_ledger(self.warehouse, db, self.pg_targets)
 
     # -- the packet loop (reference: worker_db_func) -----------------------

@@ -7,9 +7,11 @@ JDBC source expresses the same thing declaratively: a ``predicates`` list
 makes one partition (one remote cursor) per range, so a 1000-executor
 cluster fans a single PG table scan into bounded parallel range reads.
 
-No live PostgreSQL exists in this environment, so ``read_jdbc_chunked`` is
-exercised by tests only at the predicate-construction level; the call shape
-is the standard ``spark.read.jdbc`` contract.
+``read_jdbc_chunked`` is the standard ``spark.read.jdbc`` call shape; it
+is tested against DuckDB's JDBC driver when that jar is on the host
+(``tests/test_jdbc_live.py``). A packet that runs against a live PostgreSQL
+database is a ``pg_targets`` target (``sources/pg_live.py``), not a JDBC
+source.
 """
 
 from __future__ import annotations
@@ -70,7 +72,8 @@ def _is_duckdb_driver_jar(path) -> bool:
 def find_jdbc_driver_jar() -> "str | None":
     """Locate a usable JDBC driver jar on this host, if any.
 
-    Resolution order (r8 ADVICE: don't load whatever a cache glob finds):
+    Resolution order (a jar is loaded only after its contents are checked,
+    never just because a cache glob found it):
 
     1. ``$JDBC_DRIVER_JAR`` — an explicit pin always wins; set it to an
        empty string to disable JDBC jar discovery entirely.
@@ -78,11 +81,10 @@ def find_jdbc_driver_jar() -> "str | None":
        roots, but only accept a candidate whose archive actually contains
        ``org.duckdb.DuckDBDriver`` (content check, not just a filename).
 
-    The environment ships no PostgreSQL driver (reprobed every round), but
-    DuckDB's public JDBC driver (org.duckdb:duckdb_jdbc, Maven Central) may
-    be present in a local jar cache — enough to exercise the REAL
-    ``spark.read.jdbc`` path end-to-end. Searched lazily so importing this
-    module stays filesystem-free."""
+    Only DuckDB's public JDBC driver (org.duckdb:duckdb_jdbc, Maven
+    Central) is looked for: a copy in a local jar cache is enough to
+    exercise the real ``spark.read.jdbc`` path end-to-end. Searched lazily
+    so importing this module stays filesystem-free."""
     import os
     from pathlib import Path
 
@@ -103,41 +105,3 @@ def find_jdbc_driver_jar() -> "str | None":
         except OSError:
             continue
     return None
-
-
-def list_remote_tables(
-    spark: SparkSession, url: str, properties: dict[str, str] | None = None
-) -> list[str]:
-    """Table names in the remote's default schema, introspected over the
-    SAME JDBC channel (the Spark spelling of the reference introspecting
-    pg_catalog over its live connection before acting on a target —
-    reference: dbccore/dbccore.py:905-1181 resolves every packet table
-    against the remote). information_schema is ANSI — one query serves
-    PostgreSQL, DuckDB and most JDBC servers alike."""
-    info = spark.read.jdbc(
-        url,
-        "(SELECT table_name, table_schema FROM information_schema.tables) t",
-        properties=properties or {},
-    )
-    return sorted(
-        r["table_name"]
-        for r in info.collect()
-        if r["table_schema"] in ("main", "public")
-    )
-
-
-def register_remote_views(
-    spark: SparkSession,
-    url: str,
-    properties: dict[str, str] | None = None,
-    tables: list[str] | None = None,
-) -> list[str]:
-    """Register every remote table as a Spark temp view (a read snapshot
-    per registration — PG-style statement visibility, refreshed after each
-    routed write). Single-partition reads here; a migration-scale read goes
-    through ``read_jdbc_chunked`` so each chunk predicate stays one bounded
-    remote cursor."""
-    tables = tables if tables is not None else list_remote_tables(spark, url, properties)
-    for t in tables:
-        spark.read.jdbc(url, t, properties=properties or {}).createOrReplaceTempView(t)
-    return tables

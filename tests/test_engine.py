@@ -22,7 +22,7 @@ from db_converter_spark.plans.packet import (
     apply_placeholders,
     parse_packet,
 )
-from db_converter_spark.plans.runner import PacketRunner
+from db_converter_spark.plans.runner import PacketRunner, expand_targets
 from db_converter_spark.plans.sqlsplit import (
     is_non_tx,
     is_read_only_ok,
@@ -434,12 +434,12 @@ def test_runner_lock_contention(runner, tmp_path):
     assert res2.result_code["e2e_lk"] == ResultCode.SUCCESS
 
 
-def test_expand_targets(runner):
+def test_expand_targets():
     known = ["prod_a", "prod_b", "stage_a"]
-    assert runner.expand_targets("ALL", known) == known
-    assert runner.expand_targets("ALL,exclude:stage_*", known) == ["prod_a", "prod_b"]
-    assert runner.expand_targets("prod_*", known) == ["prod_a", "prod_b"]
-    assert runner.expand_targets("stage_a,prod_a", known) == ["prod_a", "stage_a"]
+    assert expand_targets("ALL", known) == known
+    assert expand_targets("ALL,exclude:stage_*", known) == ["prod_a", "prod_b"]
+    assert expand_targets("prod_*", known) == ["prod_a", "prod_b"]
+    assert expand_targets("stage_a,prod_a", known) == ["prod_a", "stage_a"]
 
 
 # ------------------------------------------------------------------- export
@@ -470,7 +470,8 @@ def test_export_rejects_dml(spark, tmp_path):
 
 def test_export_zip(spark, tmp_path):
     files = export_statements(
-        spark, "dbz", ["select 1 as a"], tmp_path / "expz", zip_output=True
+        spark, "dbz", ["select 1 as a"], tmp_path / "expz",
+        export_options={"use_zip": "yes"},
     )
     assert len(files) == 1 and files[0].endswith(".zip")
     with zipfile.ZipFile(files[0]) as zf:

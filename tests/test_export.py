@@ -54,3 +54,30 @@ def test_repeated_statement_zips_one_member_each(tmp_path, password):
         f"{s} #{k}\n".encode() for k, s in enumerate(_STATEMENTS)
     )
     assert not any(p.exists() for p in log)  # plaintext CSVs are removed
+
+
+def _pin_clock(monkeypatch):
+    """Every export of the test lands in the same second."""
+    monkeypatch.setattr("time.strftime", lambda fmt, *a: "20260101_000000")
+
+
+def test_two_zipped_exports_in_one_second_keep_both_archives(tmp_path, monkeypatch):
+    _pin_clock(monkeypatch)
+    log: list = []
+    options = {"use_zip": "yes"}
+    [first] = export_queries(_writer(log), "db1", ["SELECT 1"], tmp_path, export_options=options)
+    [second] = export_queries(_writer(log), "db1", ["SELECT 2"], tmp_path, export_options=options)
+    assert first != second
+    assert Path(second).name == Path(first).name[: -len(".zip")] + "_2.zip"
+    for zip_path, body in ((first, "SELECT 1 #0\n"), (second, "SELECT 2 #1\n")):
+        with zipfile.ZipFile(zip_path) as zf:
+            assert [zf.read(n).decode() for n in zf.namelist()] == [body]
+
+
+def test_two_exports_in_one_second_keep_both_csvs(tmp_path, monkeypatch):
+    _pin_clock(monkeypatch)
+    log: list = []
+    [first] = export_queries(_writer(log), "db1", ["SELECT 1"], tmp_path)
+    [second] = export_queries(_writer(log), "db1", ["SELECT 1"], tmp_path)
+    assert first != second
+    assert [Path(p).read_text() for p in (first, second)] == ["SELECT 1 #0\n", "SELECT 1 #1\n"]

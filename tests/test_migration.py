@@ -14,7 +14,6 @@ from db_converter_spark.catalog import create_information_schema_views
 from db_converter_spark.operators.migration import (
     change_column_type,
     chunk_grid,
-    chunked_backfill,
     delete_where,
     merge_update,
 )
@@ -100,18 +99,6 @@ def test_chunk_grid(spark, mig_table):
     assert [(r["a"], r["b"]) for r in grid] == [
         (1, 500), (501, 1000), (1001, 1500), (1501, 2000), (2001, 2500),
     ]
-
-
-def test_chunked_backfill(spark, mig_table):
-    n = chunked_backfill(
-        spark, mig_table, "id", {"fld_1": "t.fld_1 + 1"}, chunk_size=1000
-    )
-    assert n == 3
-    df = spark.table(mig_table)
-    # every row updated exactly once
-    assert df.agg(F.sum("fld_1")).collect()[0][0] == sum(
-        (i % 100) + 1 for i in range(1, 2011)
-    )
 
 
 def test_information_schema_probe(spark, mig_table):
