@@ -5,13 +5,13 @@ the host-fit ``local[N]`` of ``build_session`` and print ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The driver records this per-round as BENCH_r{N}.json and compares against
-BASELINE.md. Query set = every registered operator; per-query seconds are
+BASELINE.md holds the reference numbers. Query set = every registered operator; per-query seconds are
 the best of ``$SPARK_GRAFT_BENCH_RUNS`` (default 2) full collect() passes on
 a warmed session — single-shot wall clock on a shared host swings 5-7x with
 ambient load, and best-of-N recovers the machine's actual capability.
 
-Output layout (r3 verdict: the driver keeps only the TAIL ~2 KB of stdout):
+Output layout (a caller that keeps only the TAIL ~2 KB of stdout must
+still get every query):
 a verbose JSON line first (full names, best + median dicts — may be
 clipped), then ONE compact final line whose ``queries`` dict is keyed by
 each query's unique name prefix (``q01``, ``dd10``, ``q24b``, ...) so the
@@ -41,25 +41,25 @@ def main() -> int:
     # Warm the JVM/codegen path so q01 doesn't pay session-boot cost.
     queries["q01_pricing_summary"].builder(spark, sf_dir).collect()
     # Warm the Python-worker pool: the FIRST mapInPandas pays ~9 s spinning
-    # up one Python process per core (measured r2) — that is session-boot
+    # up one Python process per core — that is session-boot
     # cost, not operator cost, so pay it before the clock starts.
     spark.range(0, spark.sparkContext.defaultParallelism * 4).repartition(
         spark.sparkContext.defaultParallelism
     ).mapInPandas(lambda it: it, "id long").collect()
-    # Warm the C2 JIT over the lambda/md5/explode-heavy dedup head (r7):
-    # the suite runs alphabetically, so the dc*/dd* block is the FIRST
+    # Warm the C2 JIT over the lambda/md5/explode-heavy dedup head: the
+    # suite runs alphabetically, so the dc*/dd* block is the FIRST
     # sustained load the JVM sees and pays the whole-stage-codegen compile
-    # storm on-clock — on this round's kernel the C2 thread burned 60+ s
-    # of SYSTEM time and dc01/dc03 recorded 13/33 s bests (vs 1.5/2.3 s in
-    # r6) with ALL samples slow, invisible to the median diagnostic. One
+    # storm on-clock — the C2 thread can burn 60+ s of SYSTEM time and
+    # leave dc01/dc03 at 13/33 s bests (vs 1.5/2.3 s warm) with ALL
+    # samples slow, invisible to the median diagnostic. One
     # untimed pass over that block is session-boot cost, same as the q01 /
     # Python-worker warmups above.
     for _warm in sorted(queries):
         if _warm.split("_", 1)[0][:2] in ("dc", "dd"):
             queries[_warm].builder(spark, sf_dir).collect()
 
-    # best-of-3: two same-code runs this round recorded 83 s vs 140 s totals
-    # purely from ambient host spikes (dd04 0.9 s vs 15.3 s) — a third
+    # best-of-3: two same-code runs can read 83 s vs 140 s totals purely
+    # from ambient host spikes (dd04 0.9 s vs 15.3 s) — a third
     # sample per query costs ~2 min against the 1200 s budget and makes the
     # best-of robust to a spike landing on any single pass.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -68,11 +68,11 @@ def main() -> int:
     # best-of-1 so ONE json line always lands instead of a timeout recording
     # nothing. Per-query numbers stay comparable (best-of-N is monotone in N;
     # the medians dict records how many samples each query actually got).
-    # 1200 s default: the r2 420 s budget degraded 59/67 queries to cold
-    # single runs on a loaded host and recorded noise as engine numbers.
+    # 1200 s default: a 420 s budget degrades 59/67 queries to cold
+    # single runs on a loaded host and records noise as engine numbers.
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1200"))
     bench_t0 = time.perf_counter()
-    # ambient-load telemetry (r11 verdict Next #7): hypervisor steal ticks
+    # ambient-load telemetry: hypervisor steal ticks
     # and 1-min load average bracket the timed region so storm-dominated
     # windows are mechanically flagged in the artifact (strict additions —
     # existing parsers see the same required fields).
@@ -117,12 +117,12 @@ def main() -> int:
             file=sys.stderr,
         )
 
-    # --- churn pin (r6 verdict Next #1) -----------------------------------
+    # --- churn pin --------------------------------------------------------
     # Two failure classes put harness noise into the artifact of record:
     #   (a) IN-RUN churn — some samples slow, median diverges from best
-    #       (r6: dq04 3.7 s best / 9.7 s median, code unchanged);
-    #   (b) PERSISTENT slowness — ALL samples slow (r6: dq05 10.1 s
-    #       best-of-3 vs 1.85 s in r5, code unchanged — the med_hot
+    #       (e.g. dq04 3.7 s best / 9.7 s median on unchanged code);
+    #   (b) PERSISTENT slowness — ALL samples slow (e.g. dq05 10.1 s
+    #       best-of-3 vs 1.85 s on unchanged code — the med_hot
     #       diagnostic can NOT see this one, best==median).
     # (a) is detected by the med_hot criterion; (b) by a committed
     # expected-time reference (bench_expected.json — per-query bests from a
@@ -183,8 +183,8 @@ def main() -> int:
         sum(v for k, v in timings.items() if k != "dd05_ngram_jaccard"), 3
     )
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # The driver preserves only the TAIL (~2 KB) of stdout: r3's artifact
-    # lost the best-of dict and failed to parse. Emit the verbose record
+    # A caller may keep only the TAIL (~2 KB) of stdout, which would lose
+    # a best-of dict printed first. Emit the verbose record
     # (medians included) FIRST — it may be clipped — and finish with ONE
     # compact line carrying the best-of dict + totals, sized to survive
     # the capture window intact.
@@ -211,8 +211,7 @@ def main() -> int:
     print(json.dumps(verbose))
     # The full verbose record (best + median per query) also lands in a
     # FILE so post-hoc regression diagnosis never depends on the stdout
-    # capture window (r5: only best-of survived; medians would have
-    # settled the q03 question from the artifact alone).
+    # capture window.
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_verbose_last.json"),
@@ -223,10 +222,9 @@ def main() -> int:
         pass  # read-only checkout: stdout still carries the record
     # every registry name has a UNIQUE prefix before its first underscore
     # (q01, dd10, q24b, ...) — key the compact line on those. Sizing and
-    # graceful degradation live in benchutil.build_compact_line (r8 verdict:
-    # 141 queries at 3 decimals + a 13-entry resampled dict overflowed the
-    # driver's 2000-char capture window and BENCH_r08 recorded parsed=null);
-    # the length guard test in tests/test_registry.py pins the worst case
+    # graceful degradation live in benchutil.build_compact_line (141
+    # queries at 3 decimals + a 13-entry resampled dict overflow a
+    # 2000-char capture window); the length guard test in tests/test_registry.py pins the worst case
     # at the live registry size.
     print(
         build_compact_line(

@@ -120,6 +120,9 @@ def main(argv: list[str] | None = None, spark=None, confirm=input) -> int:
         return 0
 
     dbs = expand_targets(args.db, known)
+    if not dbs:
+        print(f"no target matches --db {args.db}", file=sys.stderr)
+        return 2
 
     pg_cfgs: dict = {}
     if args.pg_targets:

@@ -529,12 +529,11 @@ def _min_label_components(sym: DataFrame, max_rounds: int = 50) -> tuple[DataFra
     join+filter+count. decimal(38,0): a 100 TB corpus sums ~1e12 64-bit
     ids, past BIGINT. ``localCheckpoint`` cuts lineage per round — on a
     production cluster use a reliable checkpoint dir."""
-    # r11: every localCheckpoint here is LAZY (eager=False) and the
-    # convergence checksum is collected immediately after — the checksum's
-    # full-scan aggregate is the action that materializes the checkpoint,
-    # so each round costs ONE job instead of a checkpoint job + a checksum
-    # job (guide §2.4: the barrier and the probe share a pass; 2 jobs/round
-    # -> 1 with identical labels).
+    # Every localCheckpoint here is LAZY (eager=False) and the convergence
+    # checksum is collected immediately after — the checksum's full-scan
+    # aggregate is the action that materializes the checkpoint, so each
+    # round costs ONE job instead of a checkpoint job + a checksum job (the
+    # barrier and the probe share a pass).
     labels = checkpoint(
         sym.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -747,13 +746,11 @@ _DD12_WINS_DUCK = _dd12_wins(
     "len",
 )
 
-# Spark execution: ONE PASS, ZERO JOINS, ZERO CHECKPOINTS (r9 memory-decade
-# rework; the ta13 lesson applied). The r8 shape materialized the full
-# (doc, i, h) window table via localCheckpoint (it fed BOTH a corpus-wide
-# GROUP BY h and a mark-join back onto itself) — at sf100/16 GB those
-# pinned blocks plus the hash-key aggregate and the h-keyed sort-merge
-# join absorbed 71.8 GB mem + 27.1 GB disk spill (SCALE_PROBE_R6_MEM).
-# Every stage below is a sort-based exchange/window/aggregate that spills
+# Spark execution: ONE PASS, ZERO JOINS, ZERO CHECKPOINTS. Materializing
+# the full (doc, i, h) window table (to feed both a corpus-wide GROUP BY h
+# and a mark-join back onto itself) pins blocks that, with the hash-key
+# aggregate and the h-keyed sort-merge join, absorb ~72 GB mem + 27 GB
+# disk spill at sf100 on a 16 GB heap. Every stage below is a sort-based exchange/window/aggregate that spills
 # incrementally, and the window relation is consumed exactly once so
 # nothing is pinned:
 #   1. dup flag   = COUNT(*) OVER (PARTITION BY h) > 1   — replaces the
@@ -804,12 +801,11 @@ def dd12_dup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated-window count, merged run count, longest run, and the
     estimated duplicated-token total (r + W - 1 per r-window run).
 
-    Scale shape (r9 one-pass rework): the explode is linear (windows ≈
-    tokens); the duplicate flag is a window COUNT over the fixed 16-byte
-    window hash (one exchange + external sort, spills incrementally —
-    replaces the r8 freq-aggregate + mark-join pair whose checkpointed
-    window table and hash state absorbed 71.8 GB mem + 27.1 GB disk at
-    sf100/16 GB); the run merge is a window PARTITIONED by doc — no
+    Scale shape: the explode is linear (windows ≈ tokens); the duplicate
+    flag is a window COUNT over the fixed 16-byte window hash (one
+    exchange + external sort, spills incrementally — a freq-aggregate +
+    mark-join pair over a checkpointed window table would hold ~72 GB
+    mem + 27 GB disk at sf100/16 GB); the run merge is a window PARTITIONED by doc — no
     global order, no joins, nothing pinned. Hash cost is W× the corpus
     bytes; at 100 TB you'd swap md5 of the joined slice for a rolling
     (Rabin-Karp) hash computed in one pass — same plan shape, cheaper
@@ -833,10 +829,9 @@ def dd12_dup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # benchmark sizes swap in a bloom filter via F.expr("might_contain(...)")).
 
 # the bench slice and the training leg each explode their OWN grams with
-# the doc_id filter pushed to the scan: the earlier single shared `g` CTE
-# was referenced twice, and Spark re-executes a CTE per reference — the
-# full corpus explode+md5 ran 2x (r4 bench: dc01 was the most expensive
-# query in the suite at 12.9 s)
+# the doc_id filter pushed to the scan: Spark re-executes a CTE per
+# reference, so one shared `g` CTE referenced twice would run the full
+# corpus explode+md5 twice
 _DC01_SPARK = """
 WITH bench AS (
   SELECT DISTINCT explode(transform(
@@ -964,7 +959,7 @@ def dc02_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose output collapses map-side to ≤ C(n_sources, 2) rows. No
     all-pairs document work anywhere — but EXACT set intersection is
     inherently linear in distinct grams (measured 108× at 100× data,
-    zero flips: SCALE_PROBE_R5L_100x.json). The 100 TB deployment runs
+    with no plan flips). The 100 TB deployment runs
     the mergeable-sketch variant for the recurring audit (per-source
     MinHash/HLL over the same gram stream — the ta05 machinery — one
     pass, unions instead of joins) and keeps this exact form for
@@ -977,7 +972,7 @@ def dc02_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dc02 is exact-by-definition and therefore linear in DISTINCT GRAMS — its
 # pair join streams every shared gram occurrence (measured 108× at 100×
-# data, SCALE_PROBE_R5L_100x.json). dc05 is the recurring-audit form dc02's
+# data). dc05 is the recurring-audit form dc02's
 # docstring promises: ONE pass over the same distinct (source, gram) stream
 # builds a per-source bottom-k (KMV) MinHash sketch — tiny, mergeable
 # partial-aggregate state — and every pairwise estimate is then computed on
@@ -1173,7 +1168,7 @@ def _dd10_band_ctes(
     candidate set ``cand`` — dialect-neutral except for the band-key
     spelling handled by the callers.
 
-    ``guard_window`` (Spark side, r12 — guide §2.4): the mega-bucket
+    ``guard_window`` (Spark side): the mega-bucket
     guard's bucket size becomes COUNT(*) OVER (PARTITION BY band, bkey)
     instead of the bsize aggregate + self-join — identical sizes and
     surviving rows, but the ``bands`` posexplode/md5 chain is evaluated
@@ -1181,7 +1176,7 @@ def _dd10_band_ctes(
     expands bands 4x under cand0's self-join — 2x per bands_ok branch —
     the window form 2x) and the aggregate's extra exchange disappears.
 
-    ``emit_agree`` (Spark side, r12): ``cand`` carries the ≥5-of-8
+    ``emit_agree`` (Spark side): ``cand`` carries the ≥5-of-8
     agreement count it already computes in its gate, so dd16's
     calibration tail reads it from the materialized candidates instead
     of re-joining the signature table twice. The DuckDB oracles keep the
@@ -1401,7 +1396,7 @@ def dd10_lsh_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify tail; Spark re-executes a CTE per reference, so each is
     materialized ONCE via localCheckpoint and the tail joins the
     materialized results — signatures are computed exactly once per run
-    (r3 verdict: the un-materialized form recomputed them ~4x)."""
+    (the un-materialized form recomputes them ~4x)."""
     return spark.sql(_DD10_TAIL_SPARK, **_dd10_prepare(spark, sf_dir))
 
 
@@ -1720,19 +1715,18 @@ def dc03_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # upper bound), so k GROWS with the corpus and expected cell size stays
 # ~250 at any scale: this is the paper's k ∝ n choice, and it is what
 # keeps the pair stage linear overall. (The fixed-SLICE rule ss03 uses —
-# ≤64 centroids at any corpus — was dd14's first form; the 100× probe
-# measured its cell-size² term arriving at 105× wall-time / 862 s at
-# sf10. The stride rule + argmax-aggregate assignment re-measured
-# 29.8× / 361 s with zero flips, cells 8 → 80 → 798 across three decades
-# of scale: SCALE_PROBE_R5M_100x.json. Deterministic strides are
+# ≤64 centroids at any corpus — makes the cell-size² term grow 105× in
+# wall time at 100× data; the stride rule + argmax-aggregate assignment
+# grows 29.8× with no plan flips, cells 8 → 80 → 798 across three
+# decades of scale. Deterministic strides are
 # oracle-stable where trained centroids would be float-unstable; ss07
 # shows training in-engine.) τ = 0.35 is calibrated to the synthetic
 # corpus (random embeddings have no true near-dups; real deployments use
 # ~0.95+).
 #
-# Scale shape: assignment is TWO-LEVEL (r6 — the r5 flat vecs×cents cross
-# join was the one asymptotically-quadratic stage left in the repo:
-# O(n·k) = O(n²/251) with k ∝ n). ~√k SUPER-centroids are drawn from the
+# Scale shape: assignment is TWO-LEVEL, because a flat vecs×cents cross
+# join is asymptotically quadratic: O(n·k) = O(n²/251) with k ∝ n. ~√k
+# SUPER-centroids are drawn from the
 # centroid set by md5-residue (layout-independent — no id-structure
 # collapse possible — and anchored at the min centroid id so the set is
 # never empty); each vector argmaxes over the √k supers (n·√k), then
@@ -1745,7 +1739,7 @@ def dc03_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # slightly nearer centroid lives in a neighbor cell) — the standard IVF
 # trade; both engines compute the identical rule, so the oracle is exact.
 
-# PRIME stride: with a composite stride (first attempt: 256), any id
+# PRIME stride: with a composite stride (say 256), any id
 # layout whose block offsets share a factor with the stride collapses the
 # centroid set onto a few residue classes — measured on the probe's
 # replica corpus (offsets i·10⁶, gcd(10⁶, 256) = 64): only ~31 distinct
@@ -1761,12 +1755,11 @@ _DD14_TAU = 0.35
 def _dd14_pairs(dot_ab: str, assign_src: str) -> str:
     """The within-cell duplicate-pair relation (the O(n·cell) stage —
     the paper's own cost). ``dot_ab``: dialect dot product over
-    a.embedding/b.embedding. Spark MATERIALIZES this once (r7): Catalyst
-    inlines CTEs, so the single-statement form ran the cosine pair join
+    a.embedding/b.embedding. Spark MATERIALIZES this once: Catalyst
+    inlines CTEs, so a single-statement form runs the cosine pair join
     TWICE — once under pair_stats, once under purged — doubling the
     interpreted-lambda work (the dominant dd14 cost at every scale; at
-    the sf100/16 GB probe the duplicated join was also the spill
-    driver). Post-filter the relation is tiny (only pairs at sim ≥ τ)."""
+    sf100 on a 16 GB heap the duplicated join also drives the spill). Post-filter the relation is tiny (only pairs at sim ≥ τ)."""
     return f"""
 SELECT * FROM (
   SELECT a.vec_id AS va, b.vec_id AS vb, a.cid,
@@ -1782,11 +1775,10 @@ def _dd14_main(pairs_src: str, cells_src: str, lead: str = "WITH") -> str:
     """From the materialized duplicate-pair and per-cluster-size relations
     to the purge report. ``cells_src``: a (cid, cell_size) relation —
     Spark passes a k-row checkpoint so the report tail never re-reads
-    the n-row wide assignment (r7: the tail's cells aggregate and the
-    broadcast-join stages ran CONCURRENTLY over the deserialized 5M-row
-    checkpoint at the sf100/16 GB decade and died UNABLE_TO_ACQUIRE —
-    now every corpus-scale read happens in exactly one sequential eager
-    job). ``lead``: "WITH" for a standalone statement, "," when the
+    the n-row wide assignment: a cells aggregate and the broadcast-join
+    stages running CONCURRENTLY over the deserialized 5M-row checkpoint
+    die UNABLE_TO_ACQUIRE at sf100 on a 16 GB heap, so every
+    corpus-scale read happens in exactly one sequential eager job. ``lead``: "WITH" for a standalone statement, "," when the
     caller already opened a WITH chain (parameterized instead of
     post-hoc string surgery)."""
     return f"""
@@ -1824,13 +1816,13 @@ LEFT JOIN purge_stats g ON g.cid = c.cid
 
 # Every argmax in the assignment is an AGGREGATE, not a window: max_by
 # collapses map-side to one row per group before any exchange, while a
-# ROW_NUMBER window must shuffle the whole similarity stream (measured at
-# sf10 in r5: 156M wide rows through one exchange). The (cs, lowest-cid)
+# ROW_NUMBER window must shuffle the whole similarity stream (at sf10:
+# 156M wide rows through one exchange). The (cs, lowest-cid)
 # tiebreak packs into ONE wide integer key cs_x1m·10²⁰ − cid, computed in
 # DECIMAL(30,0) (Spark) / HUGEINT (DuckDB): one cs_x1m unit outweighs any
 # BIGINT cid (|cid| < 9.3e18 < 10²⁰), so the ordering is exact for EVERY
-# possible centroid id — the r5 BIGINT key (×10¹²) silently mis-ordered
-# once ids passed 1e12. cs rides as an exact x1e6 integer so the
+# possible centroid id — a BIGINT key (×10¹²) silently mis-orders once
+# ids pass 1e12. cs rides as an exact x1e6 integer so the
 # keep-rule's >/= comparisons are float-free. Embeddings re-join AFTER
 # the argmax, so only n-scale narrow rows ever shuffle.
 
@@ -1843,7 +1835,7 @@ def _dd14_key(col: str, cast: str) -> str:
 
 def _dd14_fine_ctes(nrm: str, cos: str, h: str, widen: str) -> str:
     """The CTE chain of the two-level assignment up to ``fine`` (vecs →
-    cents → supers → vsim/vsup → csim → csup → fine), split out (r12) so
+    cents → supers → vsim/vsup → csim → csup → fine), split out so
     the vectorized Python assign can collect ``supers`` and ``fine`` from
     the SAME text the SQL assign embeds — byte-identical derivation
     either way. vsim/vsup stay here in their original position so the
@@ -1956,13 +1948,12 @@ _DD14_ASSIGN_SPARK = _dd14_assign_sql(
     widen="CAST({x} AS DECIMAL(7,0))",
 )
 
-# r12 (guide §4.2 — vectorize the hot Python-free stage in native code):
-# the pair cosine was the suite's dominant interpreted-lambda cost (the
-# aggregate(zip_with(...)) left fold is evaluated per pair, per element,
-# in Catalyst's interpreter; a flat 64-term codegen unroll was measured
-# WORSE — ~4x on the pair stage — the generated method blows past the JIT
-# compile limits). The pair stage now runs as ONE applyInPandas over the
-# cid groups: numpy computes the dot with an EXPLICIT per-dimension fold
+# The pair cosine in SQL is the suite's dominant interpreted-lambda cost
+# (the aggregate(zip_with(...)) left fold is evaluated per pair, per
+# element, in Catalyst's interpreter; a flat 64-term codegen unroll
+# measures WORSE — ~4x on the pair stage — because the generated method
+# blows past the JIT compile limits). So the pair stage runs as ONE
+# applyInPandas over the cid groups: numpy computes the dot with an EXPLICIT per-dimension fold
 #     acc = 0.0;  for d: acc += f64(E[i,d]) * f64(E[j,d])
 # which performs the IDENTICAL sequence of IEEE float64 operations as the
 # SQL fold ((0.0+t1)+t2)+... — cast-to-double, multiply, left-to-right
@@ -1975,8 +1966,8 @@ _DD14_ASSIGN_SPARK = _dd14_assign_sql(
 # Shuffle shape is unchanged: ONE cid-keyed exchange of the checkpointed
 # assignment (the SQL self-join also shuffled it once + ReusedExchange);
 # the group loop replaces the O(cell^2) interpreted-cosine join body with
-# vectorized numpy — the guide's "let Spark do distribution, hand whole
-# batches to native code" shape. Works at ANY embedding dimension (the
+# vectorized numpy — Spark does the distribution and hands whole batches
+# to native code. Works at ANY embedding dimension (the
 # synthetic-corpus structural tests use 8-dim vectors).
 _DD14_PY_GATE = _DD14_TAU - 1e-6
 
@@ -2058,18 +2049,18 @@ SELECT * FROM (
 """
 
 
-# --- r12: vectorized n-scale assignment (guide §4.2) ------------------------
-# The two n-scale argmax passes (vector→super, vector→fine-cell) were the
-# other interpreted-lambda hot path: n·√k coarse + n·√k fine cosines, each
-# an aggregate(zip_with(...)) interpreter fold, plus two n-row exchanges
-# (vsup argmax, pick argmax) and two n-row joins. They now run as ONE
-# mapInPandas over the embeddings scan — ZERO exchanges (the scan is
-# embarrassingly parallel; the old plan shuffled the n-row relation twice)
+# --- vectorized n-scale assignment -------------------------------------------
+# In SQL the two n-scale argmax passes (vector→super, vector→fine-cell) are
+# the other interpreted-lambda hot path: n·√k coarse + n·√k fine cosines,
+# each an aggregate(zip_with(...)) interpreter fold, plus two n-row
+# exchanges (vsup argmax, pick argmax) and two n-row joins. So they run as
+# ONE mapInPandas over the embeddings scan — ZERO exchanges (the scan is
+# embarrassingly parallel; the SQL plan shuffles the n-row relation twice)
 # — against the k-scale `supers` and `fine` tables, which are still
 # derived by the engine from the SAME CTE text the SQL assign embeds
 # (_dd14_fine_ctes: cents → md5-residue supers → csim self-routing argmax
 # → csup → fine) and then collected and broadcast into the workers. The
-# SQL plan ALREADY broadcast the full fine table (BROADCAST(f) hint), so
+# SQL plan broadcasts the full fine table too (BROADCAST(f) hint), so
 # the memory class at scale is unchanged; the collect is computed
 # in-query per run (nothing cached across runs).
 #
@@ -2233,11 +2224,11 @@ def _dd14_assign_py(
 
     return vecs_df.mapInPandas(assign_batches, schema=_DD14_ASSIGN_PY_SCHEMA), bc
 
-# r11: cell sizes are computed INSIDE the report job (referenced exactly
-# once — no re-execution hazard) instead of a third sequential checkpoint:
-# the k-row aggregate streams the serialized assignment checkpoint exactly
-# as the dedicated cells job did, one job barrier cheaper (guide §2.4).
-# The DuckDB oracle always had this inline shape.
+# Cell sizes are computed INSIDE the report job (referenced exactly once —
+# no re-execution hazard) instead of a third sequential checkpoint: the
+# k-row aggregate streams the serialized assignment checkpoint once, one
+# job barrier cheaper than a dedicated cells job. The DuckDB oracle has
+# the same inline shape.
 _DD14_CELLS_INLINE = "(SELECT cid, COUNT(*) AS cell_size FROM {assign} GROUP BY cid)"
 
 _DD14_SPARK_MAIN = _dd14_main("{pairs}", _DD14_CELLS_INLINE)
@@ -2278,45 +2269,41 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemplar) — per-cluster report of cell size, duplicate pairs, purged
     count + id checksum, max similarity. Centroids are a fixed-STRIDE
     deterministic slice (k ∝ n, cells ~250 at any scale — the paper's
-    scaling); assignment is TWO-LEVEL coarse→fine (r6): ~√k md5-residue
+    scaling); assignment is TWO-LEVEL coarse→fine: ~√k md5-residue
     super-centroids, vector→super argmax, then argmax over the probed
-    cell's ~√k children only — O(n·√k) total, replacing the r5 flat
+    cell's ~√k children only — O(n·√k) total, not a flat
     O(n·k)=O(n²/251) cross join. Every argmax is a map-side-combinable
     max_by on an exact wide-integer (cosine, lowest-id) key."""
     register_views(spark, sf_dir)
-    # ONE wide materialization (r7): the assignment checkpoints once and
-    # the pair self-join's two sides share its lineage, so Spark's
-    # exchange reuse runs the cid shuffle ONCE (plan-pinned: Exchange +
-    # ReusedExchange) with shuffle files on disk. The r6-tail variant
-    # that re-checkpointed the assignment PRE-PARTITIONED by cid bought
-    # an exchange-free merge join but doubled the in-memory wide working
-    # set — measured this round at the sf100/16 GB memory decade it OOMs
-    # where this single-checkpoint shape completes, and at small k it
-    # pinned the pair join's parallelism to the cid count (31.0 s vs
-    # 5.7 s at sf0.1). AQE sizes/coalesces the cid exchange at any scale.
-    # SERIALIZED _BIG_CKPT_LEVEL (r7): the default deserialized level held
-    # 5M wide object rows pinned in the 16 GB-decade heap — the exact ss07
-    # failure class (r6), which was fixed everywhere BUT here; measured
-    # this round the deserialized form dies UNABLE_TO_ACQUIRE in the
-    # report tail where the serialized form completes.
+    # ONE wide materialization: the assignment checkpoints once and the
+    # pair self-join's two sides share its lineage, so Spark's exchange
+    # reuse runs the cid shuffle ONCE (plan-pinned: Exchange +
+    # ReusedExchange) with shuffle files on disk. Re-checkpointing the
+    # assignment PRE-PARTITIONED by cid would buy an exchange-free merge
+    # join but double the in-memory wide working set (it OOMs at sf100 on
+    # a 16 GB heap where this shape completes) and, at small k, pin the
+    # pair join's parallelism to the cid count (31.0 s vs 5.7 s at
+    # sf0.1). AQE sizes the cid exchange at any scale.
+    # SERIALIZED _BIG_CKPT_LEVEL: the default deserialized level holds 5M
+    # wide object rows pinned in a 16 GB heap and dies UNABLE_TO_ACQUIRE
+    # in the report tail where the serialized form completes.
     #
-    # r11 (guide §2.5 — skew/parallelism, measured via the stage API): the
-    # embedding payload is ~1 KB/row but every pair costs a 64-dim
-    # interpreted cosine, so AQE's byte-based coalescing collapsed the
-    # assignment's final exchange AND the pair join's post-shuffle stage
-    # to ONE partition — the O(Σ cell²) pair-cosine stage ran single-core
-    # (one 3.9-4.8 s task of a 5.8 s query; stage API probe in
-    # OPTIMIZATION_r11.md). Compute-per-byte here is orders of magnitude
-    # above AQE's sizing model, so partition COALESCING (only) is turned
+    # The embedding payload is ~1 KB/row but every pair costs a 64-dim
+    # cosine, so AQE's byte-based coalescing collapses the assignment's
+    # final exchange AND the pair join's post-shuffle stage to ONE
+    # partition — the O(Σ cell²) pair-cosine stage then runs single-core
+    # (one 3.9-4.8 s task of a 5.8 s query, read from the stage API).
+    # Compute-per-byte here is orders of magnitude above AQE's sizing
+    # model, so partition COALESCING (only) is turned
     # off for these two statements — post-shuffle partitions fall back to
     # spark.sql.shuffle.partitions, the deployment-tuned value; skew-join
     # splitting and the rest of AQE stay on. (The deprecated
     # coalescePartitions.minPartitionNum floor is settable but ignored on
-    # Spark 4.1 — measured; enabled=false is the lever that works.)
+    # Spark 4.1; enabled=false is the lever that works.)
     with scoped_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"):
-        # r12: the n-scale coarse+fine argmax runs vectorized in numpy
-        # over the embeddings scan (zero exchanges — the SQL form
-        # shuffled the n-row relation twice); the k-scale supers/fine
+        # The n-scale coarse+fine argmax runs vectorized in numpy over
+        # the embeddings scan (zero exchanges — the SQL form shuffles the
+        # n-row relation twice); the k-scale supers/fine
         # derivation stays engine-side (see _dd14_assign_py).
         vecs_df = spark.sql("SELECT vec_id, embedding FROM embeddings")
         assign, bc = _dd14_assign_py(spark, vecs_df)
@@ -2324,8 +2311,8 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bc.destroy()
         # materialize dup_pairs ONCE (tiny post-filter): the report's two
         # stat branches would otherwise each re-run the pair pass
-        # (Catalyst inlines CTEs). r12: the pair cosine runs vectorized
-        # in numpy per cid group (see _dd14_cell_pairs) — one cid-keyed
+        # (Catalyst inlines CTEs). The pair cosine runs vectorized in
+        # numpy per cid group (see _dd14_cell_pairs) — one cid-keyed
         # exchange, no interpreted lambdas; the exact ROUND + tau gate
         # stays in SQL (_DD14_PAIRS_FROM_RAW).
         pairs = checkpoint(
@@ -2333,10 +2320,10 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True,
             storage_level=_BIG_CKPT_LEVEL,
         )
-    # r11: the k-row cell sizes are an inline aggregate of the report job
+    # The k-row cell sizes are an inline aggregate of the report job
     # (_DD14_CELLS_INLINE) — the report references the n-row assignment
-    # exactly once, streaming the serialized checkpoint the same way the
-    # former dedicated cells job did, minus one job barrier.
+    # exactly once, streaming the serialized checkpoint with no separate
+    # cells job.
     return spark.sql(_DD14_SPARK_MAIN, pairs=pairs, assign=assign)
 
 
@@ -2352,7 +2339,8 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # containee→container pairs at containment >= 0.5 — the purge signal for
 # subset duplication that dd10's j >= 0.8 gate never fires on.
 #
-# Candidate generation is TWO-CHANNEL (r6 closes the r5 recall gap):
+# Candidate generation is TWO-CHANNEL, because banding alone misses
+# extreme-ratio pairs:
 # dd10's symmetric MinHash banding catches comparable-size near-dups, and
 # a CONTAINEE-SIDE bottom-k sketch channel catches the extreme-ratio
 # pairs banding structurally misses (a 50-token doc inside a 5,000-token
@@ -2363,9 +2351,9 @@ def dd14_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index; if containment(A ⊆ B) ≥ c, each probe hits B with probability
 # ≥ c, so P(pair surfaces) ≥ 1 − (1−c)⁴ (≥ 0.94 at the 0.5 emit
 # threshold, 1.0 for verbatim embedding). The df filter runs BEFORE the
-# rank (r7 — r6 ranked over ALL grams and dropped df>100 postings at
-# probe time, so a containee whose entire bottom-4 was corpus-wide
-# boilerplate lost its whole signature); a doc with ZERO rare grams is
+# rank: ranking over ALL grams and dropping df>100 postings at probe time
+# would leave a containee whose entire bottom-4 is corpus-wide
+# boilerplate with no signature at all; a doc with ZERO rare grams is
 # pure boilerplate and indistinguishable by construction.
 #
 # Scale shape: the corpus inverted index is ONE explode + DISTINCT
@@ -2437,7 +2425,7 @@ def _dd15_cand_ctes(full_sh: str, hints: bool = False, df_window: bool = False) 
     callers open their own WITH chain and union ``ccand`` with the
     symmetric-banding candidates.
 
-    ``df_window`` (Spark side, r12 — guide §2.4): compute each gram's
+    ``df_window`` (Spark side): compute each gram's
     document frequency as COUNT(*) OVER (PARTITION BY sh) instead of the
     gram_df aggregate + self-join — identical df values (full_sh is
     DISTINCT (doc_id, sh), so the window count over sh IS the document
@@ -2445,7 +2433,7 @@ def _dd15_cand_ctes(full_sh: str, hints: bool = False, df_window: bool = False) 
     sh-keyed exchange + the join's second full_sh read collapse into the
     single sh-partitioned window pass). The DuckDB oracle keeps the
     aggregate+join text (default False)."""
-    # no broadcast hints on the gram_df / probe joins (r7): gram_df and bk
+    # no broadcast hints on the gram_df / probe joins: gram_df and bk
     # are both corpus-scale at deployment — a forced broadcast caps scale.
     # AQE converts either join to broadcast AT RUNTIME when the built side
     # is actually small (it is at bench sf), so the unhinted plan is fast
@@ -2519,15 +2507,14 @@ _DD15_CCAND_SPARK = (
     + _dd15_cand_ctes("{full_sh}", hints=True, df_window=True)
     + "\nSELECT da, db FROM ccand"
 )
-# r12: the containee channel is FUSED into the union statement (one
-# eager checkpoint instead of two — the ccand probe work and the union's
-# DISTINCT run as one job). The union of the LIVE ccand plan used to trip
-# a Spark 4.1 internal AttributeMap error (UnionBase.rewriteConstraints,
+# The containee channel is FUSED into the union statement (one eager
+# checkpoint instead of two — the ccand probe work and the union's
+# DISTINCT run as one job). A union over the LIVE ccand plan trips a
+# Spark 4.1 internal AttributeMap error (UnionBase.rewriteConstraints,
 # key not found: da#...) from the LEAST/GREATEST-derived constraints;
-# the builder already runs this statement under
-# spark.sql.constraintPropagation.enabled=false (for the same bug on the
-# checkpointed form), and with propagation off no constraints exist to
-# rewrite — verified against the r11 repro in tests.
+# dd15_containment runs this statement under
+# spark.sql.constraintPropagation.enabled=false, and with propagation
+# off no constraints exist to rewrite.
 _DD15_CAND_SPARK = (
     "WITH "
     + _dd15_cand_ctes("{full_sh}", hints=True, df_window=True)
@@ -2565,7 +2552,7 @@ def dd15_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pair, emitting containee→container pairs at containment
     >= 0.5 — the doc-in-doc / near-superset signal symmetric Jaccard
     misses (a short doc inside a long one has low J but high
-    containment). Candidates are TWO-CHANNEL (r6): dd10's symmetric
+    containment). Candidates are TWO-CHANNEL: dd10's symmetric
     MinHash banding (shared materialized signatures/candidates) UNION a
     containee-side bottom-k gram sketch probing the corpus inverted
     index — the channel that actually surfaces extreme size-ratio
@@ -2578,7 +2565,7 @@ def dd15_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AttributeMap error (UnionBase.rewriteConstraints: key not found)
     # when a branch's lineage carries LEAST/GREATEST- or da<db-derived
     # constraints. Constraint propagation is pure optimizer pruning — off
-    # for this ONE statement, restored immediately. r12: the containee
+    # for this ONE statement, restored immediately. The containee
     # channel's CTEs live INSIDE this statement (one checkpoint job
     # instead of two — each CTE is referenced exactly once, so nothing
     # recomputes), which this conf scope also makes legal.
@@ -2698,7 +2685,7 @@ def _dd16_tail(
     cand: str, doc_sh: str, sig: str, hints: bool = False,
     agree_from_cand: bool = False,
 ) -> str:
-    """``agree_from_cand`` (Spark side, r12): the materialized candidate
+    """``agree_from_cand`` (Spark side): the materialized candidate
     relation already carries the n_agree its gate computed
     (emit_agree in _dd10_band_ctes), so the calibration recount drops its
     two signature re-joins and reads the column. The DuckDB oracle keeps
@@ -2811,9 +2798,9 @@ _DD17_DELTA_PRED = "doc_id % 7 = 3"
 def _dd17_cand_ctes(branches: str, sig_src: str, guard_window: bool = False) -> str:
     """Pure CTE chain (bands → guard → probe → agreement gate) ending in
     ``cand`` — a lead parameter on each caller, no post-hoc string
-    surgery (the pipe13 lesson).
+    surgery.
 
-    ``guard_window`` (Spark side, r12): bucket size via COUNT(*) OVER
+    ``guard_window`` (Spark side): bucket size via COUNT(*) OVER
     (PARTITION BY band, bkey) — same rows survive, the bands chain is
     evaluated half as often under cand0's self-join and the bsize
     aggregate's exchange disappears (see _dd10_band_ctes). DuckDB oracle

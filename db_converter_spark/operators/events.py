@@ -217,7 +217,7 @@ def _events_stream_source(spark: SparkSession, sf_dir: str):
     schema: parquet timestamp[ns] columns can only be scanned as raw longs
     (nanosAsLong conf, see catalog.py) and need a div-1000 rebuild, while
     timestamp[us] reads natively as TIMESTAMP_NTZ. Hard-coding either unit
-    breaks when the testdata generator flips units between rounds — this is
+    breaks when the testdata generator changes units — this is
     the stream twin of the batch footer sniff at catalog._nanos_ts_columns."""
     from ..catalog import _ensure_nanos_readable, _nanos_ts_columns
 

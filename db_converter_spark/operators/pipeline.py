@@ -186,11 +186,11 @@ def _pack(spark: SparkSession, docs: DataFrame, nparts: int) -> DataFrame:
     from pyspark.sql.window import Window
 
     B = _PACK_BLOCK
-    # r11: materialize the narrow (doc_id, source, n_tok) relation BEFORE
-    # the range repartition — a bare repartitionByRange over the live plan
+    # Materialize the narrow (doc_id, source, n_tok) relation BEFORE the
+    # range repartition — a bare repartitionByRange over the live plan
     # runs the scan + tokenize TWICE (once in RangePartitioner's sampling
-    # job, again through the shuffle; guide §2.4). Both the sample and the
-    # shuffle now read ~24-byte checkpointed rows; the text pass runs once.
+    # job, again through the shuffle). Both the sample and the shuffle
+    # read ~24-byte checkpointed rows; the text pass runs once.
     docs = checkpoint(docs, eager=True)
     parts = docs.repartitionByRange(nparts, "doc_id").withColumn(
         "pid", F.spark_partition_id()
@@ -438,12 +438,12 @@ _PIPE06_BUDGET = 100_000  # tokens — FIXED absolute budget: at any corpus
 
 def _pipe06_metrics(unnest: str, vocab: str, hint: str = "") -> str:
     # n_tok = REAL model tokens: per-word BPE subword counts from ta14's
-    # trained encode map, broadcast-joined onto the one word explode (r8
-    # verdict Next #6 — the budget is spent in the unit the model trains
-    # on, not the whitespace proxy). quality = stopword density x1000
+    # trained encode map, broadcast-joined onto the one word explode (the
+    # budget is spent in the unit the model trains on, not the whitespace
+    # proxy). quality = stopword density x1000
     # (integer — deterministic ordering across engines; stays in the WORD
     # domain: stopword density is a word-level signal). Zero-word docs
-    # produce no group — the old n_tok > 0 guard by construction.
+    # produce no group, so n_tok > 0 holds by construction.
     return f"""
 SELECT {hint}d.doc_id, d.source,
   CAST(SUM(v.n_sub) AS BIGINT) AS n_tok,
@@ -490,7 +490,7 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget-constrained data mix makes (no reference analog; SURVEY §6
     extension). The budget is priced in REAL model tokens: ta14's trained
     BPE encode map broadcast-joins onto the one word explode, so n_tok is
-    subword count, not the whitespace proxy (r8 verdict Next #6).
+    subword count, not the whitespace proxy.
 
     The core is a cumulative sum over a GLOBAL quality ordering — the
     same scale trap as pipe02, solved the same way: range-partition by
@@ -506,11 +506,10 @@ def pipe06_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     vocab = ta14_vocab(spark)["vocab"]
-    # r11: materialize metrics BEFORE the range repartition. A bare
+    # Materialize metrics BEFORE the range repartition. A bare
     # repartitionByRange over the live metrics plan runs the corpus-scale
     # explode + encode-map join TWICE — once inside RangePartitioner's
-    # sampling job and again through the shuffle itself (guide §2.4:
-    # accidental recompute behind an exchange). Checkpointing the narrow
+    # sampling job and again through the shuffle itself. Checkpointing the narrow
     # (doc_id, source, n_tok, q) relation first makes both the sample and
     # the shuffle read ~40-byte rows; the corpus pass runs exactly once.
     m = checkpoint(spark.sql(_PIPE06_METRICS_SPARK, vocab=vocab), eager=True)
@@ -817,8 +816,8 @@ def pipe10_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: per-doc token counts are REAL model tokens — ONE word
 # explode broadcast-joined to ta14's trained (word → n_sub) encode map,
-# one doc-keyed aggregate (r8 verdict Next #6: max_seq_len is chosen in
-# the unit the model trains on, not the whitespace proxy); the 4-row
+# one doc-keyed aggregate (max_seq_len is chosen in the unit the model
+# trains on, not the whitespace proxy); the 4-row
 # candidate-length relation fans out via a broadcast nested-loop join
 # (bounded 4x multiplier, the Expand shape); the report is a bounded-key
 # (L) aggregate, map-side combined.
@@ -901,8 +900,8 @@ def pipe11_context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: per-source token totals come STRAIGHT from ta14's serving
 # artifacts — the (source, word, cnt) aggregate joined to the (word →
-# n_sub) encode map, both vocab-bounded (r8 verdict Next #6: epoch budgets
-# are planned in real model tokens, and unlike pipe06/pipe11 this needs
+# n_sub) encode map, both vocab-bounded (epoch budgets are planned in real
+# model tokens, and unlike pipe06/pipe11 this needs
 # no per-doc explode at all — source totals are Σ cnt·n_sub over the
 # vocabulary); the weight table is an inline VALUES broadcast; totals are
 # OVER () windows on the |sources|-row relation — nothing after ta14's

@@ -112,11 +112,11 @@ _DQ01_DUCK = (
 )
 
 
-# r11: the three one-row stat relations are combined in ONE checkpointed
+# The three one-row stat relations are combined in ONE checkpointed
 # statement (each CTE referenced exactly once, cross-joined into a single
 # 1-row relation) — the three table aggregates become independent stages of
 # ONE job that the scheduler overlaps, instead of three sequential
-# checkpoint jobs (guide §2.6: overlap independent work; 4 jobs -> 2).
+# checkpoint jobs (4 jobs -> 2).
 # Column names are prefixed to disambiguate the two n_rows.
 _DQ01_COMBINED = f"""
 SELECT o.n_rows AS o_n_rows, o.null_custkey, o.null_orderdate,
@@ -162,7 +162,7 @@ def dq01_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain, range, referential integrity) over orders/lineitem — ONE
     aggregate pass per table plus a keyed anti-join, all three one-row
     stat relations computed as independent stages of a single checkpointed
-    job (r11; the long-format emission reads that checkpoint), emitted as
+    job (the long-format emission reads that checkpoint), emitted as
     the metric table a data-quality gate asserts on. The pattern
     generalizes the reference's alert packets (SQL health checks emitting
     violation rows) to analytic tables."""
@@ -331,7 +331,7 @@ _DQ03_DUCK = (
 )
 
 
-# r11 (the dq01 rework): both one-row table aggregates cross-joined into a
+# As in dq01: both one-row table aggregates cross-joined into a
 # single 1-row checkpoint — the scheduler overlaps the two aggregates as
 # independent stages of ONE job; the emission reads that checkpoint
 # (3 jobs -> 2). Only the shared n_rows needs prefixing.
@@ -385,7 +385,7 @@ def dq03_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface the reference delegates to PostgreSQL, as a first-class
     operator. ONE aggregate pass per table (COUNT(DISTINCT)s expand
     map-side); both one-row stat relations computed as independent stages
-    of a SINGLE checkpointed job (r11, the dq01 rework: each CTE is
+    of a SINGLE checkpointed job (as in dq01: each CTE is
     referenced exactly once, cross-joined 1-row x 1-row — the scheduler
     overlaps the two table aggregates and the emission reads one
     checkpoint; 3 jobs -> 2)."""
@@ -503,19 +503,18 @@ FROM (
 _DQ05 = "\nUNION ALL\n".join(_dq05_edge_sql(*e) for e in _DQ05_EDGES)
 
 
-# r12 (guide §6/§2.4): the Spark side fuses all seven edges into ONE
-# multi-FK pass. The per-edge UNION ALL text (the DuckDB oracle, unchanged)
-# scanned lineitem THREE times (l_orderkey / l_partkey / l_suppkey edges) —
+# The Spark side fuses all seven edges into ONE multi-FK pass. The
+# per-edge UNION ALL text (the DuckDB oracle) scans lineitem THREE times (l_orderkey / l_partkey / l_suppkey edges) —
 # three full passes over the biggest table at any scale. Here each child
 # table is scanned ONCE and its FK columns are unpivoted via stack() into
 # (edge, fk) rows (all keys cast to BIGINT — lossless, every key is an
 # integer type); one (edge, fk)-keyed aggregate replaces the seven
 # per-edge aggregates, and one (edge, key) join against the tagged
 # DISTINCT parent-key union replaces the seven joins. Identical
-# per-edge arithmetic: the group row set per edge is exactly the old
+# per-edge arithmetic: the group row set per edge is exactly the oracle's
 # per-edge GROUP BY, and the parent sets are tagged per edge so the
-# LEFT JOIN matches exactly the old per-edge semi-join. Plan: 42
-# exchanges -> 7, lineitem scans 3 -> 1 (plans/r12/dq05_fk_orphans_*).
+# LEFT JOIN matches exactly the oracle's per-edge semi-join. Plan: 7
+# exchanges instead of 42, one lineitem scan instead of 3.
 def _dq05_child_branch(edges: tuple) -> str:
     """One scan of a child table unpivoting its FK edges via stack()."""
     by_child: dict[str, list[tuple[str, str]]] = {}
@@ -581,7 +580,7 @@ def dq05_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit over every FK edge in the schema:
     per-edge child-row/key counts, NULL-FK counts, and orphan rows/keys
     (child keys with no parent). The Spark plan runs ALL edges in one
-    multi-FK pass (r12): each child table is scanned once with its FK
+    multi-FK pass: each child table is scanned once with its FK
     columns unpivoted to (edge, fk) rows, one keyed aggregate collapses
     them, and one join against the tagged DISTINCT parent-key union
     marks orphans — lineitem is scanned once instead of once per FK
@@ -861,7 +860,7 @@ def dq07_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dq07 proves the histogram-partitioned exact-selection shape on ONE
 # hard-coded column; a profiler needs it for EVERY numeric column without
-# N scans (the r7 verdict's Next #6). dq08 threads a column key through
+# N scans. dq08 threads a column key through
 # the whole chain: one pass over lineitem explodes each row into
 # (col, value_cents) via an inline struct array — so all four numeric
 # columns share a single scan and ONE mergeable (col, bin) histogram —
@@ -992,13 +991,12 @@ _DQ08_BINNED_SPARK = _dq08_binned(
     "SELECT * FROM {vals}", "SELECT * FROM {mm}", "DIV", hints=True
 )
 
-# --- r11 Spark-side shape (VERDICT Next #6) --------------------------------
-# The r9 shape ROW_NUMBER-sorted EVERY row of every picked bin. For
+# --- Spark-side shape ------------------------------------------------------
+# ROW_NUMBER-sorting EVERY row of every picked bin does not scale: for
 # low-cardinality columns a 4096-bin histogram makes bin == value, so a
-# picked bin holds n/|distinct| rows — at the 600 M decade l_discount's
-# picked bins alone pushed >60 M rows through the window exchange (59 GB
-# mem spill, the family's tallest wall). Fix: the histogram additionally
-# carries per-(col, b) MIN(v)/MAX(v) — same single pass, same map-side
+# picked bin holds n/|distinct| rows — at 600 M rows l_discount's picked
+# bins alone push >60 M rows through the window exchange (59 GB mem
+# spill). So the histogram additionally carries per-(col, b) MIN(v)/MAX(v) — same single pass, same map-side
 # combine, still <= cols x 4096 rows. A picked bin with vmin == vmax IS
 # its answer (the r-th smallest of a constant bin is that constant), so
 # only genuinely mixed bins (wide-range columns; ~bin-width rows each)
@@ -1111,8 +1109,7 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Also carries the pure-sketch right-edge estimate + signed error per
     (col, quantile).
 
-    r11 selection (the 600 M-decade wall fix, VERDICT r10 Next #6): a
-    picked bin whose vmin == vmax — EVERY bin of a low-cardinality column
+    Selection: a picked bin whose vmin == vmax — EVERY bin of a low-cardinality column
     like l_discount, whose 11 distinct values map 1:1 onto bins holding
     n/11 rows each — resolves from the histogram alone; only genuinely
     mixed bins (wide-range columns, ~n/4096 rows each) go through the
@@ -1120,11 +1117,10 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     is mixed the builder drops the extraction branch (and its corpus
     re-scan) from the plan entirely — decided on the already-checkpointed
     <= cols x quantiles `within` relation, the same runtime-adaptive
-    move as ta13's shard gate. The r9 shape sorted every row of every
-    picked bin: >60 M window-exchange rows and 59 GB mem spill at 600 M
-    (SCALE_PROBE_R9_MEM/R10); the same probe shape now exchanges only
-    the mixed-bin rows. The extraction itself (r11, second step) is
-    parameterized from the collected within rows: one NARROW
+    move as ta13's shard gate. Sorting every row of every picked bin
+    would push >60 M window-exchange rows and spill 59 GB at 600 M rows;
+    this shape exchanges only the mixed-bin rows. The extraction itself
+    is parameterized from the collected within rows: one NARROW
     single-column scan per mixed column with a LITERAL raw-range
     predicate pushed into the parquet reader and bin membership filtered
     on the bin's actual [vmin, vmax] — no Generate, no join ahead of the
@@ -1134,22 +1130,22 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum histogram (<= cols x 4096 rows), within (<= cols x quantiles
     rows); vals/binned stay inline and the pruned 4-column lineitem scan
     re-streams where referenced (2-3 scans total: min/max, histogram,
-    extraction iff some picked bin is mixed). The r8 shape checkpointed
-    the 4x-corpus vals AND binned relations instead — at the 100x/16 GB
-    decade those ~14 GB of pinned blocks ran the heap out during their
-    own materialization (SCALE_PROBE_R9 first attempt). Re-scanning a
-    pruned columnar source is the cheap side of that trade at any scale;
-    pinning a multiple of the corpus never is (the dd12 lesson)."""
+    extraction iff some picked bin is mixed). Checkpointing the
+    4x-corpus vals AND binned relations instead pins ~14 GB of blocks at
+    100x data and runs a 16 GB heap out during their own
+    materialization. Re-scanning a pruned columnar source is the cheap
+    side of that trade at any scale; pinning a multiple of the corpus
+    never is."""
     register_views(spark, sf_dir)
     vals = spark.sql(_DQ08_VALS_SPARK)
-    # r11 (guide §2.4): within checkpoints LAZILY (the dd08/dd13 move) —
-    # it is materialized by the `mixed` collect below that ran anyway, one
+    # within checkpoints LAZILY (as in dd08/dd13) — it is materialized by
+    # the `mixed` collect below that runs anyway, one
     # job barrier cheaper, and a driver collect carries no timeout
     # semantics. mm and cum stay EAGER, each deliberately: a lazy mm would
     # put the full min/max corpus scan INSIDE the cum statement's
     # broadcast build (subject to spark.sql.broadcastTimeout on the
-    # 600 M-row decade path — a new failure class bought for a barrier
-    # worth milliseconds at scale; measured neutral at bench scale); a
+    # 600 M-row path — a failure class bought for a barrier worth
+    # milliseconds at scale; neutral at bench scale); a
     # lazy cum could double-execute the corpus-histogram subtree, which
     # the within statement references twice (pick + the picked-bin probe).
     mm = checkpoint(spark.sql(_DQ08_MM_SPARK), eager=True)
@@ -1159,7 +1155,7 @@ def dq08_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     within = checkpoint(spark.sql(_DQ08_WITHIN_SPARK, mm=mm, cum=cum), eager=False)
     # metadata-scale collect over the <= cols x quantiles checkpoint: the
     # mixed bins' literal value ranges parameterize the extraction scans
-    # (and, r11, this collect IS the job that materializes `within`)
+    # (and this collect IS the job that materializes `within`)
     mixed = [tuple(r) for r in within.filter("vmin < vmax").collect()]
     exact = spark.sql(
         _DQ08_RESOLVED_SPARK

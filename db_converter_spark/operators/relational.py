@@ -1113,7 +1113,7 @@ def _q36(intdiv: str) -> str:
     # recursion rounds at any scale factor — each Spark recursion round has
     # ~0.7 s fixed cost, so an uncapped walk grows log2(corpus) rounds for
     # no added coverage; the cap also pushes c_custkey <= 4096 into every
-    # round's customer scan (r3 verdict: tame q36).
+    # round's customer scan.
     return f"""
 WITH RECURSIVE tree(custkey, depth) AS (
   SELECT CAST(1 AS BIGINT) AS custkey, CAST(0 AS BIGINT) AS depth

@@ -33,7 +33,7 @@ from db_converter_spark.registry import checkpoint, query
 # Storage level for the CORPUS-SCALE checkpointed intermediates (the
 # exploded n·d vflat/pqflat tables, ~128M rows at sf100): the
 # localCheckpoint default stores blocks DESERIALIZED, whose JVM object
-# overhead OOM'd ss07 at sf100 on a 16 GB heap (SCALE_PROBE_R6_MEM.json);
+# overhead OOMs ss07 at sf100 on a 16 GB heap;
 # serialized MEMORY_AND_DISK is 3-5x smaller and overflows to disk
 # gracefully under unroll pressure. Bounded tables (codebooks,
 # assignments, candidate sets) keep the fast deserialized default.
@@ -199,8 +199,8 @@ GROUP BY cid
 def ss03_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse quantization: nearest-centroid assignment (centroids = the
     deterministic vec_id%16==0, vec_id<1024 subset — a FIXED-size codebook
-    of <= 64 entries at any corpus size, as a trained IVF codebook would be;
-    r3 verdict flagged the earlier corpus-proportional slice). Centroid set
+    of <= 64 entries at any corpus size, as a trained IVF codebook would be,
+    not a corpus-proportional slice). Centroid set
     broadcasts; assignment is a map-side cross join + window argmin — one
     small shuffle on vec_id for the argmin, one tiny aggregate. At 100 TB:
     write the table partitioned by `cid`; queries probe nearest cells
@@ -384,8 +384,7 @@ FROM ranked WHERE rnk <= 3
 def ss05_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch k-NN join: top-3 exact cosine neighbors for every query vector
     in a FIXED query batch (vec_id % 50, vec_id < 1500 — <= 30 queries at
-    any corpus size; r3 verdict flagged the earlier corpus-proportional
-    slice) — the many-query generalization of ss01 and the building block
+    any corpus size, not a corpus-proportional slice) — the many-query generalization of ss01 and the building block
     of embedding-based retrieval/labeling pipelines.
 
     Plan: the fixed query batch broadcasts, the corpus streams through ONE
@@ -720,13 +719,13 @@ def _km_train(
     Returns (final_centroids, last_assignment). Only the ≤512-row
     centroid table is checkpointed per iteration.
 
-    r11 shape: the assignment is INLINED into each update (``cent_next``
-    references ``asg`` exactly once, so there is no re-execution to guard
-    against — the O(2^T) hazard was the cent recurrence, and the per-round
-    centroid checkpoint still cuts that) — ONE job per iteration instead
-    of two, and the n-row assignment relation is never materialized
-    (guide §2.4: the two ops share the iteration's pass instead of paying
-    an extra barrier + an n-row checkpoint write per round).
+    The assignment is INLINED into each update (``cent_next`` references
+    ``asg`` exactly once, so there is no re-execution to guard against —
+    the O(2^T) hazard is the cent recurrence, and the per-iteration
+    centroid checkpoint cuts that) — ONE job per iteration instead of
+    two, and the n-row assignment relation is never materialized (the two
+    ops share the iteration's pass instead of paying an extra barrier +
+    an n-row checkpoint write per iteration).
 
     ``keep_last_asg``: callers whose FINAL statement consumes the last
     assignment (ss07/ss11 cell sizes) set this so the last iteration runs
@@ -826,8 +825,7 @@ def ss08_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ss07_kmeans_train", oracle=_SS07_DUCK, tags=("similarity", "ann", "train"))
 def ss07_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd's k-means over the embeddings — trains the coarse
-    codebook IN-ENGINE instead of taking a fixture slice (the r4 verdict's
-    'train the ANN codebooks' item): 8 centroids, 3 fixed iterations,
+    codebook IN-ENGINE instead of taking a fixture slice: 8 centroids, 3 fixed iterations,
     deterministic spread init (vec_id % 16 = 0, vec_id < 128 — fixed-size
     at any corpus). Output per centroid: final cell size + exact integer
     centroid checksums (position-weighted sum + squared norm), fully

@@ -642,14 +642,13 @@ SELECT word, cnt, substring(r, 2, length(r) - 2) AS sp FROM (
 
 def _ta09_apply_lit(df: DataFrame, pa: str, pb: str) -> DataFrame:
     """Apply ONE merge with driver-collected literal pair symbols — a pure
-    narrow projection (r11: no 1-row cross join, no per-merge checkpoint).
+    narrow projection (no 1-row cross join, no per-merge checkpoint).
     The argmax row is metadata-scale (exactly one pair), so inlining it as
     literals turns the whole merge chain into a linear stack of fused
     projections over the ONE checkpointed spelling table: each iteration's
     pair-count job recomputes the (i-1) preceding replaces in-stage —
     narrow, shuffle-free — instead of paying a blocking checkpoint job per
-    merge (guide §2.4: remove barriers outright when a stage can carry the
-    recompute). ``F.lit`` carries the symbols without SQL-text escaping;
+    merge (a barrier goes when a stage can carry the recompute). ``F.lit`` carries the symbols without SQL-text escaping;
     the replace/substring arithmetic is byte-identical to
     :func:`_ta09_apply_spark`."""
     wrapped = F.concat(F.lit("·"), F.col("sp"), F.lit("·"))
@@ -710,8 +709,8 @@ def ta09_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-bounded and materialized per step."""
     register_views(spark, sf_dir)
     cur = checkpoint(spark.sql(_TA09_SPELL0_SPARK), eager=True)
-    # r11 shape: ONE job per merge. The 1-row argmax is collected (the
-    # TakeOrdered job that ran anyway now also returns the row) and applied
+    # ONE job per merge. The 1-row argmax is collected (the TakeOrdered
+    # job that runs anyway also returns the row) and applied
     # as a LITERAL projection (_ta09_apply_lit) — no per-merge b/s
     # checkpoints, so the 8-merge chain costs 9 jobs instead of 17. Each
     # merge's pair-count job fuses the preceding replaces into its own scan
@@ -1124,12 +1123,11 @@ _TA13_DOCS_SPARK = _ta13_docs(
     plant="concat(w, slice(w, 1, 8), slice(w, 1, 8), slice(w, 1, 8))",
 )
 
-# ---- Spark execution: PER-N STAGED PASSES (the r7 77 GB-spill fix) ----
-# The single-statement form materialized the full Σ_n(len-n+1) ≈ 9x-token
-# occurrence relation into ONE shuffle/aggregate whose hash state blew the
-# memory decade (64.7 GB spill at sf10/16 GB in r7; a first rework that
-# carried position lists through the same single shuffle measured WORSE,
-# 76.5 GB). Instead each n runs as its own bounded job over the
+# ---- Spark execution: PER-N STAGED PASSES ----
+# A single-statement form materializes the full Σ_n(len-n+1) ≈ 9x-token
+# occurrence relation into ONE shuffle/aggregate whose hash state blows a
+# 16 GB heap (64.7 GB spill at sf10; carrying position lists through the
+# same single shuffle is WORSE, 76.5 GB). Instead each n runs as its own bounded job over the
 # checkpointed token relation, so the peak aggregate working set is ONE
 # n's occurrences (≈ 1x tokens), not nine stacked — and each per-n output
 # is tiny (top-1 per doc for n<=4; duplicated positions only for n>=5).
@@ -1145,12 +1143,11 @@ _TA13_DOCS_SPARK = _ta13_docs(
 # NoSuchElementException when a checkpointed union child carries a filter
 # constraint on an attribute pruned from its output.
 #
-# NO hash aggregate anywhere (r9 sf100 fix): the r8 shape's
-# `GROUP BY doc_id, gram` partial aggregate held one map entry per
-# nearly-unique (doc, gram) string key, so the per-task hash map grew to
-# the task's input size and 32 concurrent map tasks exhausted the 16 GB
-# decade heap (SCALE_PROBE_R9_MEM first run: AGGREGATE_OUT_OF_MEMORY in
-# the stage-11 codegen partial agg). Counts now come from a window COUNT
+# NO hash aggregate anywhere: a `GROUP BY doc_id, gram` partial aggregate
+# holds one map entry per nearly-unique (doc, gram) string key, so the
+# per-task hash map grows to the task's input size and 32 concurrent map
+# tasks exhaust a 16 GB heap at sf100 (AGGREGATE_OUT_OF_MEMORY in the
+# codegen partial agg). Counts come from a window COUNT
 # over (doc, xxhash64(gram, n)) — exchange + external sort, spills
 # incrementally — and the top-1 ROW_NUMBER over the occurrence rows picks
 # the identical (cnt DESC, gram) winner (duplicate occurrence rows don't
@@ -1176,27 +1173,23 @@ SELECT doc_id, {n} AS n, cnt, gram, rn FROM (
 # duplicated-position relation.
 #
 # Duplicate positions emerge from a WINDOW COUNT over (doc, gram-hash),
-# not a collect_list aggregate (r8 scale fix): the list form rode an
+# not a collect_list aggregate: the list form rides an
 # ObjectHashAggregate whose per-(doc, gh) position-list state cannot spill
-# incrementally and OOMed one decade past the graded criterion
-# (SCALE_PROBE_R8_MEM.json: sf100/16 GB oom=true at ~3B occurrence rows
+# incrementally and OOMs at sf100 on a 16 GB heap (~3B occurrence rows
 # per n-pass). The window shape shuffles the SAME volume (partial
 # collect_list ships every element anyway) but executes as
 # Exchange(doc_id, gh) -> external SORT -> running count — every stage of
-# which spills to disk gracefully. The hash input includes n (r8 ADVICE):
-# gram text alone would let a cross-n collision alias two different grams
+# which spills to disk gracefully. The hash input includes n: gram text
+# alone would let a cross-n collision alias two different grams
 # if a future refactor merged passes.
 # Each occurrence row also ships `wls` — the n word-lengths under this
 # gram (<= 10 ints, ~3x row width) — so the duplicated-position output
 # carries its own character weights and the TAIL never touches a
-# token-scale relation again. (r9 second sf100 fix: the old tail
-# posexploded EVERY word position of EVERY doc into a `wlen` relation —
-# ~3B rows at sf100 — and sort-merge-joined it against the covered
-# positions; the join's sort plus the downstream per-(doc,n) partial
-# aggregate exhausted the 16 GB decade heap in the same stage,
-# UNABLE_TO_ACQUIRE at probe stage 144 across two otherwise different
-# runs. Now the dup-position relation is self-contained and the tail is
-# doc-scale everywhere.)
+# token-scale relation again. (A tail that posexplodes EVERY word
+# position of EVERY doc into a `wlen` relation — ~3B rows at sf100 — and
+# sort-merge-joins it against the covered positions exhausts a 16 GB heap
+# in one stage, UNABLE_TO_ACQUIRE; with a self-contained dup-position
+# relation the tail is doc-scale everywhere.)
 _TA13_COVN_SPARK = """
 SELECT doc_id, {n} AS n, pos + k AS wpos, wls[k] AS wlen, cnt
 FROM (
@@ -1214,31 +1207,30 @@ FROM (
 LATERAL VIEW explode(sequence(0, {n} - 1)) t AS k
 """
 
-# ---- r10 staged COVN: split the one wide exchange into a NARROW count
-# pass + a shuffle-free broadcast re-explode (the disk-margin fix) ----
-# The r9 sub-pass exchanged EVERY occurrence row carrying its (pos, wls)
-# payload (~80 B/row with the <=10-int word-length array) just to learn
-# which (doc, gram) keys occur twice — at sf100 that sorted ~225 GB and
-# the per-sub-pass spill footprint peaked at 77 GB against 74 GB of free
-# scratch disk (SCALE_PROBE_R9_MEM.json; completion depended on the GC
-# drain winning a race). Duplicated keys are a tiny fraction of
-# occurrences, so the staged path now runs each sub-pass in two phases:
+# ---- staged COVN: split the one wide exchange into a NARROW count
+# pass + a shuffle-free broadcast re-explode (bounds scratch disk) ----
+# A single-phase sub-pass exchanges EVERY occurrence row carrying its
+# (pos, wls) payload (~80 B/row with the <=10-int word-length array) just
+# to learn which (doc, gram) keys occur twice — at sf100 that sorts
+# ~225 GB and the per-sub-pass spill footprint peaks at 77 GB, more than
+# a 74 GB scratch disk. Duplicated keys are a tiny fraction of
+# occurrences, so the staged path runs each sub-pass in two phases:
 #
 #   A. the dup-key pass — occurrence rows shrunk to (doc_id, gh) 16-byte
 #      pairs through the same sort-spillable window-COUNT shape (the hash
 #      aggregate stays banned: keys are nearly unique per task and the
-#      partial-agg map OOMs, the r9 lesson); ROW_NUMBER over the same
-#      partition spec dedups keys without a second exchange. The ONLY
-#      wide exchange of the sub-pass now ships ~4-5x fewer bytes.
+#      partial-agg map OOMs); ROW_NUMBER over the same partition spec
+#      dedups keys without a second exchange. The ONLY wide exchange of
+#      the sub-pass ships ~4-5x fewer bytes than the single phase.
 #   B. the payload pass — re-explode the SAME occurrences map-side
 #      (recompute beats re-shuffle: the explode is codegen'd CPU, the
-#      exchange was the disk hog) and broadcast-hash-join them against
+#      exchange is the disk hog) and broadcast-hash-join them against
 #      the checkpointed dup keys; only surviving (duplicated) rows ever
 #      materialize their word-length payload, and NOTHING wide is
 #      exchanged at all.
 #
 # Phase B is safe to broadcast because dup keys are candidates-bounded;
-# a pathological corpus (everything duplicated) falls back to the r9
+# a pathological corpus (everything duplicated) falls back to the
 # single-pass shape per sub-pass, gated on the checkpointed key count —
 # same adaptive spirit as the staged/non-staged switch below. The
 # non-staged (small-corpus) path keeps the single-statement shape: two
@@ -1271,10 +1263,10 @@ JOIN {{kv}} d ON o.doc_id = d.doc_id AND o.gh = d.gh
 LATERAL VIEW explode(sequence(0, {n} - 1)) t AS k
 """
 
-# ---- r10 staged TOPN (n<=4), same two-phase discipline ----
-# After the covn rework the remaining disk hog was the n=2..4 top-gram
-# passes: their exchange shipped every occurrence row WITH its gram TEXT
-# (2-4 words) just to count it. Phase A below counts on (doc, gh) hashes
+# ---- staged TOPN (n<=4), same two-phase discipline ----
+# In one phase the n=2..4 top-gram passes are the disk hog: their
+# exchange ships every occurrence row WITH its gram TEXT (2-4 words) just
+# to count it. Phase A below counts on (doc, gh) hashes
 # through ONE doc-partitioned exchange of 16-byte pairs — the per-(doc,
 # gram) count is a RANGE-frame peer count over ORDER BY gh, the per-doc
 # max and the first-of-run dedup (LAG) ride the SAME sort, so no second
@@ -1385,20 +1377,19 @@ _TA13_STAGED_DOC_THRESHOLD = 100_000
 # Staged passes additionally SUB-SHARD by doc id above this many docs per
 # shard: every ta13 grouping key includes doc_id, so a pmod(doc_id, K)
 # slice is exact, and one sub-pass bounds BOTH the memory working set and
-# the on-disk shuffle+spill footprint to 1/K of an n-pass (the r9 probe
-# showed a full sf100 n-pass sorts ~225 GB of occurrence rows — spilling
-# worked, the 74 GB scratch disk didn't; SCALE_PROBE_R9 third attempt
-# died on ENOSPC, not memory). A forced GC between sub-passes lets the
+# the on-disk shuffle+spill footprint to 1/K of an n-pass (a full sf100
+# n-pass sorts ~225 GB of occurrence rows — spilling copes with memory,
+# but a 74 GB scratch disk dies on ENOSPC). A forced GC between sub-passes lets the
 # ContextCleaner delete each completed sub-pass's shuffle files.
-_TA13_DOCS_PER_SHARD = 500_000  # r10: halved — smaller sorts spill less
+_TA13_DOCS_PER_SHARD = 500_000  # smaller sorts spill less
 # Phase-B broadcast ceiling: dup keys above this row count (per sub-pass)
-# fall back to the r9 single-pass wide shape. r11 (ADVICE): lowered from
-# 20M — the ~25 B/row raw estimate ignores driver-side collection and the
-# JVM hash-relation overhead (~5-10x raw after boxing + open addressing),
-# so a near-threshold broadcast could reach multiple GB on the 16 GB
-# decade config this path exists to protect. 4M rows ≈ 100 MB raw ≈
-# ≤1 GB hashed worst-case — comfortably under executor memory, and the
-# sf100 probes' per-sub-pass key counts sit far below it anyway.
+# fall back to the single-pass wide shape. The ~25 B/row raw estimate
+# ignores driver-side collection and the JVM hash-relation overhead
+# (~5-10x raw after boxing + open addressing), so a much higher ceiling
+# (20M) could reach multiple GB on the 16 GB heap this path exists to
+# protect. 4M rows ≈ 100 MB raw ≈ ≤1 GB hashed worst-case — comfortably
+# under executor memory, and sf100 per-sub-pass key counts sit far below
+# it.
 _TA13_DUP_BROADCAST_ROWS = 4_000_000
 
 
@@ -1409,10 +1400,10 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
     checkpoint-only tail (shared by the builder and the planted-fixture
     tests)."""
     docs = checkpoint(spark.sql(_TA13_DOCS_SPARK), eager=True)
-    # Scale-adaptive stage concurrency (both points measured at r8,
-    # SCALE_PROBE_R8_MEM.json): sequential per-n checkpoint jobs bound the
-    # peak aggregate working set to ONE n's occurrences — sf10 under a
-    # 16 GB heap spills 1.1 GB vs r7's 77 GB — but cost 3x wall at sf0.1
+    # Scale-adaptive stage concurrency: sequential per-n checkpoint jobs
+    # bound the peak aggregate working set to ONE n's occurrences — sf10
+    # under a 16 GB heap spills 1.1 GB instead of 77 GB — but cost 3x wall
+    # at sf0.1
     # where everything fits and per-job overhead dominates; concurrent
     # sibling stages (lazy union, one checkpoint per branch) are
     # wall-optimal small but re-stack memory under pressure (14 GB spill
@@ -1420,8 +1411,8 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
     # runtime-adaptive spirit as AQE, decided on the already-materialized
     # doc count (a metadata-scale scalar). The threshold is a module
     # attribute so a fixture test can force the STAGED path at test scale
-    # (r8 ADVICE: otherwise the oracle-compared path is always non-staged
-    # and the staged union is exercised only by probes/bench).
+    # (otherwise the oracle-compared path is always non-staged and the
+    # staged union is exercised only by probes/bench).
     n_docs = docs.count()
     staged = n_docs > _TA13_STAGED_DOC_THRESHOLD
     shards = (
@@ -1450,9 +1441,9 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)
-        # r11 (guide §2.4): the tail consumes each published relation
-        # exactly ONCE, so on the non-staged path the eager union
-        # checkpoint was a pure job barrier — publish the LAZY union and
+        # The tail consumes each published relation exactly ONCE, so on
+        # the non-staged path an eager union checkpoint would be a pure
+        # job barrier — publish the LAZY union and
         # the tail's single job runs all per-n explode branches as
         # concurrent sibling stages over the docs checkpoint (no
         # recompute: one consumer each). The staged path's parts are
@@ -1474,7 +1465,7 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
         ns: "range | tuple", keys_tpl: str, from_keys_tpl: str,
         fallback_tpl: str,
     ) -> DataFrame:
-        """Staged two-phase sub-passes (the r10 notes above
+        """Staged two-phase sub-passes (see the notes above
         _TA13_DUPKEYS_SPARK / _TA13_TOPKEYS_SPARK): a narrow key-count
         exchange, then a shuffle-free broadcast re-explode; per-sub-pass
         fallback to the single-pass shape when the keys outgrow a sane
@@ -1498,11 +1489,10 @@ def _ta13_run(spark: SparkSession) -> DataFrame:
 
     # Two-phase only where disk is the binding constraint: multi-shard
     # corpora (> _TA13_DOCS_PER_SHARD docs). A single-shard staged corpus
-    # (sf10-class, 500k long docs) spilled ~0-1 GB in the single-pass
-    # shape — there the double explode is pure wall cost (measured
-    # 117.5 -> 160.6 s before this gate, SCALE_PROBE_R10 history in
-    # BASELINE.md); at the decade (10 shards) the two-phase cut disk
-    # spill 86 -> 13.5 GB. The forced-staged fixture test exercises the
+    # (sf10-class, 500k long docs) spills ~0-1 GB in the single-pass
+    # shape — there the double explode is pure wall cost (117.5 -> 160.6 s
+    # without this gate); at sf100 (10 shards) the two-phase shape cuts
+    # disk spill 86 -> 13.5 GB. The forced-staged fixture test exercises the
     # two-phase path by monkeypatching the shard size to 1 doc.
     if staged and shards > 1:
         top = _two_phase(
@@ -1532,7 +1522,7 @@ def ta13_gopher_ngram_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises every dup rule (no reference analog; SURVEY §6 extension).
     Executed as per-n staged jobs over the ONCE-materialized tokenized doc
     relation: each n's occurrence explode aggregates alone (peak working
-    set 1x tokens, not 9x stacked — the r7 memory-decade fix), n>=5 groups
+    set 1x tokens, not 9x stacked), n>=5 groups
     on xxhash64(gram) identity, and the tail joins only tiny checkpointed
     relations. Doc-keyed joins, bounded rollup."""
     register_views(spark, sf_dir)
@@ -1595,7 +1585,7 @@ def _ta14_tail(swc: str, enc: str, lead: str = "WITH") -> str:
     # baseline (letters + the </w> marker). saved_x1000 is the only ratio.
     # The rollup total row is labeled via GROUPING(), not COALESCE: a NULL
     # source value (or one literally named 'TOTAL') must not collide with
-    # the grand-total row (r8 ADVICE).
+    # the grand-total row.
     return f"""
 {lead} enc AS (
   SELECT word, {enc} AS n_sub, length(word) + 1 AS n_char
@@ -1673,7 +1663,7 @@ def ta14_vocab(spark: SparkSession) -> dict[str, DataFrame]:
     outlives one query."""
     swc = checkpoint(spark.sql(_TA14_SWC_SPARK), eager=True)
     cur = checkpoint(spark.sql(_TA14_S0_SPARK, swc=swc), eager=True)
-    # r11 shape (same rework as ta09): per merge, ONE TakeOrdered job
+    # Same shape as ta09: per merge, ONE TakeOrdered job
     # collects the 1-row argmax and the merge is applied as a LITERAL
     # projection — the spelling chain is a linear stack of fused replaces
     # over the s0 checkpoint, recomputed in-stage by each consumer instead
@@ -1701,8 +1691,8 @@ def ta14_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied at serving time). The corpus is scanned exactly ONCE — the
     (source, word) count aggregate — and both training iterations and the
     encode join are vocab-bounded; at deployment scale nothing token-sized
-    is ever re-shuffled. Closes the train→apply loop the r7 verdict flagged
-    (ta09 trained merges nothing consumed; ss11→ss12 is the PQ analog)."""
+    is ever re-shuffled. Closes the train→apply loop for ta09's trained
+    merges (ss11→ss12 is the PQ analog)."""
     register_views(spark, sf_dir)
     rels = ta14_vocab(spark)
     return spark.sql(_TA14_TAIL_SPARK, swc=rels["swc"], s_final=rels["s_final"])

@@ -8,7 +8,8 @@ literals, ``bool_or`` …). This module textually rewrites the remaining
 PG-isms so reference-style packets run unmodified:
 
 - ``expr::type`` casts → ``CAST(expr AS type)`` with PG→Spark type mapping
-  (``int4``→``int``, ``text``→``string``, ``serial``→``bigint`` …);
+  (``int4``→``int``, ``text``→``string``, ``serial``→``bigint`` …), the
+  same mapping for ``CAST(expr AS type)`` and CREATE TABLE column types;
   ``'…'::interval`` → ``INTERVAL '…'`` literal; ``'{a,b}'::text[]`` →
   ``array('a','b')``.
 - set-returning ``generate_series(a,b[,s])`` → ``explode(sequence(a,b[,s]))``
@@ -90,6 +91,8 @@ _TYPE_MAP = {
     "varchar": "string",
     "bpchar": "string",
     "char": "string",
+    "character": "string",
+    "character varying": "string",
     "name": "string",
     "uuid": "string",
     "json": "string",
@@ -110,14 +113,29 @@ _TYPE_MAP = {
 }
 
 
+# One PG type name: a word, or one of the multi-word spellings, with an
+# optional ``(p[,s])`` and ``[]``. Multi-word types are limited to the
+# known PG spellings so a match never swallows following keywords
+# ("x::int8 from t").
+_PG_TYPE = (
+    r"\w+(?:\s+varying|\s+precision|\s+with(?:out)?\s+time\s+zone)?"
+    r"(?:\s*\([\d\s,]+\))?(?:\s*\[\s*\])?"
+)
+_CHAR_TYPES = ("varchar", "char", "bpchar", "character", "character varying")
+
+
+def _norm_type(pg_type: str) -> str:
+    return re.sub(r"\s+", " ", pg_type.strip().lower())
+
+
 def _map_type(pg_type: str) -> str:
-    t = pg_type.strip().lower()
+    t = _norm_type(pg_type)
     if t.endswith("[]"):
         return f"array<{_map_type(t[:-2])}>"
-    m = re.match(r"(\w+)\s*\(([\d\s,]+)\)$", t)
+    m = re.match(r"(\w+(?: \w+)?)\s*\(([\d\s,]+)\)$", t)
     if m and m.group(1) in ("numeric", "decimal"):
         return f"decimal({m.group(2)})"
-    if m and m.group(1) in ("varchar", "char", "bpchar"):
+    if m and m.group(1) in _CHAR_TYPES:
         return "string"
     return _TYPE_MAP.get(t, t)
 
@@ -547,12 +565,9 @@ def _rw_casts(text: str, lits: list[str]) -> str:
     """``expr::type`` → ``CAST(expr AS type)`` with special interval/array
     literal forms. Handles identifier, literal-sentinel, and ``(...)``/
     function-call left operands; chained casts resolve innermost-first."""
-    # multi-word types are limited to the known PG spellings so the regex
-    # never swallows following keywords ("x::int8 from t")
     type_re = re.compile(
         r"::\s*(\x01\d+\x01"  # double-quoted type name ('x'::"char") — masked
-        r"|\w+(?:\s+precision|\s+with(?:out)?\s+time\s+zone)?"
-        r"(?:\s*\([\d\s,]+\))?(?:\s*\[\s*\])?)",
+        rf"|{_PG_TYPE})",
         re.I,
     )
     while True:
@@ -600,6 +615,32 @@ def _rw_casts(text: str, lits: list[str]) -> str:
         else:
             repl = f"CAST({operand} AS {_map_type(pg_type)})"
         text = text[:start] + repl + rest
+
+
+def _rw_cast_types(text: str) -> str:
+    """``CAST(expr AS pg_type)`` → ``CAST(expr AS spark_type)``: Spark
+    rejects PG-only names (``int8``, ``text``, ``character varying`` …) and
+    reads a bare ``numeric`` as ``decimal(10,0)``. A type that maps to
+    itself is left as written."""
+    edits = []
+    for call in re.finditer(r"\bcast\s*\(", text, re.I):
+        end = close_bracket(text, call.end())
+        last_as = None
+        pos = call.end()
+        while m := find_top(text, r"\bas\b", pos, end):
+            last_as, pos = m, m.end()
+        if last_as is None:
+            continue
+        ty = text[last_as.end() : end].strip()
+        if not re.fullmatch(_PG_TYPE, ty, re.I):
+            continue
+        spark_type = _map_type(ty)
+        if spark_type != _norm_type(ty):
+            start = text.index(ty, last_as.end())
+            edits.append((start, start + len(ty), spark_type))
+    for start, stop, spark_type in sorted(edits, reverse=True):
+        text = text[:start] + spark_type + text[stop:]
+    return text
 
 
 def _rw_operators(text: str, lits: list[str]) -> str:
@@ -671,17 +712,20 @@ def _rw_types_ddl(text: str) -> str:
     body = text[m.end() : j]
 
     def map_types(segment: str) -> str:
-        # parameterized varchar(n)/char(n) are valid Spark DDL — only the
-        # bare (unbounded) PG forms need mapping to string
-        segment = re.sub(r"\bcharacter\s+varying\b", "varchar", segment, flags=re.I)
-        segment = re.sub(r"\b(varchar|char)\b(?!\s*\()", "string", segment, flags=re.I)
-        # parameterized numeric(p,s) keeps its precision as decimal(p,s)
-        segment = re.sub(r"\bnumeric\s*\(", "decimal(", segment, flags=re.I)
-        for pg, sp in sorted(_TYPE_MAP.items(), key=lambda kv: -len(kv[0])):
-            if pg == sp or pg in ("varchar", "char"):
-                continue
-            segment = re.sub(rf"\b{pg}\b(?!\s*\()", sp, segment, flags=re.I)
-        return segment
+        """Map the column type that leads ``segment``, leaving a type that
+        maps to itself as written."""
+        m = re.match(_PG_TYPE, segment, re.I)
+        if not m:
+            return segment
+        t = _norm_type(m[0])
+        # parameterized varchar(n)/char(n) are valid Spark DDL (with a
+        # length check) — only the unbounded PG forms become string
+        sized = re.fullmatch(r"(\w+(?: varying)?) ?(\([\d ]+\))", t)
+        if sized and sized[1] in _CHAR_TYPES:
+            spark_type = ("varchar" if "var" in sized[1] else "char") + sized[2]
+        else:
+            spark_type = _map_type(t)
+        return segment if spark_type == t else spark_type + segment[m.end() :]
 
     # Per column definition, the first token is the column NAME — never a
     # type, even when it collides with a PG type name (columns called
@@ -697,7 +741,7 @@ def _rw_types_ddl(text: str) -> str:
             continue
         ident = first.group(1)
         if ident.lower() in ("constraint", "primary", "unique", "foreign", "check", "like", "exclude"):
-            out_defs.append(lead + map_types(head))
+            out_defs.append(d)
         else:
             out_defs.append(lead + ident + first.group(2) + map_types(first.group(3)))
     return text[: m.end()] + ", ".join(s.strip() for s in out_defs) + text[j:]
@@ -926,6 +970,7 @@ def rewrite(sql: str, settings: dict[str, str] | None = None) -> str:
     text = _rw_containment(text)
     text = _rw_alter_options(text, lits)
     text = _rw_casts(text, lits)
+    text = _rw_cast_types(text)
     text = _rw_operators(text, lits)
     text = _rw_types_ddl(text)
     text = _rw_select_into(text)

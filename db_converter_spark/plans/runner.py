@@ -606,7 +606,8 @@ class PacketRunner:
     ) -> DBCResult:
         pkt = parse_packet(packet_dir, placeholders)
         ptype = packet_type or pkt.packet_type
-        dbs = dbs or ["default"]
+        if dbs is None:
+            dbs = ["default"]
         result = DBCResult(CommandType.RUN, ptype)
 
         def one(db: str) -> None:
@@ -629,7 +630,7 @@ class PacketRunner:
                     verbosity=pkt.meta.get("verbosity", "all"),
                 )
 
-        if seq or len(dbs) == 1:
+        if seq or len(dbs) <= 1:
             for db in dbs:
                 one(db)
         else:

@@ -125,7 +125,7 @@ def _per_row_demand(ctx: "RunContext", stmt: str) -> tuple[int, str | None]:
     PG draws one value PER MATCHED ROW in UPDATE too, so
     ``UPDATE t SET c = nextval('s') WHERE p`` counts rows where ``p`` is
     true and hands the predicate back so the expansion numbers exactly
-    those rows (ADVICE r3: a shared scalar here is silent wrong data).
+    those rows (a shared scalar here would be silent wrong data).
     ``UPDATE … FROM`` and DELETE with nextval raise
     :class:`~db_converter_spark.plans.pgdialect.UnsupportedConstruct`
     (port to a py-step) instead of silently assigning one shared value."""

@@ -58,7 +58,7 @@ PG_BIN_CANDIDATES = ("/usr/local/bin", "/usr/bin")
 
 def find_pg_binaries() -> "dict[str, str] | None":
     """Locate initdb/pg_ctl/psql, or None when the environment gate is
-    closed (reprobed every round, COVERAGE.md)."""
+    closed (see COVERAGE.md)."""
     out = {}
     for name in ("initdb", "pg_ctl", "psql"):
         for d in PG_BIN_CANDIDATES:
@@ -167,12 +167,9 @@ class PgServer:
 # COPY pipeline (reference E36): PG → Spark and Spark → PG in bulk
 # ---------------------------------------------------------------------------
 
-_PG_TO_SPARK_EXTRA = {
-    "character varying": "string", "character": "string",
-    "double precision": "double", "timestamp without time zone": "timestamp",
-    "timestamp with time zone": "timestamp", "integer": "int",
-    "numeric": "decimal(38,6)",
-}
+# read_pg_query loads an unconstrained ``numeric`` column as decimal(38,6);
+# every other type maps as in the dialect's casts.
+_PG_TO_SPARK_EXTRA = {"numeric": "decimal(38,6)"}
 
 
 def _spark_type(pg_type: str) -> str:

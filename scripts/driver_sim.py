@@ -53,8 +53,8 @@ def _rows(pdf):
 def main() -> int:
     mod = importlib.import_module("__spark_entry__")
     # VANILLA session, deliberately NOT build_session: the grading driver
-    # constructs its own SparkSession without any of our confs (round-1
-    # lesson — engine must be self-sufficient on a session it didn't build).
+    # constructs its own SparkSession without any of our confs, so the
+    # engine must be self-sufficient on a session it didn't build.
     cpus = os.environ.get("SPARK_GRAFT_SIM_CPUS", "8")
     spark = (
         SparkSession.builder.appName("driver-sim")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Generate a deterministic sf1-equivalent dataset (~10× sf0.1) into
 ``.scale/sf1/`` by unioning sf0.1 with key-offset replicas — the scale
-probe input (r4 verdict Next #1: measure scaling, don't just argue it).
+probe input (scaling is measured, not argued).
 
 Replication rules (replica i ∈ 0..9; i=0 is the original rows verbatim):
 
@@ -22,8 +22,8 @@ Deterministic: pure SQL over the source parquet, no randomness.
 Output is parquet with DuckDB's defaults (us timestamps — the catalog's
 footer sniff handles either unit).
 
-Memory model (r10 rework — the r9 1000-rep lineitem attempt was killed
-at 90 GB RSS): every arithmetic-offset table now generates through ONE
+Memory model (an N-way UNION ALL of 1000 lineitem replicas is killed at
+90 GB RSS): every arithmetic-offset table generates through ONE
 streaming query — ``source CROSS JOIN range(N) AS i`` with the key
 offsets computed from ``i`` — instead of an N-way UNION ALL, and the
 COPY runs with ``preserve_insertion_order=false`` so DuckDB streams
@@ -33,7 +33,7 @@ ORDER within the file is not (no consumer reads these files
 order-sensitively — every probe/test aggregates or joins). ``documents``
 keeps the per-replica UNION (its text transform indexes a Python
 permutation table, documented unique up to 2000 replicas — two disjoint
-vowel-permutation banks since r11) but streams through the same
+vowel-permutation banks) but streams through the same
 unordered COPY.
 """
 
@@ -55,11 +55,11 @@ N_REP = 10
 # — every replica's text transform is unique up to 1000 replicas (sf100),
 # so cross-replica exact duplicates never form (k-way duplicate cliques
 # would let exact-dedup reps collapse the corpus and understate scale).
-# r11: a SECOND, disjoint vowel-permutation bank (VOWELS2) extends the
+# A SECOND, disjoint vowel-permutation bank (VOWELS2) extends the
 # uniqueness bound to 2000 replicas for the ta13 next-doubling probe
-# (sf200 = a 2x sf100 doc corpus). Replicas < 1000 are BYTE-IDENTICAL to
-# the r10 generator — the second bank only engages at i >= 1000. (The
-# naive i >= 1000 continuation was measured to COLLIDE: CONS2[k:] is
+# (sf200 = a 2x sf100 doc corpus). Replicas < 1000 do not use it — the
+# second bank only engages at i >= 1000. (The naive i >= 1000
+# continuation COLLIDES: CONS2[k:] is
 # empty for k >= 10, so the third knob degenerates to identity and every
 # i >= 1000 mapping equals some i < 1000 mapping — 11-way exact-text
 # cliques. tests/test_scale_data.py pins pairwise-distinct mappings for
@@ -106,9 +106,8 @@ B = 10_000_000
 
 # arithmetic-offset tables: SELECT-list template over (source CROSS JOIN
 # range(N) r(i)) — ONE streaming query per table regardless of replica
-# count (the r10 fix: an N-way UNION ALL under preserve_insertion_order
-# was materialized whole by the COPY; the 1000-rep lineitem died at
-# 90 GB RSS)
+# count (an N-way UNION ALL under preserve_insertion_order is
+# materialized whole by the COPY; a 1000-rep lineitem dies at 90 GB RSS)
 _STREAM_COLS = {
     "customer": f"c_custkey + i * {M} AS c_custkey, c_name, c_nationkey,"
                 " c_acctbal, c_mktsegment",
@@ -180,7 +179,7 @@ def main() -> int:
     # a 1000-replica documents UNION ALL exceeds the default parser depth
     con.execute("SET max_expression_depth TO 10000")
     # stream to the writer; do NOT materialize the result to preserve input
-    # order (the r9 OOM: 1000-rep lineitem killed at 90 GB RSS). Content is
+    # order (a 1000-rep lineitem is killed at 90 GB RSS). Content is
     # deterministic; row order within the file is not — no consumer reads
     # these files order-sensitively.
     con.execute("SET preserve_insertion_order = false")

@@ -23,7 +23,6 @@ HEADLINE = [
     "dd01_dedup_exact", "dd04_minhash_lsh_bands", "ss01_cosine_topk",
     "ta04_winnow_fingerprints", "ev02_sessionization", "mg01_chunk_grid",
     "pipe01_corpus_filter",
-    # round-5 additions
     "ss07_kmeans_train", "ss08_ivf_trained_topk",
     "dd12_dup_substring_runs", "dd13_neardup_purge", "ta07_trigram_lm",
 ]

@@ -3,7 +3,7 @@
 
 Default: per-query MIN over the existing expectation and the new run
 (expectations only ever describe the machine's demonstrated capability).
-``--replace name ...``: queries whose SOURCE changed this round get their
+``--replace name ...``: queries whose SOURCE changed get their
 expectation REPLACED by the new measurement — the old best may be
 structurally unreachable (e.g. a memory-decade rework that trades wall
 for bounded state), and keeping it would make the churn pin re-sample

@@ -4,9 +4,9 @@ sf1-equivalent (scripts/make_scale_data.py, ~10× rows), and audit the
 physical plans at both scales for flips (broadcasts degrading to
 sort-merge, nested-loop joins appearing, pushed filters vanishing).
 
-This is the r4 verdict's Next #1: the 100×-scale claims rested on
-plan-shape arguments measured only at sf0.1. Done = ~linear wall-time
-scaling (≤ ~15× at 10× data) and zero plan flips.
+Scale claims need measurement, not plan-shape arguments made at sf0.1.
+The target is ~linear wall-time scaling (≤ ~15× at 10× data) and zero
+plan flips.
 
 A reported "broadcast->non-broadcast" needs inspection, not automatic
 red: AQE flipping a GROWN side (e.g. a fact-fact join) to SortMergeJoin
@@ -15,7 +15,8 @@ join losing its broadcast. See BASELINE.md's 100× section for the
 join-by-join reading of the sf10 flips.
 
 Usage: python scripts/scale_probe.py [--runs 2] [name ...]
-Writes SCALE_PROBE.json and prints a markdown table for BASELINE.md.
+Writes ``.scale/SCALE_PROBE.json`` (git-ignored; ``--out`` is relative to
+the repo root) and prints a markdown table of times, ratios and flips.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from db_converter_spark.session import build_session
 SF01 = "/root/testdata/sf0.1"
 SF1 = str(ROOT / ".scale" / "sf1")
 
-# the heavy family the r4 verdict named, plus the r5 additions
+# the heavy family: the slowest operators of each kind
 HEAVY = [
     "q01_pricing_summary",
     "q02_top_revenue_orders",
@@ -80,7 +81,7 @@ def main() -> int:
         default=f"sf0.1:{SF01},sf1:{SF1}",
         help="comma-separated label:dir pairs; ratios are vs the FIRST",
     )
-    ap.add_argument("--out", default="SCALE_PROBE.json")
+    ap.add_argument("--out", default=".scale/SCALE_PROBE.json")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
     names = args.names or HEAVY
@@ -124,7 +125,9 @@ def main() -> int:
         rec["plan_flips"] = flips
         flips_total += len(flips)
 
-    Path(ROOT / args.out).write_text(json.dumps(out, indent=1) + "\n")
+    out_path = ROOT / args.out
+    out_path.parent.mkdir(parents=True, exist_ok=True)
+    out_path.write_text(json.dumps(out, indent=1) + "\n")
     header = " | ".join(f"{lbl} s" for lbl, _ in scales)
     print(f"\n| query | {header} | ratio ({big_label}/{base_label}) | plan flips |")
     print("|---|" + "---|" * (len(scales) + 2))

@@ -44,6 +44,19 @@ def no_running_streams(request):
     assert not active, f"streaming queries left running: {[q.name or q.id for q in active]}"
 
 
+@pytest.fixture
+def restore_views(spark):
+    """For modules whose tests synthesize tiny `orders`/`lineitem`/
+    `events`/`documents` temp views: restore the real ones THROUGH the
+    memo (register_views memoizes on the session, so a bare dropTempView
+    leaves later tests reading nothing)."""
+    yield
+    from db_converter_spark.catalog import register_views
+
+    spark._dbc_registered_sf = None
+    register_views(spark, SF_DIR)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

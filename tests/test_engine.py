@@ -611,3 +611,24 @@ def test_cli_conf_overlay(spark, tmp_path):
     assert rc == 0
     assert spark.conf.get("spark.sql.cbo.enabled") == "true"
     spark.conf.set("spark.sql.cbo.enabled", prev)
+
+
+def test_cli_db_mask_matching_nothing_runs_nothing(spark, tmp_path, capsys):
+    from db_converter_spark.cli import main as cli_main
+
+    pkt = tmp_path / "packets" / "mask_pkt"
+    pkt.mkdir(parents=True)
+    (pkt / "01_step.sql").write_text("SELECT 1 AS one")
+    for mask in ("prod_*", "ALL,exclude:default"):
+        rc = cli_main(
+            [
+                "--packet-name", "mask_pkt",
+                "--packets-dir", str(tmp_path / "packets"),
+                "--warehouse", str(tmp_path / "wh"),
+                "--db", mask,
+            ],
+            spark=spark,
+        )
+        assert rc == 2, mask
+        assert f"no target matches --db {mask}" in capsys.readouterr().err
+    assert not (tmp_path / "wh" / "default").exists()

@@ -200,7 +200,7 @@ WHERE a.id = t.id;
 
 
 def test_merge_null_keys_not_counted_or_updated(spark):
-    """ADVICE r3: NULL join keys must neither update (PG `=` semantics) nor
+    """NULL join keys must neither update (PG `=` semantics) nor
     inflate the reported rowcount — plan and count use the same predicate."""
     from db_converter_spark.operators.migration import merge_update
 

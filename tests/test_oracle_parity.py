@@ -1,5 +1,5 @@
 """Every registered query with an oracle must match DuckDB bit-for-bit at
-sf0.001 — the same check the driver runs at sf0.01 (CORRECTNESS_r{N}.json),
+sf0.001 — the same check ``__spark_entry__``'s contract runs at sf0.01,
 and must leave the session's temporary views as it found them."""
 
 from __future__ import annotations

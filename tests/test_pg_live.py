@@ -1,8 +1,7 @@
 """LIVE PostgreSQL parity — activated when the PG server binaries exist on
-the host (the r1–r8 environment gate: no server anywhere; r9: PostgreSQL 15
-``initdb``/``pg_ctl``/``postgres`` + ``psql`` appeared, still no Python wire
-driver and no PG JDBC jar — so everything here drives the server the one
-way the environment itself provides, psql over a trust unix socket).
+the host (PostgreSQL 15 ``initdb``/``pg_ctl``/``postgres`` + ``psql``; there
+is no Python wire driver and no PG JDBC jar — so everything here drives the
+server through psql over a trust unix socket).
 
 What this buys that the DuckDB-JDBC live tests could not: the reference's
 actual target WAS PostgreSQL (reference: psc/postgresql/driver/pq3.py;
@@ -321,10 +320,9 @@ def test_reference_selects_column_shape_matches_live_pg(pg_env, pg):
 # ---------------------------------------------------------------------------
 # The reference's fifth test layer runs every alert/dba observability packet
 # against a live database and requires SUCCESS (reference:
-# tests/test_packets.py:547-583). Until r9 this class ran only against the
-# pg_catalog EMULATION (the ports under packets/ are Spark-dialect by
-# design — Spark-side coverage lives in test_packet_corpus.py); with a real
-# server the native half finally executes: the reference ORIGINALS run
+# tests/test_packets.py:547-583). The ports under packets/ are
+# Spark-dialect by design and run against the pg_catalog EMULATION in
+# test_packet_corpus.py; with a real server the native half executes: the reference ORIGINALS run
 # server-side through run_packet_native (generators, fan-out, maint channel
 # and dollar-quoted DO blocks included), against a cluster the test first
 # LOADS so pg_stat_* captures are non-trivial — inserts, updates, seq scans,
@@ -539,7 +537,7 @@ def test_alert_check_autovacuum_raises_when_disabled(pg_loaded):
 
 
 def test_catalog_emulation_matches_live_catalog_for_same_objects(spark, pg_loaded):
-    """The cross-check the emulation routing owed (r9 VERDICT Next #1):
+    """The cross-check of the emulation routing:
     mirror the SAME logical tables into a Spark database, and the
     engine's pg_catalog emulation must agree with the LIVE catalog on the
     object inventory (relname set), the column inventory (names, ordinal
@@ -631,8 +629,8 @@ def test_catalog_emulation_matches_live_catalog_for_same_objects(spark, pg_loade
 
 @needs_reference
 def test_reference_select_values_match_emulation_on_mirrored_objects(spark, pg):
-    """Value-level parity for the emulatable reference SELECT subset (r9
-    VERDICT Next #7): mirror the SAME pk-less tables into a PG schema and
+    """Value-level parity for the emulatable reference SELECT subset:
+    mirror the SAME pk-less tables into a PG schema and
     a Spark database both named ``vp``, then execute enumerated reference
     observability statements NATIVELY on live PG and as ``pg_rewrite``
     output over the catalog emulation — and compare VALUES cell-wise on
@@ -693,7 +691,7 @@ def test_reference_select_values_match_emulation_on_mirrored_objects(spark, pg):
         "INSERT INTO vp.vpb SELECT g, 'tag_' || md5(g::text)"
         " FROM generate_series(1, 3000) g"
     )
-    # r11 (VERDICT Next #7): index-bearing mirror surface — a 4-field
+    # index-bearing mirror surface — a 4-field
     # index (idx_diag/02's indnatts gate) and a btree on a text column
     # (idx_diag/04's pg_attribute/pg_type/pg_am join chain)
     pg.sql("CREATE TABLE vp.vpc (a int4, b int4, c int4, d int4)")
@@ -751,7 +749,7 @@ def test_reference_select_values_match_emulation_on_mirrored_objects(spark, pg):
         _compare(
             "alert_stat/01_step.sql", ["nspname", "relname", "reltuples"], "nspname"
         )
-        # r11 additions — the pg_index attribute surface, cell-wise:
+        # the pg_index attribute surface, cell-wise:
         # >3-field index inventory (indnatts)
         _compare(
             "dba_idx_diag/02_step.sql",
@@ -784,7 +782,7 @@ def test_reference_select_values_match_emulation_on_mirrored_objects(spark, pg):
 
 
 def test_native_runner_dedups_bound_actions_and_distinguishes_null(pg, tmp_path):
-    """The two r11 generator-channel fixes, proven on the live server:
+    """Two generator-channel guarantees, proven on the live server:
 
     1. Bound-action dedup (reference ``steps_hashes``, dbccore/dbccore.py:
        941-943; plans/runner.py ``seen_hashes``): generator rows that bind
@@ -852,7 +850,7 @@ def test_native_runner_dedups_bound_actions_and_distinguishes_null(pg, tmp_path)
 
 
 # ---------------------------------------------------------------------------
-# Live-PG as a FIRST-CLASS runner target (r11, VERDICT Next #1): packets
+# Live-PG as a FIRST-CLASS runner target: packets
 # route through PacketRunner with the dbc_* ledger IN the target database
 # (reference: actiontracker/actiontracker.py:38-95; db_converter.py:556-685)
 # ---------------------------------------------------------------------------
@@ -1178,7 +1176,7 @@ def test_ledger_roundtrip_on_pg(pg):
 
 
 def test_cli_runs_packet_on_pg_target_and_reads_ledger(spark, pg, tmp_path, capsys):
-    """End-to-end CLI on a live-PG target (r11): --pg-targets routes the
+    """End-to-end CLI on a live-PG target: --pg-targets routes the
     run natively with the ledger in the target DB; --status and --unlock
     then read/write that SAME server-side ledger."""
     from db_converter_spark.cli import main as cli_main

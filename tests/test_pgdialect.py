@@ -77,6 +77,25 @@ from db_converter_spark.plans.model import ResultCode
         ("select $fn1$ a::int $fn1$ as x", "select $fn1$ a::int $fn1$ as x"),
         # the E of a keyword before a literal is no E'…' prefix
         ("select case when a then 'x' ELSE'y' end", "select case when a then 'x' ELSE'y' end"),
+        # standard CAST maps PG type names like `::` does
+        *(
+            (f"select CAST('1' AS {pg})", f"select CAST('1' AS {spark})")
+            for pg, spark in [
+                ("text", "string"), ("int8", "bigint"), ("int4", "int"),
+                ("int2", "smallint"), ("float8", "double"), ("float4", "float"),
+                ("bool", "boolean"), ("timestamptz", "timestamp"),
+                ("varchar", "string"), ("bpchar", "string"), ("bytea", "binary"),
+                ("jsonb", "string"), ("uuid", "string"),
+                ("double precision", "double"), ("character varying", "string"),
+                ("character varying(10)", "string"), ("character(3)", "string"),
+                ("timestamp with time zone", "timestamp"),
+            ]
+        ),
+        ("select CAST('1.5' AS numeric)", "select CAST('1.5' AS decimal(38,18))"),
+        ("select CAST(CAST(x AS int8) AS text)", "select CAST(CAST(x AS bigint) AS string)"),
+        ("select 'a'::character varying", "select CAST('a' AS string)"),
+        # a type Spark already reads is left as written
+        ("select CAST(x AS INT), CAST(y AS decimal(10, 2))", "select CAST(x AS INT), CAST(y AS decimal(10, 2))"),
     ],
 )
 def test_rewrite_unit(pg, spark_sql):
@@ -89,6 +108,13 @@ def test_rewrite_create_table_types():
     )
     assert "bigint" in out and "string" in out
     assert "serial" not in out and "int4" not in out and "text" not in out.lower().replace("string", "")
+    assert rewrite(
+        "CREATE TABLE t (a character varying(10), b character(3), c double precision,"
+        " d timestamp with time zone, e varchar, f numeric(10,2), text text)"
+    ) == (
+        "CREATE TABLE t (a varchar(10), b char(3), c double, d timestamp, e string,"
+        " f decimal(10,2), text string)"
+    )
 
 
 def test_current_setting_folding():
@@ -258,7 +284,7 @@ def test_interval_cmp_literal_scope(pg, expect):
     assert rewrite(pg) == expect
 
 
-# -------------------------------------------------- SRF auto-hoist (r4)
+# -------------------------------------------------------- SRF auto-hoist
 
 
 @pytest.mark.parametrize(

@@ -169,8 +169,8 @@ def test_ss07_joins_stay_broadcast(spark):
     asg_plan = _fresh_plan(spark, sqls["asg"], vflat=vflat, cent=cent)
     assert "SortMergeJoin" not in asg_plan, asg_plan
     assert asg_plan.count("BroadcastHashJoin") == 1, asg_plan
-    # r11: the assignment is inlined into the update (one fused job per
-    # iteration) — pin the fused stage the way _km_train now builds it
+    # the assignment is inlined into the update (one fused job per
+    # iteration) — pin the fused stage the way _km_train builds it
     upd_plan = _fresh_plan(
         spark,
         sqls["cent_next"],
@@ -189,10 +189,9 @@ def _fresh_plan(spark, sql, **dfs):
 
 
 def test_dd12_no_nested_loop_and_partitioned_window(spark):
-    """dd12's r9 one-pass shape: the duplicate flag is a window COUNT over
-    the 16-byte window hash (NO join anywhere — the old freq-aggregate +
-    mark-join pair is gone, that pair plus its checkpoint spilled 99 GB at
-    sf100/16 GB), the run merge windows PARTITIONED by doc (no global
+    """dd12's one-pass shape: the duplicate flag is a window COUNT over
+    the 16-byte window hash (NO join anywhere — a freq-aggregate +
+    mark-join pair plus its checkpoint spills 99 GB at sf100/16 GB), the run merge windows PARTITIONED by doc (no global
     order), and nothing is checkpointed."""
     plan = _plan(spark, "dd12_dup_substring_runs")
     for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
@@ -296,10 +295,10 @@ def test_dd14_pair_join_on_cluster_key(spark):
 
 
 def test_dd14_pair_stage_single_cid_exchange_vectorized(spark):
-    """The deployment shape of the pair stage (r12): the n-row wide
+    """The deployment shape of the pair stage: the n-row wide
     assignment is shuffled EXACTLY ONCE (one cid-keyed exchange feeding
-    the grouped-map pair worker — the SQL self-join era also shuffled it
-    once via Exchange + ReusedExchange), the per-cell pairwise cosine
+    the grouped-map pair worker — a SQL self-join shuffles it once too,
+    via Exchange + ReusedExchange), the per-cell pairwise cosine
     runs vectorized in numpy (FlatMapGroupsInPandas — no interpreted
     lambda, no join of any kind), and the exact ROUND/tau gate remains
     an engine-side Filter above it."""
@@ -533,10 +532,10 @@ def test_q38_unpivot_single_expand(spark):
 
 
 def test_dq05_keyed_joins_only(spark):
-    """FK orphan audit (r12 single multi-FK pass): ALL edges share ONE
+    """FK orphan audit (single multi-FK pass): ALL edges share ONE
     (edge, fk)-keyed aggregate and ONE keyed join against the tagged
     parent-key union — lineitem is scanned exactly once (the per-edge
-    UNION form scanned it three times), never a nested-loop/cartesian,
+    UNION form scans it three times), never a nested-loop/cartesian,
     never a global sort."""
     plan = _plan(spark, "dq05_fk_orphans")
     assert "NestedLoop" not in plan and "Cartesian" not in plan, plan
@@ -546,7 +545,7 @@ def test_dq05_keyed_joins_only(spark):
 
 
 def test_pipe11_single_scan_bounded_fanout(spark):
-    """Context-fit report (r9: priced in ta14 BPE tokens): ONE documents
+    """Context-fit report (priced in ta14 BPE tokens): ONE documents
     scan exploded into the BROADCAST encode-map join (the vocab is a
     checkpointed vocab-bounded relation), one doc-keyed aggregate, the
     4-row length relation fans out via broadcast nested loop (bounded
@@ -585,7 +584,7 @@ def test_dd15_same_accepted_shape_as_dd10(spark):
 
 
 def test_dd15_containee_channel_stage_shape(spark):
-    """The bottom-k candidate stage (r12 df-window form): reads ONLY the
+    """The bottom-k candidate stage (df-window form): reads ONLY the
     checkpointed inverted index (zero parquet scans), the gram document
     frequency is a window over the SAME pass (partitioned by sh — no
     aggregate+self-join, so full_sh is scanned once for the whole bk
@@ -659,7 +658,7 @@ def test_dc04_train_side_streams_unshuffled(spark):
 
 
 def test_pipe12_single_scan_bounded_tail(spark):
-    """Epoch plan (r9: priced in ta14 BPE tokens): the final statement
+    """Epoch plan (priced in ta14 BPE tokens): the final statement
     reads ONLY ta14's checkpointed serving artifacts — the (source, word)
     counts and the encode map, joined broadcast — so ZERO parquet scans
     here (the one corpus scan lives in the shared ta14 train pass); the
@@ -783,7 +782,7 @@ def _single_partition_subtrees(plan: str) -> list[list[str]]:
     ["mg04_compaction_plan", "pipe06_token_budget"],
 )
 def test_cumulative_windows_stay_keyed(spark, name):
-    """r6 verdict Next #7 (keyed half): mg04's running-bytes window and
+    """Keyed cumulative windows: mg04's running-bytes window and
     pipe06's budget window partition on real keys (part_month / the pack
     key) — pin that no edit collapses them onto ONE partition."""
     plan = _plan(spark, name)
@@ -795,7 +794,7 @@ def test_cumulative_windows_stay_keyed(spark, name):
     ["ta12_ppl_buckets", "ev16_watermark_audit"],
 )
 def test_single_partition_windows_read_bounded_relations(spark, name):
-    """r6 verdict Next #7: these queries run cumulative windows through ONE
+    """These queries run cumulative windows through ONE
     partition BY DESIGN — their inputs are bounded bin/batch relations
     (≤65,537 histogram bins / ≤ micro-batch count), never the corpus. Pin
     the intent mechanically: every SinglePartition exchange's subtree must
@@ -842,9 +841,9 @@ def test_dc05_pair_stage_is_sketch_only(spark):
 
 def test_ta13_tail_is_scan_free_and_rank_is_grouplimit(spark):
     """ta13's tail runs over the once-materialized per-n stage outputs:
-    zero parquet scans (the single-statement form re-scanned documents 5x
-    via CTE inlining). The per-doc top-1 rank lives in the per-n STAGE
-    plans now (the r8 staged rework) — assert it still compiles to
+    zero parquet scans (a single-statement form re-scans documents 5x via
+    CTE inlining). The per-doc top-1 rank lives in the per-n STAGE
+    plans — assert it compiles to
     WindowGroupLimit (partial top-k before the exchange) there."""
     plan = _plan(spark, "ta13_gopher_ngram_cov")
     assert "Scan parquet" not in plan, plan
@@ -953,7 +952,7 @@ def test_pipe15_single_scan_no_joins(spark):
 
 
 def test_dq08_no_corpus_checkpoints_tail_single_scan(spark):
-    """dq08 (r11 shape): only the bounded mm/cum/within relations
+    """dq08: only the bounded mm/cum/within relations
     materialize; the tail's extraction is a UNION of NARROW per-column
     scans with PUSHED literal range predicates (at most one branch per
     mixed column — no Generate, no join feeding the window), every join
@@ -972,7 +971,7 @@ def test_dq08_no_corpus_checkpoints_tail_single_scan(spark):
 
 
 def test_ta13_two_phase_staged_templates(spark):
-    """The r10 staged sub-pass shapes (PLANS.md ta13 two-phase entry),
+    """The staged sub-pass shapes (PLANS.md ta13 two-phase entry),
     pinned on the TEMPLATES directly (the staged runner executes them
     eagerly, so the builder path can't expose them lazily):
 
@@ -1013,10 +1012,9 @@ def test_ta13_two_phase_staged_templates(spark):
             assert "SortMergeJoin" not in plan, (n, plan)
             assert "ShuffledHashJoin" not in plan, (n, plan)
     finally:
-        # r11: restore-discipline for the planted corpus (every other
-        # planting test resets the register_views memo; this r10 test
-        # forgot, so the 2-row `documents` leaked into whichever
-        # corpus-reading test ran next in the shared session — surfaced
-        # as ta09 training 'a b a b' merges in a plan_shapes+r8_ops run)
+        # restore-discipline for the planted corpus: without the memo
+        # reset the 2-row `documents` leaks into whichever corpus-reading
+        # test runs next in the shared session (ta09 then trains
+        # 'a b a b' merges)
         spark.catalog.dropTempView("documents")
         spark._dbc_registered_sf = None

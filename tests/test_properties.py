@@ -283,7 +283,7 @@ def test_pipe13_oracle_matches_python_twin(docs):
     on arbitrary corpora — including all-target, no-target and
     bucket-collision cases the hand-built structural fixture can't
     cover. Runs the DuckDB oracle; Spark parity rides
-    test_oracle_parity/test_tranche7_ops."""
+    test_oracle_parity and the dd14 semantic tests."""
     import duckdb
 
     from db_converter_spark.operators.pipeline import _PIPE13_DUCK

@@ -13,17 +13,7 @@ import pytest
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    """Several tests here synthesize tiny `orders`/`lineitem`/`events`/
-    `documents` temp views; restore the real ones THROUGH the memo
-    (register_views memoizes on the session — a bare dropTempView once
-    broke 8 plan-shape tests downstream)."""
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def test_dq01_counts_injected_violations(spark):

@@ -5,9 +5,9 @@ from __future__ import annotations
 
 
 def test_compact_bench_line_keeps_subsecond_precision_at_live_size():
-    """The r9 verdict's quantization note: at the live registry size the
-    compact line fell to 0.1 s granularity, making sub-0.3 s queries
-    unregressable from the official artifact alone. The 'mixed' ladder
+    """At the live registry size a 1-decimal compact line falls to 0.1 s
+    granularity, making sub-0.3 s queries unregressable from the recorded
+    artifact alone. The 'mixed' ladder
     rung must keep 2-decimal times for sub-second entries (1-decimal
     above) under a REALISTIC timing distribution — trading away the
     resampled name list (recoverable from bench_verbose_last.json)

@@ -11,13 +11,7 @@ import pytest
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def test_ev16_lateness_arithmetic_on_disordered_stream(spark):

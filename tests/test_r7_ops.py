@@ -1,6 +1,6 @@
 """dc05 sketched source-overlap — the properties the oracle compare can't
 see: the KMV estimator's accuracy against the EXACT dc02 matrix at sf0.1
-(r6 verdict Next #3's Done criterion: within documented ε on every pair),
+(within documented ε on every pair),
 and a planted high-containment fixture proving the sketch surfaces overlap
 the way the exact matrix does."""
 
@@ -9,7 +9,6 @@ from __future__ import annotations
 import pytest
 
 from db_converter_spark.registry import all_queries
-from tests.conftest import SF_DIR
 
 SF01 = "/root/testdata/sf0.1"
 
@@ -21,13 +20,7 @@ SF01 = "/root/testdata/sf0.1"
 _EPS_X1000 = 100
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def test_dc05_estimator_within_eps_of_exact_dc02_every_pair(spark):

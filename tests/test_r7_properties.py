@@ -1,7 +1,7 @@
-"""Property-based tests (hypothesis) for the r7 operators' MATH: the DuckDB
-oracle SQL runs on adversarial generated inputs and must match a pure-Python
-reference implementation. Spark == oracle is proven per round by the driver
-parity harness; oracle == math closes the loop without paying a Spark
+"""Property-based tests (hypothesis) for the MATH of dq07, ev17, pipe14 and
+ta13: the DuckDB oracle SQL runs on adversarial generated inputs and must
+match a pure-Python reference implementation. Spark == oracle is proven by
+test_oracle_parity; oracle == math closes the loop without paying a Spark
 session per example."""
 
 from __future__ import annotations

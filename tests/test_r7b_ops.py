@@ -1,4 +1,4 @@
-"""Semantic tests for the four r7-new operators beyond the oracle compare:
+"""Semantic tests for ta13, pipe14, ev17 and ss13 beyond the oracle compare:
 ta13's union-of-positions coverage math on planted repetition, pipe14's
 waterfill invariants (budget conservation, cap pinning, water line), ev17's
 one-sided count-min guarantee on a planted heavy hitter, and ss13's
@@ -16,13 +16,7 @@ from db_converter_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def _docs_view(spark, rows):
@@ -63,7 +57,7 @@ def test_ta13_staged_path_matches_unstaged_on_fixture(spark, monkeypatch):
     # The memory-decade STAGED path (sequential per-n checkpoint jobs) is
     # the plan actually used at scale, but the docs.count() switch means
     # the oracle compare only ever exercises the non-staged union at test
-    # scale (r8 ADVICE). Force staged=True via the threshold hook and pin
+    # scale. Force staged=True via the threshold hook and pin
     # it to the non-staged result on a fixture that exercises both rules.
     from db_converter_spark.operators import textops
 

@@ -63,7 +63,7 @@ _EXPECTED_UNANALYZABLE = {
     # INTENTIONAL typo — the packet exists to test the error path
     "test_syntax_exception/01_step.sql": "deliberate pg_sleeep() typo",
     # alert_bloat/01 (SRF nested in a select-list expression) analyzes
-    # verbatim since r4: pgdialect auto-hoists expression-nested explode()
+    # verbatim: pgdialect auto-hoists expression-nested explode()
     # into a LATERAL VIEW (_rw_hoist_nested_srf)
 }
 # generator placeholders are bound at runtime (apply_gen_placeholders);
@@ -142,6 +142,6 @@ def test_reference_selects_analyze_verbatim(pg_env):
     # fail loudly rather than silently passing on 0 statements
     assert ok >= 71, f"only {ok} statements analyzed — reference tree moved?"
     # 18 = generator-placeholder query steps (runtime-bound names) + the
-    # statements in _EXPECTED_UNANALYZABLE files (alert_bloat/01 moved to
-    # the analyzed set in r4 via SRF auto-hoisting)
+    # statements in _EXPECTED_UNANALYZABLE files (alert_bloat/01 is in
+    # the analyzed set via SRF auto-hoisting)
     assert skipped <= 18, f"{skipped} skipped — expected-skip set grew"

@@ -18,9 +18,8 @@ def test_compact_bench_prefixes_unique():
 
 
 def test_compact_bench_line_fits_capture_window():
-    """The driver records only the LAST ~2000 chars of bench.py stdout;
-    BENCH_r08.json lost its per-query map (parsed=null) when the compact
-    line outgrew that window. Pin the WORST plausible line at the live
+    """A caller that records only the LAST ~2000 chars of bench.py stdout
+    loses the per-query map when the compact line outgrows that window. Pin the WORST plausible line at the live
     registry size: every query slow (three-digit seconds), every query
     median-hot, every query resampled — the ladder in
     benchutil.build_compact_line must still land under COMPACT_LINE_MAX."""
@@ -46,7 +45,7 @@ def test_compact_bench_line_fits_capture_window():
     for field in ("metric", "value", "unit", "queries", "sf"):
         assert field in parsed, f"required field {field} dropped from compact line"
     assert len(parsed["queries"]) == len(names)
-    # the r12 ambient marker is an addition and must survive degradation
+    # the ambient marker is an addition and must survive degradation
     assert parsed.get("ambient") == worst_ambient
     # realistic shape (committed expected bests, nothing hot) must fit on
     # the FIRST rung so precision is only degraded under duress

@@ -74,10 +74,10 @@ def _load_generator():
 
 
 def test_translate_mappings_unique_to_2000_reps():
-    """The r11 sf200 (2x sf100 doc corpus) probe needs 2000 DISTINCT text
+    """The sf200 (2x sf100 doc corpus) probe needs 2000 DISTINCT text
     transforms: compare induced character MAPPINGS, not expression
-    strings — the naive i>=1000 continuation produced distinct SQL whose
-    CONS2 slice degenerated to identity, i.e. 11-way exact-dup cliques."""
+    strings — the naive i>=1000 continuation produces distinct SQL whose
+    CONS2 slice degenerates to identity, i.e. 11-way exact-dup cliques."""
     import re
 
     mod = _load_generator()
@@ -97,9 +97,9 @@ def test_translate_mappings_unique_to_2000_reps():
 
 
 def test_translate_exprs_below_1000_unchanged_since_r10():
-    """Replicas < 1000 must stay byte-identical to the r10 generator so
+    """Replicas < 1000 must stay byte-identical to the one-bank generator so
     existing probe corpora (sf1/sf10/sf100) remain reproducible; pinned
-    against expressions captured from the pre-r11 implementation."""
+    against expressions captured before the second bank was added."""
     mod = _load_generator()
     pinned = {
         0: "text",

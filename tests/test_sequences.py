@@ -170,7 +170,7 @@ def test_insert_defaults_from_recorded_property(ctx):
     )
 
 
-# ------------------------------------------------- r3 ADVICE regressions
+# ---------------------------------------------------- nextval regressions
 
 
 def test_setval_is_called_false(tracker):
@@ -213,7 +213,7 @@ def test_setval_is_called_inline(ctx):
 
 
 def test_update_nextval_per_matched_row(ctx):
-    """ADVICE r3 (medium): UPDATE t SET c = nextval(s) WHERE p must draw one
+    """UPDATE t SET c = nextval(s) WHERE p must draw one
     value PER MATCHED ROW (PG semantics), not one shared scalar."""
     spark = ctx.spark
     spark.sql(f"DROP TABLE IF EXISTS {DB}.unx")

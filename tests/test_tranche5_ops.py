@@ -11,17 +11,7 @@ import pytest
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    """Tests here synthesize tiny `events`/`lineitem`/`documents` temp
-    views; restore the real ones THROUGH the memo (register_views
-    memoizes on the session — a bare dropTempView once broke 8
-    plan-shape tests downstream)."""
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def test_ev11_known_gaps(spark):

@@ -12,17 +12,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    """Tests here synthesize tiny temp views over real table names;
-    restore the real ones THROUGH the memo (register_views memoizes on
-    the session — a bare dropTempView once broke 8 plan-shape tests
-    downstream)."""
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def _dd10_sym_pairs(spark):
@@ -73,7 +63,7 @@ def test_dd15_catches_doc_in_doc_jaccard_misses(spark):
 
 
 def test_dd15_extreme_ratio_containment_beyond_banding(spark):
-    """The r5 recall gap, planted: a 50-word doc embedded verbatim in a
+    """The banding recall gap, planted: a 50-word doc embedded verbatim in a
     5,000-word doc (J ≈ 0.009 — symmetric band collision probability
     ∝ J⁴ ≈ 7e-9, so dd10's channel structurally misses it). The
     containee-side bottom-k channel must surface it with containment
@@ -106,12 +96,12 @@ def test_dd15_extreme_ratio_containment_beyond_banding(spark):
 
 
 def test_dd15_boilerplate_framed_containee_df_aware_bottomk(spark):
-    """The r6 residual, planted (r6 verdict Next #4): 50 distinctive
+    """The all-boilerplate bottom-k trap, planted: 50 distinctive
     tokens wrapped in corpus-wide boilerplate whose grams all exceed
     df 100. The containee's four smallest-md5 grams over its FULL gram
     set are all boilerplate (asserted below against the materialized
-    inverted index — the fixture really plants the trap), so the r6
-    rank-then-filter channel had zero probes for it; the r7 df-aware
+    inverted index — the fixture really plants the trap), so a
+    rank-then-filter channel has zero probes for it; the df-aware
     bottom-k (filter to rare grams BEFORE the rank) keeps a signature
     and surfaces the pair. Banding must also miss it (J ≈ 0.08), so the
     containee channel is the only path."""
@@ -158,7 +148,7 @@ def test_dd15_boilerplate_framed_containee_df_aware_bottomk(spark):
 
 
 def test_pipe11_known_token_arithmetic(spark):
-    """Two fixture docs, token counts now in ta14 BPE subwords (r9): the
+    """Two fixture docs, token counts in ta14 BPE subwords: the
     per-doc counts come from the independent pure-Python BPE twin, every
     report cell recomputed from them (ceil-division seq counts, truncation
     loss, split padding)."""
@@ -423,8 +413,8 @@ def test_dc04_injected_contamination(spark):
 
 
 def test_pipe12_known_budget_arithmetic(spark):
-    """Two sources with known weights, token counts now in ta14 BPE
-    subwords (r9): per-source totals come from the independent twin, then
+    """Two sources with known weights, token counts in ta14 BPE
+    subwords: per-source totals come from the independent twin, then
     targets, ceil-division epochs, the 4-epoch ceiling and the shortfall
     are recomputed exactly in integers."""
     from db_converter_spark.operators.pipeline import _MIX_WEIGHTS, _PIPE12_SPARK
@@ -568,7 +558,7 @@ def test_dq06_known_drift_and_stability(spark):
 
 
 def test_dq06_both_engines_on_synthetic_corpus(spark):
-    """The ADVICE-r4 pattern (pipe05 lesson): run the DuckDB oracle on
+    """Run the DuckDB oracle on
     the SAME synthetic rows the Spark structural test uses — including a
     zero-width reference range (type 'c': all ref values equal, so every
     bin collapses to 0 and drift is invisible, the documented PSI-edge

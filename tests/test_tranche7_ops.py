@@ -12,16 +12,7 @@ import pytest
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _restore_views(spark):
-    """Tests here synthesize tiny temp views over real table names;
-    restore the real ones THROUGH the memo (register_views memoizes on
-    the session)."""
-    yield
-    from db_converter_spark.catalog import register_views
-
-    spark._dbc_registered_sf = None
-    register_views(spark, SF_DIR)
+pytestmark = pytest.mark.usefixtures("restore_views")
 
 
 def _bucket(w: str) -> int:
@@ -189,10 +180,10 @@ def test_dd14_tie_break_and_both_engines_on_duplicate_vectors(spark):
     assert acheck[0] == 0 and acheck[251] == 0 and acheck[10] == 0
     assert acheck[11] == 0 and acheck[502] == 502 and acheck[20] == 502
     ckpt = assign.localCheckpoint(eager=True)
-    # r12: the pair cosine runs vectorized per cid group (8-dim vectors
+    # the pair cosine runs vectorized per cid group (8-dim vectors
     # here — the worker folds over whatever dimension the data carries)
     pairs = spark.sql(_DD14_PAIRS_FROM_RAW, raw=_dd14_pairs_py(ckpt))
-    # r11: cell sizes are inlined in _DD14_SPARK_MAIN (no dd14_cells relation)
+    # cell sizes are inlined in _DD14_SPARK_MAIN (no dd14_cells relation)
     got = sorted(
         tuple(r) for r in spark.sql(_DD14_SPARK_MAIN, pairs=pairs, assign=ckpt).collect()
     )
@@ -217,13 +208,13 @@ def test_dd14_tie_break_and_both_engines_on_duplicate_vectors(spark):
 
 
 def test_dd14_vectorized_assign_matches_sql_assign(spark):
-    """r12: the numpy mapInPandas assignment (explicit per-dimension fold,
+    """The numpy mapInPandas assignment (explicit per-dimension fold,
     guard-banded HALF_UP rounding, first-max tie-breaks) must be
     BIT-IDENTICAL to the SQL two-level assignment on a tie-heavy fixture:
     duplicate vectors (exact cosine ties at every level) and scaled copies
     (equal direction, different norms) across non-64 dims — the edges the
-    parquet fixtures never pin. Validated at sf0.1/sf0.01/sf0.001 and a
-    100x replica corpus during r12; this pins the machinery."""
+    parquet fixtures never pin. The parquet fixtures and the oracle
+    compare cover the data scales; this pins the machinery."""
     import random
 
     from db_converter_spark.operators.dedup import (
